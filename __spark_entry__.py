@@ -3511,7 +3511,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "jsd_snapshot_drift": q_jsd_snapshot_drift,
         "ph_value_drift": q_ph_value_drift,
         "capstone_export": q_capstone_export,
-        "bpe_merges_k64_local": q_bpe_merges_k64_local,
+        "bpe_merges_k64_local": q_bpe_merges_k64,
         "pipeline_capstone": q_pipeline_capstone,
         "bpe_merges": q_bpe_merges,
         "bpe_vocab": q_bpe_vocab,
@@ -7599,16 +7599,13 @@ def _alias_oracles(oracles: dict[str, str]) -> dict[str, str]:
     _bpe_prefix = _bpe.replay_prefix_sql(12)
     oracles["bpe_merges"] = (
         _bpe_prefix + "\n" + _bpe.merges_select_sql(12))
-    # ... and at the r12 parameter-scale depth (K=64): the SAME
-    # stage-by-stage re-derivation, 64 unrolled stages — verifying the
-    # incremental (pair-delta) trainer and the chunked encode against
-    # an oracle that still trains the classic way from scratch.
+    # ... and at K=64: the SAME stage-by-stage re-derivation, 64
+    # unrolled stages — verifying the trainer and the chunked encode
+    # against an oracle that trains the classic way from scratch.
     _bpe_prefix64 = _bpe.replay_prefix_sql(64)
     oracles["bpe_merges_k64"] = (
         _bpe_prefix64 + "\n" + _bpe.merges_select_sql(64))
-    # The driver-local production-K trainer must reproduce the SAME
-    # 64-stage trajectory — identical oracle, so a hash match proves
-    # local == distributed == DuckDB replay on the contract corpus.
+    # bpe_merges_k64_local is the same query under its first name.
     oracles["bpe_merges_k64_local"] = oracles["bpe_merges_k64"]
     oracles["bpe_vocab_k64"] = _bpe_prefix64 + """
         SELECT sym, SUM(freq)::BIGINT AS n_occurrences,
@@ -9401,97 +9398,56 @@ def q_score_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE vocabulary training (Sennrich et al. 2016):
-    12 merges learned over the documents corpus through the
-    unicode-word tokenizer seam, via operators.bpe.
-    train_bpe_incremental (r12 verdict ask: the pair-delta trainer is
-    bit-identical to the classic train_bpe — pinned by
-    tests/test_bpe.py::test_incremental_train_matches_classic_and_reference
-    — at a fraction of the cost, so the classic path stays a test-only
-    equivalence anchor). The corpus collapses ONCE into the word-type
-    relation; each merge re-counts only the words containing the
-    just-merged pair plus a ONE-ROW argmax collect (the
-    bounded-collect pattern). The oracle re-derives every merge
-    itself — 12 unrolled MATERIALIZED stages ending in the same
-    (cnt DESC, lhs, rhs) argmax — so hash-equality proves the full
-    training trajectory, not just the final table."""
+    """BPE vocabulary training (Sennrich et al. 2016): 12 merges
+    learned over the documents corpus through the unicode-word
+    tokenizer seam, via operators.bpe.train_bpe_local. The corpus
+    collapses ONCE into the word-type relation (one distributed count,
+    a vocabulary-bounded collect); the sequential merge loop runs
+    driver-side. The oracle re-derives every merge itself — 12
+    unrolled MATERIALIZED stages ending in the same (cnt DESC, lhs,
+    rhs) argmax — so hash-equality proves the full training
+    trajectory, not just the final table."""
     from dump1090_db_stream_spark.operators.bpe import merges_df
 
     return merges_df(spark, _trained_merges_k(spark, sf_dir, 12))
 
 
-#: trained-merge memo per (sf_dir, n_merges): training is deterministic
-#: (hash-free argmaxes, exact integer counts), so re-deriving the same
-#: 64-step trajectory for every registry-wide plan gate / smoke pass in
-#: one process would only burn ~60 s per construction without changing
-#: a single row. The driver's correctness run still trains at least
-#: once per process — the memo never crosses processes.
-_BPE_TRAINED: dict[tuple[str, int], list] = {}
-
-
 def _trained_merges_k(spark: SparkSession, sf_dir: str,
                       n_merges: int) -> list:
-    key = (sf_dir, n_merges)
-    if key not in _BPE_TRAINED:
-        from dump1090_db_stream_spark.operators.bpe import (
-            train_bpe_incremental,
-        )
+    """Train ``n_merges`` merges on the documents corpus. Every caller
+    trains afresh, so each query's time includes its training."""
+    from dump1090_db_stream_spark.operators.bpe import train_bpe_local
 
-        _BPE_TRAINED[key] = train_bpe_incremental(
-            load_table(spark, sf_dir, "documents"), n_merges)
-    return _BPE_TRAINED[key]
+    return train_bpe_local(load_table(spark, sf_dir, "documents"), n_merges)
 
 
 def q_bpe_merges_k64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE training at REALISTIC merge depth (r11 verdict ask #2:
-    n_merges >= 64) via operators.bpe.train_bpe_incremental — the
-    Sennrich pair-delta trainer: pair counts are MAINTAINED (each
-    iteration re-counts only words containing the just-merged pair,
-    never the vocabulary), the words update is a conditional
-    single-merge projection (never a k-deep fold chain), and
-    localCheckpoint keeps lineage depth constant in K — so
-    per-iteration cost is flat in K where the classic trainer's grows
-    linearly (O(K^2) total). The oracle independently re-derives all
-    64 merges (64 unrolled MATERIALIZED stages), so hash-equality
-    proves the full 64-step trajectory."""
+    """BPE training at realistic merge depth (K=64) through
+    operators.bpe.train_bpe_local: one distributed word-type count,
+    collected (vocabulary-bounded by construction), then classic fast
+    BPE in driver Python — inverted pair->words index +
+    lazy-invalidation heap. 32k merges over a 200k-type vocabulary
+    train in ~33 s (SCALE.md r13). The oracle independently re-derives
+    all 64 merges (64 unrolled MATERIALIZED stages), so hash-equality
+    proves the full 64-step trajectory. Registered twice: as
+    ``bpe_merges_k64`` and as ``bpe_merges_k64_local``, the name the
+    driver-local trainer was first registered under."""
     from dump1090_db_stream_spark.operators.bpe import merges_df
 
     return merges_df(spark, _trained_merges_k(spark, sf_dir, 64))
 
 
-def q_bpe_merges_k64_local(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION-K trainer (operators.bpe.train_bpe_local, r12
-    verdict ask #4): one distributed word-type count, collected
-    (vocabulary-bounded by construction), then classic fast BPE in
-    driver Python — inverted pair->words index + lazy-invalidation
-    heap — with the distributed encode passes unchanged. 32k merges
-    over a 200k-type vocabulary train in ~33 s where the distributed
-    loop's per-round scheduling floor alone would take hours
-    (SCALE.md r13). Same 64-stage unrolled DuckDB oracle as
-    bpe_merges_k64: hash-equality here proves the LOCAL trainer's full
-    trajectory is bit-identical to both engines' replays."""
-    from dump1090_db_stream_spark.operators.bpe import (
-        merges_df,
-        train_bpe_local,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return merges_df(spark, train_bpe_local(docs, 64))
-
-
 def q_bpe_vocab_k64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 64-merge vocabulary through the CHUNKED encode path
-    (operators.bpe.encode_words_chunked — the r11 ask's encode half):
-    merges apply in fold batches with an eager localCheckpoint
-    between batches, so no plan is ever more than ``chunk`` folds deep
-    no matter how long the merge list — the shape a 32k-merge corpus
-    encode needs. chunk=4 since r13: the vocabulary explode pays
-    super-linearly for the residual fold depth feeding it (measured
-    16 s at depth 12 vs 0.5 s at depth 4 — bpe_vocab's docstring),
-    so the batch size that was right for a plain projection chain is
-    wrong in front of a Generate. Training rides the incremental
-    trainer; the oracle replays training AND encoding from scratch
-    at K=64."""
+    (operators.bpe.encode_words_chunked): merges apply in fold batches
+    with an eager localCheckpoint between batches, so no plan is ever
+    more than ``chunk`` folds deep no matter how long the merge list —
+    the shape a 32k-merge corpus encode needs. chunk=4 since r13: the
+    vocabulary explode pays super-linearly for the residual fold depth
+    feeding it (measured 16 s at depth 12 vs 0.5 s at depth 4 —
+    bpe_vocab's docstring), so the batch size that was right for a
+    plain projection chain is wrong in front of a Generate. The oracle
+    replays training AND encoding from scratch at K=64."""
     from dump1090_db_stream_spark.operators.bpe import bpe_vocab
 
     docs = load_table(spark, sf_dir, "documents")
@@ -9852,9 +9808,7 @@ def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge list is literals, so the encode is one WholeStageCodegen fold
     chain — the shape of the 100 TB corpus encode pass), and aggregate
     per-symbol corpus-weighted occurrences and word-type counts. The
-    oracle replays training AND encoding from scratch. Training rides
-    the memoized incremental trainer (r12 verdict ask #3; identity to
-    the classic trainer is test-pinned)."""
+    oracle replays training AND encoding from scratch."""
     from dump1090_db_stream_spark.operators.bpe import bpe_vocab
 
     docs = load_table(spark, sf_dir, "documents")
@@ -9868,8 +9822,7 @@ def q_bpe_encoded_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join — at web scale neither side broadcasts and neither needs
     to), yielding words / subword tokens / character mass per source —
     the tokens-per-word diagnostic a tokenizer-training pipeline
-    reports. Oracle replays the composition end to end. Training rides
-    the memoized incremental trainer (r12 verdict ask #3)."""
+    reports. Oracle replays the composition end to end."""
     from dump1090_db_stream_spark.operators.bpe import encoded_stats
 
     docs = load_table(spark, sf_dir, "documents")
@@ -10075,46 +10028,29 @@ def q_exact_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- r14: unigram-LM tokenizer family + drift dashboard ---------------------
 
-_UNIGRAM_TRAINED: dict[str, list] = {}
-
-
 def _trained_unigram(spark: SparkSession, sf_dir: str) -> list:
-    """Memoized distributed unigram-LM training per sf_dir (the
-    _trained_merges_k idiom): both unigram contracts and the bench
-    share one trained model per scale factor."""
-    if sf_dir not in _UNIGRAM_TRAINED:
-        from dump1090_db_stream_spark.operators.unigram import (
-            train_unigram,
-        )
+    """Train the unigram-LM model on the documents corpus. Every caller
+    trains afresh, so each query's time includes its training."""
+    from dump1090_db_stream_spark.operators.unigram import (
+        train_unigram_local,
+    )
 
-        _UNIGRAM_TRAINED[sf_dir] = train_unigram(
-            load_table(spark, sf_dir, "documents"))
-    return _UNIGRAM_TRAINED[sf_dir]
+    return train_unigram_local(load_table(spark, sf_dir, "documents"))
 
 
 def q_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM (SentencePiece-style) tokenizer training
-    (operators.unigram.train_unigram — r13 verdict ask #3): hard-EM
-    with Viterbi E-steps over a bounded substring-candidate seed,
-    integer-quantized log2 scores so every DP comparison is
-    engine-portable integer arithmetic. The E-step is fully
-    distributed and fully JVM-side (one Catalyst fold expression per
-    word type, scores broadcast as a map literal); the M-step is a
-    vocabulary-bounded collect + driver arithmetic. The oracle replays
+    (operators.unigram.train_unigram_local): hard-EM with Viterbi
+    E-steps over a bounded substring-candidate seed, integer-quantized
+    log2 scores so every DP comparison is engine-portable integer
+    arithmetic. One distributed word-type count (a vocabulary-bounded
+    collect), then the EM loop in driver Python. The oracle replays
     the ENTIRE trajectory closed-form — seed substring enumeration,
     every EM iteration's per-prefix-length DP unroll, count
-    re-estimation — the bpe_merges_k64 discipline; an equivalence
-    test additionally pins distributed == pure-Python reference."""
-    from dump1090_db_stream_spark.operators.unigram import (
-        train_unigram,
-        vocab_df,
-    )
+    re-estimation — the bpe_merges_k64 discipline."""
+    from dump1090_db_stream_spark.operators.unigram import vocab_df
 
-    # trains on EVERY call (the honest bench cost of the trainer) and
-    # refreshes the memo so the encode contract reuses the model
-    _UNIGRAM_TRAINED[sf_dir] = train_unigram(
-        load_table(spark, sf_dir, "documents"))
-    return vocab_df(spark, _UNIGRAM_TRAINED[sf_dir])
+    return vocab_df(spark, _trained_unigram(spark, sf_dir))
 
 
 def q_unigram_encoded_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -177,10 +177,9 @@ EXTENDED = [
     "exact_value_quantiles",
     # r12 addition: the end-to-end pipeline capstone (hygiene ->
     # dedup -> decontamination -> split -> mixture -> packing as one
-    # composed query). The K=64 BPE contracts are deliberately NOT
-    # here — their cost is the training loop itself, measured by the
-    # dedicated bench_bpe_scaling probe (per-iteration flatness),
-    # not a query-shape number the extended set should carry.
+    # composed query). The K=64 BPE contracts are not here: the K=12
+    # entries above already time training plus encode on every call,
+    # and bench_bpe_scaling times the trainer alone at K=1024.
     "pipeline_capstone",
     "ranksum_snapshot_drift",
     "chisq_snapshot_drift",
@@ -188,17 +187,13 @@ EXTENDED = [
     # r13 addition: the capstone's JSONL training-shard export —
     # measures the seven recomposed stages PLUS the byte-deterministic
     # shard write and the disk-level manifest audit (real I/O, by
-    # design: this is the export path's cost). bpe_merges_k64_local is
-    # deliberately NOT here — its cost is one word-type collect plus
-    # driver-side training, measured by bench_bpe_scaling's
-    # local_k1024 arm.
+    # design: this is the export path's cost).
     "capstone_export",
     "jsd_snapshot_drift",
     "ph_value_drift",
-    # r14 additions: the unigram-LM trainer (distributed seed + three
-    # distributed Viterbi E-steps — unigram_vocab re-trains on EVERY
-    # call, so its number IS the full EM cost; the trained model is
-    # memoized for the encode contract), the word-type +
+    # r14 additions: the unigram-LM trainer (one word-type collect +
+    # driver-local EM; both unigram entries train on every call, so
+    # each number includes the full training cost), the word-type +
     # broadcast-join encode pass, and the composed four-metric drift
     # dashboard
     "unigram_vocab",
@@ -542,21 +537,17 @@ def bench_close_encounters_joinbound(spark, sf_dir: str) -> dict:
 
 
 def bench_bpe_scaling(spark, n_words: int = 3000) -> dict:
-    """Per-iteration flatness of the incremental BPE trainer (r11
-    verdict ask #2's bench half): train K=16 and K=64 on the SAME
-    synthetic Zipf vocabulary and report sec/merge at both depths.
-    The classic trainer re-folds all k prior merges each iteration
-    (per-iteration cost linear in k, O(K^2) total); the pair-delta
-    trainer's per-iteration cost must stay roughly constant, so
-    ``flatness`` (= sec_per_merge@64 / sec_per_merge@16) should sit
-    near 1.0 — values well above ~1.5 mean the incremental discipline
-    regressed. Synthetic words (base-26 expansions of a multiplicative
-    hash, Zipf-ish freqs) so the vocabulary is REAL-sized even though
-    the fixture corpora have tiny type tables."""
+    """Production-K BPE training on a synthetic Zipf vocabulary: collect
+    the vocabulary-bounded word table once, then run the driver-local
+    trainer (train_bpe_local_from_words) at K=1024. Records collect and
+    train seconds so a regression in either half is visible
+    round-over-round. Synthetic words (base-26 expansions of a
+    multiplicative hash, Zipf-ish freqs) so the vocabulary is
+    REAL-sized even though the fixture corpora have tiny type tables."""
     from pyspark.sql import functions as F
 
     from dump1090_db_stream_spark.operators.bpe import (
-        train_bpe_from_words,
+        train_bpe_local_from_words,
         with_symbols,
     )
 
@@ -574,26 +565,6 @@ def bench_bpe_scaling(spark, n_words: int = 3000) -> dict:
             .alias("freq"))
         .groupBy("word").agg(F.sum("freq").alias("freq")))
 
-    def timed(k: int) -> tuple[float, int]:
-        t0 = time.perf_counter()
-        merges = train_bpe_from_words(words, k)
-        return round(time.perf_counter() - t0, 3), len(merges)
-
-    timed(2)   # codegen/scheduler warmup — must not bias the K=16 arm
-    sec16, n16 = timed(16)
-    sec64, n64 = timed(64)
-    per16 = sec16 / max(n16, 1)
-    per64 = sec64 / max(n64, 1)
-    # production-K arm (r12 verdict ask #4): collect the vocabulary-
-    # bounded word table once and run classic fast BPE driver-locally
-    # (train_bpe_local_from_words) at K=1024 — the capability-range
-    # path whose distributed equivalent would be 1024 scheduling
-    # round-trips. Records collect + train seconds so a regression in
-    # either half of the escape hatch is visible round-over-round.
-    from dump1090_db_stream_spark.operators.bpe import (
-        train_bpe_local_from_words,
-    )
-
     t0 = time.perf_counter()
     rows = [(r["freq"], r["syms"])
             for r in words.select("freq", "syms").collect()]
@@ -602,11 +573,6 @@ def bench_bpe_scaling(spark, n_words: int = 3000) -> dict:
     local_merges = train_bpe_local_from_words(rows, 1024)
     local_sec = round(time.perf_counter() - t0, 3)
     return {"n_words": n_words,
-            "k16_sec": sec16, "k64_sec": sec64,
-            "k16_merges": n16, "k64_merges": n64,
-            "sec_per_merge_k16": round(per16, 4),
-            "sec_per_merge_k64": round(per64, 4),
-            "flatness_k64_over_k16": round(per64 / max(per16, 1e-9), 3),
             "local_collect_sec": collect_sec,
             "local_k1024_sec": local_sec,
             "local_k1024_merges": len(local_merges)}

@@ -29,9 +29,7 @@ This package re-expresses that surface Spark-first:
 - ``operators.sessions``    band join, as-of join, key dedup, sessions
 - ``operators.versioning``  digest-only corpus diff
 - ``operators.geo``         radius join, Z-order layout, WKT emission
-- ``operators.multimodal``  binary-column decode/feature plumbing
-  (real PNG/WAV decode via ``functions.png``/``functions.wav``; MP4
-  keyframe extraction via ``functions.mp4``)
+- ``operators.multimodal``  binary-column feature plumbing (mapInPandas)
 """
 
 from dump1090_db_stream_spark.cache import release_tracked

@@ -1,4 +1,4 @@
-r"""Distributed byte-pair-encoding (BPE) vocabulary training.
+r"""Byte-pair-encoding (BPE) vocabulary training and encoding.
 
 Extends the engine's tokenizer story (SURVEY.md §2.10 has no reference
 counterpart — the reference, ``dump1090-postgres.py``, has no text
@@ -7,31 +7,25 @@ to *learning* one: the Sennrich et al. 2016 subword-vocabulary trainer
 ("Neural Machine Translation of Rare Words with Subword Units", ACL),
 the algorithm behind GPT-2/RoBERTa-class vocabularies.
 
-Scale design — why this survives 100 TB
----------------------------------------
-The classic BPE trainer is sequential, but its *data access* is not:
-
+Scale design
+------------
 1. The corpus collapses ONCE into the word-type relation
-   ``(word, freq)`` — one shuffle over the corpus, after which every
-   training iteration runs over a VOCABULARY-sized relation (tens of
-   millions of rows at web scale, not tens of billions).  This is the
-   same corpus-collapsing discipline as ``sampling.unimax_allocation``.
-2. Each merge iteration is: one map-side pair expansion + one
-   vocabulary-sized aggregation + a ONE-ROW argmax collect (bounded by
-   construction — the documented bounded-collect pattern, cf. the IVF
-   quantizer sampling in ``operators.similarity``).
-3. Applying a merge is a pure projection (an ``aggregate`` fold over
-   each word's symbol array) — no shuffle, no Python.  The iteration-k
-   word table is rebuilt declaratively from the persisted word-type
-   base by folding the k learned merges, so no intermediate caching
-   accumulates and lineage stays one projection deep.
-4. Encoding with a TRAINED merge list is fully declarative: the merges
+   ``(word, freq)`` — one shuffle over the corpus, after which training
+   touches only a VOCABULARY-sized relation (tens of millions of rows
+   at web scale, not tens of billions).  This is the same
+   corpus-collapsing discipline as ``sampling.unimax_allocation``.
+2. BPE's K merges are a sequential dependency, so :func:`train_bpe_local`
+   collects the vocabulary-bounded type table once and runs the
+   classic pair-delta trainer in driver Python: each merge costs
+   O(words containing the pair), not a distributed job round trip.
+3. Encoding with a TRAINED merge list is fully declarative: the merges
    are literals, so :func:`encode_words` is a single whole-stage-codegen
-   projection chain — the 100 TB encode pass is embarrassingly
+   projection chain (:func:`encode_words_chunked` bounds its depth for
+   long merge lists) — the corpus encode pass is embarrassingly
    parallel with zero Python.
 
-Greedy-merge semantics (both engines, proven equivalent)
---------------------------------------------------------
+Greedy-merge semantics (all engines, proven equivalent)
+-------------------------------------------------------
 A merge of pair ``(a, b)`` applies left-to-right, non-overlapping — the
 reference semantics of Sennrich's ``learn_bpe``.  Spark implements it
 as a left fold (``aggregate``): append the symbol unless the
@@ -94,29 +88,6 @@ def with_symbols(words: DataFrame, word_col: str = "word",
     return words.withColumn(syms_col, F.split(F.col(word_col), ""))
 
 
-def adjacent_pair_counts(words: DataFrame, syms_col: str = "syms",
-                         freq_col: str = "freq") -> DataFrame:
-    """Corpus-weighted adjacent-symbol pair counts ``(l, r, cnt)``.
-
-    Overlapping occurrences count (Sennrich ``get_stats`` semantics).
-    Map-side expansion (zip_with of two slices — no index arithmetic
-    that could desync between engines) + one vocabulary-sized
-    aggregation.  Words of a single symbol contribute nothing (both
-    slices are empty); the ``greatest(..., 0)`` clamp keeps an empty
-    symbol array (reachable only through the train_bpe_from_words
-    caller seam) from handing slice() a negative length (r12 ADVICE).
-    """
-    syms = F.col(syms_col)
-    n = F.greatest(F.size(syms) - F.lit(1), F.lit(0))
-    pairs = F.zip_with(
-        F.slice(syms, F.lit(1), n),
-        F.slice(syms, F.lit(2), n),
-        lambda l, r: F.struct(l.alias("l"), r.alias("r")))
-    return (words.select(F.col(freq_col), F.explode(pairs).alias("p"))
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum(freq_col).cast("long").alias("cnt")))
-
-
 def merge_fold(syms: Column, lhs: str, rhs: str) -> Column:
     """The greedy left-to-right non-overlapping merge as a left fold.
 
@@ -147,211 +118,6 @@ def encode_words(words: DataFrame, merges: Sequence[dict],
     for m in merges:
         col = merge_fold(col, m["lhs"], m["rhs"])
     return words.withColumn(syms_col, col)
-
-
-def train_bpe(df: DataFrame, n_merges: int, text_col: str = "text",
-              tokenizer="word", min_freq: int = 1) -> list[dict]:
-    """Learn ``n_merges`` BPE merges from a corpus.
-
-    Returns the ordered merge table: dicts with ``merge_rank``,
-    ``lhs``, ``rhs``, ``merged``, ``pair_count``.  Stops early if the
-    symbol-pair table empties (every word fully merged).
-
-    Driver loop shape (the honest cost of BPE's sequential argmax):
-    ``n_merges`` jobs, each re-folding the k learned merges over the
-    PERSISTED word-type base (vocabulary-sized; the corpus is touched
-    exactly once, in :func:`word_freqs`) and collecting ONE row.  No
-    intermediate is cached beyond the base, so repeated training runs
-    leave no storage residue.
-    """
-    base = with_symbols(word_freqs(df, text_col, tokenizer, min_freq))
-    base = base.persist()
-    try:
-        merges: list[dict] = []
-        for k in range(n_merges):
-            words = encode_words(base, merges)
-            top = (adjacent_pair_counts(words)
-                   .orderBy(F.col("cnt").desc(), F.col("l").asc(),
-                            F.col("r").asc())
-                   .limit(1).collect())  # bounded: exactly one row
-            if not top:
-                break
-            l, r, cnt = top[0]["l"], top[0]["r"], top[0]["cnt"]
-            merges.append({"merge_rank": k, "lhs": l, "rhs": r,
-                           "merged": l + r, "pair_count": int(cnt)})
-        return merges
-    finally:
-        base.unpersist(blocking=False)
-
-
-def has_adjacent_pair(syms: Column, lhs: str, rhs: str) -> Column:
-    """Predicate: the symbol sequence contains ``(lhs, rhs)`` adjacent —
-    the same zip-of-slices pair enumeration as
-    :func:`adjacent_pair_counts`, so the affected-word filter and the
-    pair counter can never disagree about what "contains the pair"
-    means. Slice lengths clamp at 0: ``size - 1`` is negative for an
-    empty symbol array and Spark's ``slice()`` raises on negative
-    lengths — unreachable through word_freqs (which never emits empty
-    words) but :func:`train_bpe_from_words` exposes the (word, freq,
-    syms) relation as a caller seam (r12 ADVICE)."""
-    n = F.greatest(F.size(syms) - F.lit(1), F.lit(0))
-    pairs = F.zip_with(
-        F.slice(syms, F.lit(1), n),
-        F.slice(syms, F.lit(2), n),
-        lambda l, r: (l == F.lit(lhs)) & (r == F.lit(rhs)))
-    return F.exists(pairs, lambda hit: hit)
-
-
-def train_bpe_incremental(
-    df: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    tokenizer="word",
-    min_freq: int = 1,
-    checkpoint_every: int = 8,
-) -> list[dict]:
-    """:func:`train_bpe` with the standard Sennrich pair-delta
-    optimization — the parameter-scale path (r11 verdict ask #2): the
-    per-iteration cost is proportional to the words CONTAINING the
-    just-merged pair, not to the whole vocabulary, and nothing in the
-    loop ever re-folds the full merge history.
-
-    Maintained state (both vocabulary-bounded, refreshed in place):
-
-    - ``words``  — the current ``(word, freq, syms)`` symbol table;
-    - ``counts`` — the current adjacent-pair counts ``(l, r, cnt)``.
-
-    Each iteration: (1) ONE-ROW argmax collect over ``counts`` (a
-    pair-vocabulary relation — far smaller than the word table);
-    (2) the pair-count delta — new minus old adjacent pairs of only
-    the words CONTAINING the merged pair (:func:`has_adjacent_pair`) —
-    as one explode-aggregate, merged into ``counts`` by a bounded
-    union-groupBy; (3) the words update as one conditional
-    SINGLE-merge fold projection (never a k-deep chain). Each state
-    relation is referenced exactly ONCE per iteration — a filter/union
-    two-branch update would double the uncheckpointed plan tree every
-    iteration. All arithmetic is exact integers, so after k iterations
-    ``counts`` is bit-identical to recounting from scratch (the
-    equivalence test pins this against :func:`train_bpe`).
-
-    Lineage discipline: the iterative state would otherwise grow a
-    plan O(k) deep (the r11 verdict's O(K²) fold-chain critique).
-    ``counts`` is eagerly ``localCheckpoint``-ed EVERY iteration — its
-    update is a shuffle, and chaining shuffles between checkpoints
-    makes every argmax re-execute the whole nested chain (measured
-    4+ s/iteration at cadence 8 vs ~0.5 s materialized). ``words`` is
-    narrow (conditional fold projections), so it materializes only
-    every ``checkpoint_every`` iterations. Lineage depth stays bounded
-    by a constant regardless of ``n_merges``; superseded checkpoints
-    are unpersisted as soon as their successor exists. On a real
-    cluster ``localCheckpoint`` trades executor-loss recomputability
-    for speed — the right trade for a bounded training loop whose
-    restart cost is one rerun (same trade the similarity quantizer
-    training documents).
-
-    Returns the identical merge-table dicts as :func:`train_bpe`; stops
-    early when no adjacent pair remains.
-    """
-    base = with_symbols(word_freqs(df, text_col, tokenizer, min_freq))
-    return train_bpe_from_words(base, n_merges,
-                                checkpoint_every=checkpoint_every)
-
-
-def train_bpe_from_words(
-    base: DataFrame,
-    n_merges: int,
-    checkpoint_every: int = 8,
-) -> list[dict]:
-    """:func:`train_bpe_incremental`'s training loop over an
-    already-built ``(word, freq, syms)`` relation — the seam for
-    callers that own the word-type table (pre-tokenized corpora, the
-    scaling bench's synthetic vocabularies)."""
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}")
-    from dump1090_db_stream_spark.cache import release_local_checkpoint
-
-    words = base.localCheckpoint(eager=True)
-    counts = adjacent_pair_counts(words).localCheckpoint(eager=True)
-    words_pin, counts_pin = words, counts   # latest checkpoints held
-
-    def _signed_pairs(syms: Column, sign: int) -> Column:
-        # array of (l, r, cnt) contribution structs for one side of
-        # the delta — built as an EXPRESSION so the whole delta is one
-        # projection over the affected rows (each state relation is
-        # referenced exactly ONCE per iteration: a second reference
-        # would double the uncheckpointed plan tree every iteration).
-        # greatest(..., 0): slice() raises on the negative length an
-        # empty syms array would produce (caller-seam guard, r12
-        # ADVICE — same clamp as has_adjacent_pair).
-        n = F.greatest(F.size(syms) - F.lit(1), F.lit(0))
-        return F.zip_with(
-            F.slice(syms, F.lit(1), n),
-            F.slice(syms, F.lit(2), n),
-            lambda l, r: F.struct(
-                l.alias("l"), r.alias("r"),
-                (F.col("freq") * sign).cast("long").alias("cnt")))
-
-    try:
-        merges: list[dict] = []
-        for k in range(n_merges):
-            top = (counts.filter(F.col("cnt") > 0)
-                   .orderBy(F.col("cnt").desc(), F.col("l").asc(),
-                            F.col("r").asc())
-                   .limit(1).collect())  # bounded: exactly one row
-            if not top:
-                break
-            l, r, cnt = top[0]["l"], top[0]["r"], top[0]["cnt"]
-            merges.append({"merge_rank": k, "lhs": l, "rhs": r,
-                           "merged": l + r, "pair_count": int(cnt)})
-
-            hit = has_adjacent_pair(F.col("syms"), l, r)
-            old_s, new_s = F.col("syms"), F.col("_new")
-            # pair-count delta: only words CONTAINING the merged pair
-            # contribute — new pairs positive, old pairs negative, one
-            # explode-aggregate over the affected slice
-            delta = (words.filter(hit)
-                     .withColumn("_new", merge_fold(old_s, l, r))
-                     .select(F.explode(F.concat(
-                         _signed_pairs(new_s, 1),
-                         _signed_pairs(old_s, -1))).alias("p"))
-                     .select("p.l", "p.r", "p.cnt"))
-            # counts checkpoint EVERY iteration: the update is a
-            # SHUFFLE (union + groupBy), and chaining shuffles between
-            # checkpoints makes every argmax re-execute the whole
-            # nested chain — measured 4+ s/iteration at cadence 8 vs
-            # ~0.5 s with per-iteration materialization. The words
-            # chain is narrow (conditional fold projections), so it
-            # only materializes every ``checkpoint_every`` iterations.
-            new_counts = (counts.unionByName(delta)
-                          .groupBy("l", "r")
-                          .agg(F.sum("cnt").cast("long").alias("cnt"))
-                          .filter(F.col("cnt") != 0)
-                          .localCheckpoint(eager=True))
-            release_local_checkpoint(counts_pin)
-            counts_pin = new_counts
-            # single-reference update: ONE single-merge fold projection.
-            # merge_fold is already the identity on words not containing
-            # the pair, so no when(hit, ...) wrapper — a wrapper would
-            # reference the previous layer's syms 3-4x and Catalyst's
-            # project collapsing then grows the inlined expression tree
-            # ~4^depth between checkpoints (measured: minutes/iteration);
-            # the bare fold references it ONCE, so chains stay linear
-            # exactly like encode_words' fold chain.
-            new_words = words.withColumn(
-                "syms", merge_fold(old_s, l, r))
-            if (k + 1) % checkpoint_every == 0 or k == n_merges - 1:
-                new_words = new_words.localCheckpoint(eager=True)
-                release_local_checkpoint(words_pin)
-                words_pin = new_words
-            words, counts = new_words, new_counts
-        return merges
-    finally:
-        # checkpoint RDD blocks are invisible to DataFrame.unpersist()
-        # — only the explicit RDD-level release frees them (the
-        # test_cache residue contract)
-        release_local_checkpoint(words_pin)
-        release_local_checkpoint(counts_pin)
 
 
 def encode_words_chunked(words: DataFrame, merges: Sequence[dict],
@@ -393,76 +159,25 @@ def encode_words_chunked(words: DataFrame, merges: Sequence[dict],
     return out
 
 
-def encode_words_arrow(words: DataFrame, merges: Sequence[dict],
-                       syms_col: str = "syms") -> DataFrame:
-    """Arrow-batched encode kernel for high-K merge lists — the shape a
-    real 32k-vocabulary corpus pass uses: the merge list rides to the
-    executors ONCE as a captured list (a few MB at 32k entries), and
-    each Arrow batch applies the merges in rank order with the same
-    greedy left-to-right non-overlapping scan as :func:`merge_fold` —
-    Sennrich ``apply_bpe`` semantics, NOT the lowest-rank-first
-    priority encode (the two differ on sequences where a later merge's
-    output feeds an earlier merge's pattern; equivalence to the
-    declarative fold is what the oracle replays). Python is justified
-    here (documented Arrow seam, cf. ``operators.multimodal``): the
-    per-row work is a data-dependent loop no Column expression can
-    express at unbounded K. A per-merge first-symbol index skips merges
-    whose lhs is absent, so typical cost is O(tokens x applicable
-    merges), not O(tokens x K)."""
-    import pandas as pd  # noqa: F401  (mapInPandas contract)
-
-    mlist = [(m["lhs"], m["rhs"]) for m in merges]
-    out_schema = words.schema
-
-    def _apply(seq: list) -> list:
-        for lhs, rhs in mlist:
-            if lhs not in seq:
-                continue
-            out, i, n = [], 0, len(seq)
-            while i < n:
-                if i + 1 < n and seq[i] == lhs and seq[i + 1] == rhs:
-                    out.append(lhs + rhs)
-                    i += 2
-                else:
-                    out.append(seq[i])
-                    i += 1
-            seq = out
-        return seq
-
-    def _encode(batches):
-        for pdf in batches:
-            pdf[syms_col] = pdf[syms_col].map(
-                lambda s: _apply(list(s)))
-            yield pdf
-
-    return words.mapInPandas(_encode, out_schema)
-
-
 def train_bpe_local(df: DataFrame, n_merges: int, text_col: str = "text",
                     tokenizer="word", min_freq: int = 1) -> list[dict]:
-    """Production-K trainer (r12 verdict ask #4): ONE distributed
-    word-type count, then classic fast BPE driver-locally over the
-    collected table, leaving the distributed encode passes
-    (:func:`encode_words_chunked` / :func:`encode_words_arrow`)
-    unchanged.
+    """The BPE trainer: ONE distributed word-type count, then classic
+    fast BPE driver-locally over the collected table; encoding stays
+    distributed (:func:`encode_words` / :func:`encode_words_chunked`).
 
-    Why this is the right 100 TB shape for K in the tens of thousands:
-    the corpus collapses once into the vocabulary-bounded ``(word,
-    freq, syms)`` relation (tens of millions of rows even at web
-    scale — hundreds of MB, the standard escape every production
-    tokenizer training takes), and the K-round SEQUENTIAL dependency
-    then runs where sequential work is cheap: in-process, with an
-    inverted pair->words index and a lazy-invalidation heap, so each
-    merge costs O(words containing the pair), not a distributed
-    job-scheduling round trip. 32k merges take minutes where the
-    distributed loop's per-round ~0.5-1 s scheduling floor alone would
-    take hours (BASELINE.md r12 addendum; capability-range gap this
-    closes). Bit-identical to :func:`train_bpe_incremental` /
-    :func:`train_bpe` — same overlap-counting pair statistics, same
-    (count DESC, lhs, rhs) argmax (Python codepoint order == UTF-8
-    byte order, both engines' collation), same greedy non-overlapping
-    merge — pinned by tests/test_bpe.py at K=64 on the contract
-    corpus. ``min_freq`` bounds the collected table exactly like
+    The corpus collapses once into the vocabulary-bounded ``(word,
+    freq, syms)`` relation (tens of millions of rows even at web scale —
+    hundreds of MB, the standard escape every production tokenizer
+    training takes), and the K-round SEQUENTIAL dependency then runs
+    where sequential work is cheap: in-process, with an inverted
+    pair->words index and a lazy-invalidation heap, so each merge costs
+    O(words containing the pair), not a distributed job-scheduling
+    round trip. Same overlap-counting pair statistics, same (count
+    DESC, lhs, rhs) argmax (Python codepoint order == UTF-8 byte order,
+    both engines' collation) and same greedy non-overlapping merge as
+    the DuckDB replay below — pinned by tests/test_bpe.py against a
+    pure-Python reference and by the K=64 registry oracle.
+    ``min_freq`` bounds the collected table exactly like
     :func:`word_freqs` documents."""
     base = with_symbols(word_freqs(df, text_col, tokenizer, min_freq))
     rows = base.select("freq", "syms").collect()  # vocabulary-bounded
@@ -472,14 +187,13 @@ def train_bpe_local(df: DataFrame, n_merges: int, text_col: str = "text",
 
 def train_bpe_local_from_words(word_list, n_merges: int) -> list[dict]:
     """:func:`train_bpe_local`'s in-process training loop over
-    ``(freq, syms)`` pairs — the seam mirror of
-    :func:`train_bpe_from_words` for callers that own the word-type
-    table. Maintains exact integer pair counts, an inverted
-    pair->word-ids index, and a lazy-invalidation heap for the argmax
-    (stale entries are discarded when their count no longer matches);
-    per merge, only the words CONTAINING the winning pair are
-    re-scanned — the same pair-delta discipline as the distributed
-    trainer, so the trajectories are identical by construction."""
+    ``(freq, syms)`` pairs — the seam for callers that own the
+    word-type table (the scaling bench's synthetic vocabularies).
+    Maintains exact integer pair counts, an inverted pair->word-ids
+    index, and a lazy-invalidation heap for the argmax (stale entries
+    are discarded when their count no longer matches); per merge, only
+    the words CONTAINING the winning pair are re-scanned. Empty symbol
+    arrays contribute nothing."""
     import heapq
     from collections import Counter, defaultdict
 

@@ -125,9 +125,15 @@ def ngram_jaccard_pairs(
     owns its materialization (cache/track); this operator consumes it
     as-is instead of re-tokenizing, and everything downstream of the
     index is unchanged, so the pair multiset is identical whenever the
-    index is (test-pinned).
+    index is (test-pinned). The index fixes the shingling, so a
+    non-default ``n`` or ``tokenizer`` passed with it raises instead of
+    being ignored.
     """
     if shingle_index is not None:
+        if n != 3 or tokenizer is not None:
+            raise ValueError(
+                "shingle_index fixes the shingling: n and tokenizer "
+                f"cannot be set with it (got n={n}, tokenizer={tokenizer!r})")
         sh = shingle_index
     else:
         sh = (
@@ -1003,47 +1009,3 @@ def neardup_stream_sink(
 
     return sink
 
-
-def hamming_neardup_pairs(
-    df: DataFrame,
-    hash_col: str,
-    id_col: str = "media_id",
-    n_bits: int = 64,
-    max_hamming: int = 6,
-    n_chunks: int = 8,
-) -> DataFrame:
-    """Generic hamming-radius pairing over ANY n-bit hash column — the
-    pigeonhole LSH that backs simhash_neardup_pairs, exposed for other
-    bit-hash producers (perceptual image hashes, audio fingerprints):
-    split the hash into ``n_chunks`` chunks; any pair within
-    ``max_hamming`` <= n_chunks - 1 must share at least one exact
-    chunk, so candidates meet in a (chunk_index, chunk_value)
-    equi-join and only collisions pay the popcount verify. Shuffle
-    volume O(rows x n_chunks), never all-pairs.
-    """
-    if max_hamming > n_chunks - 1:
-        raise ValueError(
-            f"pigeonhole needs max_hamming <= n_chunks - 1; got "
-            f"{max_hamming} > {n_chunks - 1}")
-    chunk_bits = n_bits // n_chunks
-    chunks = df.select(
-        F.col(id_col).alias("id"), F.col(hash_col).alias("hv"),
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(i).alias("ci"),
-                F.shiftrightunsigned(F.col(hash_col), i * chunk_bits)
-                .bitwiseAND(F.lit((1 << chunk_bits) - 1)).alias("cv"),
-            ) for i in range(n_chunks)
-        ])).alias("c"),
-    ).select("id", "hv", "c.ci", "c.cv")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    return (
-        a.join(b, (F.col("a.ci") == F.col("b.ci"))
-               & (F.col("a.cv") == F.col("b.cv"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.bit_count(F.col("a.hv").bitwiseXOR(F.col("b.hv")))
-                .alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )

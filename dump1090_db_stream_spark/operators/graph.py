@@ -156,7 +156,7 @@ def connected_components(
     # released as soon as its successor is materialized AND the
     # convergence probe (which reads both) has run, so peak executor
     # storage stays O(1) per call instead of O(iterations) (r12
-    # ADVICE — the train_bpe_from_words discipline). Only the FINAL
+    # ADVICE). Only the FINAL
     # checkpoint is registered for the caller's release_tracked(); at
     # cluster scale swap in a reliable checkpoint dir for fault
     # tolerance.
@@ -530,7 +530,7 @@ def pagerank(
     # only consumer is the successor's join, materialized by the eager
     # checkpoint); only the final iteration's pin is registered for the
     # caller's release_tracked() — same O(1)-storage discipline as
-    # connected_components / train_bpe_from_words (r12 ADVICE).
+    # connected_components (r12 ADVICE).
     ranks = (ids.withColumn("_rank", F.lit(1.0 / n))
              .localCheckpoint(eager=True))
     # Visible to the handler — same release-both discipline as

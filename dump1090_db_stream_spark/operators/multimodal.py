@@ -1,26 +1,14 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Binary-payload feature plumbing.
 
-Media are opaque ``binary`` columns with typed metadata structs — the
-storage pattern that scales: parquet keeps the bytes columnar/compressed,
-metadata stays queryable without touching payloads, and Catalyst prunes
-the binary column away for any query not decoding it.
+Payloads are opaque ``binary`` columns: parquet keeps the bytes
+columnar/compressed, and Catalyst prunes the binary column away for any
+query not reading it.
 
-The decode/feature kernels are Arrow-batched ``mapInPandas`` functions.
-``decode_stub=True`` (default) produces deterministic fake features
-derived from the payload bytes so the Spark-side plumbing — schema,
-batch shape, partitioning — is testable without any imaging library.
-``decode_stub=False`` runs REAL decodes for PNG images
-(``functions.png``: width/height from IHDR, Rec.601 luma from actual
-pixels), baseline JPEG (``functions.jpeg``: Huffman entropy decode,
-dequant, IDCT, chroma upsample — pure stdlib), PCM WAV audio
-(``functions.wav``: RIFF parse, float samples, duration/RMS/band
-energies), and the MPEG audio FRAME layer (``functions.mp3``:
-header/bitrate tables, ID3/Xing handling, exact frame-walk duration —
-sample-level fields are NULL because PCM synthesis sits behind the
-documented ``functions.mp3.decode_frames`` seam); remaining formats
-(progressive JPEG, ogg, H.264 — PIL/librosa/ffmpeg absent from this
-container) still raise at the same seam where a full codec would
-plug in.
+The feature kernel is an Arrow-batched ``mapInPandas`` function that
+derives deterministic features from the payload bytes, so the
+Spark-side plumbing — schema, batch shape, column pruning before Python
+— is testable and oracle-checkable (the features are closed-form byte
+arithmetic) without any imaging library.
 """
 
 from __future__ import annotations
@@ -31,16 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Typed metadata struct carried next to every media payload.
-MEDIA_META_TYPE = T.StructType([
-    T.StructField("media_type", T.StringType(), False),   # image|audio|video
-    T.StructField("format", T.StringType(), True),        # png|jpeg|wav|mp4…
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("duration_ms", T.LongType(), True),
-    T.StructField("sample_rate", T.IntegerType(), True),
-])
-
 IMAGE_FEATURES_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("n_bytes", T.LongType(), False),
@@ -50,30 +28,9 @@ IMAGE_FEATURES_SCHEMA = T.StructType([
     T.StructField("feature", T.ArrayType(T.FloatType()), True),
 ])
 
-FRAME_SAMPLE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("frame_index", T.IntegerType(), False),
-    T.StructField("frame_ts_ms", T.LongType(), False),
-    T.StructField("frame_bytes", T.BinaryType(), True),
-])
-
-
-def attach_media_meta(df: DataFrame, payload_col: str, media_type: str,
-                      fmt: str | None = None) -> DataFrame:
-    """Wrap a binary column with the typed metadata struct (dimensions
-    unknown until decode -> NULL)."""
-    return df.withColumn("media_meta", F.struct(
-        F.lit(media_type).alias("media_type"),
-        F.lit(fmt).cast("string").alias("format"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("bigint").alias("duration_ms"),
-        F.lit(None).cast("int").alias("sample_rate"),
-    ))
-
 
 def _stub_features(payload: bytes, dim: int) -> list[float]:
-    """Deterministic fake embedding from payload bytes (stable across
+    """Deterministic embedding from payload bytes (stable across
     runs/partitions): byte histogram folded to `dim` buckets, normalized."""
     buckets = [0] * dim
     for i, b in enumerate(payload[:4096]):
@@ -87,13 +44,14 @@ def extract_image_features(
     id_col: str = "media_id",
     payload_col: str = "payload",
     feature_dim: int = 16,
-    decode_stub: bool = True,
 ) -> DataFrame:
-    """Image decode + feature extraction as an Arrow-batched mapInPandas.
+    """Payload features as an Arrow-batched mapInPandas.
 
     The Pandas function receives column-pruned batches (only id + payload
     reach Python — verify with .explain: ReadSchema excludes everything
     else). Batch size follows spark.sql.execution.arrow.maxRecordsPerBatch.
+    Dimensions are derived from the byte length and ``mean_luma`` from
+    the first 256 byte values.
     """
     import pandas as pd  # local import: executors only
 
@@ -102,459 +60,16 @@ def extract_image_features(
             rows = []
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
                 data = bytes(payload) if payload is not None else b""
-                if decode_stub:
-                    rows.append({
-                        "media_id": int(mid),
-                        "n_bytes": len(data),
-                        # stub "decode": fake dimensions from byte length
-                        "width": (len(data) % 640) + 1,
-                        "height": (len(data) % 480) + 1,
-                        "mean_luma": (sum(data[:256])
-                                      / max(1, len(data[:256]))) / 255.0,
-                        "feature": _stub_features(data, feature_dim),
-                    })
-                else:
-                    # REAL decode path, dispatched on the payload
-                    # signature: pure-Python PNG (stdlib zlib) and
-                    # baseline JPEG (stdlib Huffman+IDCT) codecs. Other
-                    # formats raise — that part of the seam awaits a
-                    # real imaging lib.
-                    from dump1090_db_stream_spark.functions.jpeg import (
-                        decode_jpeg,
-                    )
-                    from dump1090_db_stream_spark.functions.png import (
-                        decode_png,
-                        luma_stats,
-                    )
-
-                    if data[:2] == b"\xff\xd8":
-                        w, h, ch, px = decode_jpeg(data)
-                    else:
-                        w, h, ch, px = decode_png(data)
-                    luma, feat = luma_stats(w, h, ch, px, feature_dim)
-                    rows.append({
-                        "media_id": int(mid),
-                        "n_bytes": len(data),
-                        "width": w,
-                        "height": h,
-                        "mean_luma": luma,
-                        "feature": [float(x) for x in feat],
-                    })
+                rows.append({
+                    "media_id": int(mid),
+                    "n_bytes": len(data),
+                    "width": (len(data) % 640) + 1,
+                    "height": (len(data) % 480) + 1,
+                    "mean_luma": (sum(data[:256])
+                                  / max(1, len(data[:256]))) / 255.0,
+                    "feature": _stub_features(data, feature_dim),
+                })
             yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA])
 
     pruned = df.select(F.col(id_col), F.col(payload_col))
     return pruned.mapInPandas(kernel, IMAGE_FEATURES_SCHEMA)
-
-
-def sample_frames(
-    df: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    every_ms: int = 1000,
-    max_frames: int = 8,
-    decode_stub: bool = True,
-) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame (1->N).
-
-    mapInPandas (not a scalar UDF) precisely because the cardinality
-    changes; the iterator contract streams batches without materializing
-    a whole partition.
-
-    ``decode_stub=False`` extracts REAL frames from two container
-    kinds, sniffed per payload:
-
-    - MP4 (ISO BMFF): ``functions.mp4`` parses the box tree to the
-      video track's sample tables (stsz/stsc/stco/stts/stss) and emits
-      the exact byte range of one sync sample (keyframe) per
-      ``every_ms`` of track time — frame EXTRACTION is real; H.264
-      DECODE of the emitted access units still needs ffmpeg and stays
-      behind the seam.
-    - MJPEG-style concatenated-PNG (frames are whole PNG images
-      appended back-to-back — splittable on the PNG signature, each
-      emitted frame independently decodable by ``functions.png``);
-      every ``every_ms``-th frame is kept, one frame per ms of
-      container time by position.
-
-    Other formats raise at the same seam.
-    """
-    import pandas as pd
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                if decode_stub:
-                    # stub: duration scales with size; byte-slice frames
-                    n = min(max_frames, max(1, len(data) // 64))
-                    for i in range(n):
-                        rows.append({
-                            "media_id": int(mid),
-                            "frame_index": i,
-                            "frame_ts_ms": i * every_ms,
-                            "frame_bytes": data[i * 64:(i + 1) * 64],
-                        })
-                else:
-                    from dump1090_db_stream_spark.functions.mp4 import (
-                        is_mp4,
-                        sync_frame_plan,
-                        video_sample_index,
-                    )
-                    from dump1090_db_stream_spark.functions.png import (
-                        _SIGNATURE,
-                    )
-
-                    if is_mp4(data):
-                        plan = sync_frame_plan(
-                            video_sample_index(data), every_ms, max_frames)
-                        for i, s in enumerate(plan):
-                            rows.append({
-                                "media_id": int(mid),
-                                "frame_index": i,
-                                "frame_ts_ms": s.ts_ms,
-                                "frame_bytes":
-                                    data[s.offset:s.offset + s.size],
-                            })
-                        continue
-                    if not data.startswith(_SIGNATURE):
-                        raise ValueError(
-                            "unsupported video container (not MP4, not "
-                            "concatenated-PNG) — codec seam")
-                    # split on PNG signatures: each part is one frame
-                    starts = []
-                    off = 0
-                    while True:
-                        idx = data.find(_SIGNATURE, off)
-                        if idx < 0:
-                            break
-                        starts.append(idx)
-                        off = idx + len(_SIGNATURE)
-                    starts.append(len(data))
-                    frames = [data[starts[i]:starts[i + 1]]
-                              for i in range(len(starts) - 1)]
-                    for i, fi in enumerate(
-                            range(0, len(frames), max(1, every_ms))):
-                        if i >= max_frames:
-                            break
-                        rows.append({
-                            "media_id": int(mid),
-                            "frame_index": i,
-                            # container time: one frame per ms
-                            "frame_ts_ms": fi,
-                            "frame_bytes": frames[fi],
-                        })
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SAMPLE_SCHEMA])
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        kernel, FRAME_SAMPLE_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("width", T.IntegerType(), False),
-    T.StructField("height", T.IntegerType(), False),
-    T.StructField("payload", T.BinaryType(), True),
-])
-
-AUDIO_FEATURES_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("n_bytes", T.LongType(), False),
-    T.StructField("duration_ms", T.LongType(), True),
-    T.StructField("rms", T.DoubleType(), True),
-    T.StructField("mfcc", T.ArrayType(T.FloatType()), True),
-])
-
-
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    decode_stub: bool = True,
-) -> DataFrame:
-    """Image resize: binary -> binary at a target (width, height) — the
-    normalize-before-training step. 1:1 cardinality but still mapInPandas
-    (not a scalar UDF): payloads stream through Arrow in bounded batches
-    instead of one row at a time.
-
-    Stub "resize" emits a deterministic byte string scaled to the target
-    pixel count so output sizes are testable; a real PIL/opencv
-    ``Image.resize`` plugs into the marked seam.
-    """
-    import pandas as pd
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real resize requires PIL/opencv — plug in here")
-            rows = []
-            target = max(1, (width * height) // 64)  # stub: bytes ∝ pixels
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                out = (data * (target // max(1, len(data)) + 1))[:target]
-                rows.append({"media_id": int(mid), "width": width,
-                             "height": height, "payload": out})
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZED_SCHEMA])
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        kernel, RESIZED_SCHEMA)
-
-
-def extract_audio_features(
-    df: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    n_mfcc: int = 13,
-    decode_stub: bool = True,
-) -> DataFrame:
-    """Audio decode + features (duration, RMS energy, MFCC-shaped vector)
-    as Arrow-batched mapInPandas — same plumbing contract as the image
-    kernel; librosa/soundfile plug into the marked seam."""
-    import pandas as pd
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                if decode_stub:
-                    rows.append({
-                        "media_id": int(mid),
-                        "n_bytes": len(data),
-                        # stub: 16-bit mono 16 kHz -> 2 B per sample
-                        "duration_ms": len(data) * 1000 // 32000,
-                        "rms": (sum(b * b for b in data[:512])
-                                / max(1, len(data[:512]))) ** 0.5 / 255.0,
-                        "mfcc": _stub_features(data, n_mfcc),
-                    })
-                else:
-                    # REAL decode path, signature-dispatched:
-                    # RIFF/WAVE -> full PCM decode (functions.wav);
-                    # MPEG audio (mp3/mp2/mp1) -> REAL frame-walk
-                    # stats (functions.mp3): exact duration from
-                    # per-frame sample counts, rms/mfcc NULL — PCM
-                    # synthesis is the remaining documented seam
-                    # (functions.mp3.decode_frames). Other formats
-                    # (ogg, flac…) still raise there. The sniff
-                    # requires chained frames (no lone-header false
-                    # positives); a sniffed stream whose walk finds no
-                    # complete frame or covers <half the audio span is
-                    # a CORRUPT stream — dead-lettered as an all-NULL
-                    # feature row (the sbs1 reject discipline), never
-                    # fabricated stats, never a whole-batch raise.
-                    from dump1090_db_stream_spark.functions.mp3 import (
-                        looks_like_mpeg_audio,
-                        mp3_stats,
-                    )
-                    from dump1090_db_stream_spark.functions.wav import (
-                        audio_stats,
-                        decode_wav,
-                    )
-
-                    if data[:4] != b"RIFF" and looks_like_mpeg_audio(data):
-                        try:
-                            st = mp3_stats(data)
-                        except ValueError:
-                            st = None
-                        if st is not None and st["coverage"] < 0.5:
-                            st = None
-                        rows.append({
-                            "media_id": int(mid),
-                            "n_bytes": len(data),
-                            "duration_ms": (None if st is None
-                                            else st["duration_ms"]),
-                            "rms": None,
-                            "mfcc": None,
-                        })
-                        continue
-                    rate, ch, _bits, samples = decode_wav(data)
-                    dur, rms, bands = audio_stats(rate, ch, samples,
-                                                  n_mfcc)
-                    rows.append({
-                        "media_id": int(mid),
-                        "n_bytes": len(data),
-                        "duration_ms": dur,
-                        "rms": rms,
-                        "mfcc": [float(x) for x in bands],
-                    })
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA])
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        kernel, AUDIO_FEATURES_SCHEMA)
-
-
-PHASH_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("phash", T.LongType(), True),
-])
-
-
-def phash_images(
-    df: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    decode_stub: bool = True,
-) -> DataFrame:
-    """64-bit perceptual hash (classic DCT pHash) per image — the
-    image-side rung of the dedup ladder: re-encodes, format conversions
-    (PNG vs JPEG of the SAME picture), and mild quality loss move the
-    hash a few bits, while different pictures land ~32 bits apart, so
-    hamming bucketing (:func:`hamming_neardup_pairs`) finds visual
-    near-dups without comparing pixels pairwise.
-
-    Recipe (Arrow-batched mapInPandas, numpy DCT): decode -> Rec.601
-    gray -> 32x32 sample -> 2-D DCT -> 8x8 low-frequency block ->
-    bit i set iff coefficient > median (DC excluded from the median so
-    global brightness does not bias the threshold). With
-    ``decode_stub=False`` the REAL PNG/JPEG codecs decode payloads
-    (signature-dispatched, same as extract_image_features); the stub
-    path hashes a deterministic fake gray plane derived from payload
-    bytes so plumbing is testable without images.
-    """
-    import pandas as pd
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        n = 32
-        c = np.cos(np.pi * (2 * np.arange(n)[None, :] + 1)
-                   * np.arange(n)[:, None] / (2 * n))
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                if not data:  # empty/NULL payload: NULL hash, like the
-                    rows.append({"media_id": int(mid), "phash": None})
-                    continue  # audio twin's empty-sample branch
-                if decode_stub:
-                    plane = np.frombuffer(
-                        (data * (n * n // len(data) + 1))[:n * n],
-                        dtype=np.uint8).reshape(n, n).astype(np.float64)
-                else:
-                    from dump1090_db_stream_spark.functions.jpeg import (
-                        decode_jpeg,
-                    )
-                    from dump1090_db_stream_spark.functions.png import (
-                        decode_png,
-                    )
-
-                    if data[:2] == b"\xff\xd8":
-                        w, h, ch, px = decode_jpeg(data)
-                    else:
-                        w, h, ch, px = decode_png(data)
-                    img = np.frombuffer(bytes(px), dtype=np.uint8)
-                    img = img.reshape(h, w, ch).astype(np.float64)
-                    # any ch >= 3 (RGB, RGBA) takes Rec.601 luma of
-                    # the first three planes — an RGBA copy must hash
-                    # next to its RGB twin, not from the red channel
-                    gray = (img[:, :, 0] * 0.299 + img[:, :, 1] * 0.587
-                            + img[:, :, 2] * 0.114) if ch >= 3 \
-                        else img[:, :, 0]
-                    ys = (np.arange(n) * h) // n
-                    xs = (np.arange(n) * w) // n
-                    plane = gray[np.ix_(ys, xs)]
-                dct = c @ plane @ c.T
-                block = dct[:8, :8].ravel()
-                med = np.median(block[1:])  # DC excluded
-                bits = block > med
-                ph = 0
-                for i, b in enumerate(bits):
-                    if b:
-                        ph |= 1 << i
-                # two's-complement fold into a signed 64-bit long
-                if ph >= 1 << 63:
-                    ph -= 1 << 64
-                rows.append({"media_id": int(mid), "phash": ph})
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in PHASH_SCHEMA])
-
-    pruned = df.select(F.col(id_col), F.col(payload_col))
-    return pruned.mapInPandas(kernel, PHASH_SCHEMA)
-
-
-AUDIO_FP_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("audio_fp", T.LongType(), True),
-])
-
-
-def audio_fingerprints(
-    df: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    decode_stub: bool = True,
-) -> DataFrame:
-    """64-bit energy-delta audio fingerprint — the audio twin of
-    :func:`phash_images` on the dedup ladder: re-encoded, re-gained, or
-    mildly noisy copies of the same recording land a few hamming bits
-    apart (the bits compare RATIOS of successive frame energies, so
-    any global gain cancels), while different recordings land ~32 bits
-    apart; :func:`operators.dedup.hamming_neardup_pairs` buckets them
-    without pairwise sample comparison.
-
-    Recipe (the Haitsma-Kalker/Chromaprint family, radically
-    simplified to stay stdlib): mono-fold -> 65 equal frames -> frame
-    energy -> bit i set iff E[i+1] > E[i]. ``decode_stub=False`` runs
-    the REAL RIFF/PCM parser (``functions.wav``); the stub derives a
-    deterministic fake energy series from payload bytes.
-    """
-    import pandas as pd
-
-    N_FRAMES = 65
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                if decode_stub:
-                    x = np.frombuffer(
-                        (data * (N_FRAMES * 16 // max(1, len(data)) + 1))
-                        [:N_FRAMES * 16], dtype=np.uint8)
-                    x = x.astype(np.float64) / 255.0 - 0.5
-                else:
-                    from dump1090_db_stream_spark.functions.mp3 import (
-                        looks_like_mpeg_audio,
-                    )
-                    from dump1090_db_stream_spark.functions.wav import (
-                        decode_wav,
-                    )
-
-                    if data[:4] != b"RIFF" and looks_like_mpeg_audio(data):
-                        # MPEG audio: frame layer is real (functions.
-                        # mp3) but the fingerprint needs PCM, which
-                        # sits behind the documented synthesis seam —
-                        # emit the NULL the schema declares, like the
-                        # empty-sample branch below.
-                        rows.append({"media_id": int(mid),
-                                     "audio_fp": None})
-                        continue
-                    rate, ch, bits, samples = decode_wav(data)
-                    x = np.asarray(samples, dtype=np.float64)
-                    if ch > 1:  # mono fold
-                        x = x[: len(x) - len(x) % ch]
-                        x = x.reshape(-1, ch).mean(axis=1)
-                n = (len(x) // N_FRAMES) * N_FRAMES
-                if n == 0:
-                    rows.append({"media_id": int(mid), "audio_fp": None})
-                    continue
-                frames = x[:n].reshape(N_FRAMES, -1)
-                e = (frames * frames).sum(axis=1)
-                bits_arr = e[1:] > e[:-1]
-                fp = 0
-                for i, b in enumerate(bits_arr):
-                    if b:
-                        fp |= 1 << i
-                if fp >= 1 << 63:
-                    fp -= 1 << 64
-                rows.append({"media_id": int(mid), "audio_fp": fp})
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in AUDIO_FP_SCHEMA])
-
-    pruned = df.select(F.col(id_col), F.col(payload_col))
-    return pruned.mapInPandas(kernel, AUDIO_FP_SCHEMA)

@@ -281,7 +281,8 @@ def gopher_rules(
     ``keep``: input columns appended unchanged AFTER the rule columns,
     so a caller fusing gopher into a wider single-pass featurization
     (the capstone does) keeps its other per-doc columns without a
-    re-join. Default () is the historical output, bit-identical.
+    re-join. Default () is the historical output, bit-identical. A
+    kept name that collides with an output column raises ``ValueError``.
     """
     df = with_tokens(df, text_col, "_g_toks")
     c = F.col(text_col)
@@ -331,17 +332,24 @@ def gopher_rules(
     passed = None
     for expr in rules.values():
         passed = expr if passed is None else (passed & expr)
+    outputs = {
+        "n_words": n_words,
+        "mean_word_len": mean_wl,
+        "symbol_word_ratio": sym_ratio,
+        "bullet_line_frac": bullet_frac,
+        "ellipsis_line_frac": ell_frac,
+        "alpha_word_frac": alpha_frac,
+        "stop_hits": stop_hits,
+        **rules,
+        "gopher_pass": passed,
+    }
+    clash = sorted(set(keep) & (set(outputs) | {id_col}))
+    if clash:
+        raise ValueError(
+            f"gopher_rules keep= names collide with its outputs: {clash}")
     return df.select(
         F.col(id_col),
-        n_words.alias("n_words"),
-        mean_wl.alias("mean_word_len"),
-        sym_ratio.alias("symbol_word_ratio"),
-        bullet_frac.alias("bullet_line_frac"),
-        ell_frac.alias("ellipsis_line_frac"),
-        alpha_frac.alias("alpha_word_frac"),
-        stop_hits.alias("stop_hits"),
-        *[expr.alias(name) for name, expr in rules.items()],
-        passed.alias("gopher_pass"),
+        *[expr.alias(name) for name, expr in outputs.items()],
         *[F.col(k) for k in keep],
     )
 

@@ -11,7 +11,7 @@ model.  (The reference, ``dump1090-postgres.py``, has no text surface
 at all — this extends SURVEY.md §2.10's tokenizer story.)
 
 Deterministic simplification (OUR spec, replayed identically on all
-three sides — Python reference, Spark, DuckDB oracle):
+three sides — Python trainer, Spark encode, DuckDB oracle):
 
 - **Hard EM with Viterbi E-steps.**  Each word type takes its single
   best segmentation under the current model; the M-step recounts piece
@@ -39,20 +39,19 @@ three sides — Python reference, Spark, DuckDB oracle):
 Scale design — why this survives 100 TB
 ---------------------------------------
 1. The corpus collapses ONCE into the word-type relation
-   ``(word, freq)`` (``bpe.word_freqs`` — one shuffle); every EM
-   iteration afterwards runs over a VOCABULARY-sized relation.
-2. The E-step is fully distributed and fully JVM-side: the Viterbi DP
-   is ONE Catalyst expression (``viterbi_path_expr`` — a fold over
+   ``(word, freq)`` (``bpe.word_freqs`` — one shuffle); training
+   touches only this VOCABULARY-sized relation.
+2. EM is a short sequential loop over that relation, so
+   :func:`train_unigram_local` collects it once (vocabulary-bounded)
+   and runs the seed, the Viterbi E-steps and the M-steps in driver
+   Python — the ``bpe.train_bpe_local`` shape.
+3. Encoding is fully distributed and fully JVM-side: the Viterbi DP is
+   ONE Catalyst expression (``viterbi_path_expr`` — a fold over
    ``sequence(1, length(word))`` with a bounded inner candidate scan),
-   with the piece scores broadcast as a map literal.  No Python eval,
-   no shuffle beyond the piece-count aggregation (map-side
-   combinable, vocabulary-sized).
-3. The sequential part of EM — the M-step probability update — is a
-   bounded-collect (piece counts, <= seed size) + driver arithmetic,
-   the same shape as ``bpe.train_bpe``'s one-row argmax.
-4. Encoding segments WORD TYPES once (broadcast-joined back to the
-   token stream), so the 100 TB encode pass costs one distinct + one
-   broadcast equi-join — never a per-token DP.
+   with the piece scores broadcast as a map literal.  It segments WORD
+   TYPES once (broadcast-joined back to the token stream), so the
+   100 TB encode pass costs one distinct + one broadcast equi-join —
+   never a per-token DP and never a Python eval.
 
 The DuckDB oracle replays the ENTIRE trajectory closed-form (the
 ``bpe_merges_k64`` discipline): seed substring enumeration, every EM
@@ -171,11 +170,9 @@ def train_unigram_local_from_words(
     seed_multi: int = DEFAULT_SEED_MULTI,
     n_em: int = DEFAULT_N_EM,
 ) -> list[dict]:
-    """The in-process trainer over ``(word, freq)`` pairs — the
-    independent pure-Python reference the distributed trainer is
-    equivalence-tested against (the ``train_bpe_local_from_words``
-    seam mirror).  Returns the final vocabulary rows
-    ``(piece, n_chars, cnt, logprob, rank)``."""
+    """The in-process trainer over ``(word, freq)`` pairs (the
+    ``train_bpe_local_from_words`` seam mirror).  Returns the final
+    vocabulary rows ``(piece, n_chars, cnt, logprob, rank)``."""
     words = [(w, int(f)) for w, f in word_list
              if w and len(w) <= max_word_len]
     counts, chars = _seed_local(words, max_piece_len, seed_multi)
@@ -195,16 +192,17 @@ def train_unigram_local(
     df: DataFrame, text_col: str = "text", tokenizer="word",
     min_freq: int = 1, **kw,
 ) -> list[dict]:
-    """ONE distributed word-type count, then the whole EM loop
-    driver-local (the ``bpe.train_bpe_local`` pattern — right when the
-    type table fits the driver and EM round-trips dominate)."""
+    """The unigram-LM trainer: ONE distributed word-type count, then
+    the whole EM loop driver-local (the ``bpe.train_bpe_local``
+    pattern — the type table is vocabulary-bounded, and a distributed
+    E-step would pay a job round trip per iteration)."""
     rows = (word_freqs(df, text_col, tokenizer, min_freq)
             .collect())  # vocabulary-bounded
     return train_unigram_local_from_words(
         ((r["word"], r["freq"]) for r in rows), **kw)
 
 
-# --- the distributed E-step -------------------------------------------------
+# --- the distributed Viterbi encode ----------------------------------------
 
 
 def _char_split(word: Column) -> Column:
@@ -313,68 +311,6 @@ def unigram_tokenizer(scores: Mapping[str, int],
             _char_split(w))))
 
     return tok
-
-
-def train_unigram(
-    df: DataFrame, text_col: str = "text", tokenizer="word",
-    min_freq: int = 1,
-    max_piece_len: int = DEFAULT_MAX_PIECE_LEN,
-    max_word_len: int = DEFAULT_MAX_WORD_LEN,
-    seed_multi: int = DEFAULT_SEED_MULTI,
-    n_em: int = DEFAULT_N_EM,
-) -> list[dict]:
-    """The distributed trainer: distributed seed counts + distributed
-    Viterbi E-steps (module docstring, items 1-3), bounded collects
-    only.  Bit-identical to :func:`train_unigram_local` (test-pinned:
-    both trajectories quantize scores from the same exact integers).
-    """
-    from dump1090_db_stream_spark.cache import (
-        release_local_checkpoint,
-        track_local_checkpoint,
-    )
-
-    base = (word_freqs(df, text_col, tokenizer, min_freq)
-            .filter(F.length("word") <= F.lit(max_word_len)))
-    wf = track_local_checkpoint(base)  # read n_em + 1 times
-    try:
-        # seed: one map-side substring expansion + one vocabulary-sized
-        # aggregation; two BOUNDED collects (alphabet + top-K)
-        pos = wf.select(
-            "word", "freq",
-            F.explode(F.sequence(F.lit(1), F.length("word")))
-            .alias("p"))
-        occ = (pos.select(
-            "freq",
-            F.explode(F.sequence(F.lit(1), F.least(
-                F.lit(max_piece_len),
-                F.length("word") - F.col("p") + F.lit(1))))
-            .alias("l"),
-            F.col("word"), F.col("p"))
-            .select(F.col("word").substr(F.col("p"), F.col("l"))
-                    .alias("piece"), "freq")
-            .groupBy("piece").agg(F.sum("freq").alias("cnt")))
-        chars = occ.filter(F.length("piece") == 1).collect()
-        multi = (occ.filter(F.length("piece") > 1)
-                 .orderBy(F.col("cnt").desc(), "piece")
-                 .limit(seed_multi).collect())
-        counts = {r["piece"]: int(r["cnt"]) for r in chars}
-        counts.update({r["piece"]: int(r["cnt"]) for r in multi})
-        eff, scores = _mstep(counts, list(counts))
-        for _ in range(n_em):
-            seg = wf.select(
-                "freq",
-                viterbi_path_expr(F.col("word"), scores, max_piece_len)
-                .alias("pieces"))
-            used_rows = (seg.select(F.explode("pieces").alias("piece"),
-                                    "freq")
-                         .groupBy("piece").agg(F.sum("freq").alias("cnt"))
-                         .collect())  # vocabulary-bounded
-            eff, scores = _mstep(
-                {r["piece"]: int(r["cnt"]) for r in used_rows},
-                list(eff))
-    finally:
-        release_local_checkpoint(wf)
-    return _vocab_rows(eff, scores)
 
 
 def vocab_df(spark, rows: Sequence[dict]) -> DataFrame:

@@ -4,7 +4,7 @@ Re-expresses the reference's `while True` recv loop
 (dump1090-postgres.py:204-239) as: readStream (socket or file) ->
 parse_sbs1 -> writeStream. Semantics preserved (SURVEY.md §2.9):
 
-- T-1 micro-batch loop       -> default / processingTime trigger
+- T-1 micro-batch loop       -> default trigger (back-to-back batches)
 - T-2 append-only            -> outputMode("append")
 - T-3 processing-time stamp  -> current_timestamp() per micro-batch
   (the faithful analog of the per-recv-buffer stamp :206-207)
@@ -49,27 +49,27 @@ def file_lines(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.text(path)
 
 
-def parsed_stream(lines: DataFrame,
-                  dedup_watermark: str | None = "10 minutes") -> DataFrame:
+#: Horizon of the streaming dedup state on ``parsed_time``.
+DEDUP_WATERMARK = "10 minutes"
+
+
+def parsed_stream(lines: DataFrame) -> DataFrame:
     """Parser + idempotency: the streaming analog of the PK constraint.
 
     dropDuplicatesWithinWatermark keys on (transmission_type, parsed_time,
     hex_ident) (create_schema.sql:132-133); state is bounded by the
-    watermark horizon instead of growing with the table (what an
-    unbounded dropDuplicates would do — never acceptable on an infinite
-    stream)."""
-    msgs = parse_sbs1(lines)
-    if dedup_watermark:
-        msgs = (msgs.withWatermark("parsed_time", dedup_watermark)
-                .dropDuplicatesWithinWatermark(PRIMARY_KEY))
-    return msgs
+    :data:`DEDUP_WATERMARK` horizon instead of growing with the table
+    (what an unbounded dropDuplicates would do — never acceptable on an
+    infinite stream)."""
+    return (parse_sbs1(lines)
+            .withWatermark("parsed_time", DEDUP_WATERMARK)
+            .dropDuplicatesWithinWatermark(PRIMARY_KEY))
 
 
 def start_parquet_ingest(
     messages: DataFrame,
     path: str,
     checkpoint: str,
-    trigger_seconds: float | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
     """writeStream into the date-partitioned parquet store (append, T-2).
@@ -85,8 +85,6 @@ def start_parquet_ingest(
               .outputMode("append"))
     if available_now:
         writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
 
 

@@ -1,4 +1,4 @@
-"""Distributed BPE trainer (operators.bpe) vs a pure-Python
+"""BPE trainer and encoders (operators.bpe) vs a pure-Python
 Sennrich-style reference implementation.
 
 The reference below is the textbook algorithm (learn_bpe from
@@ -80,28 +80,25 @@ def test_merge_fold_overlapping_run_is_greedy(spark):
     assert row["ab"] == ["ab", "ab"]
 
 
-def test_pair_counts_count_overlaps(spark):
+def test_pair_counts_count_overlaps():
     """'aaa' contributes (a,a) twice — Sennrich get_stats semantics."""
-    words = bpe.with_symbols(
-        spark.createDataFrame([("aaa", 2)], ["word", "freq"]))
-    out = {(r["l"], r["r"]): r["cnt"]
-           for r in bpe.adjacent_pair_counts(words).collect()}
-    assert out == {("a", "a"): 4}
+    merges = bpe.train_bpe_local_from_words([(2, list("aaa"))], 1)
+    assert [(m["lhs"], m["rhs"], m["pair_count"]) for m in merges] == \
+        [("a", "a", 4)]
 
 
-def test_single_symbol_words_contribute_nothing(spark):
-    words = bpe.with_symbols(
-        spark.createDataFrame([("a", 5), ("bc", 1)], ["word", "freq"]))
-    out = {(r["l"], r["r"]): r["cnt"]
-           for r in bpe.adjacent_pair_counts(words).collect()}
-    assert out == {("b", "c"): 1}
+def test_single_symbol_words_contribute_nothing():
+    merges = bpe.train_bpe_local_from_words(
+        [(5, ["a"]), (1, ["b", "c"])], 3)
+    assert [(m["lhs"], m["rhs"], m["pair_count"]) for m in merges] == \
+        [("b", "c", 1)]
 
 
 def test_train_matches_reference_on_synthetic_corpus(spark):
     texts = ["the cat sat on the mat", "the cats sat", "a mat and a cat",
              "banana bandana", None, "aaaa aaa banana"]
     ref_merges, ref_words = ref_train(texts, 8)
-    got = bpe.train_bpe(_docs(spark, texts), 8)
+    got = bpe.train_bpe_local(_docs(spark, texts), 8)
     assert got == ref_merges
     # encoded word table matches the reference's final state
     enc = bpe.encode_words(
@@ -114,14 +111,14 @@ def test_train_stops_early_when_fully_merged(spark):
     """A corpus whose words all collapse before n_merges: the trainer
     returns fewer merges instead of failing or looping."""
     texts = ["ab ab ab"]
-    merges = bpe.train_bpe(_docs(spark, texts), 5)
+    merges = bpe.train_bpe_local(_docs(spark, texts), 5)
     assert [m["merged"] for m in merges] == ["ab"]
 
 
 def test_tie_break_is_count_then_lexicographic(spark):
     """'xy' and 'yz' (wrapped so counts tie): lower (lhs, rhs) wins."""
     texts = ["xy yz", "xy yz"]
-    merges = bpe.train_bpe(_docs(spark, texts), 1)
+    merges = bpe.train_bpe_local(_docs(spark, texts), 1)
     assert (merges[0]["lhs"], merges[0]["rhs"]) == ("x", "y")
 
 
@@ -129,6 +126,12 @@ def test_min_freq_prunes_type_table(spark):
     texts = ["zz common common", "common"]
     words = bpe.word_freqs(_docs(spark, texts), min_freq=2)
     assert {r["word"] for r in words.collect()} == {"common"}
+    # the trainer sees only the pruned table: no merge involves 'zz',
+    # and 'common' (freq 3) merges all the way down
+    merges = bpe.train_bpe_local(_docs(spark, texts), 10, min_freq=2)
+    assert all("z" not in m["merged"] for m in merges)
+    assert merges[0]["pair_count"] == 3
+    assert merges[-1]["merged"] == "common"
 
 
 def test_vocab_and_encoded_stats_are_consistent(spark):
@@ -138,7 +141,7 @@ def test_vocab_and_encoded_stats_are_consistent(spark):
     df = spark.createDataFrame(
         [(t, "s%d" % (i % 2)) for i, t in enumerate(texts)],
         ["text", "source"])
-    merges = bpe.train_bpe(df, 4)
+    merges = bpe.train_bpe_local(df, 4)
     vocab_total = (bpe.bpe_vocab(df, merges)
                    .agg(F.sum("n_occurrences")).collect()[0][0])
     stats_total = (bpe.encoded_stats(df, merges)
@@ -147,9 +150,10 @@ def test_vocab_and_encoded_stats_are_consistent(spark):
 
 
 def test_contract_queries_match_oracle_at_sf(spark, sf_dir):
-    """The three registry entries replay bit-identically in DuckDB on
-    the real fixture corpus (the same check the driver's harness runs,
-    kept here so a bpe.py edit cannot silently drift the replay)."""
+    """The registry entries replay bit-identically in DuckDB on the
+    real fixture corpus (the same check the driver's harness runs,
+    kept here so a bpe.py edit cannot silently drift the replay). The
+    K=64 entry pins the trainer's full 64-step trajectory."""
     duckdb = pytest.importorskip("duckdb")
     import __spark_entry__ as entrymod
 
@@ -158,7 +162,8 @@ def test_contract_queries_match_oracle_at_sf(spark, sf_dir):
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{sf_dir}/documents.parquet'")
     oracles = entrymod.oracle_sql()
-    for name in ["bpe_merges", "bpe_vocab", "bpe_encoded_stats"]:
+    for name in ["bpe_merges", "bpe_vocab", "bpe_encoded_stats",
+                 "bpe_merges_k64"]:
         sdf = entrymod.queries()[name](spark, sf_dir)
         cols = sorted(sdf.columns)
         got = sorted(map(tuple, sdf.select(*cols).collect()))
@@ -169,110 +174,44 @@ def test_contract_queries_match_oracle_at_sf(spark, sf_dir):
 
 
 @pytest.mark.slow
-def test_incremental_train_matches_classic_and_reference(spark):
-    """The pair-delta trainer (r12: train_bpe_incremental) is
-    bit-identical to train_bpe and the pure-Python reference on the
-    full trajectory, across checkpoint cadences (including
-    checkpoint_every=1, which exercises the release path every
-    iteration), and under early stop."""
-    texts = ["the cat sat on the mat", "the cats sat", "a mat and a cat",
-             "banana bandana", None, "aaaa aaa banana"]
-    ref_merges, _ = ref_train(texts, 10)
-    classic = bpe.train_bpe(_docs(spark, texts), 10)
-    assert classic == ref_merges
-    for ce in (1, 3, 8):
-        got = bpe.train_bpe_incremental(_docs(spark, texts), 10,
-                                        checkpoint_every=ce)
-        assert got == ref_merges, ce
-    # early stop: corpus exhausts before n_merges
-    assert [m["merged"] for m in
-            bpe.train_bpe_incremental(_docs(spark, ["ab ab ab"]), 5)] \
-        == ["ab"]
-    with pytest.raises(ValueError):
-        bpe.train_bpe_incremental(_docs(spark, texts), 2,
-                                  checkpoint_every=0)
-
-
-@pytest.mark.slow
-def test_incremental_train_deep_trajectory(spark):
-    """K=40 on a corpus rich enough to sustain it — the parameter
-    range the r11 verdict flagged as intractable for the classic
-    trainer's k-deep re-fold. The reference implementation is the
-    independent check (running train_bpe at this K would itself be the
-    O(K^2) path the test exists to avoid)."""
-    texts = ["the quick brown fox jumps over the lazy dog",
-             "pack my box with five dozen liquor jugs",
-             "sphinx of black quartz judge my vow",
-             "how vexingly quick daft zebras jump"] * 3
-    ref_merges, ref_words = ref_train(texts, 40)
-    assert len(ref_merges) == 40  # corpus sustains the full depth
-    got = bpe.train_bpe_incremental(_docs(spark, texts), 40)
-    assert got == ref_merges
-
-
-@pytest.mark.slow
-def test_local_trainer_matches_reference_and_distributed(spark, sf_dir):
-    """r13 (r12 verdict ask #4): train_bpe_local — one distributed
-    word-type count, classic fast BPE in driver Python — is
-    bit-identical to the pure-Python reference at K=40 on synthetic
-    text AND to the distributed incremental trainer at K=64 on the
-    contract corpus (the production-K capability path: the K-round
-    sequential dependency runs in-process where it is cheap; counting
-    and encoding stay distributed)."""
+def test_train_deep_trajectory_matches_reference(spark):
+    """K=40 on a corpus rich enough to sustain it: every merge of the
+    trainer's trajectory equals the pure-Python reference's."""
     texts = ["the quick brown fox jumps over the lazy dog",
              "pack my box with five dozen liquor jugs",
              "sphinx of black quartz judge my vow",
              "how vexingly quick daft zebras jump"] * 3
     ref_merges, _ = ref_train(texts, 40)
+    assert len(ref_merges) == 40  # corpus sustains the full depth
     assert bpe.train_bpe_local(_docs(spark, texts), 40) == ref_merges
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    dist = bpe.train_bpe_incremental(docs, 64)
-    local = bpe.train_bpe_local(docs, 64)
-    assert local == dist
-    # empty-syms tolerance + early stop through the local seam too
-    assert bpe.train_bpe_local_from_words(
-        [(3, ["a", "b"]), (1, [])], 5) == [
-        {"merge_rank": 0, "lhs": "a", "rhs": "b", "merged": "ab",
-         "pair_count": 3}]
 
-
-def test_from_words_tolerates_empty_symbol_arrays(spark):
-    """r13 regression (r12 ADVICE): train_bpe_from_words exposes the
-    (word, freq, syms) relation as a caller seam, and an empty syms
-    array used to hand slice() the negative length size-1 — a runtime
-    raise inside has_adjacent_pair/_signed_pairs/adjacent_pair_counts.
-    Empty rows must instead contribute nothing, leaving the trajectory
-    identical to the same corpus without them."""
-    rows = [("ab", 3, ["a", "b"]), ("abc", 2, ["a", "b", "c"]),
-            ("", 1, []), ("x", 1, ["x"])]
-    base = spark.createDataFrame(rows, ["word", "freq", "syms"])
-    got = bpe.train_bpe_from_words(base, 4)
-    clean = spark.createDataFrame(
-        [r for r in rows if r[2]], ["word", "freq", "syms"])
-    assert got == bpe.train_bpe_from_words(clean, 4)
+def test_from_words_tolerates_empty_symbol_arrays():
+    """The (freq, syms) seam: empty symbol arrays must contribute
+    nothing, leaving the trajectory identical to the same table without
+    them, and training stops early once no pair remains."""
+    rows = [(3, ["a", "b"]), (2, ["a", "b", "c"]), (1, []), (1, ["x"])]
+    got = bpe.train_bpe_local_from_words(rows, 4)
+    assert got == bpe.train_bpe_local_from_words(
+        [r for r in rows if r[1]], 4)
     assert [m["merged"] for m in got] == ["ab", "abc"]
 
 
 @pytest.mark.slow
-def test_encode_chunked_and_arrow_match_declarative(spark):
-    """encode_words_chunked (fold batches + checkpoint) and
-    encode_words_arrow (rank-order greedy kernel) are bit-identical to
-    the declarative encode_words on the same trained merges, at a
+def test_encode_chunked_matches_declarative(spark):
+    """encode_words_chunked (fold batches + checkpoint) is bit-identical
+    to the declarative encode_words on the same trained merges, at a
     chunk size that forces several materialization boundaries."""
     texts = ["the cat sat on the mat", "the cats sat", "a mat and a cat",
              "banana bandana", "aaaa aaa banana"]
-    merges = bpe.train_bpe_incremental(_docs(spark, texts), 12)
+    merges = bpe.train_bpe_local(_docs(spark, texts), 12)
     words = bpe.with_symbols(bpe.word_freqs(_docs(spark, texts)))
     want = {r["word"]: r["syms"]
             for r in bpe.encode_words(words, merges).collect()}
     got_c = {r["word"]: r["syms"]
              for r in bpe.encode_words_chunked(words, merges,
                                                chunk=4).collect()}
-    got_a = {r["word"]: r["syms"]
-             for r in bpe.encode_words_arrow(words, merges).collect()}
     assert got_c == want
-    assert got_a == want
     with pytest.raises(ValueError):
         bpe.encode_words_chunked(words, merges, chunk=0)
 
@@ -294,7 +233,3 @@ def test_encode_chunked_survives_high_k(spark):
            for r in bpe.encode_words_chunked(
                bpe.with_symbols(words), merges, chunk=25).collect()}
     assert out == {"abc": ["abc"], "abab": ["ab", "ab"]}
-    got_a = {r["word"]: r["syms"]
-             for r in bpe.encode_words_arrow(
-                 bpe.with_symbols(words), merges).collect()}
-    assert got_a == out

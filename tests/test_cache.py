@@ -28,7 +28,7 @@ def test_local_checkpoints_are_releasable(spark):
     localCheckpoint (RDD-layer cache, invisible to the CacheManager),
     so iterative operators route checkpoints through the tracked
     registry and release_tracked() must free the RDD blocks too —
-    otherwise every connected-components / BPE-training call leaks
+    otherwise every connected-components / chunked-encode call leaks
     executor storage for the session's lifetime."""
     from dump1090_db_stream_spark.cache import (
         release_local_checkpoint,
@@ -105,14 +105,10 @@ def test_iterative_loops_release_superseded_checkpoints_eagerly(spark):
 
 
 def test_iterative_operators_leave_no_storage_residue(spark):
-    """connected-components (both algorithms) and the incremental BPE
-    trainer must leave ZERO persistent RDDs after the caller's
-    release_tracked() — the exact residue mode the r12 full-suite run
-    caught (checkpoints from earlier test files surviving into
-    test_cache's assertion)."""
-    from dump1090_db_stream_spark.operators.bpe import (
-        train_bpe_incremental,
-    )
+    """connected-components (both algorithms) must leave ZERO
+    persistent RDDs after the caller's release_tracked() — the exact
+    residue mode the r12 full-suite run caught (checkpoints from
+    earlier test files surviving into test_cache's assertion)."""
     from dump1090_db_stream_spark.operators.graph import canonical_map
 
     release_tracked()
@@ -125,7 +121,6 @@ def test_iterative_operators_leave_no_storage_residue(spark):
         [(1, 2), (2, 3), (7, 8)], ["id_a", "id_b"])
     for algo in ("propagation", "star"):
         canonical_map(docs, pairs, algorithm=algo).count()
-    assert train_bpe_incremental(docs, 4, checkpoint_every=2)
     release_tracked()
     assert jsc.getPersistentRDDs().size() == base
 

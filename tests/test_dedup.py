@@ -48,6 +48,18 @@ def test_ngram_jaccard_pairs(docs):
     assert (1, 4) not in pairs
 
 
+def test_ngram_shingle_index_rejects_conflicting_shingling(docs):
+    """A prebuilt shingle_index fixes n and the tokenizer; passing a
+    non-default value alongside it raises instead of being ignored."""
+    idx = docs.select(F.col("doc_id").alias("id"),
+                      F.xxhash64("text").alias("sh"))
+    with pytest.raises(ValueError, match="shingle_index"):
+        ngram_jaccard_pairs(docs, n=2, shingle_index=idx)
+    with pytest.raises(ValueError, match="shingle_index"):
+        ngram_jaccard_pairs(docs, tokenizer="word", shingle_index=idx)
+    ngram_jaccard_pairs(docs, n=3, shingle_index=idx)  # default n: fine
+
+
 def test_ngram_capped_pair_budget_falls_back_to_self_join(docs,
                                                           monkeypatch):
     """r14 ADVICE: a max_df whose C(max_df, 2) exceeds the per-row

@@ -113,3 +113,30 @@ def test_r14_window_composition():
         assert promoted not in tail, promoted
     # the r13-window greens close the registry (freshest last)
     assert order[-1] == "weekly_active_by_type"
+
+
+def test_trainers_keep_no_module_level_memo(spark, sf_dir, tmp_path):
+    """Training twice must not grow any module-level dict, list or set
+    in the entry module: a process-global memo would be shared by
+    concurrent queries and hide the training cost from every call
+    after the first. A fresh scale-factor directory (a link to the
+    fixture corpus) means no earlier test can have filled such a memo
+    already."""
+    import os
+
+    os.symlink(os.path.join(sf_dir, "documents.parquet"),
+               tmp_path / "documents.parquet")
+    fresh = str(tmp_path)
+
+    def sizes() -> dict[str, int]:
+        return {k: len(v) for k, v in vars(entrymod).items()
+                if isinstance(v, (dict, list, set))}
+
+    before = sizes()
+    for name in ("bpe_merges", "unigram_vocab"):
+        for _ in range(2):
+            assert entrymod.queries()[name](spark, fresh).count() > 0
+    after = sizes()
+    grown = {k: (before.get(k, 0), n) for k, n in after.items()
+             if n > before.get(k, 0)}
+    assert grown == {}

@@ -129,26 +129,6 @@ def test_radius_join_cell_cover_is_lossless(spark, coords, radius):
     assert len(fast) >= len(coords)  # self-pairs always inside
 
 
-# --- PNG codec: decode(encode(x)) == x for arbitrary pixel buffers ---
-
-@st.composite
-def image(draw):
-    w = draw(st.integers(min_value=1, max_value=24))
-    h = draw(st.integers(min_value=1, max_value=24))
-    ch = draw(st.sampled_from([1, 3, 4]))
-    px = draw(st.binary(min_size=w * h * ch, max_size=w * h * ch))
-    return w, h, ch, px
-
-
-@settings(max_examples=50, deadline=None)
-@given(image())
-def test_png_roundtrip_property(img):
-    from dump1090_db_stream_spark.functions.png import decode_png, encode_png
-
-    w, h, ch, px = img
-    assert decode_png(encode_png(w, h, ch, px)) == (w, h, ch, bytearray(px))
-
-
 # --- seeded portable hash: Spark expression == SQL twin (DuckDB) ---
 
 @settings(max_examples=3, deadline=None)
@@ -261,69 +241,6 @@ def test_wkt_coord_formatting_spark_batch(spark):
         "i", wkt_coord(F.col("x")).alias("s")).collect()}
     for i, (_, ref) in enumerate(_WKT_RESULTS):
         assert got[i] == ref, (i, _WKT_RESULTS[i])
-
-
-@settings(max_examples=10, deadline=None)
-@given(st.integers(min_value=2, max_value=60),
-       st.integers(min_value=0, max_value=10**6))
-def test_mp4_roundtrip_arbitrary_sample_layouts(n_samples, seed):
-    """Build an MP4 with a random chunk layout / sample sizes / sync
-    set from the seed and assert the parser reconstructs every sample's
-    exact byte range and timestamp."""
-    import random
-    import struct as _struct
-
-    from dump1090_db_stream_spark.functions.mp4 import video_sample_index
-    from tests.test_mp4 import _box, _full
-
-    rng = random.Random(seed)
-    samples = [bytes([rng.randrange(1, 255)]) * rng.randrange(1, 40)
-               for _ in range(n_samples)]
-    # random chunking: split samples into 1..n chunks
-    n_chunks = rng.randrange(1, n_samples + 1)
-    cuts = sorted(rng.sample(range(1, n_samples), n_chunks - 1)) \
-        if n_chunks > 1 else []
-    bounds = [0] + cuts + [n_samples]
-    per_chunk = [bounds[i + 1] - bounds[i] for i in range(n_chunks)]
-    delta = rng.randrange(10, 2000)
-    sync = sorted(rng.sample(range(1, n_samples + 1),
-                             rng.randrange(1, n_samples + 1)))
-
-    ftyp = _box(b"ftyp", b"isom" + _struct.pack(">I", 512) + b"isomavc1")
-    mdat = _box(b"mdat", b"".join(samples))
-    data_off = len(ftyp) + 8
-    offs, off, si = [], data_off, 0
-    for c in per_chunk:
-        offs.append(off)
-        for _ in range(c):
-            off += len(samples[si]); si += 1
-    stts = _full(b"stts", _struct.pack(">III", 1, n_samples, delta))
-    # stsc runs: collapse consecutive equal samples-per-chunk
-    runs = []
-    for i, c in enumerate(per_chunk):
-        if not runs or runs[-1][1] != c:
-            runs.append((i + 1, c))
-    stsc = _full(b"stsc", _struct.pack(">I", len(runs)) + b"".join(
-        _struct.pack(">III", fc, c, 1) for fc, c in runs))
-    stsz = _full(b"stsz", _struct.pack(">II", 0, n_samples) + b"".join(
-        _struct.pack(">I", len(s)) for s in samples))
-    stco = _full(b"stco", _struct.pack(">I", n_chunks) + b"".join(
-        _struct.pack(">I", o) for o in offs))
-    stss = _full(b"stss", _struct.pack(">I", len(sync)) + b"".join(
-        _struct.pack(">I", s) for s in sync))
-    stbl = _box(b"stbl", stts + stsc + stsz + stco + stss)
-    mdhd = _full(b"mdhd", _struct.pack(">IIIIHH", 0, 0, 1000, 1000, 0, 0))
-    hdlr = _full(b"hdlr", _struct.pack(">I", 0) + b"vide"
-                 + b"\x00" * 12 + b"\x00")
-    data = ftyp + mdat + _box(b"moov", _box(b"trak", _box(
-        b"mdia", mdhd + hdlr + _box(b"minf", stbl))))
-
-    idx = video_sample_index(data)
-    assert len(idx) == n_samples
-    for s, planted in zip(idx, samples):
-        assert data[s.offset:s.offset + s.size] == planted
-    assert [s.ts_ms for s in idx] == [i * delta for i in range(n_samples)]
-    assert [s.index for s in idx if s.is_sync] == sync
 
 
 @settings(max_examples=5, deadline=None)

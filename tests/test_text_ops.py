@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dump1090_db_stream_spark.operators.text import (
@@ -114,6 +115,21 @@ def test_char_entropy_known_values(spark):
 
 
 
+def test_gopher_keep_rejects_output_name_collisions(spark):
+    """keep= names are appended after the rule outputs; one that
+    collides with an output column would make a duplicate column, so it
+    raises instead."""
+    from dump1090_db_stream_spark.operators.text import gopher_rules
+
+    df = spark.createDataFrame(
+        [(0, "the cat and the dog", 5, True, "s")],
+        ["doc_id", "text", "n_words", "gopher_pass", "source"])
+    for clash in ("n_words", "gopher_pass", "doc_id"):
+        with pytest.raises(ValueError, match=clash):
+            gopher_rules(df, keep=("source", clash))
+    assert gopher_rules(df, keep=("source",)).columns[-1] == "source"
+
+
 def test_gopher_rules_each_rule_trips_on_its_own_fixture(spark):
     from dump1090_db_stream_spark.operators.text import gopher_rules
 
@@ -147,8 +163,6 @@ def test_gopher_rules_each_rule_trips_on_its_own_fixture(spark):
 
 def test_winnow_fingerprints_guarantee_and_tie_break(spark):
     from dump1090_db_stream_spark.operators.text import winnow_fingerprints
-
-    import pytest
 
     words = ("alpha bravo charlie delta echo foxtrot golf hotel india "
              "juliet kilo lima mike november oscar papa").split()

@@ -1,6 +1,5 @@
-"""Unigram-LM trainer: pure-Python reference vs distributed trainer vs
-DuckDB trajectory replay, plus the Viterbi expression and the encode
-fallbacks (operators/unigram.py)."""
+"""Unigram-LM trainer vs the DuckDB trajectory replay, plus the Viterbi
+expression and the encode fallbacks (operators/unigram.py)."""
 from __future__ import annotations
 
 import itertools
@@ -61,16 +60,6 @@ def test_viterbi_local_matches_brute_force():
     assert U.viterbi_local("xyz", scores, 3) is None
 
 
-def test_distributed_trainer_equals_local(spark):
-    loc = U.train_unigram_local(_docs_df(spark))
-    dist = U.train_unigram(_docs_df(spark))
-    assert loc == dist
-    assert all(r["n_chars"] == 1 or r["cnt"] > 0 for r in loc)
-    # 'u'/'p' occur ONLY in the over-cap word, which is excluded from
-    # training — so no trained piece may contain them
-    assert not any("u" in r["piece"] or "p" in r["piece"] for r in loc)
-
-
 def test_viterbi_expr_equals_local(spark):
     loc = U.train_unigram_local(_docs_df(spark))
     scores = U.scores_from_rows(loc)
@@ -88,6 +77,10 @@ def test_viterbi_expr_equals_local(spark):
 
 def test_duckdb_replay_equals_local_trajectory(spark):
     loc = U.train_unigram_local(_docs_df(spark))
+    assert all(r["n_chars"] == 1 or r["cnt"] > 0 for r in loc)
+    # 'u'/'p' occur ONLY in the over-cap word, which is excluded from
+    # training — so no trained piece may contain them
+    assert not any("u" in r["piece"] or "p" in r["piece"] for r in loc)
     con = duckdb.connect()
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?,?)", DOCS)
