@@ -13,9 +13,13 @@ Differences from the reference, all documented intent rather than
 bug parity:
 
 - the sink is Spark's batched JDBC append (every row of every buffer,
-  not the reference's first-line-only commit_data bug, S-7) or —
-  preferred — the idempotent PostgreSQL ON CONFLICT upsert sink with
-  ``--upsert`` (exactly-once table state, create_schema.sql:132-133);
+  not the reference's first-line-only commit_data bug, S-7; each
+  micro-batch deduplicated on the PK first) or — preferred — the
+  idempotent PostgreSQL ON CONFLICT upsert sink with ``--upsert``
+  (exactly-once table state, create_schema.sql:132-133);
+- the stream itself keeps every accepted line: a micro-batch is one
+  stateless stage, and the checkpoint plus the file sink's manifest
+  give the parquet store exactly-once;
 - ``--parquet-store DIR`` tees the analytic parquet store (the engine's
   native layout; can run INSTEAD of a database);
 - ``--file-source DIR`` replays raw SBS-1 log files through the same
@@ -94,13 +98,31 @@ def main(argv: list[str] | None = None) -> int:
               "-d/--dbname (PGDATABASE)", file=sys.stderr)
         return 2
 
+    checkpoints = {
+        name: os.path.join(args.checkpoint, name)
+        for name, on in (("store", args.parquet_store), ("db", args.dbname),
+                         ("console", args.verbose)) if on}
+    stale = [os.path.join(ck, "state") for ck in checkpoints.values()
+             if os.path.isdir(os.path.join(ck, "state"))]
+    if stale:
+        # Spark refuses to restart a stateless plan from a checkpoint that
+        # holds operator state. Deleting state/ alone is safe: the offset
+        # and commit logs and the sink's manifest still give exactly-once.
+        print("error: the checkpoint holds dedup state written by an older "
+              "version; the stream is stateless now and cannot restart "
+              "from it. Delete only " + " and ".join(stale)
+              + ", then run again (the rest of the checkpoint keeps "
+              "exactly-once; do not start a fresh checkpoint against the "
+              "same store, that would skip new data)", file=sys.stderr)
+        return 2
+
     import time
 
     from dump1090_db_stream_spark import get_spark
-    from dump1090_db_stream_spark.sinks.writers import write_jdbc
+    from dump1090_db_stream_spark.functions.parser import parse_sbs1
+    from dump1090_db_stream_spark.sinks.writers import jdbc_foreach_batch
     from dump1090_db_stream_spark.streaming.pipeline import (
         file_lines,
-        parsed_stream,
         run_with_bounded_retries,
         socket_lines,
         start_foreach_batch,
@@ -111,14 +133,14 @@ def main(argv: list[str] | None = None) -> int:
                       **({"master": args.master} if args.master else {}))
     lines = (file_lines(spark, args.file_source) if args.file_source
              else socket_lines(spark, args.dump1090, args.port))
-    messages = parsed_stream(lines)
+    messages = parse_sbs1(lines)
 
     def start_all():
         qs = []
         if args.parquet_store:
             qs.append(start_parquet_ingest(
                 messages, args.parquet_store,
-                checkpoint=os.path.join(args.checkpoint, "store"),
+                checkpoint=checkpoints["store"],
                 available_now=args.available_now))
         if args.dbname:
             url = (f"jdbc:postgresql://{args.dbhost}:{args.dbport}"
@@ -145,15 +167,14 @@ def main(argv: list[str] | None = None) -> int:
                 batch_fn = pg_upsert_foreach_batch(
                     conn_factory, table, batchsize=args.batch_size)
             else:
-                def batch_fn(df, _epoch, _u=url, _t=table, _p=props):
-                    write_jdbc(df, _u, _t, _p, batchsize=args.batch_size)
+                batch_fn = jdbc_foreach_batch(
+                    url, table, props, batchsize=args.batch_size)
             qs.append(start_foreach_batch(
-                messages, os.path.join(args.checkpoint, "db"), batch_fn,
+                messages, checkpoints["db"], batch_fn,
                 available_now=args.available_now))
         if args.verbose:
             w = (messages.writeStream.format("console")
-                 .option("checkpointLocation",
-                         os.path.join(args.checkpoint, "console"))
+                 .option("checkpointLocation", checkpoints["console"])
                  .outputMode("append"))
             if args.available_now:
                 w = w.trigger(availableNow=True)

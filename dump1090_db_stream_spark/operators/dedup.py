@@ -127,13 +127,24 @@ def ngram_jaccard_pairs(
     index is unchanged, so the pair multiset is identical whenever the
     index is (test-pinned). The index fixes the shingling, so a
     non-default ``n`` or ``tokenizer`` passed with it raises instead of
-    being ignored.
+    being ignored. ``df`` is not read in that case, but it must still
+    carry ``id_col`` and ``text_col`` and the index ``id`` and ``sh``:
+    a mismatched frame or index raises instead of pairing the wrong
+    corpus.
     """
     if shingle_index is not None:
         if n != 3 or tokenizer is not None:
             raise ValueError(
                 "shingle_index fixes the shingling: n and tokenizer "
                 f"cannot be set with it (got n={n}, tokenizer={tokenizer!r})")
+        for frame, what, cols in ((df, "df", (id_col, text_col)),
+                                  (shingle_index, "shingle_index",
+                                   ("id", "sh"))):
+            missing = [c for c in cols if c not in frame.columns]
+            if missing:
+                raise ValueError(
+                    f"{what} lacks column(s) {missing}; it has "
+                    f"{frame.columns}")
         sh = shingle_index
     else:
         sh = (

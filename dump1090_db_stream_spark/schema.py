@@ -47,8 +47,9 @@ PARSED_TIME = "parsed_time"  # timestamptz NOT NULL (create_schema.sql:75)
 ALL_COLUMNS: list[str] = WIRE_COLUMNS + [PARSED_TIME]
 
 # Dedup identity: PK (transmission_type, parsed_time, hex_ident)
-# (create_schema.sql:132-133). Spark has no enforced PKs; operators.dedup
-# applies dropDuplicates on this trio.
+# (create_schema.sql:132-133). Spark has no enforced PKs; the sinks that
+# honour it (write_parquet_store(dedup=True), the JDBC and PG upsert
+# foreachBatch sinks) key on this trio.
 PRIMARY_KEY: list[str] = ["transmission_type", PARSED_TIME, "hex_ident"]
 
 _SPARK_TYPES: dict[str, T.DataType] = {

@@ -142,6 +142,29 @@ def write_jdbc(
     messages.write.mode("append").options(**props).jdbc(url, table)
 
 
+def jdbc_foreach_batch(
+    url: str,
+    table: str,
+    properties: dict[str, str] | None = None,
+    batchsize: int = 1000,
+):
+    """foreachBatch sink for the plain JDBC append: each micro-batch is
+    deduplicated on :data:`~dump1090_db_stream_spark.schema.PRIMARY_KEY`
+    (a stateless batch dedup) and appended with :func:`write_jdbc`.
+
+    The stream keeps every accepted line, but a table carrying the
+    reference's PK (create_schema.sql:132-133) rejects a batch holding
+    two rows with one key. ``parsed_time`` is stamped once per
+    micro-batch, so a key never spans two batches and this per-batch
+    dedup is all the PK needs."""
+
+    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
+        write_jdbc(batch_df.dropDuplicates(PRIMARY_KEY), url, table,
+                   properties, batchsize=batchsize)
+
+    return write_batch
+
+
 def write_bucketed_table(
     df: DataFrame,
     table: str,
@@ -310,24 +333,22 @@ def jsonl_shard_manifest(path: str) -> list[tuple[int, int, int]]:
 
 
 # --- PostgreSQL-dialect idempotent upsert sink --------------------------
-
-#: The reference's dedup PK (create_schema.sql:132-133): re-ingesting an
-#: overlapping feed violates it row by row unless the INSERT carries an
-#: ON CONFLICT clause.
-ADSB_PK = ("transmission_type", "parsed_time", "hex_ident")
+# The conflict key defaults to the reference's PK (schema.PRIMARY_KEY,
+# create_schema.sql:132-133): re-ingesting an overlapping feed violates
+# it row by row unless the INSERT carries an ON CONFLICT clause.
 
 
 def pg_upsert_sql(
     table: str,
     columns: list[str],
-    conflict_cols: tuple[str, ...] | list[str] = ADSB_PK,
+    conflict_cols: tuple[str, ...] | list[str] = PRIMARY_KEY,
     update_cols: list[str] | None = None,
 ) -> str:
     """PostgreSQL upsert statement for one row (DB-API ``%s``
     placeholders): ``INSERT ... ON CONFLICT (pk) DO NOTHING`` by
-    default — the database-side idempotency alternative to stream-side
-    watermark dedup for T-5 (the reference instead drops the whole
-    per-row transaction on PK violation, dump1090-postgres.py:118-123;
+    default — database-side idempotency for T-5 (the reference instead
+    drops the whole per-row transaction on PK violation,
+    dump1090-postgres.py:118-123;
     ON CONFLICT keeps the batch alive). ``update_cols`` switches to
     ``DO UPDATE SET col = EXCLUDED.col`` (last-write-wins refresh).
 
@@ -359,7 +380,7 @@ def pg_upsert_sql(
 def pg_upsert_foreach_batch(
     connection_factory,
     table: str,
-    conflict_cols: tuple[str, ...] | list[str] = ADSB_PK,
+    conflict_cols: tuple[str, ...] | list[str] = PRIMARY_KEY,
     update_cols: list[str] | None = None,
     batchsize: int = 1000,
 ):

@@ -9,9 +9,11 @@ parse_sbs1 -> writeStream. Semantics preserved (SURVEY.md §2.9):
 - T-3 processing-time stamp  -> current_timestamp() per micro-batch
   (the faithful analog of the per-recv-buffer stamp :206-207)
 - T-4 malformed/bad-value    -> width filter + try_cast (parser F-4/F-8)
-- T-5 delivery               -> checkpoint + dropDuplicatesWithinWatermark
-  on the PK trio (the reference's PK makes replays errors that crash it
-  :124-127; we make replays idempotent instead — documented improvement)
+- T-5 delivery               -> checkpoint offset log + the file sink's
+  ``_spark_metadata`` manifest: exactly-once into the parquet store, with
+  no stream-side dedup (a micro-batch is one stage, stateless). Every
+  accepted line is stored; the PK is a sink concern (plain JDBC batches
+  dedup on it, ``--upsert`` uses ON CONFLICT DO NOTHING)
 - T-6 reconnect/resume       -> restart from checkpoint; bounded-retry
   runner below mirrors --connect-attempt-limit/-delay semantics
   (:181-198, :220-237)
@@ -27,8 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from dump1090_db_stream_spark.functions.parser import parse_sbs1
-from dump1090_db_stream_spark.schema import PRIMARY_KEY
 from dump1090_db_stream_spark.sinks.writers import (
     DATE_PARTITION_COL,
     with_date_partition,
@@ -47,23 +47,6 @@ def file_lines(spark: SparkSession, path: str) -> DataFrame:
     """Replayable production alternative: a directory of raw SBS-1 log
     files; each discovered file becomes micro-batch input."""
     return spark.readStream.text(path)
-
-
-#: Horizon of the streaming dedup state on ``parsed_time``.
-DEDUP_WATERMARK = "10 minutes"
-
-
-def parsed_stream(lines: DataFrame) -> DataFrame:
-    """Parser + idempotency: the streaming analog of the PK constraint.
-
-    dropDuplicatesWithinWatermark keys on (transmission_type, parsed_time,
-    hex_ident) (create_schema.sql:132-133); state is bounded by the
-    :data:`DEDUP_WATERMARK` horizon instead of growing with the table
-    (what an unbounded dropDuplicates would do — never acceptable on an
-    infinite stream)."""
-    return (parse_sbs1(lines)
-            .withWatermark("parsed_time", DEDUP_WATERMARK)
-            .dropDuplicatesWithinWatermark(PRIMARY_KEY))
 
 
 def start_parquet_ingest(

@@ -11,10 +11,18 @@ from __future__ import annotations
 
 import datetime
 import math
+import os
 import sys
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+# The checkout this script lives in. It goes on PYTHONPATH as well as
+# sys.path, before the JVM starts: Spark's Python workers inherit the
+# environment, not the driver's sys.path, and must import the package
+# from any working directory.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 
 import duckdb  # noqa: E402
 

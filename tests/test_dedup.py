@@ -60,6 +60,24 @@ def test_ngram_shingle_index_rejects_conflicting_shingling(docs):
     ngram_jaccard_pairs(docs, n=3, shingle_index=idx)  # default n: fine
 
 
+def test_ngram_shingle_index_validates_frame_and_index_columns(docs):
+    """With a shingle_index the operator never reads df, id_col or
+    text_col; a frame or index of the wrong shape raises instead of
+    silently pairing another corpus."""
+    idx = docs.select(F.col("doc_id").alias("id"),
+                      F.xxhash64("text").alias("sh"))
+    with pytest.raises(ValueError, match="df lacks"):
+        ngram_jaccard_pairs(docs, id_col="nope", shingle_index=idx)
+    with pytest.raises(ValueError, match="df lacks"):
+        ngram_jaccard_pairs(docs, text_col="nope", shingle_index=idx)
+    with pytest.raises(ValueError, match="shingle_index lacks"):
+        ngram_jaccard_pairs(docs, shingle_index=idx.withColumnRenamed(
+            "sh", "hash"))
+    with pytest.raises(ValueError, match="shingle_index lacks"):
+        ngram_jaccard_pairs(docs, shingle_index=idx.withColumnRenamed(
+            "id", "doc_id"))
+
+
 def test_ngram_capped_pair_budget_falls_back_to_self_join(docs,
                                                           monkeypatch):
     """r14 ADVICE: a max_df whose C(max_df, 2) exceeds the per-row

@@ -15,8 +15,8 @@ import uuid
 
 import pytest
 
+from dump1090_db_stream_spark.schema import PRIMARY_KEY
 from dump1090_db_stream_spark.sinks.writers import (
-    ADSB_PK,
     pg_upsert_foreach_batch,
     pg_upsert_sql,
 )
@@ -43,7 +43,7 @@ def test_upsert_sql_do_update_form_and_validation():
         pg_upsert_sql("t", ["a", "b"], conflict_cols=("nope",))
     with pytest.raises(ValueError, match="update columns"):
         pg_upsert_sql("t", COLS, update_cols=["nope"])
-    assert ADSB_PK == ("transmission_type", "parsed_time", "hex_ident")
+    assert PRIMARY_KEY == ["transmission_type", "parsed_time", "hex_ident"]
 
 
 def _journal_factory(journal_dir: str):

