@@ -2799,9 +2799,7 @@ def q_embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     precomputes its m x ksub distance table, and candidates rank by
     the ordered sum of table lookups. Every fold is index-ascending,
     so DuckDB's sequential list_sum replays the exact IEEE values —
-    encode argmin, LUT, ADC, and rank all hash-match. The trained-
-    codebook path (pq_train) is recall-tested against brute force in
-    test_similarity.py."""
+    encode argmin, LUT, ADC, and rank all hash-match."""
     from dump1090_db_stream_spark.operators.similarity import (
         pq_codebooks_fixed,
         pq_topk,
@@ -9994,9 +9992,9 @@ def q_w1_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Wasserstein-1 snapshot drift (operators.drift.w1_drift):
     the integral sibling of ks_snapshot_drift over the same ref/cur
     month split — how far the value mass moved, in value units. CDFs
-    from two grouped prefix-sum passes; interval widths from the
-    distributed ordered-neighbor primitive (prefix_sum.
-    distributed_next) — no unpartitioned ordered window anywhere; the
+    and interval widths from ONE grouped prefix-sum pass (prefix_sum.
+    distributed_prev_counts_multi with the ordered neighbor,
+    ``with_next``) — no unpartitioned ordered window anywhere; the
     per-interval double contributions fold through the 1e-9 quantized
     decimal discipline so the oracle replays the sum bit-for-bit."""
     from dump1090_db_stream_spark.operators.drift import w1_drift

@@ -12,11 +12,13 @@ This package re-expresses that surface Spark-first:
 - ``schema``            fixed 23-column StructType (create_schema.sql:52-76)
 - ``functions.parser``  SBS-1 line -> typed row, pure Column expressions
 - ``operators.views``   callsigns / locations / flights as DataFrame builders
-- ``sources``           socket stream + text/parquet batch sources
+- ``sources``           testdata parquet loader + aircraft.json snapshot
+                        parse (the socket/file streams are Spark's built-in
+                        sources, see ``streaming.pipeline``)
 - ``sinks``             append-mode parquet (date-partitioned) / JDBC sinks
 - ``streaming``         Structured Streaming ingest pipeline
 - ``operators.dedup``   exact / MinHash-LSH / SimHash / n-gram near-dup
-- ``operators.similarity``  cosine top-k ANN (brute force + LSH-bucketed)
+- ``operators.similarity``  cosine top-k: brute force, LSH, IVF, PQ, IVF+PQ
 - ``operators.text``    language-ID, quality scoring, tokenization, fingerprints
 - ``operators.cleaning``    normalization, PII scrub, repetition filters
 - ``operators.sampling``    hash split, stratified cap, mixture sampling
@@ -28,7 +30,7 @@ This package re-expresses that surface Spark-first:
 - ``operators.rollup``      multi-resolution continuous-aggregate rollup
 - ``operators.sessions``    band join, as-of join, key dedup, sessions
 - ``operators.versioning``  digest-only corpus diff
-- ``operators.geo``         radius join, Z-order layout, WKT emission
+- ``operators.geo``         radius join, WKT/WKB emission
 - ``operators.multimodal``  binary-column feature plumbing (mapInPandas)
 """
 

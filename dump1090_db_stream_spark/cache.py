@@ -40,7 +40,7 @@ def register_for_release(df: DataFrame) -> DataFrame:
     """Register an ALREADY-cached relation (a persisted frame the
     operator manages itself, or an eager localCheckpoint whose blocks
     only :func:`release_local_checkpoint` can free) so the caller's
-    :func:`release_tracked` / :func:`release_after` covers it."""
+    :func:`release_tracked` covers it."""
     _TRACKED.append((df, True))
     return df
 
@@ -96,19 +96,3 @@ def release_local_checkpoint(df: DataFrame) -> bool:
         return True
     except Exception:  # session stopped / internal API moved
         return False
-
-
-def tracked_mark() -> int:
-    """Position marker for :func:`release_after` — lets library code
-    that runs inside a loop (e.g. a foreachBatch sink) free ONLY the
-    intermediates its own body tracked, without touching caches an
-    application holds across the loop."""
-    return len(_TRACKED)
-
-
-def release_after(mark: int) -> int:
-    """Unpersist every intermediate tracked AFTER ``mark`` (a value
-    from :func:`tracked_mark`); returns the count released."""
-    n = sum(1 for df, ck in _TRACKED[mark:] if _release_one(df, ck))
-    del _TRACKED[mark:]
-    return n

@@ -62,7 +62,6 @@ def parse_sbs1_lines(
     value_col: str = "value",
     parsed_time: Column | None = None,
     strict_integer_rows: bool = False,
-    keep_malformed: bool = False,
 ) -> DataFrame:
     """Parse a DataFrame of raw SBS-1 text lines into the typed message table.
 
@@ -80,10 +79,10 @@ def parse_sbs1_lines(
     strict_integer_rows : reproduce the reference's PG-coercion row drop
         for decimal ground_speed/track (SQLSTATE 22P02 path,
         dump1090-postgres.py:118-123).
-    keep_malformed : keep non-22-field lines (SEL/ID/AIR/STA/CLK short
-        forms) with NULL-padded fields instead of dropping them. The
-        reference drops them (dump1090-postgres.py:102); this flag is an
-        extension for lossless archival.
+
+    Lines that are not 22-field MSG lines are dropped, as in the
+    reference (dump1090-postgres.py:102); :func:`parse_sbs1_tagged`
+    keeps every line, NULL-padded and tagged, for lossless archival.
     """
     if parsed_time is None:
         parsed_time = F.current_timestamp()
@@ -91,14 +90,12 @@ def parse_sbs1_lines(
     # F-2 + F-3: strip trailing CR, split on ','. split() with -1 keeps
     # trailing empty fields — required: MSG lines end ",,0" etc.
     fields = F.split(F.regexp_replace(F.col(value_col), "\r$", ""), ",", -1)
-    df = lines.select(fields.alias("_f"))
+    # F-4: width filter — only 22-field MSG lines survive.
+    df = (lines.select(fields.alias("_f"))
+          .filter(F.size(F.col("_f")) == N_WIRE_FIELDS))
 
-    if not keep_malformed:
-        # F-4: width filter — only 22-field MSG lines survive.
-        df = df.filter(F.size(F.col("_f")) == N_WIRE_FIELDS)
-
-    # F-6 + F-7 + F-8: bind names, null-normalize, coerce. F.get() (not
-    # getItem) so short keep_malformed rows yield NULL, not an index error.
+    # F-6 + F-7 + F-8: bind names, null-normalize, coerce (F.get(), the
+    # same field access as parse_sbs1_tagged, whose short rows need it).
     cols = [
         _coerce(name, F.get(F.col("_f"), i)).alias(name)
         for i, name in enumerate(WIRE_COLUMNS)

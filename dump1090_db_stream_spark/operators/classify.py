@@ -245,41 +245,3 @@ def classifier_scores(
         F.col("_id").alias(id_col), "n_units",
         F.round(score, 6).alias("score"),
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("prob"))
-
-
-def classifier_stream_sink(
-    weights: DataFrame,
-    out_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 4096,
-    ngrams: tuple[int, ...] = (1, 2),
-    bias: float = 0.0,
-    default_weight: float = 0.0,
-    tokenizer=None,
-):
-    """foreachBatch sink scoring a DOCUMENT STREAM against a trained
-    model — the deployment shape of the quality filter: train once in
-    batch (:func:`nb_logodds_weights`, or import external weights),
-    then every arriving micro-batch pays one narrow scan + the
-    broadcast model join and lands its (id, n_units, score, prob)
-    rows under ``<out_path>/batch=<batchId>`` with overwrite mode —
-    the ``neardup_stream_sink`` exactly-once discipline: an
-    at-least-once replay after a crash-between-write-and-checkpoint
-    rewrites the same subdirectory instead of appending duplicate
-    score rows. The weights relation is evaluated once per batch as a
-    broadcast; persist it upstream (``cache.track``) so the training
-    plan does not re-execute per micro-batch.
-
-    Read the accumulated scores with ``spark.read.parquet(out_path)``;
-    the batch column is partition metadata.
-    """
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        scored = classifier_scores(
-            batch_df, weights, id_col=id_col, text_col=text_col,
-            n_buckets=n_buckets, ngrams=ngrams, bias=bias,
-            default_weight=default_weight, tokenizer=tokenizer)
-        (scored.write.mode("overwrite")
-         .parquet(f"{out_path}/batch={batch_id}"))
-
-    return sink

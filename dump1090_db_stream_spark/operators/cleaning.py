@@ -14,15 +14,9 @@ whole module stays JVM-side at 100 TB:
                      filters ("fraction of characters in most common
                      n-gram") reduce to thresholds over this output.
 - repetition_filter  keep documents under a top-share threshold.
-- line_doc_frequencies / dedup_lines
-                     line-level corpus dedup (RefinedWeb-style): count
+- dedup_lines        line-level corpus dedup (RefinedWeb-style): count
                      per-line document frequency, strip lines shared by
                      more than max_df docs, reconstruct texts byte-exact.
-- write_line_partials / read_line_frequencies / dedup_lines_vs_index
-                     the incremental form: append-only per-batch
-                     frequency partials (additive across disjoint
-                     batches; streaming-maintainable), SUM-on-read,
-                     new batches stripped against corpus history.
 
 Scale notes: normalize/scrub are stateless projections (pipelined into
 the scan, zero shuffle). repetition_stats explodes n-grams and
@@ -127,35 +121,6 @@ def _split_lines(df: DataFrame, id_col: str, text_col: str,
         F.col(id_col).alias(id_alias),
         F.posexplode(F.split(F.col(text_col), _regex_literal(delimiter)))
          .alias("pos", "line"),
-    )
-
-
-def line_doc_frequencies(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    delimiter: str = "\n",
-) -> DataFrame:
-    """(line, doc_freq): how many DISTINCT documents contain each line.
-
-    The discovery half of line-level deduplication (the RefinedWeb /
-    CCNet corpus-hygiene pass: navigation menus, cookie banners,
-    "subscribe" calls-to-action repeat verbatim across a domain's
-    pages while real prose lines are unique). Document frequency, not
-    occurrence count: a line repeated inside ONE document is content
-    (verse refrains), a line repeated across MANY documents is
-    boilerplate. ``delimiter`` is matched LITERALLY (regex-quoted
-    before it reaches F.split).
-
-    Shape: split -> posexplode -> per-(doc, line) collapse -> per-line
-    count. Both aggregations combine map-side; the shuffle key is the
-    line string (only this relation's rows, never full texts).
-    """
-    lines = _split_lines(df, id_col, text_col, delimiter, "id")
-    return (
-        lines.select("id", "line").distinct()
-        .groupBy("line")
-        .agg(F.count(F.lit(1)).alias("doc_freq"))
     )
 
 
@@ -271,99 +236,6 @@ def repetition_filter(
         & (F.col("dup_frac") <= max_dup_frac)
     ).select(F.col(id_col))
     return df.join(F.broadcast(keep), id_col, "left_semi")
-
-
-def write_line_partials(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    delimiter: str = "\n",
-    mode: str = "append",
-) -> None:
-    """Append one batch's (line, doc_freq) partial counts to the
-    persisted line-frequency index — the incremental form of
-    :func:`line_doc_frequencies`, the same append-only store
-    discipline as the sketch family's day partials
-    (operators.sketches.daily_hash_samples): document frequencies are
-    ADDITIVE across batches as long as each document appears in
-    exactly ONE appended batch (the daily-batch contract; appending
-    the same documents twice double-counts them — dedupe upstream).
-    No upsert, no read-modify-write. NOTE: a bare append is
-    at-least-once under retries — for Structured Streaming
-    maintenance use :func:`line_partials_sink`, which keys each
-    micro-batch's files on its batchId so replays overwrite instead
-    of double-counting."""
-    (line_doc_frequencies(df, id_col, text_col, delimiter)
-     .write.mode(mode).parquet(path))
-
-
-def line_partials_sink(
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    delimiter: str = "\n",
-):
-    """foreachBatch sink maintaining the line-frequency store
-    EXACTLY-ONCE over at-least-once delivery: each micro-batch writes
-    its partial counts to ``<path>/batch=<batchId>`` with overwrite
-    mode, so a replay after a crash-between-write-and-checkpoint
-    rewrites the same subdirectory instead of appending a second copy
-    (the double-count would silently inflate doc_freq and over-strip
-    lines whose true corpus df is under the threshold).
-    ``read_line_frequencies`` reads the batch=N layout transparently
-    (partition-style directories; the batch column never reaches the
-    aggregate)."""
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (line_doc_frequencies(batch_df, id_col, text_col, delimiter)
-         .write.mode("overwrite").parquet(f"{path}/batch={batch_id}"))
-
-    return sink
-
-
-def read_line_frequencies(spark, path: str) -> DataFrame:
-    """(line, doc_freq) over every appended partial: one map-side-
-    combined SUM per line. Compact opportunistically by rewriting the
-    output of this function with mode='overwrite' to a new path.
-    Reads both flat appends (write_line_partials) and the batch=N
-    layout (line_partials_sink) — any partition column is dropped
-    before the aggregate."""
-    return (spark.read.parquet(path)
-            .select("line", "doc_freq")
-            .groupBy("line")
-            .agg(F.sum("doc_freq").alias("doc_freq")))
-
-
-def dedup_lines_vs_index(
-    df: DataFrame,
-    spark,
-    index_path: str,
-    max_df: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    delimiter: str = "\n",
-) -> DataFrame:
-    """Line-level dedup of a NEW batch against the persisted corpus
-    line-frequency index: lines whose CORPUS document frequency
-    exceeds ``max_df`` are stripped from the batch, whatever their
-    frequency within the batch — the incremental daily-batch form of
-    :func:`dedup_lines` (boilerplate learned from history is removed
-    the first time it appears in today's data). Same output contract
-    as dedup_lines. The frequent set is index-thresholded and
-    broadcast; the batch splits/explodes once (a single consumer here
-    — the frequent set comes from the index, so no track barrier is
-    needed, unlike dedup_lines where the line relation feeds two
-    branches)."""
-    if max_df < 1:
-        raise ValueError(f"max_df must be >= 1, got {max_df}")
-    lines = _split_lines(df, id_col, text_col, delimiter, "_ld_id")
-    frequent = (
-        read_line_frequencies(spark, index_path)
-        .filter(F.col("doc_freq") > max_df)
-        .select(F.col("line").alias("_fline"))
-    )
-    return _strip_lines_and_rebuild(df, lines, frequent, id_col,
-                                    text_col, delimiter)
 
 
 def c4_line_filter(

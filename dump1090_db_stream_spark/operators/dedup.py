@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dump1090_db_stream_spark.cache import release_after, track, tracked_mark
+from dump1090_db_stream_spark.cache import track
 from dump1090_db_stream_spark.operators.text import (
     content_hash,
     shingles,
@@ -618,159 +618,6 @@ def doc_boilerplate_share(
     )
 
 
-# --- persisted MinHash band index: incremental batch-vs-corpus dedup ---
-
-
-def write_minhash_index(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    portable_base_hash: bool = False,
-    mode: str = "overwrite",
-    tokenizer: str | None = None,
-) -> None:
-    """Persist the corpus's banded MinHash relation (id, band, bucket)
-    as parquet, with the LSH parameters in a JSON sidecar — the index
-    an INCREMENTAL dedup workflow probes daily instead of re-shingling
-    100 TB per batch. Signature assignment is paid once at write; the
-    index is ~bands x 40 B per document regardless of text size.
-
-    The sidecar is a one-record JSON-lines directory under
-    ``<path>/_lsh_meta`` (underscore-prefixed, so parquet discovery
-    ignores it), written driver-side through the same Hadoop
-    filesystem layer as the parquet (hdfs:// and s3a:// index paths
-    work, not just local disk) in the DataFrame-json-writer layout —
-    readable by ``spark.read.json`` and by sidecars written before
-    r15."""
-    from dump1090_db_stream_spark.operators.text import TOKENIZERS
-
-    # only NAMED tokenizers are allowed here: the choice must persist
-    # in the sidecar so probes always shingle the way the index was
-    # built (a callable has no serializable identity)
-    tok_name = tokenizer if tokenizer is not None else "whitespace"
-    if tok_name not in TOKENIZERS:
-        raise ValueError(
-            f"write_minhash_index requires a NAMED tokenizer from "
-            f"{sorted(TOKENIZERS)} (it is persisted in the sidecar), "
-            f"got {tokenizer!r}")
-    rows = num_hashes // bands
-    spark = df.sparkSession
-    if mode == "append":
-        # Appending with different LSH parameters would silently mix
-        # incompatible signatures that probes then read with ONE set of
-        # params — refuse instead of corrupting the index. Only a
-        # MISSING sidecar (fresh index dir) may skip the check; any
-        # other read failure (permissions, transient fs error) must
-        # propagate — swallowing it would skip the very guard that
-        # protects the index.
-        from dump1090_db_stream_spark.sinks.writers import (
-            read_json_sidecar,
-        )
-
-        old = read_json_sidecar(spark, path + "/_lsh_meta",
-                                missing_ok=True)
-        if old is not None:
-            want = {"n": n, "num_hashes": num_hashes, "bands": bands,
-                    "portable_base_hash": bool(portable_base_hash),
-                    "tokenizer": tok_name}
-            # pre-seam sidecars lack the tokenizer key; they were all
-            # built with the whitespace default
-            if old.get("tokenizer") is None:
-                old["tokenizer"] = "whitespace"
-            missing = [k for k in want if old.get(k) is None]
-            if missing:
-                raise ValueError(
-                    f"minhash index at {path} has a sidecar without "
-                    f"{missing}; refusing to append blind")
-            got = {k: (bool(old[k]) if k == "portable_base_hash"
-                       else str(old[k]) if k == "tokenizer"
-                       else int(old[k])) for k in want}
-            if got != want:
-                raise ValueError(
-                    f"minhash index at {path} was built with {got}; "
-                    f"refusing to append signatures built with {want}")
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes,
-                             portable_base_hash, tok_name)
-    _banded(sig, bands, rows).write.mode(mode).parquet(path)
-    from dump1090_db_stream_spark.sinks.writers import write_json_sidecar
-
-    # driver-side 1-row metadata write (r15, guide §5) — replaces a
-    # full createDataFrame -> coalesce(1) -> write.json Spark job
-    write_json_sidecar(spark, path + "/_lsh_meta", {
-        "n": n, "num_hashes": num_hashes, "bands": bands,
-        "portable_base_hash": bool(portable_base_hash),
-        "tokenizer": tok_name})
-
-
-def neardup_vs_index(
-    spark,
-    index_path: str,
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Near-dups of a NEW batch against a :func:`write_minhash_index`
-    corpus index: (corpus_id, new_id, jaccard >= threshold).
-
-    The incremental shape: the new batch's band relation (small) is
-    BROADCAST against the index equi-join — the index streams through
-    the join without a shuffle, and corpus text is touched only for
-    the candidate docs (LEFT SEMI down-filter before re-shingling for
-    exact verification). LSH parameters come from the index sidecar,
-    so probe signatures always match the stored ones. ``corpus`` must
-    be the same relation the index was built from (needed only for
-    verification texts)."""
-    from dump1090_db_stream_spark.sinks.writers import read_json_sidecar
-
-    meta = read_json_sidecar(spark, index_path + "/_lsh_meta")
-    # pre-seam sidecars lack the tokenizer key (whitespace default)
-    tok_name = str(meta.pop("tokenizer", None) or "whitespace")
-    meta = {k: (int(v) if k != "portable_base_hash" else bool(v))
-            for k, v in meta.items()}
-    meta["tokenizer"] = tok_name
-    rows = meta["num_hashes"] // meta["bands"]
-    idx = spark.read.parquet(index_path).withColumnRenamed("id", "corpus_id")
-    new_sig = minhash_signatures(
-        new_docs, id_col, text_col, meta["n"], meta["num_hashes"],
-        meta["portable_base_hash"], meta["tokenizer"])
-    new_banded = (_banded(new_sig, meta["bands"], rows)
-                  .withColumnRenamed("id", "new_id"))
-    candidates = (
-        idx.join(F.broadcast(new_banded), ["band", "bucket"])
-        .filter(F.col("corpus_id") != F.col("new_id"))
-        .select("corpus_id", "new_id")
-        .distinct()
-    )
-    candidates = track(candidates)
-    involved = candidates.select(F.col("corpus_id").alias("id")).distinct()
-    slim = corpus.join(F.broadcast(involved),
-                       corpus[id_col] == involved["id"], "left_semi")
-
-    def sh(docs: DataFrame, out_id: str, out_shs: str) -> DataFrame:
-        return with_tokens(docs, text_col,
-                           tokenizer=meta["tokenizer"]).select(
-            F.col(id_col).alias(out_id),
-            F.array_distinct(shingles(F.col("_toks"), meta["n"]))
-            .alias(out_shs))
-
-    return (
-        candidates
-        .join(sh(slim, "corpus_id", "shs_a"), "corpus_id")
-        .join(sh(new_docs, "new_id", "shs_b"), "new_id")
-        .withColumn("n_common", F.size(F.array_intersect("shs_a", "shs_b")))
-        .withColumn("n_union", F.size(F.array_union("shs_a", "shs_b")))
-        .withColumn("jaccard", F.round(F.col("n_common") / F.col("n_union"), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("corpus_id", "new_id", "jaccard")
-    )
-
-
 def duplicate_spans(
     df: DataFrame,
     n: int = 4,
@@ -978,45 +825,3 @@ def ngram_containment_pairs(
              .otherwise(F.col("id_b")).alias("contained_id"),
         )
     )
-
-
-def neardup_stream_sink(
-    index_path: str,
-    corpus: DataFrame,
-    out_path: str,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """foreachBatch sink completing the INCREMENTAL dedup story as an
-    actual stream: each arriving micro-batch of documents probes the
-    persisted MinHash index (:func:`neardup_vs_index` — batch band
-    relation broadcast, index never shuffles) and lands its flagged
-    (corpus_id, new_id, jaccard) rows under
-    ``<out_path>/batch=<batchId>`` with overwrite mode — the
-    ``line_partials_sink`` exactly-once discipline: an at-least-once
-    replay after a crash-between-write-and-checkpoint rewrites the
-    same subdirectory instead of appending duplicate flag rows.
-
-    ``corpus`` is the relation the index was built from (verification
-    texts only — candidates are LEFT-SEMI filtered before any
-    re-shingling). Read the accumulated flags with
-    ``spark.read.parquet(out_path)``; the batch column is partition
-    metadata.
-    """
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # free only the caches THIS body tracks (the candidate
-        # relation inside neardup_vs_index) — a blanket
-        # release_tracked() here would also evict caches the
-        # application holds across micro-batches
-        mark = tracked_mark()
-        flagged = neardup_vs_index(
-            spark, index_path, batch_df, corpus,
-            threshold=threshold, id_col=id_col, text_col=text_col)
-        (flagged.write.mode("overwrite")
-         .parquet(f"{out_path}/batch={batch_id}"))
-        release_after(mark)
-
-    return sink
-

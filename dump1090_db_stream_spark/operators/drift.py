@@ -14,7 +14,7 @@ Scale shape (the whole point): a two-sample KS needs both empirical
 CDFs — cumulative counts in GLOBAL score order, the one plan Spark's
 Window API cannot express scale-safely when the score is continuous
 (|distinct| ~ n). Both cumulative relations therefore come from
-:func:`operators.prefix_sum.distributed_prev_counts` — the
+:func:`operators.prefix_sum.distributed_prev_counts_multi` — the
 quantile-bucketed distributed prefix-sum — so no unpartitioned ordered
 window exists anywhere in the plan: the per-group CDF uses the GROUPED
 form (per-group bounds, windows over (group, bucket)), the pooled CDF
@@ -90,34 +90,34 @@ def ks_drift_by(
 
     from dump1090_db_stream_spark.cache import track
     from dump1090_db_stream_spark.operators.prefix_sum import (
-        distributed_prev_counts,
+        distributed_prev_counts_multi,
     )
 
     # the (group, score) relation feeds the grouped prefix-sum's three
     # branches AND the pooled marginal below — persist once
     per_gs = track(per_gs)
-    grouped = distributed_prev_counts(
-        per_gs, "s", "_cnt", n_range_buckets,
+    grouped = distributed_prev_counts_multi(
+        per_gs, "s", ("_cnt",), n_range_buckets,
         partition_cols=("g",), with_totals=True,
         bounds_join=bounds_join)
     # pooled CDF over the distinct-score marginal (never input-grain:
     # it aggregates the already-aggregated (g, s) relation)
     per_s = per_gs.groupBy("s").agg(F.sum("_cnt").alias("_call"))
-    pooled = distributed_prev_counts(
-        track(per_s), "s", "_call", n_range_buckets, with_totals=True)
+    pooled = distributed_prev_counts_multi(
+        track(per_s), "s", ("_call",), n_range_buckets, with_totals=True)
 
     pts = (grouped
-           .withColumnRenamed("_total", "n")
+           .withColumnRenamed("_total_cnt", "n")
            .join(pooled.select("s",
-                               F.col("_prev").alias("_pall"),
-                               (F.col("_prev") + F.col("_call"))
+                               F.col("_prev_call").alias("_pall"),
+                               (F.col("_prev_call") + F.col("_call"))
                                .alias("_call_incl"),
-                               F.col("_total").alias("_n_all")),
+                               F.col("_total_call").alias("_n_all")),
                  "s")
            .select("g", "n",
                    (F.col("_n_all") - F.col("n")).alias("n_rest"),
-                   F.col("_prev").alias("_pg"),
-                   (F.col("_prev") + F.col("_cnt")).alias("_cg"),
+                   F.col("_prev_cnt").alias("_pg"),
+                   (F.col("_prev_cnt") + F.col("_cnt")).alias("_cg"),
                    "_pall", "_call_incl"))
     right = F.abs(
         F.col("_cg").cast("double") / F.col("n").cast("double")
@@ -259,52 +259,6 @@ def ks_drift(
         F.when(evaluable, F.col("_ks") > crit).alias("drifted"))
 
 
-def drift_stream_sink(
-    reference: DataFrame,
-    out_path: str,
-    score_col: str,
-    keys: list[str] | None = None,
-    n_range_buckets: int = 64,
-    bounds_join: str = "broadcast",
-):
-    """foreachBatch sink turning :func:`ks_drift` into a LIVE ingest
-    monitor — the deployment shape of drift detection: freeze a
-    reference snapshot once (persist it upstream, ``cache.track``, so
-    its plan does not re-execute per micro-batch), then every arriving
-    micro-batch computes the exact per-slice KS against it and lands
-    its ``(*keys, n_ref, n_cur, ks, ks_crit_05, drifted)`` rows under
-    ``<out_path>/batch=<batchId>`` with overwrite mode — the
-    ``classifier_stream_sink`` exactly-once discipline: an
-    at-least-once replay after a crash-between-write-and-checkpoint
-    rewrites the same subdirectory instead of appending duplicate
-    monitor rows.
-
-    Read the accumulated monitor table with
-    ``spark.read.parquet(out_path)``; the batch column is partition
-    metadata, so "alarm history for slice X" is an ordinary filtered
-    scan, and "is anything drifting NOW" is a max(batch) lookup that
-    prunes to one partition.
-    """
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from dump1090_db_stream_spark.cache import (
-            release_after, tracked_mark)
-
-        # free only the caches THIS body tracks (ks_drift persists the
-        # per-score grain plus the grouped guard's bounds relation) —
-        # without the mark/release pair every micro-batch would leak
-        # 1-3 persisted DataFrames into executor storage for the
-        # stream's lifetime (the neardup_stream_sink discipline)
-        mark = tracked_mark()
-        stats = ks_drift(reference, batch_df, score_col, keys=keys,
-                         n_range_buckets=n_range_buckets,
-                         bounds_join=bounds_join)
-        (stats.write.mode("overwrite")
-         .parquet(f"{out_path}/batch={batch_id}"))
-        release_after(mark)
-
-    return sink
-
-
 def w1_drift(
     ref: DataFrame,
     cur: DataFrame,
@@ -333,11 +287,9 @@ def w1_drift(
     :func:`operators.prefix_sum.distributed_prev_counts_multi` pass
     over the (key, score) grain (ref counts zero-filled — the
     :func:`ks_drift` plumbing; ``with_next`` adds the
-    ordered-neighbor stitch to the same bucketed rows — r15:
-    previously two prefix-count passes plus a
-    :func:`operators.prefix_sum.distributed_next` pass, re-joined 1:1
-    on (key, score)), so neither the CDFs nor the gaps ever route
-    through an unpartitioned ordered window.
+    ordered-neighbor stitch to the same bucketed rows), so neither
+    the CDFs nor the gaps ever route through an unpartitioned ordered
+    window.
 
     DETERMINISM: the per-interval contributions are doubles (the gap
     width is a score difference), so their SUM is quantized to 1e-9
@@ -442,7 +394,7 @@ def ranksum_drift(
     2U = 2R - n_cur * (n_cur + 1) is exact; the tie-corrected variance
     uses T = sum(c_all^3 - c_all). ``prev_all`` — the exclusive
     cumulative count in global score order per slice — is the grouped
-    :func:`operators.prefix_sum.distributed_prev_counts` (the ks_drift
+    :func:`operators.prefix_sum.distributed_prev_counts_multi` (the ks_drift
     plumbing), so no unpartitioned ordered window exists for any
     slice. 2R and T accumulate in DECIMAL(38,0) (exact to ~1e38 —
     safe past 1e12-row slices where int64 products would overflow);
@@ -474,17 +426,17 @@ def ranksum_drift(
         F.sum("_ref").alias("_cref"))
 
     from dump1090_db_stream_spark.operators.prefix_sum import (
-        distributed_prev_counts,
+        distributed_prev_counts_multi,
     )
 
-    pts = distributed_prev_counts(
-        per, "s", "_call", n_range_buckets,
+    pts = distributed_prev_counts_multi(
+        per, "s", ("_call",), n_range_buckets,
         extra_cols=("_cref",), partition_cols=tuple(ks_),
         with_totals=True, bounds_join=bounds_join)
 
     dec = "decimal(38,0)"
     c_cur = (F.col("_call") - F.col("_cref")).cast(dec)
-    two_rank = (F.lit(2).cast(dec) * F.col("_prev").cast(dec)
+    two_rank = (F.lit(2).cast(dec) * F.col("_prev_call").cast(dec)
                 + F.col("_call").cast(dec) + F.lit(1).cast(dec))
     tie = (F.col("_call").cast(dec) * F.col("_call").cast(dec)
            * F.col("_call").cast(dec) - F.col("_call").cast(dec))
@@ -492,7 +444,7 @@ def ranksum_drift(
            .agg(F.sum(c_cur * two_rank).alias("_2r"),
                 F.sum(tie).alias("_t"),
                 F.sum("_cref").cast("long").alias("n_ref"),
-                F.max("_total").cast("long").alias("_nall")))
+                F.max("_total_call").cast("long").alias("_nall")))
 
     n_cur = (F.col("_nall") - F.col("n_ref")).alias("n_cur")
     # exact totals -> double ONCE, then one shared IEEE expression
@@ -785,9 +737,8 @@ def ph_bucketize(
     count — the relation :func:`page_hinkley_from_buckets` consumes
     and the one a streaming monitor persists between micro-batches.
     Associative by construction: bucketizing a UNION of batches equals
-    merging per-batch rows with ``sum(qsum), sum(cnt)`` (decimal sums
-    — :func:`ph_stream_sink` relies on this for batch == stream
-    bit-equality). Output: ``(*keys, b, qsum DECIMAL(38,0),
+    merging per-batch rows with ``sum(qsum), sum(cnt)`` (decimal
+    sums). Output: ``(*keys, b, qsum DECIMAL(38,0),
     cnt BIGINT)``."""
     from dump1090_db_stream_spark.operators.relevance import _quantized
 
@@ -868,153 +819,3 @@ def page_hinkley_from_buckets(
                  / F.lit(1e6)).alias("ph_stat"),
                 F.col("alarm_bucket").isNotNull().alias("drifted"),
                 "alarm_bucket"))
-
-
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for a Hadoop-compatible URI via py4j."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _atomic_overwrite(df: DataFrame, dest: str) -> None:
-    """Publish ``df`` at ``dest`` via write-to-staging + rename, so a
-    concurrent reader never observes a half-written parquet directory
-    (r13 ADVICE: plain mode("overwrite") deletes then rewrites files
-    over the whole write window). The residual race is the instant
-    between delete and rename — a reader then sees a MISSING dir (a
-    clean retryable error), never partial data; a crash there is
-    repaired by the batch's replay re-publishing."""
-    spark = df.sparkSession
-    fs, dest_p = _hadoop_fs(spark, dest)
-    staging = dest + "__staging"
-    df.write.mode("overwrite").parquet(staging)
-    fs.delete(dest_p, True)
-    _, staging_p = _hadoop_fs(spark, staging)
-    if not fs.rename(staging_p, dest_p):
-        raise IOError(f"atomic publish rename failed: {staging} -> {dest}")
-
-
-def _compact_ph_state(spark, out_path: str, kcols: list[str],
-                      batch_id: int) -> None:
-    """Fold every state partition of a batch STRICTLY OLDER than
-    ``batch_id`` (including prior compaction outputs, which carry
-    negative ids) into one ``batch=-<batch_id>`` partition and drop
-    the consumed ones — bounding the state listing/read at
-    O(keys x buckets) + one partition per batch since the last
-    compaction (r13 ADVICE: without this the merge re-read ALL prior
-    batch partitions, O(n_batches) growth on a long-lived monitor).
-
-    Exactly-once under foreachBatch replay (only the CURRENT batch can
-    be redelivered — older ones are checkpoint-committed, so their
-    partitions are stable fold inputs):
-    - the fold never reads its own output (``-batch_id`` excluded), so
-      recomputing it on replay is idempotent;
-    - consumed partitions are deleted only AFTER the fold's _SUCCESS
-      marker lands; a replay that finds the marker skips the fold and
-      just finishes the deletes, so a crash mid-delete cannot feed a
-      partial fold input back in."""
-    fs, state_p = _hadoop_fs(spark, f"{out_path}/state")
-    if not fs.exists(state_p):
-        return
-    consumed = []
-    for st in fs.listStatus(state_p):
-        name = st.getPath().getName()
-        if not name.startswith("batch="):
-            continue
-        try:
-            bid = int(name[len("batch="):])
-        except ValueError:
-            continue
-        if bid < batch_id and bid != -batch_id:
-            consumed.append(st.getPath())
-    if not consumed:
-        return
-    out_dir = f"{out_path}/state/batch=-{batch_id}"
-    fs_ok, marker = _hadoop_fs(spark, f"{out_dir}/_SUCCESS")
-    if not fs_ok.exists(marker):
-        folded = (spark.read.parquet(*[p.toString() for p in consumed])
-                  .groupBy(*kcols, "b")
-                  .agg(F.sum("qsum").alias("qsum"),
-                       F.sum("cnt").alias("cnt")))
-        folded.write.mode("overwrite").parquet(out_dir)
-    for p in consumed:
-        fs.delete(p, True)
-
-
-def ph_stream_sink(
-    out_path: str,
-    value_col: str,
-    ts_col: str = "ts",
-    keys: list[str] | None = None,
-    bucket_seconds: int = 3600,
-    delta: float = 0.0,
-    lam: float = 5.0,
-    compact_every: int = 8,
-):
-    """foreachBatch sink turning :func:`page_hinkley_drift` into a
-    LIVE changepoint monitor — the drift family's sequential arm
-    deployed the way :func:`drift_stream_sink` deploys KS, except PH
-    needs HISTORY, so the sink carries bucket-grain state across
-    micro-batches:
-
-    1. each batch's :func:`ph_bucketize` rows land under
-       ``<out_path>/state/batch=<batchId>`` with overwrite — the
-       exactly-once discipline: an at-least-once replay after a
-       crash-between-write-and-checkpoint rewrites the same
-       subdirectory instead of double-counting a batch;
-    2. the accumulated state re-merges by ``(keys, b)`` with
-       ``sum(qsum), sum(cnt)`` — EXACT decimal sums, so a bucket split
-       across batch boundaries reassembles bit-identically to
-       bucketizing the full history at once (the
-       :func:`ph_bucketize` associativity contract);
-    3. :func:`page_hinkley_from_buckets` over the merged relation
-       overwrites ``<out_path>/latest`` — after any prefix of the
-       stream, ``latest`` equals the one-shot batch computation on
-       everything ingested so far (test-pinned), which is what makes
-       the batch form the streaming monitor's replayable oracle.
-
-    Per-batch cost: one bucketize of the batch + one merge/detect over
-    the accumulated BUCKET relation (keys x buckets — O(hours), never
-    the ingested row count). Every ``compact_every`` batches the
-    consumed state partitions fold into one (``_compact_ph_state``),
-    so the per-batch listing/read stays bounded at the bucket relation
-    plus at most ``compact_every`` partitions instead of growing
-    O(n_batches) over a long-lived monitor; ``latest`` is published by
-    staging + rename (``_atomic_overwrite``) so concurrent readers
-    never see a half-written snapshot. State is a plain parquet
-    layout, so the monitor survives restarts with no driver-memory
-    state and "alarm history" is an ordinary read of ``latest`` over
-    time (or of the state partitions for forensics — transiently, a
-    forensic read BETWEEN a compaction's fold and its deletes can see
-    a bucket twice; ``latest`` itself is always consistent because the
-    detect merge runs after compaction completes)."""
-    kcols = list(keys or [])
-    if compact_every < 0:
-        raise ValueError(
-            f"compact_every must be >= 0 (0 disables), got {compact_every}")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from dump1090_db_stream_spark.cache import (
-            release_after,
-            tracked_mark,
-        )
-
-        mark = tracked_mark()
-        state = ph_bucketize(batch_df, value_col, ts_col, kcols,
-                             bucket_seconds)
-        (state.write.mode("overwrite")
-         .parquet(f"{out_path}/state/batch={batch_id}"))
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 \
-                and batch_id % compact_every == 0:
-            _compact_ph_state(spark, out_path, kcols, batch_id)
-        merged = (spark.read.parquet(f"{out_path}/state")
-                  .groupBy(*kcols, "b")
-                  .agg(F.sum("qsum").alias("qsum"),
-                       F.sum("cnt").alias("cnt")))
-        stats = page_hinkley_from_buckets(merged, kcols, delta, lam)
-        _atomic_overwrite(stats, f"{out_path}/latest")
-        release_after(mark)
-
-    return sink

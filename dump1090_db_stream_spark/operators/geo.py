@@ -169,62 +169,6 @@ def radius_join(
     )
 
 
-def zorder_key(lat: Column, lon: Column, bits: int = 16) -> Column:
-    """Morton (Z-order) key interleaving quantized lat/lon bits — the
-    2-D layout analog of time-sorting (sinks/writers.py
-    write_time_sorted): ``repartitionByRange`` + ``sortWithinPartitions``
-    on this key clusters spatially-near rows into the same files, so
-    parquet min/max stats on lat AND lon both prune for bounding-box
-    predicates. A single-column sort can only serve one dimension;
-    Z-order serves both at a small per-dimension cost.
-
-    Pure Column arithmetic (unrolled bit interleave, no UDF); ``bits``
-    per dimension — 16 gives ~600 m cells, plenty for file-level
-    pruning."""
-    scale_lat = (1 << bits) - 1
-    qla = F.round((lat + F.lit(90.0)) / F.lit(180.0)
-                  * F.lit(scale_lat)).cast("long")
-    qlo = F.round((lon + F.lit(180.0)) / F.lit(360.0)
-                  * F.lit(scale_lat)).cast("long")
-    # Column & / | are BOOLEAN in PySpark; bit b of q is pmod(shr(q,b),2)
-    # and the interleaved bit positions are disjoint, so + composes them.
-    key = F.lit(0).cast("long")
-    for b in range(bits):
-        key = (
-            key
-            + F.shiftleft(F.pmod(F.shiftright(qla, b), F.lit(2)), 2 * b)
-            + F.shiftleft(F.pmod(F.shiftright(qlo, b), F.lit(2)), 2 * b + 1)
-        )
-    return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    lat: str = "lat",
-    lon: str = "lon",
-    n_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet Z-ordered on (lat, lon): range-partition + sort by
-    the Morton key so each file covers a compact spatial tile and its
-    lat/lon footer stats form tight bounding boxes (asserted in
-    tests/test_geo.py). Bounding-box queries then skip most files
-    entirely before any row is read."""
-    with_key = df.withColumn("_z", zorder_key(F.col(lat), F.col(lon)))
-    (with_key.repartitionByRange(n_files, F.col("_z"))
-     .sortWithinPartitions("_z")
-     .drop("_z")
-     .write.mode(mode).parquet(path))
-
-
-def make_point(lon: Column, lat: Column, srid: int = 4326) -> Column:
-    """Struct stand-in for ST_SetSRID(ST_MakePoint(lon, lat), srid)
-    (README.md:261) — Sedona-compatible field order."""
-    return F.struct(lon.alias("x"), lat.alias("y"),
-                    F.lit(srid).alias("srid"))
-
-
 def wkt_coord(v: Column, decimals: int = 6) -> Column:
     """One WKT coordinate as text: fixed-point ``%.{decimals}f`` then
     trailing-zero / trailing-dot trim — ``102.500000`` → ``102.5``,
@@ -242,9 +186,9 @@ def wkt_coord(v: Column, decimals: int = 6) -> Column:
 
 
 def st_astext_point(point: Column, decimals: int = 6) -> Column:
-    """ST_AsText for the :func:`make_point` struct (or any struct with
-    ``x``/``y`` fields): ``POINT(x y)``, PostGIS text form
-    (README.md:255-263's geo surface, WKT interop without Sedona)."""
+    """ST_AsText for a point struct with ``x``/``y`` fields:
+    ``POINT(x y)``, PostGIS text form (README.md:255-263's geo surface,
+    WKT interop without Sedona)."""
     return F.concat(
         F.lit("POINT("), wkt_coord(point["x"], decimals), F.lit(" "),
         wkt_coord(point["y"], decimals), F.lit(")"))
@@ -264,29 +208,6 @@ def st_astext_line(points: Column, decimals: int = 6) -> Column:
                                    wkt_coord(p["y"], decimals))),
             ","),
         F.lit(")"))
-
-
-def track_segments(
-    df: DataFrame, key: str, ts: str, lat: str, lon: str,
-) -> DataFrame:
-    """Consecutive-fix segments per key with segment length — the
-    ST_MakeLine track query (README.md:266-273) plus the distance PostGIS
-    users derive from it. One window shuffle; lead() is frame-free."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(key).orderBy(ts)
-    out = df.select(
-        key, ts, lat, lon,
-        F.lead(lat).over(w).alias("_lat2"),
-        F.lead(lon).over(w).alias("_lon2"),
-    ).filter(F.col("_lat2").isNotNull())
-    return out.select(
-        key, ts, lat, lon,
-        F.col("_lat2").alias("lat2"), F.col("_lon2").alias("lon2"),
-        F.round(haversine_km(F.col(lat), F.col(lon),
-                             F.col("_lat2"), F.col("_lon2")), 6)
-        .alias("segment_km"),
-    )
 
 
 # --- WKB emission: binary geometry for real GIS interop -----------------
@@ -337,7 +258,7 @@ def _u32_le_hex(n: Column) -> Column:
 
 
 def st_asbinary_point(point: Column, srid: int | None = None) -> Column:
-    """ST_AsBinary for the :func:`make_point` struct (or any x/y struct):
+    """ST_AsBinary for a point struct with ``x``/``y`` fields:
     OGC WKB little-endian bytes — 01, uint32 type 1, two binary64
     coordinates. With ``srid``, the PostGIS EWKB form instead (type bit
     0x20000000 set, uint32 srid next) — what ST_AsEWKB emits and

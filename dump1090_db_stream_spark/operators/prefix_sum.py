@@ -15,13 +15,13 @@ relation through one task). The classic parallel fix decomposes it:
 
 Every intermediate is an integer sum, so the decomposition is
 bit-identical to the single global window it replaces; the approximate
-bounds only shift LOAD between buckets, never values. Used by
-``operators.evaluation.auc_score`` (continuous-score ranks),
-``operators.evaluation.auc_score_by`` (the grouped form, via
-``partition_cols``) and ``operators.sampling.quantile_normalize``
-(global distinct-value grid) — the operator classes the r7/r8 rounds
-identified as funneling ~input-grain rows through one task when the
-ordered column is continuous.
+bounds only shift LOAD between buckets, never values. One primitive,
+:func:`distributed_prev_counts_multi`, serves every caller:
+``operators.evaluation.auc_score``/``auc_score_by`` (continuous-score
+ranks), ``operators.sampling.quantile_normalize`` (distinct-value
+grids), the ``operators.drift`` KS / rank-sum / W1 family (W1 adds the
+ordered neighbour, ``with_next``), ``operators.profiling`` exact
+quantiles and ``operators.relevance`` vocabulary Gini.
 
 No reference-repo counterpart (the reference delegates ordering to
 PostgreSQL, ``create_schema.sql`` end-to-end); this is engine-level
@@ -39,178 +39,6 @@ from pyspark.sql import functions as F
 _OFFSET_ROW_BUDGET = 1 << 20
 
 
-def distributed_prev_counts(
-    rel: DataFrame,
-    order_col: str,
-    cnt_col: str,
-    n_range_buckets: int = 64,
-    extra_cols: tuple[str, ...] = (),
-    partition_cols: tuple[str, ...] = (),
-    with_totals: bool = False,
-    max_partition_groups: int | None = 65_536,
-    bounds_join: str = "broadcast",
-) -> DataFrame:
-    """Add ``_prev`` — the exclusive running sum of ``cnt_col`` in
-    ``order_col`` order — to ``rel`` (one row per distinct
-    ``(*partition_cols, order_col)`` value) without an input-grain
-    single-task sort.
-
-    With ``partition_cols`` (the r8 verdict ask: the grouped form),
-    the running sum restarts per partition-key combination and EVERY
-    stage is keyed by the partition columns too: quantile bounds come
-    from a grouped ``percentile_approx`` (one bounded row per group),
-    the cumulative window runs over (group, bucket), and the offsets
-    window over the (group, bucket) totals is PARTITIONED by group —
-    so even a group holding 80% of a corpus of continuous values sorts
-    at most ~its-share / ``n_range_buckets`` rows per task, and no
-    unpartitioned ordered window exists anywhere in the plan.
-    Partition columns must be non-null (filter upstream: a NULL group
-    key would drop at the bounds join).
-
-    ``rel`` feeds three branches (quantile bounds, bucket totals, the
-    ranked output); callers that read it from an expensive upstream
-    should persist it first (``cache.track`` discipline). Output
-    columns: ``*partition_cols, order_col, cnt_col, *extra_cols,
-    _prev`` — plus ``_total`` (the per-partition-group sum of
-    ``cnt_col``; the grand total when ungrouped) when ``with_totals``:
-    it rides the bounds aggregate/broadcast that already exists, so
-    callers that need group sizes (quantile grids: rank AND n) get
-    them without a separate aggregate job + join (r9 trim).
-
-    Degenerate ``n_range_buckets=1`` (caller opt-in, exercised by the
-    exactness tests): the bucket column collapses to a constant, so
-    the "local" cumulative window is partitioned only by
-    ``partition_cols`` — with NO partition cols that routes the whole
-    distinct relation through one task via a hash exchange on a
-    constant key, exactly the funnel this module exists to avoid (the
-    textual single-partition plan gate does not flag hash exchanges).
-    Scale-path entry points keep the default 64.
-
-    GUARD (r9 verdict ask #5): the grouped bounds relation broadcasts
-    one ~``n_range_buckets``-double row per partition-key combination,
-    so ``partition_cols`` must be a bounded vocabulary (languages,
-    crawl sources, shards) — NOT an unbounded key (domain, user id).
-    When grouped, the bounds relation is persisted and counted before
-    the plan is built (the fuzzy-join candidate-volume discipline,
-    ``operators.fuzzy``): above ``max_partition_groups`` the call
-    raises with routing advice instead of letting an unbounded
-    broadcast take down the driver at scale. The count only ever
-    RAISES — it never changes the plan — so oracle determinism holds.
-    Pass ``max_partition_groups=None`` to skip the probe job (callers
-    that know their vocabulary). The ceiling accounts for BOTH grouped
-    broadcasts (r10 ADVICE: the bounds relation is one
-    ~``n_range_buckets``-double row per group, but the OFFSETS relation
-    broadcast further down is ``groups x n_range_buckets`` ROWS — the
-    larger of the two at any bucket count): the effective group ceiling
-    is ``min(max_partition_groups, 2**20 // n_range_buckets)``, so at
-    the default 64 buckets at most ~16,384 groups broadcast — ~1M
-    offset rows (~60-80 MB as a hash relation) plus ~8 MB of bounds
-    doubles per executor. Above that, pass ``bounds_join="shuffle"``:
-    the bounds and offset relations then attach through plain
-    equi-joins on the partition key (sort-merge / shuffled-hash,
-    Catalyst's pick), which scales to ANY group cardinality — both
-    sides shuffle on the same key the downstream windows already
-    partition by, so the exchanges coalesce. The broadcast default
-    stays right for enum-like vocabularies (no shuffle of the
-    input-grain side at all); shuffle mode skips the guard probe
-    entirely (there is no broadcast left to protect). The two modes
-    are bit-identical (the decomposition does not depend on the join
-    strategy).
-    """
-    if bounds_join not in ("broadcast", "shuffle"):
-        raise ValueError(
-            f"bounds_join must be 'broadcast' or 'shuffle', "
-            f"got {bounds_join!r}")
-    if n_range_buckets < 1:
-        raise ValueError(
-            f"n_range_buckets must be >= 1, got {n_range_buckets}")
-    pcols = list(partition_cols)
-    probs = [i / n_range_buckets for i in range(1, n_range_buckets)]
-    tot = [F.sum(cnt_col).alias("_total")] if with_totals else []
-
-    def _guard(small: DataFrame) -> DataFrame:
-        if not pcols or max_partition_groups is None:
-            return small
-        from dump1090_db_stream_spark.cache import track
-
-        # the ceiling protects the LARGER grouped broadcast: the
-        # offsets relation is groups x n_range_buckets rows (r10
-        # ADVICE — it dwarfs the one-bounds-row-per-group relation the
-        # guard originally sized for), so cap total offset rows at
-        # 2**20 (~60-80 MB as a broadcast hash relation)
-        allowed = min(max_partition_groups,
-                      max(1, _OFFSET_ROW_BUDGET // n_range_buckets))
-        small = track(small)       # the count and the join reuse it
-        n_groups = small.count()
-        if n_groups > allowed:
-            raise ValueError(
-                f"distributed_prev_counts vocabulary guard: "
-                f"partition_cols {pcols} has {n_groups} distinct "
-                f"combinations (allowed {allowed} = "
-                f"min(max_partition_groups={max_partition_groups}, "
-                f"{_OFFSET_ROW_BUDGET}//n_range_buckets="
-                f"{n_range_buckets} — the offsets relation BROADCAST "
-                f"back is groups x buckets rows)); the per-group "
-                f"quantile bounds and bucket offsets are BROADCAST, so "
-                f"the group key must be a bounded vocabulary. Group by "
-                f"an enum-like column (language/source/shard), bucket "
-                f"the key upstream, pass bounds_join='shuffle' (plain "
-                f"equi-joins — scales to any cardinality), or raise "
-                f"max_partition_groups / pass None if the broadcast "
-                f"genuinely fits.")
-        return small
-
-    def _keyed(small: DataFrame):
-        # grouped attach: broadcast for bounded vocabularies (guarded),
-        # plain equi-join for unbounded keys (shuffles coalesce with
-        # the downstream (group, bucket) window exchanges)
-        return (F.broadcast(_guard(small)) if bounds_join == "broadcast"
-                else small)
-
-    def _attach(small: DataFrame) -> DataFrame:
-        # one bounded row per partition-key combination (a bounded
-        # vocabulary — languages/sources/domains), broadcast back
-        return (rel.join(_keyed(small), pcols) if pcols
-                else rel.crossJoin(F.broadcast(small)))
-
-    if not probs:                       # n_range_buckets == 1: degenerate
-        bucketed = (_attach(rel.groupBy(*pcols).agg(*tot)) if tot
-                    else rel).withColumn("_b", F.lit(0))
-    else:
-        # accuracy 1000 is plenty: bounds only BALANCE the buckets —
-        # the prefix sums are exact under any monotone bucketing
-        bnds = F.percentile_approx(order_col, probs, 1_000).alias("_bnds")
-        bucket = F.aggregate(
-            "_bnds", F.lit(0),
-            lambda acc, b: acc + F.when(F.col(order_col) >= b,
-                                        F.lit(1)).otherwise(F.lit(0)))
-        bucketed = (_attach(rel.groupBy(*pcols).agg(bnds, *tot))
-                    .withColumn("_b", bucket)
-                    .drop("_bnds"))
-    w_local = (Window.partitionBy(*pcols, "_b").orderBy(order_col)
-               .rowsBetween(Window.unboundedPreceding, -1))
-    btot = bucketed.groupBy(*pcols, "_b").agg(
-        F.sum(cnt_col).alias("_btot"))
-    # the only ordered window over bucket TOTALS: global when
-    # ungrouped (<= n_range_buckets rows), per-group otherwise
-    # (<= n_range_buckets rows per group, spread across groups)
-    w_off = (Window.partitionBy(*pcols).orderBy("_b")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = btot.select(
-        *pcols, "_b",
-        F.coalesce(F.sum("_btot").over(w_off), F.lit(0)).alias("_off"))
-    offsets = (F.broadcast(offsets)
-               if not pcols or bounds_join == "broadcast" else offsets)
-    return (bucketed
-            .withColumn("_loc",
-                        F.coalesce(F.sum(cnt_col).over(w_local),
-                                   F.lit(0)))
-            .join(offsets, pcols + ["_b"])
-            .select(*pcols, order_col, cnt_col, *extra_cols,
-                    (F.col("_off") + F.col("_loc")).alias("_prev"),
-                    *(["_total"] if with_totals else [])))
-
-
 def distributed_prev_counts_multi(
     rel: DataFrame,
     order_col: str,
@@ -223,43 +51,63 @@ def distributed_prev_counts_multi(
     max_partition_groups: int | None = 65_536,
     bounds_join: str = "broadcast",
 ) -> DataFrame:
-    """:func:`distributed_prev_counts` for SEVERAL count columns at
-    once over the SAME ordered relation — plus, optionally, the
-    :func:`distributed_next` neighbor — in ONE bucketed pass.
+    """Add, for each count column ``c`` in ``cnt_cols``, ``_prev<c>`` —
+    the exclusive running sum of ``c`` in ``order_col`` order — to
+    ``rel`` (one row per distinct ``(*partition_cols, order_col)``
+    value) without an input-grain single-task sort. All count columns
+    share ONE bucketed pass: one quantile-bounds aggregate (one guard
+    count), one cumulative window (same spec — one sort), one
+    bucket-totals aggregate and one offsets join; every output column
+    rides the same row, so there is no re-join. The two-sample drift
+    family needs the union and ref-side counts at every distinct
+    (key, score) point, and W1 the next distinct score as well.
 
-    The two-sample drift family (``operators.drift.ks_drift`` /
-    ``w1_drift``) needs the exclusive running sum of BOTH the union
-    count and the ref-side count at every distinct (key, score) point,
-    and W1 additionally needs the next distinct score. Built from the
-    single-column primitives that is two (three with the neighbor)
-    full bucket-decomposition passes over the same rows — each with
-    its own bounds aggregate, guarded vocabulary count, cumulative
-    window, offsets relation — re-joined 1:1 on (key, score) at the
-    end. Every one of those stages is IDENTICAL across the passes
-    except for which column the sums read, so this primitive shares
-    them (optimization guide §2.4 "remove shuffles outright" / §1.2
-    "the distributed algorithm"): one quantile-bounds aggregate (one
-    guard count), one bucketed relation, one cumulative window pass
-    computing every ``_prev<c>`` (same window spec — one sort), one
-    bucket-totals aggregate carrying every ``_btot<c>`` (plus the
-    next-bucket first value when ``with_next``), one offsets join —
-    and NO re-join, because every output column rides the same row.
+    With ``partition_cols`` the running sums restart per
+    partition-key combination and EVERY stage is keyed by the
+    partition columns too: quantile bounds come from a grouped
+    ``percentile_approx`` (one bounded row per group), the cumulative
+    window runs over (group, bucket), and the offsets window over the
+    (group, bucket) totals is PARTITIONED by group — so even a group
+    holding 80% of a corpus of continuous values sorts at most
+    ~its-share / ``n_range_buckets`` rows per task. Partition columns
+    must be non-null (a NULL group key would drop at the bounds join).
 
-    Bit-identity with the single-column passes is by construction:
-    the bucketing is the same monotone quantile bucketing (bounds from
-    the same ``percentile_approx`` over the same relation), and every
-    cumulative is the same integer sum — only the number of columns
-    riding each stage changes. Pinned by
-    ``tests/test_prefix_sum.py::test_multi_matches_single_passes``.
+    ``rel`` feeds three branches (quantile bounds, bucket totals, the
+    ranked output); callers that read it from an expensive upstream
+    should persist it first (``cache.track`` discipline).
 
     Output columns: ``*partition_cols, order_col, *cnt_cols,
     *extra_cols``, one ``_prev<c>`` per count column, one
-    ``_total<c>`` per count column when ``with_totals``, and ``_next``
+    ``_total<c>`` (the per-group sum of ``c``; the grand total when
+    ungrouped) per count column when ``with_totals`` — it rides the
+    bounds aggregate/broadcast that already exists — and ``_next``
     (the next distinct ``order_col`` value per group, NULL on the last
     row) when ``with_next``. ``rel`` must be DISTINCT on
-    ``(*partition_cols, order_col)`` when ``with_next`` (the
-    :func:`distributed_next` contract); the vocabulary guard /
-    ``bounds_join`` semantics are :func:`distributed_prev_counts`'s.
+    ``(*partition_cols, order_col)`` when ``with_next``: ``lead`` runs
+    per (group, bucket) and each bucket's last row stitches to the
+    next non-empty bucket's minimum, which monotone bucketing makes
+    exact. Pinned against plain global windows by
+    ``tests/test_prefix_sum.py``.
+
+    Degenerate ``n_range_buckets=1`` (exercised by the exactness
+    tests): the bucket column collapses to a constant, so with NO
+    partition cols the whole distinct relation goes through one task
+    — exactly the funnel this module exists to avoid. Scale-path
+    callers keep the default 64.
+
+    GUARD: the grouped bounds relation broadcasts one
+    ~``n_range_buckets``-double row per partition-key combination and
+    the offsets relation ``groups x n_range_buckets`` rows, so
+    ``partition_cols`` must be a bounded vocabulary (languages, crawl
+    sources, shards). When grouped, the bounds relation is persisted
+    and counted before the plan is built; above
+    ``min(max_partition_groups, 2**20 // n_range_buckets)`` groups the
+    call raises with routing advice. The count only ever RAISES — it
+    never changes the plan. Pass ``max_partition_groups=None`` to skip
+    the probe job, or ``bounds_join="shuffle"`` for unbounded keys:
+    the bounds and offsets then attach through plain equi-joins on the
+    partition key (no broadcast, no guard). The two modes are
+    bit-identical.
     """
     if bounds_join not in ("broadcast", "shuffle"):
         raise ValueError(
@@ -277,8 +125,7 @@ def distributed_prev_counts_multi(
            if with_totals else [])
 
     def _guard(small: DataFrame) -> DataFrame:
-        # the distributed_prev_counts guarded count, verbatim: the
-        # ceiling covers the LARGER grouped broadcast (offsets /
+        # the ceiling covers the LARGER grouped broadcast (offsets /
         # nxt-first are groups x buckets rows); the count only ever
         # RAISES — it never changes the plan
         if not pcols or max_partition_groups is None:
@@ -319,7 +166,6 @@ def distributed_prev_counts_multi(
         else:
             # nothing to attach, but grouped broadcast mode still
             # broadcasts the offsets relation below — run the guard
-            # (the distributed_next degenerate-path discipline)
             if pcols and bounds_join == "broadcast":
                 _guard(rel.groupBy(*pcols).agg(F.lit(1).alias("_one")))
             bucketed = rel
@@ -374,123 +220,3 @@ def distributed_prev_counts_multi(
                       else []),
                     *([F.coalesce("_lead", "_nextb_first").alias("_next")]
                       if with_next else [])))
-
-
-def distributed_next(
-    rel: DataFrame,
-    order_col: str,
-    value_cols: tuple[str, ...] = (),
-    partition_cols: tuple[str, ...] = (),
-    n_range_buckets: int = 64,
-    max_partition_groups: int | None = 65_536,
-    bounds_join: str = "broadcast",
-) -> DataFrame:
-    """Add ``_next`` — the next distinct ``order_col`` value in order
-    (per partition-key combination) — to ``rel`` WITHOUT an
-    unpartitioned ordered window: the ordered-NEIGHBOR twin of
-    :func:`distributed_prev_counts`, for the plans that need interval
-    widths in global value order (ECDF integrals like the Wasserstein
-    distance, gap audits over continuous keys).
-
-    Same quantile-bucket decomposition: ``lead`` runs PARTITIONED by
-    (group, bucket); the one cross-bucket seam — each bucket's last
-    row — stitches to the NEXT non-empty bucket's first value through
-    a per-(group, bucket) first-value relation (bounded:
-    ``groups x n_range_buckets`` rows) carried through an ordered
-    window over that bounded relation only. The last row overall gets
-    ``_next = NULL`` (no successor), exactly like a plain ``lead``.
-    Monotone bucketing makes the stitch exact: bucket i's values all
-    precede bucket j's for i < j, so the successor of a bucket's last
-    row is precisely the next non-empty bucket's minimum.
-
-    ``rel`` must be DISTINCT on (*partition_cols, order_col) — the
-    same grain every consumer of the prefix-sum already aggregates to.
-    ``value_cols`` ride along unchanged. GUARD (r11 ADVICE): grouped
-    broadcast mode broadcasts BOTH the per-group quantile-bounds row
-    AND the ``groups x n_range_buckets`` ``nxt_bucket`` stitch
-    relation, so the same guarded count as
-    :func:`distributed_prev_counts` runs here — above
-    ``min(max_partition_groups, 2**20 // n_range_buckets)`` distinct
-    group combinations the call raises with routing advice instead of
-    letting an unbounded broadcast take down the driver. Pass
-    ``max_partition_groups=None`` to skip the probe (callers that know
-    their vocabulary), or ``bounds_join="shuffle"`` for unbounded keys
-    (plain equi-joins, no guard needed — nothing broadcasts).
-    """
-    if bounds_join not in ("broadcast", "shuffle"):
-        raise ValueError(
-            f"bounds_join must be 'broadcast' or 'shuffle', "
-            f"got {bounds_join!r}")
-    if n_range_buckets < 1:
-        raise ValueError(
-            f"n_range_buckets must be >= 1, got {n_range_buckets}")
-    pcols = list(partition_cols)
-    probs = [i / n_range_buckets for i in range(1, n_range_buckets)]
-
-    def _guard(small: DataFrame) -> DataFrame:
-        # the distributed_prev_counts guarded count: the ceiling covers
-        # the LARGER grouped broadcast (nxt_bucket is groups x buckets
-        # rows); the count only ever RAISES — it never changes the plan
-        if not pcols or bounds_join != "broadcast" \
-                or max_partition_groups is None:
-            return small
-        from dump1090_db_stream_spark.cache import track
-
-        allowed = min(max_partition_groups,
-                      max(1, _OFFSET_ROW_BUDGET // n_range_buckets))
-        small = track(small)       # the count and the join reuse it
-        n_groups = small.count()
-        if n_groups > allowed:
-            raise ValueError(
-                f"distributed_next vocabulary guard: partition_cols "
-                f"{pcols} has {n_groups} distinct combinations "
-                f"(allowed {allowed} = min(max_partition_groups="
-                f"{max_partition_groups}, {_OFFSET_ROW_BUDGET}//"
-                f"n_range_buckets={n_range_buckets} — the nxt_bucket "
-                f"stitch relation BROADCAST back is groups x buckets "
-                f"rows)); the group key must be a bounded vocabulary. "
-                f"Group by an enum-like column, bucket the key "
-                f"upstream, pass bounds_join='shuffle' (plain "
-                f"equi-joins — scales to any cardinality), or raise "
-                f"max_partition_groups / pass None if the broadcast "
-                f"genuinely fits.")
-        return small
-
-    if not probs:
-        # degenerate single bucket: no bounds join exists, but grouped
-        # broadcast mode still broadcasts nxt_bucket (groups x 1 rows)
-        # further down — run the same guarded count on the group keys
-        _guard(rel.groupBy(*pcols).agg(F.lit(1).alias("_one")))
-        bucketed = rel.withColumn("_b", F.lit(0))
-    else:
-        bnds = F.percentile_approx(order_col, probs, 1_000).alias("_bnds")
-        bucket = F.aggregate(
-            "_bnds", F.lit(0),
-            lambda acc, b: acc + F.when(F.col(order_col) >= b,
-                                        F.lit(1)).otherwise(F.lit(0)))
-        small = _guard(rel.groupBy(*pcols).agg(bnds))
-        if pcols and bounds_join == "broadcast":
-            small = F.broadcast(small)
-        bucketed = ((rel.join(small, pcols) if pcols
-                     else rel.crossJoin(F.broadcast(small)))
-                    .withColumn("_b", bucket)
-                    .drop("_bnds"))
-    w_in = Window.partitionBy(*pcols, "_b").orderBy(order_col)
-    # bounded (group, bucket) -> first-value relation; its ordered
-    # window runs over <= n_range_buckets rows per group
-    firsts = bucketed.groupBy(*pcols, "_b").agg(
-        F.min(order_col).alias("_bfirst"))
-    nxt_bucket = firsts.select(
-        *pcols, "_b",
-        F.first("_bfirst").over(
-            Window.partitionBy(*pcols).orderBy("_b")
-            .rowsBetween(1, Window.unboundedFollowing))
-        .alias("_nextb_first"))
-    nxt_bucket = (F.broadcast(nxt_bucket)
-                  if not pcols or bounds_join == "broadcast"
-                  else nxt_bucket)
-    return (bucketed
-            .withColumn("_lead", F.lead(order_col).over(w_in))
-            .join(nxt_bucket, pcols + ["_b"])
-            .select(*pcols, order_col, *value_cols,
-                    F.coalesce("_lead", "_nextb_first").alias("_next")))

@@ -405,7 +405,7 @@ def exact_quantiles_by(
     group's values in executor memory (OOM-bound for a dominant
     group), and ``Window.orderBy(v)`` ranks route the whole relation
     through one task. Here the cumulative counts come from the GROUPED
-    :func:`operators.prefix_sum.distributed_prev_counts` over the
+    :func:`operators.prefix_sum.distributed_prev_counts_multi` over the
     distinct (key, value) grain — per-group quantile-bucketed, no
     unpartitioned ordered window, memory bounded by the distinct-value
     relation per task — and each quantile is then ONE filtered min per
@@ -433,11 +433,11 @@ def exact_quantiles_by(
 
     from dump1090_db_stream_spark.cache import track
     from dump1090_db_stream_spark.operators.prefix_sum import (
-        distributed_prev_counts,
+        distributed_prev_counts_multi,
     )
 
-    ranked = distributed_prev_counts(
-        track(per), "_v", "_cnt", n_range_buckets,
+    ranked = distributed_prev_counts_multi(
+        track(per), "_v", ("_cnt",), n_range_buckets,
         partition_cols=tuple(kcols), with_totals=True,
         bounds_join=bounds_join)
     # target rank per prob: ceil(p * n), floored at 1 (p = 0 -> min).
@@ -446,13 +446,13 @@ def exact_quantiles_by(
     # an integer, which IS exact in IEEE for representable p
     probs_arr = F.array(*[F.lit(p) for p in ps])
     exploded = ranked.select(
-        *kcols, "_v", "_cnt", "_prev", "_total",
+        *kcols, "_v", "_cnt", "_prev_cnt", "_total_cnt",
         F.explode(probs_arr).alias("prob"))
     target = F.greatest(
         F.lit(1).cast("long"),
-        F.ceil(F.col("prob") * F.col("_total").cast("double")))
+        F.ceil(F.col("prob") * F.col("_total_cnt").cast("double")))
     return (exploded
-            .filter((F.col("_prev") + F.col("_cnt")) >= target)
+            .filter((F.col("_prev_cnt") + F.col("_cnt")) >= target)
             .groupBy(*kcols, "prob")
             .agg(F.min("_v").alias("q"))
             .select(*kcols, "prob", "q"))

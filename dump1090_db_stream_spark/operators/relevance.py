@@ -101,13 +101,6 @@ def _bigrams_of_toks(toks: DataFrame) -> DataFrame:
     )
 
 
-def bigram_counts(df: DataFrame, text_col: str = "text",
-                  tokenizer=None) -> DataFrame:
-    """(w1, w2, c_xy): corpus-wide adjacent-token bigram counts."""
-    return _bigrams_of_toks(with_tokens(df, text_col,
-                                        tokenizer=tokenizer))
-
-
 def bigram_pmi(
     df: DataFrame,
     text_col: str = "text",
@@ -592,7 +585,7 @@ def vocab_concentration(
     (group, count)->multiplicity relation (at most ~sqrt(2*T_g)
     distinct counts per group — far smaller than the vocabulary), and
     ``prev`` comes from the GROUPED
-    :func:`operators.prefix_sum.distributed_prev_counts` ordered by
+    :func:`operators.prefix_sum.distributed_prev_counts_multi` ordered by
     the count value — no unpartitioned ordered window, vocabulary
     guard / ``bounds_join="shuffle"`` escape as usual. Every
     accumulation is an exact DECIMAL(38,0) integer (rank-weighted
@@ -604,27 +597,27 @@ def vocab_concentration(
     """
     from dump1090_db_stream_spark.cache import track
     from dump1090_db_stream_spark.operators.prefix_sum import (
-        distributed_prev_counts,
+        distributed_prev_counts_multi,
     )
 
     gt = _group_terms(df, group_col, text_col, unit, tokenizer)
     # (g, c) -> m: multiplicity of each distinct count value
     gc = track(gt.groupBy("g", "c").agg(F.count(F.lit(1)).alias("_m")))
-    ranked = distributed_prev_counts(
-        gc, "c", "_m", n_range_buckets,
+    ranked = distributed_prev_counts_multi(
+        gc, "c", ("_m",), n_range_buckets,
         partition_cols=("g",), with_totals=True,
         bounds_join=bounds_join)
     dec = "decimal(38,0)"
     c_d = F.col("c").cast(dec)
     m_d = F.col("_m").cast(dec)
-    p_d = F.col("_prev").cast(dec)
+    p_d = F.col("_prev_m").cast(dec)
     # triangular number in exact int64 (m <= ~sqrt(2*T_g) distinct
     # count values, so m^2 stays far below 2^63) — decimal DIVISION
     # is engine-specific about scale, integer div is not
     tri_d = F.expr("_m * (_m + 1) div 2").cast(dec)
     s_row = c_d * (m_d * p_d + tri_d)
     agg = (ranked
-           .select("g", F.col("_total").alias("n_types"),
+           .select("g", F.col("_total_m").alias("n_types"),
                    (c_d * m_d).alias("_t_row"), s_row.alias("_s_row"))
            .groupBy("g")
            .agg(F.max("n_types").alias("n_types"),

@@ -854,7 +854,7 @@ def quantile_normalize(
 
     - rank = (rows with smaller value) + row_number-within-tie. BOTH
       cumulative counts — global AND per-group — use the
-      :func:`operators.prefix_sum.distributed_prev_counts`
+      :func:`operators.prefix_sum.distributed_prev_counts_multi`
       quantile-bucketed prefix-sum (the per-group one grouped via
       ``partition_cols``, r9), so a continuous value column
       (|distinct| ~ n) never funnels one partition — not even when
@@ -888,7 +888,7 @@ def quantile_normalize(
     from dump1090_db_stream_spark.cache import track
     from dump1090_db_stream_spark.operators.dedup import _portable_hash60
     from dump1090_db_stream_spark.operators.prefix_sum import (
-        distributed_prev_counts,
+        distributed_prev_counts_multi,
     )
 
     if n_quantiles < 1:
@@ -917,17 +917,18 @@ def quantile_normalize(
     # totals ride the prefix-sum's bounds broadcast (with_totals),
     # not a window or a separate aggregate job + join.
     vg = gsl.groupBy("grp", "v").agg(F.sum("_c").alias("_cg"))
-    pg = (distributed_prev_counts(vg, "v", "_cg", n_range_buckets,
-                                  partition_cols=("grp",),
-                                  with_totals=True,
-                                  bounds_join=bounds_join)
-          .select("grp", "v", F.col("_prev").alias("_prev_g"),
-                  F.col("_total").alias("_n_g")))
+    pg = (distributed_prev_counts_multi(vg, "v", ("_cg",),
+                                        n_range_buckets,
+                                        partition_cols=("grp",),
+                                        with_totals=True,
+                                        bounds_join=bounds_join)
+          .select("grp", "v", F.col("_prev_cg").alias("_prev_g"),
+                  F.col("_total_cg").alias("_n_g")))
     va = gsl.groupBy("v").agg(F.sum("_c").alias("_ca"))
-    pa = (distributed_prev_counts(va, "v", "_ca", n_range_buckets,
-                                  with_totals=True)
-          .select("v", F.col("_prev").alias("_prev_a"),
-                  F.col("_total").alias("_n_a")))
+    pa = (distributed_prev_counts_multi(va, "v", ("_ca",),
+                                        n_range_buckets, with_totals=True)
+          .select("v", F.col("_prev_ca").alias("_prev_a"),
+                  F.col("_total_ca").alias("_n_a")))
 
     # salt-bucket offsets: rows of the SAME tie key in EARLIER salt
     # buckets (bounded windows — at most tie_salt rows per tie key)

@@ -14,8 +14,8 @@ Dot products come in two physical forms:
   JVM-side, zero Python, bit-reproducible in ANSI engines (the oracle
   parity path). HOFs are CodegenFallback expressions (interpreted per
   element), so this form pays ~100-300 ns/element;
-- Arrow-batched numpy matmul (`brute_force_topk_arrow`,
-  `embedding_neardup_pairs(arrow_score=True)`) — one BLAS call per
+- Arrow-batched numpy matmul
+  (`embedding_neardup_pairs(arrow_score=True)`) — one BLAS call per
   batch, 4-10x faster once |queries| x dim or candidate volume is
   large; last-bit float ULPs may differ from the HOF path (equality of
   RESULTS is tested; the contract queries keep the HOF path so the
@@ -254,88 +254,6 @@ def lsh_topk(
         cand.withColumn("cosine", cosine(F.col("query_id_vec"),
                                          F.col("neighbor_id_vec")))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def brute_force_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact cosine top-k via Arrow-batched numpy matmul — the VOLUME
-    scale path next to :func:`brute_force_topk`.
-
-    Spark's higher-order-function dot product (zip_with + aggregate) is
-    a CodegenFallback expression: every element is evaluated by the
-    interpreter, ~100-300 ns/element. At corpus x queries x dim scale
-    that interpreter tax dominates. This variant ships corpus batches
-    to numpy over Arrow and scores each batch with ONE BLAS matmul
-    (batch x dim @ dim x Q), then keeps a per-batch top-k so the
-    shuffle back carries O(batches x Q x k) rows, never the full score
-    matrix. Same results as brute_force_topk (equality-tested); use it
-    when dim x |Q| is large, the JVM variant when Python workers are
-    unavailable or the query set is tiny.
-
-    The query set is collected to the driver — same "small by contract"
-    assumption the JVM variant's broadcast already makes.
-
-    Id types are DERIVED from the input schemas (the rh_signatures_arrow
-    discipline): any id type the JVM variant accepts — strings included —
-    works here; ids pass through numpy as object arrays, never coerced
-    to int64 (advisor r5 finding: the hardcoded bigint contract crashed
-    string-id corpora only on this variant).
-    """
-    import numpy as np
-    import pandas as pd  # noqa: F401  (executor-side import check)
-
-    q_rows = (queries.select(F.col(query_id_col).alias("qid"),
-                             F.col(vec_col).alias("qv")).collect())
-    qmat = np.asarray([r["qv"] for r in q_rows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
-    qn = qmat / qnorm[:, None]
-    qid_arr = np.asarray([r["qid"] for r in q_rows], dtype=object)
-
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    nid_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = (f"query_id {qid_type}, neighbor_id {nid_type}, "
-                  "cosine double")
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=object)
-            c = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            cn = np.linalg.norm(c, axis=1)
-            cn[cn == 0] = 1.0
-            s = (c / cn[:, None]) @ qn.T            # batch x Q
-            s[ids[:, None] == qid_arr[None, :]] = -np.inf  # self-match
-            top = min(k, len(ids))
-            # per-batch partial top-k per query: argpartition column-wise
-            idx = np.argpartition(-s, top - 1, axis=0)[:top]  # top x Q
-            rows = {
-                "query_id": np.repeat(qid_arr[None, :], top, 0).ravel(),
-                "neighbor_id": ids[idx].ravel(),
-                "cosine": np.take_along_axis(s, idx, axis=0).ravel(),
-            }
-            out = pd.DataFrame(rows)
-            yield out[np.isfinite(out["cosine"])]
-
-    part = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        kernel, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        part.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank",
                 F.round("cosine", 6).alias("cosine"))
@@ -682,126 +600,6 @@ def embedding_neardup_pairs(
     )
 
 
-# --- persisted IVF index: cluster-partitioned storage + pruned search ---
-
-
-def write_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the IVF index as a ``cluster``-partitioned parquet
-    table — the 100 TB form of :func:`ivf_topk`'s corpus side.
-
-    Assignment is the same narrow expression ivf_topk uses inline; the
-    write repartitions BY CLUSTER so each partition directory holds one
-    posting list. Search then becomes partition PRUNING: a probe of
-    n_probes clusters opens n_probes directories and never touches the
-    rest of the corpus (plan-asserted in tests/test_plans.py). The
-    assignment cost is paid once at write instead of per query batch —
-    the FAISS add()/search() split re-expressed as storage layout.
-
-    The quantizer is persisted in a ``_ivf_meta`` sidecar (underscore-
-    prefixed JSON, the minhash-index discipline), and ``mode="append"``
-    REFUSES centroids that differ from the stored ones: vectors
-    assigned under a different quantizer would land in the same
-    partition directories and silently corrupt every posting list —
-    the probe would prune to clusters whose membership no longer means
-    nearest-centroid. :func:`read_ivf_centroids` returns the stored
-    quantizer so daily appends and probes never re-derive it."""
-    spark = corpus.sparkSession
-    if mode == "append":
-        old = read_ivf_centroids(spark, path, missing_ok=True)
-        if old is None:
-            raise ValueError(
-                f"ivf index at {path} has no _ivf_meta sidecar; "
-                "refusing to append blind")
-        if old != [[float(x) for x in c] for c in centroids]:
-            raise ValueError(
-                f"ivf index at {path} was built with a different "
-                "quantizer; appending would corrupt its posting "
-                "lists — probe with read_ivf_centroids() or rebuild")
-    (corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        _nearest_centroid(F.col(vec_col), centroids).alias("cluster"))
-     .repartition("cluster")
-     .write.mode(mode).partitionBy("cluster").parquet(path))
-    if mode != "append":
-        import json as _json
-
-        from dump1090_db_stream_spark.sinks.writers import (
-            write_json_sidecar,
-        )
-
-        # driver-side 1-row metadata write (r15, guide §5): the
-        # createDataFrame -> coalesce(1) -> write.json job this
-        # replaces cost ~1.3-2.2 s of pure scheduling per build
-        write_json_sidecar(spark, path + "/_ivf_meta", {
-            "centroids_json": _json.dumps(
-                [[float(x) for x in c] for c in centroids])})
-
-
-def read_ivf_centroids(spark, path: str,
-                       missing_ok: bool = False) -> list[list[float]] | None:
-    """The quantizer stored next to a :func:`write_ivf_index` table.
-    Raises on a missing sidecar unless ``missing_ok`` (pre-sidecar
-    indexes: rebuild once to adopt the guard)."""
-    import json as _json
-
-    from dump1090_db_stream_spark.sinks.writers import read_json_sidecar
-
-    row = read_json_sidecar(spark, path + "/_ivf_meta",
-                            missing_ok=missing_ok)
-    if row is None:
-        return None
-    return _json.loads(row["centroids_json"])
-
-
-def ivf_topk_from_index(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    k: int = 10,
-    n_probes: int = 4,
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """IVF search against a :func:`write_ivf_index` table. Identical
-    output contract to :func:`ivf_topk` (equality-tested); the
-    difference is physical: probed clusters arrive via partition
-    pruning on the ``cluster`` directory column, so scan volume is
-    n_probes/n_centroids of the index regardless of corpus size."""
-    from pyspark.sql import Window
-
-    corpus = spark.read.parquet(index_path)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(
-            _probe_clusters(F.col(vec_col), centroids, n_probes)
-        ).alias("cluster"),
-    )
-    scored = (
-        corpus.withColumnRenamed("vec_id", "neighbor_id")
-        .join(F.broadcast(q), "cluster")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine(F.col("q_vec"), F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                F.round("cosine", 6).alias("cosine"))
-    )
-
-
 def embedding_cross_neardup(
     corpus: DataFrame,
     other: DataFrame,
@@ -900,16 +698,6 @@ def quantize_embeddings(
     )
 
 
-def dequantize(qvec: Column, scale: Column) -> Column:
-    """array<double> reconstruction q_i * scale (max abs error scale/2).
-
-    ``scale`` must be an attribute reference (a materialized column),
-    not a computed expression — lambda capture re-evaluates expressions
-    per element.
-    """
-    return F.transform(qvec, lambda v: v.cast("double") * scale)
-
-
 def quantized_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -933,7 +721,7 @@ def quantized_topk(
     join output, so without the barrier every corpus vector would be
     re-quantized once PER QUERY inside the nested-loop probe (measured
     ~3x at |Q|=5). In a persistent deployment the int arrays are
-    quantized once at WRITE time (write_ivf_index-style) and this
+    quantized once at WRITE time (write_ivfpq_index-style) and this
     barrier is the storage layer itself; callers own the release
     (release_tracked), same contract as every tracked intermediate.
     """
@@ -987,48 +775,6 @@ def pq_codebooks_fixed(
         ]
         for j in range(m)
     ]
-
-
-def pq_train(
-    df: DataFrame,
-    dim: int,
-    m: int = 8,
-    ksub: int = 16,
-    n_iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_sample: int = 16384,
-) -> list[list[list[float]]]:
-    """Learned PQ codebooks: independent L2 Lloyd k-means per subspace
-    over ONE bounded md5-ranked sample (the same training contract as
-    :func:`kmeans_centroids` — one Spark job, numpy on the driver,
-    deterministic: first-ksub init, argmin ties to the lower centroid,
-    empty clusters keep their centroid)."""
-    import numpy as np
-
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    rows = (
-        df.orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(train_sample)
-        .select(F.col(vec_col).alias("v"))
-        .collect()
-    )
-    sample = np.asarray([r["v"] for r in rows], dtype=np.float64)
-    books: list[list[list[float]]] = []
-    for j in range(m):
-        sub = sample[:, j * dsub:(j + 1) * dsub]
-        cents = sub[:ksub].copy()
-        for _ in range(n_iters):
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)  # ties -> lower index
-            for c in range(ksub):
-                members = sub[assign == c]
-                if len(members):
-                    cents[c] = members.mean(axis=0)
-        books.append([[float(x) for x in c] for c in cents])
-    return books
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -1172,7 +918,7 @@ def ivf_pq_topk(
     quantizers: the coarse centroids prune WHICH vectors are touched
     (probe-cluster equi-join, sublinear scan; at scale write the codes
     table partitioned by cluster so probes become partition pruning —
-    see write_ivf_index) and the product quantizer compresses HOW each
+    see write_ivfpq_index) and the product quantizer compresses HOW each
     touched vector is scored (m-byte codes + per-query LUT, no corpus
     floats at search time). Unlike pq_topk's documented full-scan
     broadcast loop, this join is EQUI-keyed on the cluster id.
@@ -1228,8 +974,7 @@ def write_ivfpq_index(
     storage layout. Both quantizers are paid once at write: the coarse
     assignment picks the partition directory, the PQ codes replace the
     float vectors entirely, so the stored index is ~m bytes + id per
-    vector and search scans no floats at all (vs write_ivf_index,
-    which keeps full vectors per posting list).
+    vector and search scans no floats at all.
 
     Incremental maintenance (r11, judge r10 ask #8 — the daily-batch
     story the MinHash index already has): BOTH quantizers persist in
@@ -1270,8 +1015,8 @@ def write_ivfpq_index(
             write_json_sidecar,
         )
 
-        # driver-side 1-row metadata write (r15, guide §5) — see
-        # write_ivf_index
+        # driver-side 1-row metadata write (r15, guide §5): a Spark
+        # job for one row costs more than the write itself
         write_json_sidecar(spark, path + "/_ivfpq_meta", {
             "centroids_json": _json.dumps(cents),
             "codebooks_json": _json.dumps(books)})

@@ -358,7 +358,7 @@ def trailing_estimate_from_samples(
     materialize: bool = True,
 ) -> DataFrame:
     """Trailing estimate straight from a STORED (possibly append-only
-    duplicated — see :func:`merge_hash_samples`) sample relation: the
+    duplicated) sample relation: the
     deployment shape, where the daily store is maintained by a stream
     and trailing metrics are answered without touching raw events.
     Duplicate day-partial rows are harmless: the per-window
@@ -400,29 +400,6 @@ def trailing_estimate_from_samples(
         .agg((F.count_distinct("_h") * F.lit(rate)).alias(est_col))
         .select(F.timestamp_seconds(F.col("_w") * 86400).alias("day"),
                 est_col)
-    )
-
-
-def merge_hash_samples(
-    samples: DataFrame,
-    keys: list[str],
-    day_col: str = "day",
-    sample_col: str = "hash_sample",
-) -> DataFrame:
-    """Compact a stored sample relation to one row per (day, keys) by
-    set-union of the arrays. Because the sample is a deterministic
-    subset keyed by value hash, union is IDEMPOTENT — which means the
-    store can be maintained APPEND-ONLY from a stream (each micro-batch
-    appends its own day-partial samples; estimates read through
-    duplicates unchanged, since :func:`span_estimate` explodes and
-    de-duplicates) and compacted opportunistically with this function,
-    instead of needing transactional read-modify-write upserts.
-    Verified end-to-end from a Structured Streaming source in
-    tests/test_sketches.py."""
-    return (
-        samples.groupBy(day_col, *keys)
-        .agg(F.sort_array(F.array_distinct(F.flatten(
-            F.collect_list(sample_col)))).alias(sample_col))
     )
 
 

@@ -291,28 +291,6 @@ def segment_word_types(types: DataFrame, scores: Mapping[str, int],
     return types.withColumn(out, F.coalesce(dp, _char_split(w)))
 
 
-def unigram_tokenizer(scores: Mapping[str, int],
-                      max_piece_len: int = DEFAULT_MAX_PIECE_LEN,
-                      max_word_len: int = DEFAULT_MAX_WORD_LEN):
-    """A trained model as a ``text.make_tokenizer`` seam callable:
-    text -> array<string> of unigram pieces (word-tokenize, segment
-    each word with the encode fallbacks, flatten).  This is the
-    convenience per-row form; batch pipelines should prefer the
-    distinct-types + broadcast-join shape
-    (:func:`unigram_encoded_stats`) so the DP runs once per word TYPE.
-    """
-    from .text import word_tokens
-
-    def tok(text) -> Column:
-        words = word_tokens(text)
-        return F.flatten(F.transform(words, lambda w: F.coalesce(
-            F.when(F.length(w) <= F.lit(max_word_len),
-                   viterbi_path_expr(w, scores, max_piece_len)),
-            _char_split(w))))
-
-    return tok
-
-
 def vocab_df(spark, rows: Sequence[dict]) -> DataFrame:
     """The trained vocabulary as a DataFrame (driver-resident by
     construction: EM state is bounded-collect-sized)."""

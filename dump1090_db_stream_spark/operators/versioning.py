@@ -9,8 +9,9 @@ so the shuffle carries (id, 32-byte digest), never document bodies
 
 At 100 TB both sides prune to two columns at the scan, and the join is
 a plain shuffled hash join on the id — or shuffle-FREE when both
-snapshots are stored bucketed by id (sinks.writers.write_bucketed_table),
-which is exactly how successive corpus versions should be laid out.
+snapshots are stored bucketed by id (``DataFrameWriter.bucketBy`` +
+``saveAsTable``), which is how successive corpus versions should be
+laid out.
 """
 
 from __future__ import annotations
@@ -45,18 +46,6 @@ def corpus_diff(
     )
     return j.select(F.col("id").alias(id_col), status.alias("status"),
                     "old_md5", "new_md5")
-
-
-def diff_summary(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Counts per change status — the dataset-version audit line."""
-    return (corpus_diff(old, new, id_col, text_col)
-            .groupBy("status")
-            .agg(F.count(F.lit(1)).alias("n")))
 
 
 def merge_upsert(

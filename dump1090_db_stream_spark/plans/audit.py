@@ -20,7 +20,7 @@ Two detectors back the registry-wide scale gates in
   vocabulary-sized disciplines (weekly grids, bucket ids, day grids).
 
 The fix for a flagged plan is the
-``operators.prefix_sum.distributed_prev_counts`` decomposition (see
+``operators.prefix_sum.distributed_prev_counts_multi`` decomposition (see
 ``auc_score`` / ``quantile_normalize``): bucket by broadcast quantile
 bounds, rank within buckets, offset by the bounded bucket totals.
 """
@@ -109,7 +109,7 @@ def grouped_continuous_window_funnels(df: DataFrame) -> list[str]:
     partition keys like language/source are fixed vocabularies that
     do not grow with the corpus (per-task work grows linearly with
     input: pre-r9 ``auc_score_by``). The grouped
-    ``operators.prefix_sum.distributed_prev_counts`` decomposition
+    ``operators.prefix_sum.distributed_prev_counts_multi`` decomposition
     passes this gate structurally: its cumulative window partitions by
     (group, bucket) where the bucket column is INJECTED (not a
     grouping key of the upstream aggregate), so the

@@ -11,8 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from dump1090_db_stream_spark.operators.views import register_views
-
 
 def create_adsb_database(spark: SparkSession, name: str = "adsb") -> None:
     """D-1: CREATE SCHEMA adsb (create_schema.sql:23)."""
@@ -29,9 +27,3 @@ def create_messages_table(spark: SparkSession, path: str,
         f"CREATE TABLE IF NOT EXISTS {database}.{table} "
         f"USING parquet LOCATION '{path}'")
     spark.sql(f"MSCK REPAIR TABLE {database}.{table}")
-
-
-def register_all_views(spark: SparkSession, messages_df) -> None:
-    """D-3: the three views over the fact table
-    (create_schema.sql:85,101,116)."""
-    register_views(spark, messages_df)

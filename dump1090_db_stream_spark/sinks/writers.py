@@ -165,33 +165,6 @@ def jdbc_foreach_batch(
     return write_batch
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table: pre-shuffles ONCE at write so every later
-    join/aggregation on ``bucket_col`` is co-located and shuffle-FREE.
-
-    The 100 TB pattern for a fact table joined repeatedly on one key
-    (hex_ident here, user_id in the events model): two tables bucketed by
-    the same key into the same bucket count sort-merge join with ZERO
-    Exchange on either side (asserted in tests/test_plans.py). Amortizes
-    the shuffle across every downstream query; the write itself costs one
-    repartition. ``sort_col`` additionally orders within buckets so
-    merge-join skips its sort.
-    """
-    writer = (df.repartition(n_buckets, F.col(bucket_col))
-              .write.mode(mode).format("parquet")
-              .bucketBy(n_buckets, bucket_col))
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table)
-
-
 def compact_parquet(
     spark,
     src_path: str,
@@ -214,8 +187,6 @@ def compact_parquet(
     whole store, so compaction parallelism and atomicity stay bounded.
     """
     import math
-
-    from pyspark.sql import functions as F  # noqa: F401
 
     df = spark.read.parquet(src_path)
     total_bytes = sum(
@@ -436,9 +407,8 @@ def write_json_sidecar(spark, dir_path: str, record: dict) -> None:
     so ``spark.read.json`` and :func:`read_json_sidecar` both read old
     and new sidecars interchangeably.
 
-    Why (r15, optimization guide §5): the index sidecars
-    (``_ivf_meta``/``_ivfpq_meta``/``_lsh_meta``) carry ONE row of
-    quantizer/parameter metadata, but ``createDataFrame ->
+    Why (r15, optimization guide §5): the IVF-PQ index sidecar
+    (``_ivfpq_meta``) carries ONE row of quantizer metadata, but ``createDataFrame ->
     coalesce(1) -> write.json`` spins a full Spark job for it —
     measured ~1.3-2.2 s per index build at sf0.1, pure scheduling.
     A driver-side metadata write is milliseconds and survives on any

@@ -14,7 +14,8 @@ Spark shape: one ``from_json`` with an explicit schema (never inferred
 shuffle-scan the corpus), ``explode`` of the aircraft array, then a
 narrow typed projection. Works identically on batch (``spark.read``)
 and streaming (``readStream``) inputs since every step is a stateless
-projection.
+projection; archived snapshots read as one document per file with
+``spark.read.text(path, wholetext=True)``.
 """
 
 from __future__ import annotations
@@ -90,156 +91,3 @@ def parse_aircraft_json(
     if max_seen_s is not None:
         out = out.filter(F.col("seen") <= F.lit(float(max_seen_s)))
     return out
-
-
-def read_aircraft_json(spark, path: str,
-                       max_seen_s: float | None = None) -> DataFrame:
-    """Batch-read archived snapshots: one JSON document per FILE
-    (``wholetext``), the layout a curl-in-cron archiver produces."""
-    raw = spark.read.text(path, wholetext=True)
-    return parse_aircraft_json(raw, max_seen_s=max_seen_s)
-
-
-# --- live HTTP polling stream: the way a real dump1090 serves this ------
-# A running dump1090 exposes /data/aircraft.json over HTTP and rewrites
-# it every second; deployments poll it on an interval. The polling
-# stream reader below completes the ecosystem: format("aircraft_json")
-# readStream -> parse_aircraft_json is the HTTP analog of the
-# format("sbs1") socket stream (sources/sbs1_source.py:84).
-
-
-def _poll_classes():
-    """Build the DataSource classes on first registration so this module
-    stays importable for its pure batch helpers without touching the
-    DataSource API surface."""
-    import hashlib
-    import json as jsonmod
-    import time
-    import urllib.request
-    from collections.abc import Iterator
-    from typing import Any
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
-
-    schema = T.StructType([T.StructField("value", T.StringType())])
-
-    class AircraftJsonPollStreamReader(SimpleDataSourceStreamReader):
-        """Polls ``url`` at ``poll_interval_s``, emitting each NEW
-        snapshot document as one raw-string row (parsing stays in
-        parse_aircraft_json — JVM-side, codegen'd; the Python reader
-        only moves bytes, the sbs1 division of labor).
-
-        Delivery semantics: WITHIN a run, at-least-once per observed
-        snapshot — the SimpleDataSourceStreamReader wrapper caches each
-        read() for micro-batch replay, and consecutive identical
-        snapshots are deduped by the document's ``now`` stamp (the
-        server rewrites the file on its own clock; polling faster than
-        it writes must not duplicate rows). ACROSS restarts,
-        at-most-once: HTTP has no replayable offset to refetch history
-        from — same durability class as the reference's socket ingest
-        (dump1090-postgres.py:216-218). Transient HTTP errors skip the
-        batch and retry next trigger, bounded by
-        ``poll_attempt_limit`` consecutive failures (the reference's
-        bounded-reconnect policy, dump1090-postgres.py:181-198)."""
-
-        def __init__(self, options: dict[str, str]):
-            self.url = options.get("url")
-            if not self.url:
-                raise ValueError(
-                    "aircraft_json stream requires .option('url', ...)")
-            self.poll_interval_s = float(options.get("poll_interval_s", "1.0"))
-            self.request_timeout_s = float(
-                options.get("request_timeout_s", "5.0"))
-            self.attempt_limit = int(options.get("poll_attempt_limit", "10"))
-            self._last_poll = float("-inf")
-            self._last_now: float | None = None
-            self._last_bad: str | None = None  # digest of a malformed body
-            self._failures = 0
-
-        def initialOffset(self) -> dict:
-            return {"n": 0}
-
-        def read(self, start: dict) -> tuple[Iterator[tuple[Any, ...]], dict]:
-            mono = time.monotonic()
-            if mono - self._last_poll < self.poll_interval_s:
-                return iter(()), start  # not due yet: empty micro-batch
-            self._last_poll = mono
-            try:
-                with urllib.request.urlopen(
-                        self.url, timeout=self.request_timeout_s) as resp:
-                    body = resp.read().decode("utf-8", errors="replace")
-                self._failures = 0
-            except OSError:
-                self._failures += 1
-                if self._failures >= self.attempt_limit:
-                    raise
-                return iter(()), start
-            try:
-                snap_now = jsonmod.loads(body).get("now")
-            except ValueError:
-                snap_now = None  # malformed body still flows downstream
-            if snap_now is not None:
-                if snap_now == self._last_now:
-                    return iter(()), start  # server hasn't rewritten yet
-                self._last_now = snap_now  # NOT cleared on malformed
-                self._last_bad = None
-            else:
-                # a malformed body has no `now` stamp to dedupe on; use
-                # its own digest so a STATIC broken document (crashed
-                # writer) is delivered once, not once per poll forever
-                digest = hashlib.md5(body.encode()).hexdigest()
-                if digest == self._last_bad:
-                    return iter(()), start
-                self._last_bad = digest
-            return iter([(body,)]), {"n": start["n"] + 1}
-
-        def readBetweenOffsets(
-                self, start: dict, end: dict) -> Iterator[tuple[Any, ...]]:
-            # post-restart replay: HTTP polling cannot refetch history
-            return iter(())
-
-        def commit(self, end: dict) -> None:
-            # no consumer acks in HTTP polling; progress lives in
-            # Spark's checkpoint
-            pass
-
-    class AircraftJsonDataSource(DataSource):
-        """format("aircraft_json"): live HTTP-polling snapshot stream."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "aircraft_json"
-
-        def schema(self):
-            return schema
-
-        def simpleStreamReader(self, schema):  # noqa: A002
-            return AircraftJsonPollStreamReader(self.options)
-
-    return AircraftJsonDataSource
-
-
-def register_aircraft_json_source(spark) -> None:
-    """Make format('aircraft_json') available on this session."""
-    spark.dataSource.register(_poll_classes())
-
-
-def read_aircraft_json_stream(
-    spark,
-    url: str,
-    poll_interval_s: float = 1.0,
-    max_seen_s: float | None = None,
-) -> DataFrame:
-    """Live typed stream from a running dump1090: register the polling
-    source, read it, and parse — the HTTP analog of the sbs1 socket
-    pipeline. Returns the typed per-aircraft stream ready for
-    windows/watermarks on ``snapshot_time``."""
-    register_aircraft_json_source(spark)
-    raw = (spark.readStream.format("aircraft_json")
-           .option("url", url)
-           .option("poll_interval_s", str(poll_interval_s))
-           .load())
-    return parse_aircraft_json(raw, max_seen_s=max_seen_s)

@@ -53,18 +53,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if c in df.columns and dict(df.dtypes)[c] == "bigint":
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def register_tables(spark: SparkSession, sf_dir: str,
-                    names: list[str] | None = None) -> dict[str, DataFrame]:
-    """Register each table as a temp view so ``spark.sql`` works over the
-    same names DuckDB pre-registers (driver contract)."""
-    dfs = load_tables(spark, sf_dir, names)
-    for n, df in dfs.items():
-        df.createOrReplaceTempView(n)
-    return dfs

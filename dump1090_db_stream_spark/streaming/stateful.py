@@ -163,169 +163,3 @@ def session_flights(
             track, out_schema, _STATE_SCHEMA, "append",
             GroupStateTimeout.EventTimeTimeout)
     )
-
-
-# --- Page-Hinkley as a per-key incremental stateful operator ----------------
-
-_PH_STATE_SCHEMA = T.StructType([
-    T.StructField("t", T.LongType()),        # finalized-bucket count
-    T.StructField("sx", T.LongType()),       # running sum of quantized
-    T.StructField("m", T.LongType()),        # bucket means / deviations
-    T.StructField("mmin", T.LongType()),     # running min of m
-    T.StructField("max_exc", T.LongType()),
-    T.StructField("alarm_b", T.LongType()),  # first alarm bucket (or null)
-    T.StructField("last_b", T.LongType()),   # finalization frontier
-    T.StructField("open_bs", T.ArrayType(T.LongType())),
-    T.StructField("open_qs", T.ArrayType(T.LongType())),
-    T.StructField("open_cs", T.ArrayType(T.LongType())),
-])
-
-
-def ph_monitor(
-    df: DataFrame,
-    value_col: str,
-    ts_col: str = "ts",
-    keys: list[str] | None = None,
-    bucket_seconds: int = 3600,
-    delta: float = 0.0,
-    lam: float = 5.0,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Page-Hinkley changepoint detection as a PER-KEY incremental
-    stateful operator (r13 verdict ask #4) — the
-    ``applyInPandasWithState`` deployment of
-    ``operators.drift.page_hinkley_drift``, whose batch form is this
-    operator's replayable oracle (exactly the ``session_flights`` /
-    batch-islands relationship).
-
-    Semantics: values accumulate into OPEN epoch buckets held in keyed
-    state (exact 1e-9-quantized integer sums — the ``ph_bucketize``
-    associativity contract, so a bucket split across micro-batches
-    reassembles bit-identically); a bucket FINALIZES when the
-    event-time watermark passes its end, at which point the running PH
-    statistics advance through the identical integer/pinned-IEEE
-    sequence the batch operator computes and ONE trajectory row emits:
-    ``(*keys, b, n_buckets, ph_stat, drifted, alarm_bucket)`` — the
-    monitor's state after its ``n_buckets``-th finalized bucket.
-    Stream == batch contract (test-pinned, including across restarts):
-    every emitted row equals ``page_hinkley_drift`` over the stream's
-    rows restricted to buckets <= its ``b``, however the stream is
-    chopped into micro-batches.
-
-    State per key is O(open buckets + 7 scalars) — open buckets are
-    bounded by disorder/watermark lag (typically 1-2), never by the
-    ingested row count. Rows arriving for an already-finalized bucket
-    (later than ``watermark_delay`` allows) are DROPPED — the standard
-    watermark tradeoff; pick the delay to cover the source's disorder.
-    Integer-sum bound: |value| * 1e9 * rows-per-(key,bucket) must stay
-    under 2^63 (the batch form's DECIMAL(38,0) has more headroom; at
-    that point shard the key or shorten the bucket)."""
-    import math
-
-    kcols = list(keys or [])
-    if bucket_seconds < 1:
-        raise ValueError(
-            f"bucket_seconds must be >= 1, got {bucket_seconds}")
-    if not kcols:
-        raise ValueError("ph_monitor needs at least one key column "
-                         "(state is keyed); add a constant column "
-                         "for a global monitor")
-    out_fields = [T.StructField(k, df.schema[k].dataType)
-                  for k in kcols]
-    out_fields += [
-        T.StructField("b", T.LongType()),
-        T.StructField("n_buckets", T.LongType()),
-        T.StructField("ph_stat", T.DoubleType()),
-        T.StructField("drifted", T.BooleanType()),
-        T.StructField("alarm_bucket", T.LongType()),
-    ]
-    out_schema = T.StructType(out_fields)
-    bus = bucket_seconds * 1_000_000
-
-    def track(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (t, sx, m, mmin, max_exc, alarm_b, last_b,
-             open_bs, open_qs, open_cs) = state.get
-            open_ = {b: [q, c]
-                     for b, q, c in zip(open_bs, open_qs, open_cs)}
-        else:
-            t = sx = m = max_exc = 0
-            mmin = alarm_b = last_b = None
-            open_ = {}
-
-        if not state.hasTimedOut:
-            for p in pdfs:
-                if not len(p):
-                    continue
-                ok = p[ts_col].notna() & p[value_col].notna()
-                vals = p.loc[ok, value_col].to_numpy(dtype="float64")
-                usec = (p.loc[ok, ts_col].values
-                        .astype("datetime64[us]").astype("int64"))
-                for v, us in zip(vals, usec):
-                    if v != v:  # NaN (batch form excludes it too)
-                        continue
-                    b = int(us // bus)
-                    if last_b is not None and b <= last_b:
-                        continue  # late beyond the watermark: dropped
-                    e = open_.setdefault(b, [0, 0])
-                    e[0] += math.floor(v * 1e9 + 0.5)  # _quantized twin
-                    e[1] += 1
-
-        # finalize every open bucket the watermark has passed, in
-        # bucket order — the EXACT batch arithmetic per step
-        wm_ms = state.getCurrentWatermarkMs()
-        emitted = []
-        for b in sorted(open_):
-            if (b + 1) * bucket_seconds * 1000 > wm_ms:
-                break
-            q, c = open_.pop(b)
-            x = (float(q) / 1e9) / float(c)
-            sx += math.floor(x * 1e9 + 0.5)
-            t += 1
-            mean = (float(sx) / 1e9) / float(t)
-            m += math.floor((x - mean - delta) * 1e9 + 0.5)
-            mmin = m if mmin is None else min(mmin, m)
-            exc = m - mmin
-            max_exc = max(max_exc, exc)
-            if alarm_b is None and float(exc) > lam * 1e9:
-                alarm_b = b
-            last_b = b
-            emitted.append(
-                (b, t,
-                 math.floor((float(max_exc) / 1e9) * 1e6 + 0.5) / 1e6,
-                 alarm_b is not None, alarm_b))
-
-        obs = sorted(open_)
-        state.update((t, sx, m, mmin, max_exc, alarm_b, last_b,
-                      obs, [open_[b][0] for b in obs],
-                      [open_[b][1] for b in obs]))
-        if obs:
-            # wake when the earliest open bucket becomes finalizable
-            state.setTimeoutTimestamp(
-                max((obs[0] + 1) * bucket_seconds * 1000, wm_ms + 1))
-        if emitted:
-            out: dict[str, list] = {
-                k: [key[i]] * len(emitted)
-                for i, k in enumerate(kcols)}
-            out["b"] = [r[0] for r in emitted]
-            out["n_buckets"] = [r[1] for r in emitted]
-            out["ph_stat"] = [r[2] for r in emitted]
-            out["drifted"] = [r[3] for r in emitted]
-            out["alarm_bucket"] = pd.array(
-                [r[4] for r in emitted], dtype="object")
-            yield pd.DataFrame(out)
-
-    src = df
-    for k in kcols:
-        src = src.filter(src[k].isNotNull())
-    return (
-        src.withWatermark(ts_col, watermark_delay)
-        .groupBy(*kcols)
-        .applyInPandasWithState(
-            track, out_schema, _PH_STATE_SCHEMA, "append",
-            GroupStateTimeout.EventTimeTimeout)
-    )

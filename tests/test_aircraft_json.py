@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import __spark_entry__ as entrymod
 from dump1090_db_stream_spark.sources.aircraft_json import (
-    read_aircraft_json,
+    parse_aircraft_json,
 )
 
 
@@ -17,7 +17,8 @@ def test_read_archived_snapshots_whole_files(spark, tmp_path):
     for i, doc in enumerate(entrymod._AIRCRAFT_SNAPSHOTS):
         (d / f"s{i}.json").write_text(doc)
 
-    out = read_aircraft_json(spark, str(d), max_seen_s=60.0)
+    out = parse_aircraft_json(spark.read.text(str(d), wholetext=True),
+                              max_seen_s=60.0)
     rows = {r["hex_ident"]: r for r in out.collect()}
     assert set(rows) == {"4CA4E5", "AB12CD", "4CA2D6"}
     assert rows["4CA4E5"]["callsign"] == "RJA1118"  # trailing pad trimmed
@@ -34,10 +35,6 @@ def test_parse_is_streaming_compatible(spark, tmp_path):
     for i, doc in enumerate(entrymod._AIRCRAFT_SNAPSHOTS):
         (d / f"s{i}.txt").write_text(doc.replace("\n", " "))
 
-    from dump1090_db_stream_spark.sources.aircraft_json import (
-        parse_aircraft_json,
-    )
-
     stream = spark.readStream.format("text").load(str(d))
     q = (parse_aircraft_json(stream, max_seen_s=60.0)
          .writeStream.format("memory").queryName("acjson")
@@ -45,72 +42,3 @@ def test_parse_is_streaming_compatible(spark, tmp_path):
     q.awaitTermination(60)
     got = {r["hex_ident"] for r in spark.sql("SELECT * FROM acjson").collect()}
     assert got == {"4CA4E5", "AB12CD", "4CA2D6"}
-
-
-def test_http_polling_stream_end_to_end(spark, tmp_path):
-    """Live-poll e2e against a real local HTTP server: the server
-    rewrites its snapshot (advancing `now`) per request; the polling
-    source emits each NEW document once (identical `now` deduped), and
-    the typed parse runs downstream unchanged."""
-    import http.server
-    import json
-    import threading
-    import time
-
-    import __spark_entry__ as entrymod
-    from dump1090_db_stream_spark.sources.aircraft_json import (
-        read_aircraft_json_stream,
-    )
-
-    base = json.loads(entrymod._AIRCRAFT_SNAPSHOTS[0])
-    state = {"serves": 0}
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def do_GET(self):
-            # advance the snapshot clock every OTHER request: half the
-            # polls see an unchanged document and must be deduped
-            state["serves"] += 1
-            doc = dict(base)
-            doc["now"] = base["now"] + state["serves"] // 2
-            body = json.dumps(doc).encode()
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def log_message(self, *a):  # quiet
-            pass
-
-    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    try:
-        typed = read_aircraft_json_stream(
-            spark, f"http://127.0.0.1:{port}/data/aircraft.json",
-            poll_interval_s=0.2, max_seen_s=60.0)
-        q = (typed.writeStream.format("memory").queryName("acjson_live")
-             .outputMode("append")
-             .option("checkpointLocation", str(tmp_path / "ck"))
-             .trigger(processingTime="1 second").start())
-        deadline = time.time() + 60
-        n = 0
-        while time.time() < deadline:
-            n = spark.sql(
-                "SELECT count(DISTINCT snapshot_time) c FROM acjson_live"
-            ).first().c
-            if n >= 3:  # three distinct snapshot rewrites observed
-                break
-            time.sleep(0.5)
-        q.stop()
-        assert n >= 3
-        rows = spark.sql("SELECT * FROM acjson_live").collect()
-        assert {r["hex_ident"] for r in rows} >= {"4CA4E5"}
-        # dedupe proof: every emitted row belongs to a distinct snapshot
-        # per aircraft (no double-emission of an unchanged document)
-        per_key = spark.sql(
-            "SELECT hex_ident, snapshot_time, count(*) c FROM acjson_live "
-            "GROUP BY hex_ident, snapshot_time HAVING count(*) > 1").collect()
-        assert per_key == []
-    finally:
-        server.shutdown()
-        server.server_close()

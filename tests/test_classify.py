@@ -271,56 +271,3 @@ def test_pareto_filter_validation(spark):
     df = spark.createDataFrame([(1, 0.5)], ["doc_id", "s"])
     with pytest.raises(ValueError, match="alpha"):
         pareto_quality_filter(df, "s", alpha=0.0)
-
-
-def test_classifier_stream_sink_matches_batch_and_replays(spark,
-                                                          tmp_path):
-    """The deployment shape: train once, score a document stream per
-    micro-batch. The union of streamed batches equals batch-scoring
-    the same documents, and an at-least-once batch redelivery
-    overwrites instead of appending (the neardup_stream_sink
-    discipline)."""
-    from dump1090_db_stream_spark.cache import track
-    from dump1090_db_stream_spark.operators.classify import (
-        classifier_scores,
-        classifier_stream_sink,
-        nb_logodds_weights,
-    )
-
-    train = _corpus(spark)
-    w = track(nb_logodds_weights(train, "y", n_buckets=B))
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    b0 = [(10, "good clean prose flows"), (11, "spam buy now")]
-    b1 = [(12, "text reads well"), (13, "click spam spam")]
-    spark.createDataFrame(b0, ["doc_id", "text"]).write.json(
-        str(src / "b0"))
-    spark.createDataFrame(b1, ["doc_id", "text"]).write.json(
-        str(src / "b1"))
-
-    out = str(tmp_path / "scores")
-    q = (spark.readStream
-         .schema("doc_id long, text string")
-         .option("maxFilesPerTrigger", "1")
-         .json(str(src) + "/*")
-         .writeStream
-         .foreachBatch(classifier_stream_sink(w, out, n_buckets=B))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120)
-
-    streamed = {r["doc_id"]: (r["n_units"], r["score"], r["prob"])
-                for r in spark.read.parquet(out).collect()}
-    batch_df = spark.createDataFrame(b0 + b1, ["doc_id", "text"])
-    direct = {r["doc_id"]: (r["n_units"], r["score"], r["prob"])
-              for r in classifier_scores(batch_df, w,
-                                         n_buckets=B).collect()}
-    assert streamed == direct
-    # at-least-once redelivery of batch 0 overwrites, not appends
-    sink = classifier_stream_sink(w, out, n_buckets=B)
-    sink(spark.read.json(str(src / "b0")), 0)
-    again = {r["doc_id"]: (r["n_units"], r["score"], r["prob"])
-             for r in spark.read.parquet(out).collect()}
-    assert again == streamed

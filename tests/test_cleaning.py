@@ -216,113 +216,6 @@ def test_dedup_lines_regex_metachar_delimiter_is_literal(spark):
     assert (got[1]["n_lines"], got[1]["n_removed"]) == (2, 1)
 
 
-def test_line_index_incremental_equals_oneshot(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.operators.cleaning import (
-        line_doc_frequencies, read_line_frequencies, write_line_partials,
-    )
-
-    b1 = spark.createDataFrame(
-        [(1, "AD\nX one"), (2, "AD\nX two")], ["doc_id", "text"])
-    b2 = spark.createDataFrame(
-        [(3, "AD\nX three"), (4, "X four")], ["doc_id", "text"])
-    path = str(tmp_path / "line_index")
-    write_line_partials(b1, path)
-    write_line_partials(b2, path)
-    got = {r["line"]: r["doc_freq"]
-           for r in read_line_frequencies(spark, path).collect()}
-    want = {r["line"]: r["doc_freq"]
-            for r in line_doc_frequencies(b1.unionByName(b2)).collect()}
-    assert got == want and got["AD"] == 3
-
-
-def test_dedup_lines_vs_index_strips_corpus_boilerplate(spark, tmp_path):
-    """A line frequent in corpus HISTORY is stripped from a new batch
-    even when it appears only once there — and a line frequent only
-    WITHIN the new batch survives (the index, not the batch, decides)."""
-    from dump1090_db_stream_spark.operators.cleaning import (
-        dedup_lines_vs_index, write_line_partials,
-    )
-
-    history = spark.createDataFrame(
-        [(i, "SUBSCRIBE NOW\nbody %d" % i) for i in range(5)],
-        ["doc_id", "text"])
-    path = str(tmp_path / "line_index")
-    write_line_partials(history, path)
-
-    batch = spark.createDataFrame(
-        [(100, "SUBSCRIBE NOW\nfresh one\nNEW PROMO"),
-         (101, "NEW PROMO\nfresh two"),
-         (102, "NEW PROMO\nfresh three")],
-        ["doc_id", "text"])
-    got = {r["doc_id"]: r for r in dedup_lines_vs_index(
-        batch, spark, path, max_df=2).collect()}
-    # corpus boilerplate removed; batch-local "NEW PROMO" (df=3 in the
-    # batch but 0 in the index) kept
-    assert got[100]["text"] == "fresh one\nNEW PROMO"
-    assert (got[100]["n_lines"], got[100]["n_removed"]) == (3, 1)
-    assert got[101]["text"] == "NEW PROMO\nfresh two"
-    assert got[102]["n_removed"] == 0
-
-
-def test_line_index_streaming_foreachbatch_matches_batch(spark, tmp_path):
-    """The line-frequency store is maintainable EXACTLY-ONCE from a
-    Structured Streaming foreachBatch via the batchId-keyed sink:
-    per-micro-batch partials summed on read equal the one-shot
-    computation (docs are disjoint across micro-batches — the
-    additivity contract), and a replayed micro-batch (the
-    crash-between-write-and-checkpoint case) overwrites its own
-    subdirectory instead of double-counting."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
-
-    from dump1090_db_stream_spark.operators.cleaning import (
-        line_doc_frequencies, line_partials_sink, read_line_frequencies,
-    )
-
-    rows = [(i, "AD\nbody %d" % i) for i in range(30)]
-    d = tmp_path / "replay"
-    d.mkdir()
-    sch = pa.schema([("doc_id", pa.int64()), ("text", pa.string())])
-    t0 = _time.time()
-    for i, chunk in enumerate([rows[:10], rows[10:20], rows[20:]]):
-        p = str(d / f"b{i}.parquet")
-        pq.write_table(pa.table(
-            {"doc_id": [r[0] for r in chunk],
-             "text": [r[1] for r in chunk]}, schema=sch), p)
-        os.utime(p, (t0 + i, t0 + i))
-
-    schema = T.StructType([T.StructField("doc_id", T.LongType()),
-                           T.StructField("text", T.StringType())])
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(d)))
-    store = str(tmp_path / "line_store")
-    sink = line_partials_sink(store)
-
-    assert (stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True).start()
-            .awaitTermination(120)), "stream did not finish in 120 s"
-
-    got = {r["line"]: r["doc_freq"]
-           for r in read_line_frequencies(spark, store).collect()}
-    want = {r["line"]: r["doc_freq"] for r in line_doc_frequencies(
-        spark.createDataFrame(rows, schema)).collect()}
-    assert got == want and got["AD"] == 30
-
-    # at-least-once replay: re-delivering micro-batch 0 must leave the
-    # store unchanged (overwrite of batch=0, not a second append)
-    sink(spark.createDataFrame(rows[:10], schema), 0)
-    replayed = {r["line"]: r["doc_freq"]
-                for r in read_line_frequencies(spark, store).collect()}
-    assert replayed == want
-
-
 def test_c4_line_filter_rules(spark):
     from dump1090_db_stream_spark.operators.cleaning import c4_line_filter
 

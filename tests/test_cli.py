@@ -217,3 +217,55 @@ def test_jdbc_batch_fn_dedups_on_primary_key(spark, tmp_path):
     back = spark.read.options(**props).jdbc(url, "messages")
     assert back.count() == n_keys
     assert back.select(PRIMARY_KEY).distinct().count() == n_keys
+
+
+def test_socket_feed_stores_every_accepted_line(spark, tmp_path):
+    """The `--dump1090 HOST` path end to end over real TCP: a local
+    server sends the CRLF wire form of the feed, and socket_lines ->
+    parse_sbs1 -> start_parquet_ingest stores exactly the accepted
+    lines, as a multiset."""
+    import socketserver
+    import threading
+    import time
+
+    from pyspark.errors import AnalysisException
+
+    from dump1090_db_stream_spark.functions.parser import parse_sbs1
+    from dump1090_db_stream_spark.sinks.writers import read_parquet_store
+    from dump1090_db_stream_spark.streaming.pipeline import (
+        socket_lines,
+        start_parquet_ingest,
+    )
+
+    lines = _busy_feed(range(1, 3))
+    done = threading.Event()
+
+    class _FeedHandler(socketserver.BaseRequestHandler):
+        def handle(self):
+            self.request.sendall(("\r\n".join(lines) + "\r\n").encode())
+            done.wait(60)  # hold the connection open while the stream drains
+
+    server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), _FeedHandler)
+    server.daemon_threads = True
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    store = str(tmp_path / "store")
+    want = _wire_rows(_accepted(spark, lines))
+    q = start_parquet_ingest(
+        parse_sbs1(socket_lines(spark, "127.0.0.1",
+                                server.server_address[1])),
+        store, checkpoint=str(tmp_path / "ck"))
+    try:
+        n, deadline = 0, time.time() + 60
+        while n < len(want) and time.time() < deadline:
+            time.sleep(0.5)
+            try:
+                n = read_parquet_store(spark, store).count()
+            except AnalysisException:  # no file committed yet
+                pass
+        assert q.exception() is None
+    finally:
+        q.stop()
+        done.set()
+        server.shutdown()
+        server.server_close()
+    assert _wire_rows(read_parquet_store(spark, store)) == want

@@ -183,52 +183,6 @@ def test_boilerplate_mining_finds_planted_template(spark):
     assert share[4]["n_boiler"] == 0 and share[4]["boiler_share"] == 0.0
 
 
-def test_incremental_neardup_vs_persisted_index(spark, tmp_path):
-    """The daily-batch workflow: index the corpus once, then probe a new
-    batch against it — planted near-dups of indexed docs are found with
-    their jaccard, brand-new docs produce no pairs, and the corpus is
-    re-shingled only for candidate docs (never the whole relation)."""
-    from dump1090_db_stream_spark.operators.dedup import (
-        neardup_vs_index,
-        write_minhash_index,
-    )
-    from dump1090_db_stream_spark.sources.tables import load_table
-
-    corpus = load_table(
-        spark, "/root/testdata/sf0.001", "documents"
-    ).select("doc_id", "text")
-    path = str(tmp_path / "mh_index")
-    write_minhash_index(corpus, path, bands=16, num_hashes=32)
-
-    # new batch: two lightly-edited copies of corpus docs + one unique
-    src = {r["doc_id"]: r["text"] for r in corpus.filter(
-        F.col("doc_id").isin(3, 7)).collect()}
-    new_docs = spark.createDataFrame(
-        [(100003, src[3] + " extra tail token"),
-         (100007, "prefix " + src[7]),
-         (200000, "entirely novel content zz qq ww ee rr tt yy uu ii oo")],
-        ["doc_id", "text"])
-
-    pairs = {(r["corpus_id"], r["new_id"]): r["jaccard"]
-             for r in neardup_vs_index(
-                 spark, path, new_docs, corpus, threshold=0.5).collect()}
-    assert (3, 100003) in pairs and pairs[(3, 100003)] > 0.8
-    assert (7, 100007) in pairs and pairs[(7, 100007)] > 0.8
-    assert not any(n == 200000 for _, n in pairs)
-
-    # appending with DIFFERENT LSH params would silently mix
-    # incompatible signatures — must refuse
-    import pytest
-
-    with pytest.raises(ValueError, match="refusing to append"):
-        write_minhash_index(new_docs, path, bands=8, num_hashes=32,
-                            mode="append")
-    # same params append is allowed and keeps the sidecar intact
-    write_minhash_index(new_docs, path, bands=16, num_hashes=32,
-                        mode="append")
-    assert spark.read.json(path + "/_lsh_meta").first()["bands"] == 16
-
-
 def test_duplicate_spans_finds_planted_passage(spark):
     import pytest
 
@@ -337,67 +291,3 @@ def test_containment_catches_short_in_long(spark):
     jac = ngram_jaccard_pairs(docs, n=3, threshold=0.5,
                               max_df=None).collect()
     assert not any((r["id_a"], r["id_b"]) == (1, 2) for r in jac)
-
-
-def test_neardup_stream_sink_exactly_once(spark, tmp_path):
-    """The incremental-dedup stream: micro-batches of new docs probe
-    the persisted MinHash index via foreachBatch; flagged pairs land
-    batchId-keyed so an at-least-once replay cannot double-flag."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.operators.dedup import (
-        neardup_stream_sink,
-        write_minhash_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [(i, f"the quick brown fox jumps over lazy dog number {i} "
-             f"with extra tail tokens {i} {i}") for i in range(30)],
-        ["doc_id", "text"])
-    idx = str(tmp_path / "mh_index")
-    write_minhash_index(corpus, idx, n=3, num_hashes=32, bands=16)
-
-    # stream source: micro-batch files; batch 0 = near-copies of docs
-    # 3 and 7 (one token changed), batch 1 = novel docs
-    src_dir = tmp_path / "incoming"
-    src_dir.mkdir()
-    spark.createDataFrame(
-        [(1003, corpus.filter("doc_id=3").first()["text"]
-          .replace("quick", "quickk")),
-         (1007, corpus.filter("doc_id=7").first()["text"]
-          .replace("lazy", "lazyy"))],
-        ["doc_id", "text"]).write.json(str(src_dir / "b0"))
-    spark.createDataFrame(
-        [(2000, "completely different content nothing shared here at "
-                "all in any shingle of this text")],
-        ["doc_id", "text"]).write.json(str(src_dir / "b1"))
-
-    out = str(tmp_path / "flags")
-    stream = (spark.readStream
-              .schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", "1")
-              .json(str(src_dir) + "/*"))
-    q = (stream.writeStream
-         .foreachBatch(neardup_stream_sink(idx, corpus, out,
-                                           threshold=0.4))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120)
-
-    flags = spark.read.parquet(out)
-    got = {(r["corpus_id"], r["new_id"]) for r in flags.collect()}
-    assert (3, 1003) in got and (7, 1007) in got
-    assert not any(n == 2000 for _, n in got)   # novel doc stays clean
-    # exactly-once: replaying a batch's write overwrites, not appends
-    batch_dirs = {r["batch"] for r in
-                  flags.select("batch").distinct().collect()}
-    assert len(batch_dirs) >= 1
-    sink = neardup_stream_sink(idx, corpus, out, threshold=0.4)
-    first = spark.read.json(str(src_dir / "b0"))
-    sink(first, 0)  # simulate the at-least-once redelivery
-    again = {(r["corpus_id"], r["new_id"])
-             for r in spark.read.parquet(out).collect()}
-    assert again == got

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from dump1090_db_stream_spark.operators.drift import ks_drift_by
@@ -179,73 +178,6 @@ def test_ks_drift_decomposition_and_shuffle_mode_bit_identical(spark):
         .orderBy("k").collect() == base
     assert ks_drift(ref, cur, "s", keys=["k"],
                     bounds_join="shuffle").orderBy("k").collect() == base
-
-
-@pytest.mark.slow
-def test_drift_stream_sink_matches_batch_and_replays(spark, tmp_path):
-    """The deployment shape: freeze a reference, monitor a value
-    stream per micro-batch. Each streamed batch's KS rows equal the
-    direct ks_drift of that batch, and an at-least-once redelivery
-    overwrites instead of appending (the classifier_stream_sink
-    discipline)."""
-    from dump1090_db_stream_spark.cache import track
-    from dump1090_db_stream_spark.operators.drift import (
-        drift_stream_sink,
-        ks_drift,
-    )
-
-    ref = track(spark.createDataFrame(
-        [("a", float((i * 7) % 40)) for i in range(60)]
-        + [("b", float((i * 11) % 40)) for i in range(40)],
-        "k string, s double"))
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    b0 = [("a", float((i * 7) % 40)) for i in range(30)]       # same
-    b1 = [("a", float((i * 7) % 40 + 25)) for i in range(30)]  # shifted
-    # one FILE per logical batch: maxFilesPerTrigger=1 defines the
-    # micro-batch boundary, so each fixture batch must be one part
-    spark.createDataFrame(b0, "k string, s double").coalesce(1) \
-        .write.json(str(src / "b0"))
-    spark.createDataFrame(b1, "k string, s double").coalesce(1) \
-        .write.json(str(src / "b1"))
-
-    out = str(tmp_path / "monitor")
-    q = (spark.readStream
-         .schema("k string, s double")
-         .option("maxFilesPerTrigger", "1")
-         .json(str(src) + "/*")
-         .writeStream
-         .foreachBatch(drift_stream_sink(ref, out, "s", keys=["k"]))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120)
-
-    mon = spark.read.parquet(out)
-    assert set(r["batch"] for r in mon.select("batch").collect()) \
-        == {0, 1}
-    # per-batch rows equal the direct batch computation
-    by_batch = {}
-    for r in mon.collect():
-        by_batch.setdefault(r["batch"], {})[r["k"]] = (
-            r["n_ref"], r["n_cur"], r["ks"], r["drifted"])
-    for bid, rows in ((0, b0), (1, b1)):
-        cur = spark.createDataFrame(rows, "k string, s double")
-        direct = {r["k"]: (r["n_ref"], r["n_cur"], r["ks"],
-                           r["drifted"])
-                  for r in ks_drift(ref, cur, "s", keys=["k"]).collect()}
-        assert by_batch[bid] == direct, bid
-    # the planted shift in batch 1 must alarm; batch 0 must not
-    assert by_batch[1]["a"][3] is True
-    assert by_batch[0]["a"][3] is False
-    # at-least-once redelivery of batch 0 overwrites, not appends
-    n_before = mon.count()
-    sink = drift_stream_sink(ref, out, "s", keys=["k"])
-    sink(spark.read.schema("k string, s double").json(str(src / "b0")),
-         0)
-    spark.catalog.refreshByPath(out)   # the overwrite replaced files
-    assert spark.read.parquet(out).count() == n_before
 
 
 # --- w1_drift (Wasserstein-1 / earth mover's) -----------------------------
@@ -597,111 +529,3 @@ def test_page_hinkley_exclusions_and_validation(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         page_hinkley_drift(df, "x", bucket_seconds=0)
-
-
-@pytest.mark.slow
-def test_ph_stream_sink_accumulates_and_equals_batch(spark, tmp_path):
-    """The sequential arm's deployment shape: the PH monitor carries
-    bucket-grain state across micro-batches, and after ANY prefix of
-    the stream its `latest` rows equal the one-shot
-    page_hinkley_drift over everything ingested so far — including a
-    bucket split across a batch boundary (exact decimal re-merge). An
-    at-least-once redelivery overwrites its state partition instead
-    of double-counting."""
-    from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.operators.drift import (
-        page_hinkley_drift,
-        ph_stream_sink,
-    )
-
-    def rows(lo, hi, shift):
-        return [("m", 1700000000 + i * 1200,
-                 10.0 + ((i * 37) % 11 - 5) * 0.05 + shift)
-                for i in range(lo, hi)]
-
-    # batch 1 ends mid-bucket (3 readings/hour; 50 is not a multiple
-    # of 3) and batch 2 plants the upward shift
-    b0, b1, b2 = rows(0, 50, 0.0), rows(50, 96, 0.0), rows(96, 144, 3.0)
-
-    def mk(rs):
-        return spark.createDataFrame(rs, ["k", "e", "x"]).select(
-            "k", F.col("e").cast("timestamp").alias("ts"), "x")
-
-    out = str(tmp_path / "ph_monitor")
-    sink = ph_stream_sink(out, "x", keys=["k"], delta=0.05, lam=5.0)
-    seen: list = []
-    for bid, batch in enumerate((b0, b1, b2)):
-        sink(mk(batch), bid)
-        seen += batch
-        got = spark.read.parquet(f"{out}/latest").collect()
-        want = page_hinkley_drift(mk(seen), "x", keys=["k"],
-                                  delta=0.05, lam=5.0).collect()
-        assert sorted(map(tuple, got)) == sorted(map(tuple, want)), bid
-    [r] = spark.read.parquet(f"{out}/latest").collect()
-    assert r["drifted"] is True and r["n_buckets"] == 48
-    # redelivery of batch 1 must not double-count its buckets
-    sink(mk(b1), 1)
-    spark.catalog.refreshByPath(f"{out}/latest")
-    [r2] = spark.read.parquet(f"{out}/latest").collect()
-    assert tuple(r2) == tuple(r)
-
-
-@pytest.mark.slow
-def test_ph_stream_sink_compaction_bounds_state(spark, tmp_path):
-    """r14 (r13 ADVICE): a long-lived monitor must not re-read one
-    state partition per batch forever. With compact_every=4, batches
-    4 and 8 fold everything older into a single negative-id partition
-    and drop the consumed ones; `latest` still equals the one-shot
-    batch computation after EVERY prefix, and replaying the batch
-    that ran the compaction (the only batch foreachBatch can
-    redeliver) is idempotent even though it re-runs the fold."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.operators.drift import (
-        page_hinkley_drift,
-        ph_stream_sink,
-    )
-
-    def rows(lo, hi, shift):
-        return [("m", 1700000000 + i * 1200,
-                 10.0 + ((i * 37) % 11 - 5) * 0.05 + shift)
-                for i in range(lo, hi)]
-
-    def mk(rs):
-        return spark.createDataFrame(rs, ["k", "e", "x"]).select(
-            "k", F.col("e").cast("timestamp").alias("ts"), "x")
-
-    out = str(tmp_path / "ph_compact")
-    sink = ph_stream_sink(out, "x", keys=["k"], delta=0.05, lam=5.0,
-                          compact_every=4)
-    batches = [rows(i * 16, (i + 1) * 16, 3.0 if i >= 6 else 0.0)
-               for i in range(9)]
-    seen: list = []
-    for bid, batch in enumerate(batches):
-        sink(mk(batch), bid)
-        seen += batch
-        spark.catalog.refreshByPath(f"{out}/latest")
-        got = spark.read.parquet(f"{out}/latest").collect()
-        want = page_hinkley_drift(mk(seen), "x", keys=["k"],
-                                  delta=0.05, lam=5.0).collect()
-        assert sorted(map(tuple, got)) == sorted(map(tuple, want)), bid
-
-    def state_parts():
-        return sorted(d for d in os.listdir(f"{out}/state")
-                      if d.startswith("batch="))
-
-    # after batch 8: fold of everything < 8 (incl. batch=-4) + 8
-    assert state_parts() == ["batch=-8", "batch=8"]
-
-    # replay of batch 8 re-runs the compaction branch: the fold input
-    # excludes batch=-8 itself and its _SUCCESS marker short-circuits
-    # the refold, so nothing double-counts
-    [before] = spark.read.parquet(f"{out}/latest").collect()
-    sink(mk(batches[8]), 8)
-    spark.catalog.refreshByPath(f"{out}/latest")
-    [after] = spark.read.parquet(f"{out}/latest").collect()
-    assert tuple(after) == tuple(before)
-    assert state_parts() == ["batch=-8", "batch=8"]

@@ -3,6 +3,9 @@ sf0.001 and each declared oracle key matches a queries key."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import __spark_entry__ as entrymod
 
 
@@ -140,3 +143,148 @@ def test_trainers_keep_no_module_level_memo(spark, sf_dir, tmp_path):
     grown = {k: (before.get(k, 0), n) for k, n in after.items()
              if n > before.get(k, 0)}
     assert grown == {}
+
+
+_REPO = Path(__file__).resolve().parent.parent
+_PKG = "dump1090_db_stream_spark"
+_DEF_TYPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+# Package defs that nothing outside tests/ calls but that stay, each
+# with its reason. A key is a def ("module.name") or a whole module.
+_TEST_ONLY_KEEP = {
+    f"{_PKG}.operators.adhoc.last_24h":
+        "the paper's own ad-hoc query (README.md:258-263)",
+    f"{_PKG}.plans.catalog.create_adsb_database":
+        "the paper's DDL surface (create_schema.sql)",
+    f"{_PKG}.plans.catalog.create_messages_table":
+        "the paper's DDL surface (create_schema.sql)",
+    f"{_PKG}.plans.audit": "the plan checkers the tests use",
+    f"{_PKG}.sinks.writers.write_time_sorted":
+        "store layout is decided next (ROADMAP item 4)",
+    f"{_PKG}.sinks.writers.compact_parquet":
+        "store layout is decided next (ROADMAP item 4)",
+    f"{_PKG}.operators.zorder.zorder_write": "the one z-order writer",
+    f"{_PKG}.operators.zorder.file_minmax":
+        "reads back what zorder_write laid out",
+    f"{_PKG}.operators.dedup.exact_dedup":
+        "test_pipeline_e2e's single-job plan gate composes it",
+    f"{_PKG}.operators.cleaning.repetition_filter":
+        "test_pipeline_e2e's single-job plan gate composes it",
+}
+
+
+def _module_index(tree: ast.Module, modname: str, is_pkg: bool):
+    """One walk per top-level statement: the file's import aliases
+    (local name -> dotted target) and, per statement, the dotted name
+    chains it mentions (``a.b.c`` -> ("a", "b", "c"))."""
+    aliases: dict[str, str] = {}
+    stmts: list[tuple[str | None, set]] = []
+    here = modname.split(".") if is_pkg else modname.split(".")[:-1]
+    for stmt in tree.body:
+        chains = set()
+        for n in ast.walk(stmt):
+            if isinstance(n, ast.Name):
+                chains.add((n.id,))
+            elif isinstance(n, ast.Attribute):
+                parts = []
+                while isinstance(n, ast.Attribute):
+                    parts.append(n.attr)
+                    n = n.value
+                if isinstance(n, ast.Name):
+                    chains.add((n.id, *reversed(parts)))
+            elif isinstance(n, ast.ImportFrom):
+                base = n.module or ""
+                if n.level:
+                    up = here[:len(here) - n.level + 1]
+                    base = ".".join(up + ([base] if base else []))
+                for a in n.names:
+                    aliases[a.asname or a.name] = f"{base}.{a.name}"
+            elif isinstance(n, ast.Import):
+                for a in n.names:
+                    aliases[a.asname or a.name.split(".")[0]] = (
+                        a.name if a.asname else a.name.split(".")[0])
+        owner = stmt.name if isinstance(stmt, _DEF_TYPES) else None
+        stmts.append((owner, chains))
+    return aliases, stmts
+
+
+def _test_only_defs(root: Path) -> dict[str, int]:
+    """Top-level package defs (qualified name -> line count) that
+    nothing outside ``tests/`` reaches. Roots: every name that
+    ``__spark_entry__.py``, ``bench.py``, ``perfbench/*.py`` and
+    ``scripts/*.py`` mention, every def in ``__main__`` and every
+    module-level statement of the package; each reached def's body is
+    followed transitively through the import aliases of its module."""
+    defs, index, roots = {}, {}, []
+    for p in sorted((root / _PKG).rglob("*.py")):
+        parts = list(p.relative_to(root).with_suffix("").parts)
+        is_pkg = parts[-1] == "__init__"
+        mod = ".".join(parts[:-1] if is_pkg else parts)
+        tree = ast.parse(p.read_text(), str(p))
+        index[mod] = _module_index(tree, mod, is_pkg)
+        for n in tree.body:
+            if isinstance(n, _DEF_TYPES):
+                defs[f"{mod}.{n.name}"] = n.end_lineno - n.lineno + 1
+
+    def resolve(q: str) -> str:
+        for _ in range(5):      # follow re-exports through aliases
+            mod, _, name = q.rpartition(".")
+            if q in defs or name not in index.get(mod, ({},))[0]:
+                break
+            q = index[mod][0][name]
+        return q
+
+    def reached(mod: str | None, aliases: dict, chains) -> list[str]:
+        out = []
+        for chain in chains:
+            if chain[0] in aliases:
+                q = aliases[chain[0]]
+            elif mod is not None and f"{mod}.{chain[0]}" in defs:
+                q = f"{mod}.{chain[0]}"
+            else:
+                continue
+            for part in (None, *chain[1:]):
+                q = resolve(q if part is None else f"{q}.{part}")
+                if q in defs:
+                    out.append(q)
+        return out
+
+    for pat in ("__spark_entry__.py", "bench.py", "perfbench/*.py",
+                "scripts/*.py"):
+        for p in sorted(root.glob(pat)):
+            name = str(p.relative_to(root).with_suffix("")).replace("/", ".")
+            aliases, stmts = _module_index(ast.parse(p.read_text()), name,
+                                           False)
+            for _, chains in stmts:
+                roots += reached(None, aliases, chains)
+    by_def = {}
+    for mod, (aliases, stmts) in index.items():
+        for owner, chains in stmts:
+            if owner is None:
+                roots += reached(mod, aliases, chains)
+            else:
+                by_def[f"{mod}.{owner}"] = (mod, aliases, chains)
+        if mod == f"{_PKG}.__main__":
+            roots += [q for q in defs if q.startswith(f"{mod}.")]
+    seen: set[str] = set()
+    while roots:
+        q = roots.pop()
+        if q not in seen:
+            seen.add(q)
+            roots += reached(*by_def[q])
+    return {q: n for q, n in defs.items() if q not in seen}
+
+
+def test_package_defs_have_a_non_test_caller():
+    """Every top-level package def has a caller outside ``tests/``
+    (the registry, the CLI, the bench, perfbench or a script), or a
+    stated reason in ``_TEST_ONLY_KEEP``. A second implementation that
+    only its equivalence test runs is code to maintain that no user
+    gets; delete it with its test instead."""
+    dead = _test_only_defs(_REPO)
+    unkept = sorted(q for q in dead if q not in _TEST_ONLY_KEEP
+                    and q.rpartition(".")[0] not in _TEST_ONLY_KEEP)
+    assert unkept == [], unkept
+    stale = sorted(k for k in _TEST_ONLY_KEEP if k not in dead
+                   and not any(q.startswith(f"{k}.") for q in dead))
+    assert stale == [], stale

@@ -1,14 +1,12 @@
 """Geo operators: grid-bucketed radius join (equivalence + plan shape)
-and track segments."""
+and WKT/WKB emission."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from dump1090_db_stream_spark.operators.geo import (
-    KM_PER_DEG,
     haversine_km,
     radius_join,
-    track_segments,
 )
 
 
@@ -58,65 +56,6 @@ def test_radius_join_plans_equi_hash_join(spark):
     assert "_cell" in plan  # equi key is the packed grid cell
 
 
-def test_track_segments_known_distance(spark):
-    rows = [("A", 1, 0.0, 0.0), ("A", 2, 1.0, 0.0), ("A", 3, 1.0, 1.0),
-            ("B", 1, 10.0, 10.0)]
-    df = spark.createDataFrame(rows, ["hex_ident", "ts", "lat", "lon"])
-    segs = {(r["hex_ident"], r["ts"]): r["segment_km"]
-            for r in track_segments(df, "hex_ident", "ts",
-                                    "lat", "lon").collect()}
-    assert set(segs) == {("A", 1), ("A", 2)}  # last fix per key dropped
-    # 1 degree of latitude
-    assert abs(segs[("A", 1)] - KM_PER_DEG) < 0.2
-    # 1 degree of longitude at lat 1° is slightly shorter
-    assert segs[("A", 2)] < segs[("A", 1)]
-    assert abs(segs[("A", 2)] - KM_PER_DEG) < 0.5
-
-
-def test_zordered_files_have_tight_bounding_boxes(spark, tmp_path):
-    """write_zordered: each file's (lat, lon) footer stats form a tight
-    spatial tile — total bounding-box area is far below that of an
-    insertion-ordered write of the same rows, so bbox predicates can
-    skip most files from metadata alone."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from dump1090_db_stream_spark.operators.geo import write_zordered
-
-    pts = _points(spark, 4000)
-
-    def bbox_area_sum(path):
-        total = 0.0
-        files = glob.glob(f"{path}/*.parquet")
-        assert len(files) >= 4
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            idx = {md.schema.column(i).name: i
-                   for i in range(len(md.schema))}
-            lo = [None, None]
-            hi = [None, None]
-            for rg in range(md.num_row_groups):
-                for d, col in enumerate(("lat", "lon")):
-                    st = md.row_group(rg).column(idx[col]).statistics
-                    lo[d] = st.min if lo[d] is None else min(lo[d], st.min)
-                    hi[d] = st.max if hi[d] is None else max(hi[d], st.max)
-            total += (hi[0] - lo[0]) * (hi[1] - lo[1])
-        return total
-
-    zpath = str(tmp_path / "zordered")
-    npath = str(tmp_path / "naive")
-    write_zordered(pts, zpath, n_files=8)
-    pts.repartition(8).write.mode("overwrite").parquet(npath)
-
-    z_area = bbox_area_sum(zpath)
-    n_area = bbox_area_sum(npath)
-    assert z_area < 0.5 * n_area
-    back = spark.read.parquet(zpath)
-    assert back.count() == 4000
-    assert set(back.columns) == {"point_id", "lat", "lon"}
-
-
 def test_grid_cell_pack_no_collision_at_small_cells(spark):
     # Regression: the old decimal pack (lo*100_000 + la) aliased distinct
     # (lon_idx, lat_idx) cells once 180/cell_deg exceeded 100_000 (radius
@@ -139,7 +78,6 @@ def test_wkt_formatting(spark):
     from pyspark.sql import functions as F
 
     from dump1090_db_stream_spark.operators.geo import (
-        make_point,
         st_astext_line,
         st_astext_point,
         wkt_coord,
@@ -150,7 +88,8 @@ def test_wkt_formatting(spark):
         ["lon", "lat"])
     rows = df.select(
         wkt_coord(F.col("lon")).alias("c"),
-        st_astext_point(make_point(F.col("lon"), F.col("lat"))).alias("p"),
+        st_astext_point(F.struct(F.col("lon").alias("x"),
+                                 F.col("lat").alias("y"))).alias("p"),
     ).collect()
     assert [r["c"] for r in rows] == ["102.5", "-170", "12.345679"]
     assert [r["p"] for r in rows] == [
@@ -189,19 +128,17 @@ def test_wkb_point_and_line_decode(spark):
     import struct
 
     from dump1090_db_stream_spark.operators.geo import (
-        make_point,
         st_asbinary_line,
         st_asbinary_point,
     )
 
     df = spark.createDataFrame([(102.53, -46.55), (-0.07, 51.47)],
                                ["lon", "lat"])
+    xy = F.struct(F.col("lon").alias("x"), F.col("lat").alias("y"))
     pts = df.select(
         "lon", "lat",
-        st_asbinary_point(make_point(F.col("lon"), F.col("lat")))
-        .alias("wkb"),
-        st_asbinary_point(make_point(F.col("lon"), F.col("lat")),
-                          srid=4326).alias("ewkb"),
+        st_asbinary_point(xy).alias("wkb"),
+        st_asbinary_point(xy, srid=4326).alias("ewkb"),
     ).collect()
     for r in pts:
         b = bytes(r["wkb"])

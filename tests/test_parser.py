@@ -7,10 +7,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from dump1090_db_stream_spark.functions.parser import (
-    parse_sbs1,
-    parse_sbs1_lines,
-)
+from dump1090_db_stream_spark.functions.parser import parse_sbs1
 from dump1090_db_stream_spark.schema import ALL_COLUMNS, MESSAGE_SCHEMA
 from tests.fixtures import DECIMAL_SPEED_LINE, N_MSG_LINES, SAMPLE_LINES
 
@@ -104,12 +101,20 @@ def test_not_null_enforcement(spark):
     assert out.count() == N_MSG_LINES
 
 
-def test_keep_malformed_extension(spark):
-    # Lossless mode keeps SEL/ID/AIR/STA/CLK short forms NULL-padded
-    out = parse_sbs1_lines(_lines_df(spark), parsed_time=fixed_ts(),
-                           keep_malformed=True)
+def test_tagged_parse_keeps_short_forms_null_padded(spark):
+    # Lossless archival: the tagged parser keeps SEL/ID/AIR/STA/CLK
+    # short forms, NULL-padded, with the wire line and the reason
+    from dump1090_db_stream_spark.functions.parser import (
+        REJECT_WIDTH,
+        parse_sbs1_tagged,
+    )
+
+    out = parse_sbs1_tagged(_lines_df(spark), parsed_time=fixed_ts())
     assert out.count() == len(SAMPLE_LINES)
     sel = out.filter(F.col("message_type") == "SEL").collect()[0]
+    assert sel.reject_reason == REJECT_WIDTH
+    assert sel.raw_value == next(ln for ln in SAMPLE_LINES
+                                 if ln.startswith("SEL,"))
     assert sel.callsign == "RYR1427"
     assert sel.altitude is None
 

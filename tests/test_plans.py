@@ -167,39 +167,6 @@ def test_exact_cosine_pairs_precomputes_norms_once(spark, sf):
     assert below.count("SQRT") >= 2
 
 
-def test_bucketed_tables_join_without_shuffle(spark, sf, tmp_path_factory):
-    """Two tables bucketed on the join key must sort-merge join with NO
-    Exchange — the write-once-shuffle-never pattern for the fact table
-    (SCALE.md §1). AQE broadcast could hide the property, so it is
-    disabled for the assertion."""
-    from dump1090_db_stream_spark.sinks.writers import write_bucketed_table
-    from dump1090_db_stream_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf, "events")
-    write_bucketed_table(ev.select("user_id", "ts", "event_type"),
-                         "ev_bucketed", "user_id", n_buckets=4)
-    write_bucketed_table(
-        ev.groupBy("user_id").count(), "users_bucketed", "user_id",
-        n_buckets=4)
-    aqe_default = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        joined = spark.table("ev_bucketed").join(
-            spark.table("users_bucketed"), "user_id")
-        plan = plan_of(joined)
-        # SMJ or SHJ (r14: preferSortMergeJoin=false) — the property
-        # under test is bucket co-location, not the join flavor
-        assert ("SortMergeJoin" in plan or "ShuffledHashJoin" in plan)
-        assert "Exchange" not in plan  # buckets already co-located
-        assert "SelectedBucketsCount" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_default)
-        spark.sql("DROP TABLE IF EXISTS ev_bucketed")
-        spark.sql("DROP TABLE IF EXISTS users_bucketed")
-
-
 def test_date_partitioned_store_prunes_partitions(spark, tmp_path_factory):
     """The BRIN-index replacement, end to end: write the fact store
     date-partitioned, query a date range, and verify the scan carries

@@ -1,5 +1,6 @@
-"""Direct contracts of operators.prefix_sum.distributed_prev_counts:
-the r10 grouped-vocabulary runtime guard and the NaN exclusion the
+"""Direct contracts of operators.prefix_sum.distributed_prev_counts_multi:
+exactness against plain global windows, the r10 grouped-vocabulary
+runtime guard and the NaN exclusion the
 prefix-sum's monotone bucketing requires of its callers (r9 ADVICE:
 ``NaN >= bound`` is false so NaN rows land in bucket 0, but the
 within-bucket window sorts NaN LAST — their _prev would count only
@@ -14,12 +15,12 @@ import pytest
 
 def _prev_counts(spark, rows, **kw):
     from dump1090_db_stream_spark.operators.prefix_sum import (
-        distributed_prev_counts,
+        distributed_prev_counts_multi,
     )
 
     rel = spark.createDataFrame(rows, ["g", "v", "c"])
-    return distributed_prev_counts(rel, "v", "c", partition_cols=("g",),
-                                   **kw)
+    return distributed_prev_counts_multi(rel, "v", ("c",),
+                                         partition_cols=("g",), **kw)
 
 
 def test_vocabulary_guard_raises_on_unbounded_group_key(spark):
@@ -74,13 +75,13 @@ def test_shuffle_bounds_join_matches_broadcast_exactly(spark):
 
     rng = random.Random(10)
     rows = [(f"g{i % 7}", rng.random(), 1 + i % 3) for i in range(500)]
-    want = {(r["g"], r["v"]): (r["_prev"], r["_total"])
+    want = {(r["g"], r["v"]): (r["_prevc"], r["_totalc"])
             for r in _prev_counts(spark, rows,
                                   with_totals=True).collect()}
     shuffled = _prev_counts(spark, rows, with_totals=True,
                             bounds_join="shuffle",
                             max_partition_groups=1)  # probe skipped
-    got = {(r["g"], r["v"]): (r["_prev"], r["_total"])
+    got = {(r["g"], r["v"]): (r["_prevc"], r["_totalc"])
            for r in shuffled.collect()}
     assert got == want
     optimized = shuffled._jdf.queryExecution().optimizedPlan().toString()
@@ -99,7 +100,7 @@ def test_shuffle_bounds_join_handles_unbounded_group_key(spark):
             for i in range(2_000) for v in (1, 2)]
     got = _prev_counts(spark, rows, bounds_join="shuffle")
     assert got.count() == 4_000
-    sample = {(r["g"], r["v"]): r["_prev"] for r in
+    sample = {(r["g"], r["v"]): r["_prevc"] for r in
               got.filter(got.g == "domain_7").collect()}
     assert sample == {("domain_7", 1.0): 0, ("domain_7", 2.0): 1}
 
@@ -115,7 +116,7 @@ def test_vocabulary_guard_passes_bounded_vocabulary(spark):
     closed-form exclusive prefix sum per group."""
     rows = [("en", 1.0, 2), ("en", 2.0, 3), ("en", 3.0, 5),
             ("de", 1.5, 7), ("de", 2.5, 11)]
-    got = {(r["g"], r["v"]): r["_prev"]
+    got = {(r["g"], r["v"]): r["_prevc"]
            for r in _prev_counts(spark, rows,
                                  max_partition_groups=16).collect()}
     assert got == {("en", 1.0): 0, ("en", 2.0): 2, ("en", 3.0): 5,
@@ -176,61 +177,19 @@ def test_quantile_normalize_excludes_nan_values(spark):
     assert "dn1" not in got and "dn2" not in got
 
 
-# --- distributed_next (ordered-neighbor primitive) ------------------------
+def test_multi_matches_plain_windows(spark):
+    """distributed_prev_counts_multi — ONE bucketed pass carrying
+    several count columns plus the ordered neighbor — equals the plain
+    global-Window reference: exclusive running sums
+    (``rowsBetween(unboundedPreceding, -1)``), group totals and
+    ``lead`` per group. Covers grouped + ungrouped, ties (zero-filled
+    second count), degenerate n_range_buckets=1, and shuffle mode."""
+    import random
 
-
-def test_distributed_next_matches_plain_lead(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from dump1090_db_stream_spark.operators.prefix_sum import (
-        distributed_next,
-    )
-
-    rows = [("g1", float((i * 17) % 101)) for i in range(101)] + \
-           [("g2", float((i * 13) % 53)) for i in range(53)]
-    rel = spark.createDataFrame(rows, "g string, s double").distinct()
-    expected = {(r["g"], r["s"]): r["_lead"] for r in
-                rel.withColumn(
-                    "_lead",
-                    F.lead("s").over(
-                        Window.partitionBy("g").orderBy("s")))
-                .collect()}
-    for nb in (1, 7, 64):
-        got = {(r["g"], r["s"]): r["_next"] for r in
-               distributed_next(rel, "s", partition_cols=("g",),
-                                n_range_buckets=nb).collect()}
-        assert got == expected, nb
-    # ungrouped + shuffle mode
-    rel1 = rel.filter(F.col("g") == "g1").select("s")
-    exp1 = {r["s"]: r["_lead"] for r in
-            rel1.withColumn("_lead",
-                            F.lead("s").over(Window.orderBy("s")))
-            .collect()}
-    got1 = {r["s"]: r["_next"]
-            for r in distributed_next(rel1, "s").collect()}
-    assert got1 == exp1
-    gots = {(r["g"], r["s"]): r["_next"] for r in
-            distributed_next(rel, "s", partition_cols=("g",),
-                             bounds_join="shuffle").collect()}
-    assert gots == expected
-
-
-def test_multi_matches_single_passes(spark):
-    """r15: distributed_prev_counts_multi — ONE bucketed pass carrying
-    several count columns (plus the ordered neighbor) — must equal the
-    composition of single-column distributed_prev_counts passes and
-    distributed_next re-joined on (group, order): same bucketing, same
-    integer window sums, only the number of columns riding each stage
-    differs. Covers grouped + ungrouped, ties (zero-filled second
-    count), degenerate n_range_buckets=1, and shuffle mode."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.operators.prefix_sum import (
-        distributed_next,
-        distributed_prev_counts,
         distributed_prev_counts_multi,
     )
 
@@ -242,30 +201,26 @@ def test_multi_matches_single_passes(spark):
            .groupBy("g", "s")
            .agg(F.sum("ca").alias("ca"), F.sum("cb").alias("cb")))
 
-    def _single(pcols, nb, bj):
-        a = distributed_prev_counts(
-            rel, "s", "ca", n_range_buckets=nb, partition_cols=pcols,
-            with_totals=True, bounds_join=bj)
-        b = distributed_prev_counts(
-            rel, "s", "cb", n_range_buckets=nb, partition_cols=pcols,
-            with_totals=True, bounds_join=bj)
-        n = distributed_next(rel, "s", partition_cols=pcols,
-                             n_range_buckets=nb, bounds_join=bj)
-        keyed = {}
-        for r in a.collect():
-            k = tuple(r[p] for p in pcols) + (r["s"],)
-            keyed[k] = [r["_prev"], r["_total"], None, None, None]
-        for r in b.collect():
-            k = tuple(r[p] for p in pcols) + (r["s"],)
-            keyed[k][2:4] = [r["_prev"], r["_total"]]
-        for r in n.collect():
-            k = tuple(r[p] for p in pcols) + (r["s"],)
-            keyed[k][4] = r["_next"]
-        return keyed
+    def _plain(pcols):
+        w = Window.partitionBy(*pcols).orderBy("s")
+        prev = w.rowsBetween(Window.unboundedPreceding, -1)
+        tot = Window.partitionBy(*pcols)
+        out = rel if pcols else rel.groupBy("s").agg(
+            F.sum("ca").alias("ca"), F.sum("cb").alias("cb"))
+        return {tuple(r[p] for p in pcols) + (r["s"],):
+                list(r[len(pcols) + 1:])
+                for r in out.select(
+                    *pcols, "s",
+                    *[c for col in ("ca", "cb") for c in (
+                        F.coalesce(F.sum(col).over(prev), F.lit(0)),
+                        F.sum(col).over(tot))],
+                    F.lead("s").over(w)).collect()}
 
     def _multi(pcols, nb, bj):
+        src = rel if pcols else rel.groupBy("s").agg(
+            F.sum("ca").alias("ca"), F.sum("cb").alias("cb"))
         out = distributed_prev_counts_multi(
-            rel, "s", ("ca", "cb"), n_range_buckets=nb,
+            src, "s", ("ca", "cb"), n_range_buckets=nb,
             partition_cols=pcols, with_totals=True, with_next=True,
             bounds_join=bj)
         return {tuple(r[p] for p in pcols) + (r["s"],):
@@ -274,18 +229,18 @@ def test_multi_matches_single_passes(spark):
                 for r in out.collect()}
 
     for pcols, nb, bj in ((("g",), 64, "broadcast"),
+                          (("g",), 7, "broadcast"),
                           (("g",), 1, "broadcast"),
                           (("g",), 7, "shuffle"),
                           ((), 64, "broadcast"),
                           ((), 1, "broadcast")):
-        assert _multi(pcols, nb, bj) == _single(pcols, nb, bj), \
-            (pcols, nb, bj)
+        assert _multi(pcols, nb, bj) == _plain(pcols), (pcols, nb, bj)
 
 
 def test_multi_vocabulary_guard_and_validation(spark):
-    """The fused pass guards its grouped broadcasts exactly like the
-    single-column primitives (including the degenerate one-bucket
-    branch with no totals), and validates its arguments."""
+    """The pass guards its grouped broadcasts (including the
+    degenerate one-bucket branch with no totals and the neighbor
+    stitch), and validates its arguments."""
     from dump1090_db_stream_spark.operators.prefix_sum import (
         distributed_prev_counts_multi,
     )
@@ -306,42 +261,15 @@ def test_multi_vocabulary_guard_and_validation(spark):
     with pytest.raises(ValueError, match="n_range_buckets"):
         distributed_prev_counts_multi(rel, "s", ("ca",),
                                       n_range_buckets=0)
-
-
-def test_distributed_next_vocabulary_guard(spark):
-    """r11 ADVICE: distributed_next's grouped broadcast mode
-    broadcasts the per-group bounds row AND the groups x buckets
-    nxt_bucket stitch relation, so it needs the SAME guarded count as
-    distributed_prev_counts — including in the degenerate
-    n_range_buckets=1 branch where no bounds join exists but
-    nxt_bucket still broadcasts. shuffle mode and
-    max_partition_groups=None skip the probe."""
-    from dump1090_db_stream_spark.operators.prefix_sum import (
-        distributed_next,
-    )
-
-    rows = [(f"domain_{i}", float(i % 97)) for i in range(300)]
-    rel = spark.createDataFrame(rows, "g string, s double").distinct()
-    for nb in (1, 64):
-        with pytest.raises(ValueError) as ei:
-            distributed_next(rel, "s", partition_cols=("g",),
-                             n_range_buckets=nb,
-                             max_partition_groups=256).collect()
-        msg = str(ei.value)
-        assert "vocabulary guard" in msg
-        assert "300" in msg and "256" in msg
-    # the offsets-row-budget ceiling applies too: 2**20 // 4096 = 256
-    with pytest.raises(ValueError) as ei:
-        distributed_next(rel, "s", partition_cols=("g",),
-                         n_range_buckets=4096).collect()
-    assert "4096" in str(ei.value)
+    # the offsets-row-budget ceiling applies to the neighbor pass too:
+    # 2**20 // 4096 = 256 < 300 groups
+    with pytest.raises(ValueError, match="4096"):
+        distributed_prev_counts_multi(
+            rel, "s", ("ca",), n_range_buckets=4096,
+            partition_cols=("g",), with_next=True).collect()
     # escape hatches: shuffle mode, explicit None, default ceiling
-    assert distributed_next(rel, "s", partition_cols=("g",),
-                            bounds_join="shuffle",
-                            max_partition_groups=256).count() == 300
-    assert distributed_next(rel, "s", partition_cols=("g",),
-                            max_partition_groups=None).count() == 300
-    assert distributed_next(rel, "s",
-                            partition_cols=("g",)).count() == 300
-    with pytest.raises(ValueError):
-        distributed_next(rel, "s", bounds_join="zip")
+    for kw in ({"bounds_join": "shuffle", "max_partition_groups": 256},
+               {"max_partition_groups": None}, {}):
+        assert distributed_prev_counts_multi(
+            rel, "s", ("ca",), partition_cols=("g",), with_next=True,
+            **kw).count() == 300

@@ -105,11 +105,11 @@ def test_bigram_pmi_min_count_prunes_rows_not_totals(spark):
 
 
 def test_bigram_single_token_docs_contribute_nothing(spark):
-    from dump1090_db_stream_spark.operators.relevance import bigram_counts
+    from dump1090_db_stream_spark.operators.relevance import bigram_pmi
 
     df = spark.createDataFrame([(1, "solo"), (2, "a b")],
                                ["doc_id", "text"])
-    rows = bigram_counts(df).collect()
+    rows = bigram_pmi(df, min_count=1).collect()
     assert [(r["w1"], r["w2"], r["c_xy"]) for r in rows] == [("a", "b", 1)]
 
 

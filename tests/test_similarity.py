@@ -150,23 +150,6 @@ def test_ivf_topk_full_probe_equals_brute_force(spark, corpus):
     assert exact == full  # probing every cluster == exact search
 
 
-def test_brute_force_topk_arrow_equals_jvm(corpus):
-    from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_arrow,
-    )
-
-    emb = corpus
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    jvm = sorted(map(tuple, brute_force_topk(emb, queries, k=5).collect()))
-    arrow = sorted(map(tuple,
-                       brute_force_topk_arrow(emb, queries, k=5).collect()))
-    assert jvm == arrow
-
-
 def test_embedding_neardup_arrow_score_same_pairs(spark):
     from pyspark.sql import functions as F
 
@@ -265,43 +248,6 @@ def test_lsh_topk_arrow_sig_same_results(spark, corpus):
     assert hof == fast and len(hof) > 0
 
 
-def test_ivf_index_search_equals_inline_and_prunes(spark, tmp_path):
-    """The persisted IVF index: (a) search results are identical to the
-    inline ivf_topk on the same fixed quantizer; (b) the index scan's
-    PartitionFilters carry a dynamic-pruning subquery on ``cluster``,
-    so probing opens n_probes partition directories, not the corpus —
-    the FAISS add()/search() split as storage layout."""
-    from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_from_index,
-        write_ivf_index,
-    )
-    from dump1090_db_stream_spark.sources.tables import load_table
-
-    emb = load_table(
-        spark, "/root/testdata/sf0.001", "embeddings"
-    ).select("vec_id", "embedding")
-    fixed = [[float(x) for x in r["embedding"]] for r in emb.filter(
-        (F.col("vec_id") >= 10) & (F.col("vec_id") < 18)).collect()]
-    path = str(tmp_path / "ivf_index")
-    write_ivf_index(emb, path, fixed)
-
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    inline = ivf_topk(emb, q, dim=64, k=10, n_probes=2, centroids=fixed)
-    from_idx = ivf_topk_from_index(spark, path, q, fixed, k=10, n_probes=2)
-    assert sorted(map(tuple, inline.collect())) == \
-        sorted(map(tuple, from_idx.collect()))
-
-    plan = from_idx._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan
-    # the index directory layout is one subdir per posting list
-    import os
-    assert sorted(d for d in os.listdir(path) if d.startswith("cluster="))
-
-
 def test_arrow_sig_supports_string_ids(spark):
     """The arrow signature kernel must not narrow the id contract: a
     string-keyed corpus produces the same pairs as the HOF path."""
@@ -384,18 +330,16 @@ def test_quantize_zero_vector_total(spark):
 
 def test_dequantize_error_bounded_by_half_scale(corpus):
     from dump1090_db_stream_spark.operators.similarity import (
-        dequantize, quantize_embeddings,
+        quantize_embeddings,
     )
 
     q = quantize_embeddings(corpus)
     joined = q.join(corpus, "vec_id").select(
-        "vec_id", "embedding",
-        dequantize(F.col("qvec"), F.col("scale")).alias("recon"),
-        "scale")
+        "vec_id", "embedding", "qvec", "scale")
     for r in joined.collect():
         half = r["scale"] / 2 + 1e-12
-        for x, y in zip(r["embedding"], r["recon"]):
-            assert abs(float(x) - y) <= half
+        for x, qi in zip(r["embedding"], r["qvec"]):
+            assert abs(float(x) - qi * r["scale"]) <= half
 
 
 def test_quantized_topk_recall_vs_exact(corpus):
@@ -437,49 +381,6 @@ def test_pq_encode_matches_python_argmin(corpus):
                   for c_idx, c in enumerate(books[j])]
             want.append(min(d2, key=lambda t: (t[1], t[0]))[0])
         assert got[vid] == want, vid
-
-
-def test_pq_trained_recall_beats_fixed(corpus):
-    """Learned codebooks must reconstruct this corpus better than the
-    arbitrary fixed grid: higher recall@10 vs brute force, and the
-    planted near-duplicate of query 0 must surface as its top ADC
-    neighbor."""
-    from dump1090_db_stream_spark.operators.similarity import (
-        brute_force_topk, pq_codebooks_fixed, pq_topk, pq_train,
-    )
-
-    queries = corpus.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    exact = brute_force_topk(corpus, queries, k=10)
-    ex = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-
-    trained = pq_train(corpus, dim=64, m=8, ksub=16)
-    pq_t = pq_topk(corpus, queries, trained, k=10)
-    tr = {(r["query_id"], r["neighbor_id"]) for r in pq_t.collect()}
-
-    fixed = pq_codebooks_fixed(dim=64, m=8, ksub=16)
-    fx = {(r["query_id"], r["neighbor_id"])
-          for r in pq_topk(corpus, queries, fixed, k=10).collect()}
-
-    recall_t = len(ex & tr) / len(ex)
-    recall_f = len(ex & fx) / len(ex)
-    assert recall_t >= recall_f, (recall_t, recall_f)
-    assert recall_t >= 0.5, recall_t
-    top = {r["query_id"]: r["neighbor_id"]
-           for r in pq_t.collect() if r["rank"] == 1}
-    assert top[0] == 59
-
-
-def test_pq_train_is_deterministic_and_validates(corpus):
-    import pytest
-
-    from dump1090_db_stream_spark.operators.similarity import pq_train
-
-    a = pq_train(corpus, dim=64, m=8, ksub=4, n_iters=2)
-    b = pq_train(corpus, dim=64, m=8, ksub=4, n_iters=2)
-    assert a == b
-    with pytest.raises(ValueError, match="divisible"):
-        pq_train(corpus, dim=64, m=7)
 
 
 def test_ivf_pq_full_probe_equals_pq_flat(corpus):
@@ -659,30 +560,6 @@ def test_hard_negatives_band_and_exclusions(corpus):
         hard_negatives(corpus, queries, lo=0.9, hi=0.1)
 
 
-def test_brute_force_topk_arrow_string_ids(spark, corpus):
-    """Id types derive from the input schema (advisor r5: the Arrow
-    variant hardcoded bigint ids and crashed string-id corpora that the
-    JVM variant accepts)."""
-    from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_arrow,
-    )
-
-    emb = corpus.select(F.concat(F.lit("doc-"), F.col("vec_id"))
-                        .alias("vec_id"), "embedding")
-    queries = emb.filter(F.col("vec_id").isin("doc-0", "doc-3")).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    jvm = sorted(map(tuple, brute_force_topk(emb, queries, k=5).collect()))
-    arrow = sorted(map(tuple,
-                       brute_force_topk_arrow(emb, queries, k=5).collect()))
-    assert jvm == arrow and len(jvm) == 10
-    out = brute_force_topk_arrow(emb, queries, k=5)
-    assert dict(out.dtypes)["query_id"] == "string"
-    assert dict(out.dtypes)["neighbor_id"] == "string"
-
-
 def test_semantic_dedup_prunes_planted_neardups(spark):
     from pyspark.sql import functions as F
 
@@ -747,51 +624,6 @@ def test_standardize_embeddings_moments_and_determinism(spark):
          for r in standardize_embeddings(emb.repartition(13),
                                          dim=64).collect()}
     assert a == b
-
-
-def test_ivf_index_append_guard_and_stored_quantizer(spark, corpus, tmp_path):
-    import pytest
-    from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.operators.similarity import (
-        ivf_topk_from_index,
-        kmeans_centroids_portable,
-        read_ivf_centroids,
-        write_ivf_index,
-    )
-
-    cents = kmeans_centroids_portable(corpus, DIM, n_centroids=4,
-                                      n_iters=1, train_sample=32)
-    path = str(tmp_path / "ivf")
-    write_ivf_index(corpus, path, cents)
-    # the stored quantizer round-trips exactly
-    assert read_ivf_centroids(spark, path) == \
-        [[float(x) for x in c] for c in cents]
-    # append with the SAME quantizer extends the index
-    extra = corpus.select((F.col("vec_id") + 1000).alias("vec_id"),
-                          "embedding")
-    write_ivf_index(extra, path, cents, mode="append")
-    n = spark.read.parquet(path).count()
-    assert n == corpus.count() * 2
-    # a DIFFERENT quantizer is refused (posting-list corruption)
-    other = [[c[0] + 1.0] + c[1:] for c in cents]
-    with pytest.raises(ValueError, match="different.*quantizer"):
-        write_ivf_index(extra, path, other, mode="append")
-    # a sidecar-less dir cannot be appended to blind
-    bare = str(tmp_path / "bare")
-    spark.read.parquet(path).write.partitionBy("cluster").parquet(bare)
-    with pytest.raises(ValueError, match="refusing to append blind"):
-        write_ivf_index(extra, bare, cents, mode="append")
-    # search over the appended index still prunes + ranks correctly
-    q = corpus.filter("vec_id = 0").select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    out = ivf_topk_from_index(spark, path,
-                              q, read_ivf_centroids(spark, path),
-                              k=5, n_probes=4)
-    rows = out.collect()
-    assert len(rows) == 5
-    # the appended duplicate of vector 0 is its own nearest neighbor
-    assert rows[0]["neighbor_id"] == 1000 and rows[0]["cosine"] == 1.0
 
 
 def test_ann_recall_counts_and_edge_cases(spark):

@@ -177,8 +177,7 @@ def test_streaming_appended_sketch_store_matches_batch(spark, tmp_path):
     """The mergeable tier maintained FROM A STREAM, append-only: each
     micro-batch appends its own day-partial hash samples to the store
     (no upsert — sample union is idempotent); span estimates over the
-    store equal the one-shot batch computation over all raw rows, both
-    before and after compaction with merge_hash_samples."""
+    store equal the one-shot batch computation over all raw rows."""
     import os
     import time as _time
 
@@ -189,7 +188,6 @@ def test_streaming_appended_sketch_store_matches_batch(spark, tmp_path):
 
     from dump1090_db_stream_spark.operators.sketches import (
         daily_hash_samples,
-        merge_hash_samples,
         span_estimate,
         threshold_distinct,
     )
@@ -242,13 +240,6 @@ def test_streaming_appended_sketch_store_matches_batch(spark, tmp_path):
     got_raw = sorted(map(tuple, span_estimate(
         stored, ["event_type"], rate=4, est_col="est").collect()))
     assert got_raw == want
-
-    compact = merge_hash_samples(stored, ["event_type"])
-    assert compact.count() == \
-        stored.select("day", "event_type").distinct().count()
-    got_compact = sorted(map(tuple, span_estimate(
-        compact, ["event_type"], rate=4, est_col="est").collect()))
-    assert got_compact == want
 
 
 def test_global_span_quantiles(spark, sf_dir):

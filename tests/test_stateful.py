@@ -7,8 +7,6 @@ as authored — no wall-clock sleeps, same output on every run.
 
 from __future__ import annotations
 
-import pytest
-
 import os
 import time
 
@@ -163,98 +161,3 @@ def _ph_batch_expect(spark, rows, upto_bucket):
         "k", F.col("e").cast("timestamp").alias("ts"), "x")
     return {r["k"]: r for r in page_hinkley_drift(
         df, "x", keys=["k"], delta=0.05, lam=1.0).collect()}
-
-
-def _run_ph_stream(spark, src, out, ck):
-    from dump1090_db_stream_spark.streaming.stateful import ph_monitor
-
-    schema = T.StructType([
-        T.StructField("k", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("x", T.DoubleType()),
-    ])
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    mon = ph_monitor(stream, "x", ts_col="ts", keys=["k"],
-                     bucket_seconds=3600, delta=0.05, lam=1.0)
-    q = (mon.writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ck)
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(180)
-
-
-@pytest.mark.slow
-def test_ph_monitor_stream_equals_batch_per_finalized_bucket(
-        spark, tmp_path):
-    """r14 (r13 verdict ask #4): every trajectory row the incremental
-    monitor emits — one per (key, finalized bucket) — must equal
-    page_hinkley_drift over that key's rows restricted to buckets
-    <= b, however the stream is chopped (a bucket split across files
-    re-merges exactly; two keys keep independent state)."""
-    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
-    os.makedirs(src)
-    t0 = time.time()
-    rows = (_ph_rows(0, 50, 0.0) + _ph_rows(50, 96, 0.0)
-            + _ph_rows(96, 144, 3.0)
-            + _ph_rows(0, 144, 0.0, key="n"))  # never-drifting sibling
-    # file 1 ends MID-bucket for both keys; file 3 carries m's shift
-    _write_ph_file(src, "f1.parquet",
-                   _ph_rows(0, 50, 0.0) + _ph_rows(0, 50, 0.0, "n"), t0)
-    _write_ph_file(src, "f2.parquet",
-                   _ph_rows(50, 96, 0.0) + _ph_rows(50, 96, 0.0, "n"),
-                   t0 + 1)
-    _write_ph_file(src, "f3.parquet",
-                   _ph_rows(96, 144, 3.0) + _ph_rows(96, 144, 0.0, "n"),
-                   t0 + 2)
-    _run_ph_stream(spark, src, out, ck)
-
-    got = spark.read.parquet(out).collect()
-    # 144 readings = 48 buckets; the last one never finalizes (the
-    # watermark equals the max event time, not past the bucket end)
-    per_key = {}
-    for r in got:
-        per_key.setdefault(r["k"], []).append(r)
-    assert set(per_key) == {"m", "n"}
-    for k, rs in per_key.items():
-        rs.sort(key=lambda r: r["b"])
-        assert [r["n_buckets"] for r in rs] == list(range(1, 48))
-        for r in rs:
-            want = _ph_batch_expect(spark, rows, r["b"])[k]
-            assert r["n_buckets"] == want["n_buckets"], (k, r["b"])
-            assert r["ph_stat"] == want["ph_stat"], (k, r["b"])
-            assert r["drifted"] == want["drifted"], (k, r["b"])
-            assert r["alarm_bucket"] == want["alarm_bucket"], (k, r["b"])
-    # the shifted key alarms, the flat sibling never does
-    assert per_key["m"][-1]["drifted"] is True
-    assert all(r["drifted"] is False for r in per_key["n"])
-
-
-def test_ph_monitor_survives_restart(spark, tmp_path):
-    """Keyed state round-trips the checkpoint: stop after two files,
-    restart with a third — the union of both runs' emissions equals a
-    single-shot run's, including the buckets left OPEN in state at
-    shutdown (no loss, no duplicates)."""
-    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
-    src2, out2, ck2 = (str(tmp_path / d) for d in ("s2", "o2", "c2"))
-    os.makedirs(src)
-    os.makedirs(src2)
-    t0 = time.time()
-    parts = [_ph_rows(0, 50, 0.0), _ph_rows(50, 96, 0.0),
-             _ph_rows(96, 144, 3.0)]
-    for i, p in enumerate(parts):
-        _write_ph_file(src2, f"f{i}.parquet", p, t0 + i)
-
-    _write_ph_file(src, "f0.parquet", parts[0], t0)
-    _write_ph_file(src, "f1.parquet", parts[1], t0 + 1)
-    _run_ph_stream(spark, src, out, ck)       # run 1: two files, stop
-    n_first = spark.read.parquet(out).count()
-    assert 0 < n_first < 47                   # some buckets still open
-    _write_ph_file(src, "f2.parquet", parts[2], t0 + 2)
-    _run_ph_stream(spark, src, out, ck)       # run 2: resume
-
-    _run_ph_stream(spark, src2, out2, ck2)    # single-shot reference
-    spark.catalog.refreshByPath(out)
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    want = sorted(tuple(r) for r in spark.read.parquet(out2).collect())
-    assert got == want
-    assert len(got) == 47

@@ -3,9 +3,7 @@ consumer flows through text.with_tokens, which resolves a tokenizer
 spec via text.make_tokenizer — None is the historical whitespace split
 (bit-identical, so every pre-seam oracle is unchanged), names come
 from text.TOKENIZERS, and any Column -> Column callable is the custom
-escape hatch. The persisted MinHash index serializes the tokenizer
-NAME in its sidecar so probes always shingle the way the index was
-built."""
+escape hatch."""
 
 from __future__ import annotations
 
@@ -94,85 +92,3 @@ def test_ngram_dedup_respects_tokenizer(spark):
                                tokenizer="word").collect()
     assert [(r["id_a"], r["id_b"], r["jaccard"])
             for r in word] == [(1, 2, 1.0)]
-
-
-def test_minhash_index_sidecar_persists_tokenizer(spark, tmp_path):
-    """write_minhash_index records the tokenizer name; probes read it
-    back, so a punctuation-variant batch doc matches its corpus twin
-    under the index's own tokenizer with no caller coordination."""
-    from dump1090_db_stream_spark.operators.dedup import (
-        neardup_vs_index,
-        write_minhash_index,
-    )
-
-    path = str(tmp_path / "idx")
-    corpus = spark.createDataFrame(
-        [(i, f"alpha beta w{i}a w{i}b w{i}c w{i}d w{i}e w{i}f")
-         for i in range(6)], ["doc_id", "text"])
-    write_minhash_index(corpus, path, tokenizer="word")
-    meta = spark.read.json(path + "/_lsh_meta").first().asDict()
-    assert meta["tokenizer"] == "word"
-    new = spark.createDataFrame(
-        [(100, "alpha, beta; w3a. w3b! w3c? w3d: w3e (w3f)")],
-        ["doc_id", "text"])
-    got = neardup_vs_index(spark, path, new, corpus, threshold=0.5)
-    assert [r["corpus_id"] for r in got.collect()] == [3]
-
-
-def test_minhash_index_append_refuses_tokenizer_mismatch(spark,
-                                                         tmp_path):
-    from dump1090_db_stream_spark.operators.dedup import (
-        write_minhash_index,
-    )
-
-    path = str(tmp_path / "idx2")
-    docs = spark.createDataFrame(
-        [(1, "one two three four five six")], ["doc_id", "text"])
-    write_minhash_index(docs, path, tokenizer="word")
-    with pytest.raises(ValueError, match="refusing to append"):
-        write_minhash_index(docs, path, mode="append")  # whitespace
-
-
-def test_minhash_index_rejects_unnamed_tokenizer(spark, tmp_path):
-    """A callable has no serializable identity — the index must refuse
-    it rather than persist an unreproducible sidecar."""
-    from dump1090_db_stream_spark.operators.dedup import (
-        write_minhash_index,
-    )
-
-    docs = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
-    with pytest.raises(ValueError, match="NAMED tokenizer"):
-        write_minhash_index(docs, str(tmp_path / "idx3"),
-                            tokenizer=lambda c: F.split(c, " "))
-
-
-def test_preseam_sidecar_defaults_to_whitespace(spark, tmp_path):
-    """Indexes written before the seam lack the tokenizer key; both
-    the append guard and the probe treat them as whitespace."""
-    from dump1090_db_stream_spark.operators.dedup import (
-        neardup_vs_index,
-        write_minhash_index,
-    )
-
-    path = str(tmp_path / "idx4")
-    corpus = spark.createDataFrame(
-        [(i, f"one two v{i}a v{i}b v{i}c v{i}d v{i}e v{i}f")
-         for i in range(4)],
-        ["doc_id", "text"])
-    write_minhash_index(corpus, path)
-    # strip the tokenizer key to simulate a pre-seam sidecar
-    # (materialize to the driver first — a lazy read would race the
-    # overwrite of its own source files)
-    old = spark.read.json(path + "/_lsh_meta").first().asDict()
-    (spark.createDataFrame(
-        [(int(old["n"]), int(old["num_hashes"]), int(old["bands"]),
-          bool(old["portable_base_hash"]))],
-        "n int, num_hashes int, bands int, portable_base_hash boolean")
-     .coalesce(1).write.mode("overwrite").json(path + "/_lsh_meta"))
-    new = spark.createDataFrame(
-        [(100, "one two v2a v2b v2c v2d v2e v2f")],
-        ["doc_id", "text"])
-    got = neardup_vs_index(spark, path, new, corpus, threshold=0.5)
-    assert [r["corpus_id"] for r in got.collect()] == [2]
-    # and append with the default succeeds against the old sidecar
-    write_minhash_index(new, path, mode="append")

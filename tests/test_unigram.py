@@ -110,25 +110,6 @@ def test_encoded_stats_counts_and_fallback(spark):
     assert r5["pieces_per_word"] == pytest.approx(10.5)
 
 
-def test_unigram_tokenizer_plugs_into_seam(spark):
-    from dump1090_db_stream_spark.operators.text import with_tokens
-
-    loc = U.train_unigram_local(_docs_df(spark))
-    scores = U.scores_from_rows(loc)
-    tok = U.unigram_tokenizer(scores)
-    out = (with_tokens(_docs_df(spark).filter("text IS NOT NULL"),
-                       "text", "_toks", tok)
-           .select("doc_id", "_toks").collect())
-    by_id = {r["doc_id"]: r["_toks"] for r in out}
-    # doc 4's words all segment to single known pieces
-    assert by_id[4] == ["a", "ab", "abc", "abcd", "ab"]
-    # flattened pieces reassemble the letters of each doc
-    for did, text in DOCS:
-        if text is None:
-            continue
-        assert "".join(by_id[did]) == text.replace(" ", "")
-
-
 def test_mstep_retains_chars_and_drops_dead_multis():
     eff, scores = U._mstep({"a": 0, "b": 5, "ab": 0, "cd": 3},
                            ["a", "b", "ab", "cd"])

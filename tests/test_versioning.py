@@ -5,10 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dump1090_db_stream_spark.operators.versioning import (
-    corpus_diff,
-    diff_summary,
-)
+from dump1090_db_stream_spark.operators.versioning import corpus_diff
 
 
 def _snap(spark, rows):
@@ -22,10 +19,6 @@ def test_corpus_diff_classifies_all_states(spark):
            for r in corpus_diff(old, new).collect()}
     assert got == {1: "removed", 2: "unchanged", 3: "changed",
                    4: "unchanged", 9: "added"}
-    summary = {r["status"]: r["n"]
-               for r in diff_summary(old, new).collect()}
-    assert summary == {"removed": 1, "unchanged": 2, "changed": 1,
-                       "added": 1}
 
 
 def test_corpus_diff_shuffles_digests_not_bodies(spark):

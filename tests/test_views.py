@@ -102,3 +102,41 @@ def test_register_views_sql_surface(spark, messages):
         "SELECT * FROM locations WHERE hex_ident = 'GHI789'").collect()
     assert len(got) == 1
     assert spark.sql("SELECT * FROM flights").count() == 2
+
+
+def test_catalog_table_answers_the_views(spark, messages, tmp_path):
+    """D-1/D-2: create_messages_table registers the parquet store as
+    ``adsb.adsb_messages`` with its parsed_date partitions discovered,
+    and the three views over the catalog table answer with the same
+    rows as over read_parquet_store."""
+    from pyspark.sql import functions as F
+
+    from dump1090_db_stream_spark.plans.catalog import create_messages_table
+    from dump1090_db_stream_spark.sinks.writers import (
+        read_parquet_store,
+        write_parquet_store,
+    )
+
+    store = str(tmp_path / "store")
+    next_day = messages.withColumn(
+        "parsed_time", F.col("parsed_time") + F.expr("INTERVAL 1 DAY"))
+    write_parquet_store(messages.unionByName(next_day), store)
+
+    def views(df):
+        register_views(spark, df, prefix="cat_")
+        return {v: sorted(map(tuple, spark.table(f"cat_{v}").collect()),
+                          key=repr)
+                for v in ("callsigns", "locations", "flights")}
+
+    spark.sql("DROP TABLE IF EXISTS adsb.adsb_messages")
+    try:
+        create_messages_table(spark, store)
+        parts = spark.sql("SHOW PARTITIONS adsb.adsb_messages").collect()
+        assert len(parts) == 2
+        assert all(r[0].startswith("parsed_date=") for r in parts)
+        via_catalog = views(spark.table("adsb.adsb_messages"))
+        via_store = views(read_parquet_store(spark, store))
+    finally:
+        spark.sql("DROP TABLE IF EXISTS adsb.adsb_messages")
+    assert via_catalog == via_store
+    assert all(via_store.values())
