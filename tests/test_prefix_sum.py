@@ -237,10 +237,113 @@ def test_multi_matches_plain_windows(spark):
         assert _multi(pcols, nb, bj) == _plain(pcols), (pcols, nb, bj)
 
 
+def test_distributed_next_matches_plain_lead(spark):
+    """``with_next`` adds ``_next``, the next distinct ``order_col``
+    value in the group, equal to a plain global-Window ``lead`` at any
+    bucket count, ungrouped, and in shuffle mode."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from dump1090_db_stream_spark.operators.prefix_sum import (
+        distributed_prev_counts_multi,
+    )
+
+    def _next(rel, **kw):
+        return distributed_prev_counts_multi(rel, "s", ("c",),
+                                             with_next=True, **kw)
+
+    rows = [("g1", float((i * 17) % 101)) for i in range(101)] + \
+           [("g2", float((i * 13) % 53)) for i in range(53)]
+    rel = (spark.createDataFrame(rows, "g string, s double").distinct()
+           .withColumn("c", F.lit(1)))
+    expected = {(r["g"], r["s"]): r["_lead"] for r in
+                rel.withColumn(
+                    "_lead",
+                    F.lead("s").over(
+                        Window.partitionBy("g").orderBy("s")))
+                .collect()}
+    for nb in (1, 7, 64):
+        got = {(r["g"], r["s"]): r["_next"] for r in
+               _next(rel, partition_cols=("g",),
+                     n_range_buckets=nb).collect()}
+        assert got == expected, nb
+    # ungrouped + shuffle mode
+    rel1 = rel.filter(F.col("g") == "g1").select("s", "c")
+    exp1 = {r["s"]: r["_lead"] for r in
+            rel1.withColumn("_lead",
+                            F.lead("s").over(Window.orderBy("s")))
+            .collect()}
+    got1 = {r["s"]: r["_next"] for r in _next(rel1).collect()}
+    assert got1 == exp1
+    gots = {(r["g"], r["s"]): r["_next"] for r in
+            _next(rel, partition_cols=("g",),
+                  bounds_join="shuffle").collect()}
+    assert gots == expected
+
+
+def test_multi_matches_single_passes(spark):
+    """ONE bucketed pass carrying several count columns plus the
+    ordered neighbor equals the composition of one-column passes (and a
+    separate neighbor pass) re-joined on (group, order): same
+    bucketing, same integer window sums, only the number of columns
+    riding each stage differs. Covers grouped + ungrouped, ties
+    (zero-filled second count), degenerate n_range_buckets=1, and
+    shuffle mode."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from dump1090_db_stream_spark.operators.prefix_sum import (
+        distributed_prev_counts_multi,
+    )
+
+    rng = random.Random(15)
+    rows = [(f"g{i % 5}", float(rng.randrange(40)),
+             1 + i % 3, (i % 4 == 0) * (1 + i % 2))
+            for i in range(400)]
+    rel = (spark.createDataFrame(rows, ["g", "s", "ca", "cb"])
+           .groupBy("g", "s")
+           .agg(F.sum("ca").alias("ca"), F.sum("cb").alias("cb")))
+
+    def _pass(pcols, nb, bj, cols, with_next=False):
+        return distributed_prev_counts_multi(
+            rel, "s", cols, n_range_buckets=nb, partition_cols=pcols,
+            with_totals=True, with_next=with_next,
+            bounds_join=bj).collect()
+
+    def _single(pcols, nb, bj):
+        keyed = {}
+        for r in _pass(pcols, nb, bj, ("ca",)):
+            k = tuple(r[p] for p in pcols) + (r["s"],)
+            keyed[k] = [r["_prevca"], r["_totalca"], None, None, None]
+        for r in _pass(pcols, nb, bj, ("cb",)):
+            k = tuple(r[p] for p in pcols) + (r["s"],)
+            keyed[k][2:4] = [r["_prevcb"], r["_totalcb"]]
+        for r in _pass(pcols, nb, bj, ("ca",), with_next=True):
+            k = tuple(r[p] for p in pcols) + (r["s"],)
+            keyed[k][4] = r["_next"]
+        return keyed
+
+    def _multi(pcols, nb, bj):
+        return {tuple(r[p] for p in pcols) + (r["s"],):
+                [r["_prevca"], r["_totalca"],
+                 r["_prevcb"], r["_totalcb"], r["_next"]]
+                for r in _pass(pcols, nb, bj, ("ca", "cb"),
+                               with_next=True)}
+
+    for pcols, nb, bj in ((("g",), 64, "broadcast"),
+                          (("g",), 1, "broadcast"),
+                          (("g",), 7, "shuffle"),
+                          ((), 64, "broadcast"),
+                          ((), 1, "broadcast")):
+        assert _multi(pcols, nb, bj) == _single(pcols, nb, bj), \
+            (pcols, nb, bj)
+
+
 def test_multi_vocabulary_guard_and_validation(spark):
     """The pass guards its grouped broadcasts (including the
-    degenerate one-bucket branch with no totals and the neighbor
-    stitch), and validates its arguments."""
+    degenerate one-bucket branch with no totals), and validates its
+    arguments."""
     from dump1090_db_stream_spark.operators.prefix_sum import (
         distributed_prev_counts_multi,
     )
@@ -261,15 +364,41 @@ def test_multi_vocabulary_guard_and_validation(spark):
     with pytest.raises(ValueError, match="n_range_buckets"):
         distributed_prev_counts_multi(rel, "s", ("ca",),
                                       n_range_buckets=0)
-    # the offsets-row-budget ceiling applies to the neighbor pass too:
-    # 2**20 // 4096 = 256 < 300 groups
-    with pytest.raises(ValueError, match="4096"):
-        distributed_prev_counts_multi(
-            rel, "s", ("ca",), n_range_buckets=4096,
-            partition_cols=("g",), with_next=True).collect()
+
+
+def test_distributed_next_vocabulary_guard(spark):
+    """With ``with_next`` the grouped broadcast mode broadcasts the
+    per-group bounds row AND the groups x buckets nxt_bucket stitch
+    relation, so the neighbor pass is guarded too — including in the
+    degenerate n_range_buckets=1 branch where no bounds join exists
+    but nxt_bucket still broadcasts. shuffle mode and
+    max_partition_groups=None skip the probe."""
+    from dump1090_db_stream_spark.operators.prefix_sum import (
+        distributed_prev_counts_multi,
+    )
+
+    def _next(rel, **kw):
+        return distributed_prev_counts_multi(rel, "s", ("c",),
+                                             with_next=True, **kw)
+
+    rows = [(f"domain_{i}", float(i % 97), 1) for i in range(300)]
+    rel = spark.createDataFrame(rows, "g string, s double, c long")
+    for nb in (1, 64):
+        with pytest.raises(ValueError) as ei:
+            _next(rel, partition_cols=("g",), n_range_buckets=nb,
+                  max_partition_groups=256).collect()
+        msg = str(ei.value)
+        assert "vocabulary guard" in msg
+        assert "300" in msg and "256" in msg
+    # the offsets-row-budget ceiling applies too: 2**20 // 4096 = 256
+    with pytest.raises(ValueError) as ei:
+        _next(rel, partition_cols=("g",), n_range_buckets=4096).collect()
+    assert "4096" in str(ei.value)
     # escape hatches: shuffle mode, explicit None, default ceiling
-    for kw in ({"bounds_join": "shuffle", "max_partition_groups": 256},
-               {"max_partition_groups": None}, {}):
-        assert distributed_prev_counts_multi(
-            rel, "s", ("ca",), partition_cols=("g",), with_next=True,
-            **kw).count() == 300
+    assert _next(rel, partition_cols=("g",), bounds_join="shuffle",
+                 max_partition_groups=256).count() == 300
+    assert _next(rel, partition_cols=("g",),
+                 max_partition_groups=None).count() == 300
+    assert _next(rel, partition_cols=("g",)).count() == 300
+    with pytest.raises(ValueError):
+        _next(rel, bounds_join="zip")
