@@ -9562,7 +9562,9 @@ def _capstone_stages(spark: SparkSession, sf_dir: str):
     # no corpus-wide bigram explode, no (doc, ref) shuffle, no
     # anti-join. NULL text never matched in the exploded form
     # (explode drops the null shingle array) and never matches here
-    # (the NULL-intersect predicate coalesces to false).
+    # (the NULL-intersect predicate coalesces to false). The doc side's
+    # bigram hashes are a per-doc column (_sh2), so the exists lambda
+    # only intersects them with each ref set.
     ref_sets = (with_tokens(refs)
                 .select("ref_id",
                         F.explode(F.array_distinct(
@@ -9579,8 +9581,9 @@ def _capstone_stages(spark: SparkSession, sf_dir: str):
     _dig = F.coalesce(F.md5("text"), F.lit("\0NULL"))
     doc2 = (with_tokens(docs)
             .withColumn("_h", _dig)
-            .withColumn("_sh2", F.array_distinct(
-                shingles(F.col("_toks"), 2)))
+            .withColumn("_sh2", F.transform(
+                F.array_distinct(shingles(F.col("_toks"), 2)),
+                lambda s: _hash64(s, 0)))
             .withColumn("_sh3", F.transform(
                 F.array_distinct(shingles(F.col("_toks"), 3)),
                 lambda s: _hash64(s, 0))))
@@ -9594,10 +9597,8 @@ def _capstone_stages(spark: SparkSession, sf_dir: str):
                      "_sh3",
                      F.coalesce(
                          F.exists("_ref_sets", lambda r: F.size(
-                             F.array_intersect(
-                                 F.transform(F.col("_sh2"),
-                                             lambda s: _hash64(s, 0)),
-                                 r)) >= F.lit(3)),
+                             F.array_intersect(F.col("_sh2"), r))
+                             >= F.lit(3)),
                          F.lit(False)).alias("_contam")))
     # track_local_checkpoint, not track: feats is a LARGE expression
     # tree (gopher HOF metrics + two shingle transforms + the

@@ -9,10 +9,12 @@ from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from dump1090_db_stream_spark.functions.parser import (
+    REJECT_WIDTH,
     parse_sbs1,
-    parse_sbs1_lines,
+    parse_sbs1_tagged,
 )
 
 # A wire "field": printable, no comma/newline (the CSV delimiters).
@@ -32,9 +34,13 @@ def wire_line(draw):
 @given(st.lists(wire_line(), min_size=1, max_size=200))
 def test_parser_never_crashes_and_keeps_width_invariant(spark, lines):
     df = spark.createDataFrame([(ln,) for ln in lines], ["value"])
-    # layer 1 — parse_sbs1_lines: width filter only (F-4). Exactly the
-    # 22-field lines survive; no input can crash the parse (F-8 try_cast).
-    raw = parse_sbs1_lines(df).collect()
+    # layer 1 — width filter only (F-4): the tagged rows not rejected
+    # on width. Exactly the 22-field lines survive; no input can crash
+    # the parse (F-8 try_cast).
+    raw = (parse_sbs1_tagged(df)
+           .filter(F.col("reject_reason").isNull()
+                   | (F.col("reject_reason") != REJECT_WIDTH))
+           .collect())
     n_22 = sum(1 for ln in lines if len(ln.split(",")) == 22)
     assert len(raw) == n_22
     for r in raw:

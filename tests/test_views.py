@@ -128,15 +128,45 @@ def test_catalog_table_answers_the_views(spark, messages, tmp_path):
                           key=repr)
                 for v in ("callsigns", "locations", "flights")}
 
-    spark.sql("DROP TABLE IF EXISTS adsb.adsb_messages")
+    spark.sql("DROP VIEW IF EXISTS adsb.adsb_messages")
     try:
         create_messages_table(spark, store)
-        parts = spark.sql("SHOW PARTITIONS adsb.adsb_messages").collect()
-        assert len(parts) == 2
-        assert all(r[0].startswith("parsed_date=") for r in parts)
-        via_catalog = views(spark.table("adsb.adsb_messages"))
+        table = spark.table("adsb.adsb_messages")
+        days = table.select("parsed_date").distinct().collect()
+        assert len(days) == 2
+        # parsed_date is a partition column: a predicate on it prunes
+        one_day = table.filter(F.col("parsed_date") == days[0][0])
+        plan = one_day._jdf.queryExecution().executedPlan().toString()
+        assert "PartitionFilters: [isnotnull(parsed_date" in plan
+        via_catalog = views(table)
         via_store = views(read_parquet_store(spark, store))
     finally:
-        spark.sql("DROP TABLE IF EXISTS adsb.adsb_messages")
+        spark.sql("DROP VIEW IF EXISTS adsb.adsb_messages")
     assert via_catalog == via_store
     assert all(via_store.values())
+
+
+def test_catalog_table_sees_days_written_later(spark, messages, tmp_path):
+    """D-2 in a long-lived session: a day appended to the store after
+    create_messages_table is answered by the next query, with no
+    repair or refresh call."""
+    from pyspark.sql import functions as F
+
+    from dump1090_db_stream_spark.plans.catalog import create_messages_table
+    from dump1090_db_stream_spark.sinks.writers import write_parquet_store
+
+    store = str(tmp_path / "store")
+    write_parquet_store(messages, store)
+    spark.sql("DROP VIEW IF EXISTS adsb.adsb_messages")
+    try:
+        create_messages_table(spark, store)
+        assert spark.table("adsb.adsb_messages").count() == 7
+        write_parquet_store(messages.withColumn(
+            "parsed_time", F.col("parsed_time") + F.expr("INTERVAL 1 DAY")),
+            store)
+        assert spark.table("adsb.adsb_messages").count() == 14
+        assert spark.sql(
+            "SELECT COUNT(DISTINCT parsed_date) FROM adsb.adsb_messages"
+        ).first()[0] == 2
+    finally:
+        spark.sql("DROP VIEW IF EXISTS adsb.adsb_messages")
