@@ -13,7 +13,9 @@ parse_sbs1 -> writeStream. Semantics preserved (SURVEY.md §2.9):
   ``_spark_metadata`` manifest: exactly-once into the parquet store, with
   no stream-side dedup (a micro-batch is one stage, stateless). Every
   accepted line is stored; the PK is a sink concern (plain JDBC batches
-  dedup on it, ``--upsert`` uses ON CONFLICT DO NOTHING)
+  dedup on it, ``--upsert`` uses ON CONFLICT DO NOTHING). These logs are
+  written through Spark's FileSystem-based checkpoint manager, which
+  ``get_spark`` selects (session.py says why)
 - T-6 reconnect/resume       -> restart from checkpoint; bounded-retry
   runner below mirrors --connect-attempt-limit/-delay semantics
   (:181-198, :220-237)

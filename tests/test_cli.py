@@ -131,6 +131,40 @@ def test_cli_restart_stores_each_file_once(spark, tmp_path, no_env):
     assert got.select("parsed_time").distinct().count() == 2
 
 
+def test_cli_resumes_a_filecontext_manager_checkpoint(spark, tmp_path,
+                                                     no_env):
+    """A checkpoint written through Spark's FileContext-based manager (the
+    Spark default before get_spark selected the FileSystem-based one)
+    resumes under the new default: each file is stored once."""
+    from dump1090_db_stream_spark.sinks.writers import read_parquet_store
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing"
+    jvm = spark.sparkContext._jvm
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    first, second = _busy_feed(range(1, 4)), _busy_feed(range(11, 14))
+    (feed / "log1.txt").write_text("\n".join(first) + "\n")
+    default = spark.conf.get(key)
+    spark.conf.set(key, f"{pkg}.FileContextBasedCheckpointFileManager")
+    try:
+        assert jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+            .CheckpointFileManager.create(
+                jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ck")),
+                spark._jsparkSession.sessionState().newHadoopConf()
+            ).getClass().getSimpleName() == \
+            "FileContextBasedCheckpointFileManager"
+        assert _replay(tmp_path) == 0
+    finally:
+        spark.conf.set(key, default)
+    assert default == f"{pkg}.FileSystemBasedCheckpointFileManager"
+    (feed / "log2.txt").write_text("\n".join(second) + "\n")
+    assert _replay(tmp_path) == 0
+    got = read_parquet_store(spark, str(tmp_path / "store"))
+    assert _wire_rows(got) == _wire_rows(_accepted(spark, first + second))
+    assert got.select("parsed_time").distinct().count() == 2
+
+
 def test_cli_rejects_checkpoint_with_dedup_state(spark, tmp_path, no_env,
                                                  capsys):
     """A checkpoint written by the old stateful stream (watermarked PK

@@ -121,16 +121,26 @@ def test_time_rollup_scans_raw_once(spark):
     scanned once at execution. (The plan STRING still prints each cached
     relation's recipe incl. its FileScan — the probe is the cache nodes,
     not scan-string counts.) Without materialization there is no cache
-    node anywhere: three full-lineage replays."""
+    node anywhere: three full-lineage replays.
+
+    Runs with AQE on, as production does: the plan strings below are
+    AQE's initial plan, which prints every branch's scan (the static
+    plan prints the shared minute-level exchange once, as a
+    ReusedExchange)."""
     spark.catalog.clearCache()  # cached subtrees auto-substitute by plan
-    ev = _events(spark)
-    naive = time_rollup(ev, ts="ts", keys=["event_type"], value="value",
-                        materialize=False)
-    nplan = naive._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" not in nplan
-    assert nplan.count("FileScan parquet") == 3
-    out = time_rollup(ev, ts="ts", keys=["event_type"], value="value")
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        ev = _events(spark)
+        naive = time_rollup(ev, ts="ts", keys=["event_type"],
+                            value="value", materialize=False)
+        nplan = naive._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in nplan
+        assert nplan.count("FileScan parquet") == 3
+        out = time_rollup(ev, ts="ts", keys=["event_type"], value="value")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
     branches = plan.split("+- Union")[1].split(":- ")
     cached = sum("InMemoryTableScan" in b for b in branches)
     assert cached >= 2  # hour + day read caches; only minute hits parquet
