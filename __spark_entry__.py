@@ -425,13 +425,8 @@ def q_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate volume near the true-pair count as the corpus grows;
     # the 10x6 default missed 1 fixture pair, 6x8 found all but
     # collided 16x more candidates at sf0.1.
-    # arrow_sig: signature stage runs the numpy matmul kernel — identical
-    # buckets (equality-tested in tests/test_similarity.py), ~10x cheaper
-    # than interpreted HOF dots. Safe for the CONTRACT because the oracle
-    # is the brute-force pair set (not a signature replay) and candidate
-    # SCORING stays on the HOF path for bit-exact 6dp rounding parity.
     return embedding_neardup_pairs(emb.union(pert), dim=64, threshold=0.99,
-                                   n_planes=10, n_tables=8, arrow_sig=True)
+                                   n_planes=10, n_tables=8)
 
 
 def q_embedding_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,8 +451,7 @@ def q_embedding_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 .cast("float")).otherwise(x),
         ).alias("embedding"))
     return embedding_cross_neardup(
-        emb, bench, dim=64, threshold=0.99, n_planes=10, n_tables=8,
-        arrow_sig=True)
+        emb, bench, dim=64, threshold=0.99, n_planes=10, n_tables=8)
 
 
 def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3755,7 +3749,9 @@ def _lsh_topk_oracle(dim: int = 64, k: int = 10, n_planes: int = 8,
     Python doubles (similarity._hyperplane LCG), embedded here as
     literals, so signature computation, bucket collision, and the
     cosine re-rank are all closed-form SQL. Must mirror lsh_topk's
-    seeds (7 + table index) and bit packing exactly."""
+    seeds (7 + table index) and bit packing exactly; the numpy
+    signature kernel matches this left-to-right ``list_sum`` bit for
+    bit (tests/test_similarity.py)."""
     from dump1090_db_stream_spark.operators.similarity import _hyperplane
 
     plane_rows = ",\n                    ".join(
@@ -9865,12 +9861,11 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton/z-order clustering key (operators.zorder): uniform
-    quantization of (user_id, value) + bit interleave — the layout key
-    behind multi-dimensional parquet data skipping (zorder_write; the
-    skipping property itself is pinned by tests/test_zorder.py's
-    per-file bounding-box audit). Pure integer/double arithmetic, so
-    the oracle replays every key bit-for-bit; row-level contract over
-    the whole events table."""
+    quantization of (user_id, value) + bit interleave — the key a
+    range-clustered write would sort on for multi-dimensional parquet
+    data skipping. Pure integer/double arithmetic, so the oracle
+    replays every key bit-for-bit; row-level contract over the whole
+    events table."""
     from dump1090_db_stream_spark.operators.zorder import (
         quantize_uniform,
         zvalue,

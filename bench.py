@@ -313,9 +313,6 @@ def bench_auc_by_hicard(spark, n_rows: int = 5_000_000) -> dict:
     from pyspark.sql import functions as F
 
     from dump1090_db_stream_spark.operators.evaluation import auc_score_by
-    from dump1090_db_stream_spark.plans.audit import (
-        grouped_continuous_window_funnels,
-    )
 
     # group 0 takes 8/10 of the hash range -> ~80% of rows
     df = spark.range(n_rows).select(
@@ -332,6 +329,7 @@ def bench_auc_by_hicard(spark, n_rows: int = 5_000_000) -> dict:
     plan = q._jdf.queryExecution().executedPlan().toString()
     sys.path.insert(0, os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "tests"))
+    from plan_audit import grouped_continuous_window_funnels
     from test_plans import single_partition_window_sites
     sites = single_partition_window_sites(plan)
     funnels = grouped_continuous_window_funnels(q)

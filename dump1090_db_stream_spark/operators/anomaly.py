@@ -44,8 +44,8 @@ def winsorize(
     to the detection operators above): clip ``value_col`` into the
     per-key [p_lower, p_upper] continuous-percentile band — the
     standard robust preprocessing step before training on heavy-tailed
-    features, where dropping outliers (repetition_filter-style) loses
-    rows but capping keeps them.
+    features, where dropping outliers loses rows but capping keeps
+    them.
 
     Adds ``p_lo`` / ``p_hi`` (the bounds, rounded 6) and ``value_w``
     (the clipped value, rounded 6; NULL stays NULL — least/greatest

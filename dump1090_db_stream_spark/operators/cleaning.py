@@ -13,7 +13,6 @@ whole module stays JVM-side at 100 TB:
                      distinct / top-gram share) — the Gopher repetition
                      filters ("fraction of characters in most common
                      n-gram") reduce to thresholds over this output.
-- repetition_filter  keep documents under a top-share threshold.
 - dedup_lines        line-level corpus dedup (RefinedWeb-style): count
                      per-line document frequency, strip lines shared by
                      more than max_df docs, reconstruct texts byte-exact.
@@ -217,25 +216,6 @@ def _strip_lines_and_rebuild(
                 F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
                 F.coalesce("n_removed", F.lit(0)).alias("n_removed"))
     )
-
-
-def repetition_filter(
-    df: DataFrame,
-    max_top_frac: float = 0.2,
-    max_dup_frac: float = 0.9,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 2,
-) -> DataFrame:
-    """Drop documents dominated by repeated n-grams (boilerplate, SEO
-    spam, scraper loops). Keeps df's full schema via a broadcast-able
-    semi-join on the (small) per-doc stats relation."""
-    stats = repetition_stats(df, id_col, text_col, n)
-    keep = stats.filter(
-        (F.col("top_frac") <= max_top_frac)
-        & (F.col("dup_frac") <= max_dup_frac)
-    ).select(F.col(id_col))
-    return df.join(F.broadcast(keep), id_col, "left_semi")
 
 
 def c4_line_filter(

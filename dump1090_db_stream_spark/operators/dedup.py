@@ -2,8 +2,8 @@
 
 Five dedup families, each designed for 100 TB scale:
 
-- exact_dedup           hash-groupBy on md5(text) — one shuffle on a
-                        short key, survivor chosen deterministically.
+- exact_dup_groups      hash-groupBy on md5(text) — one shuffle on a
+                        short key, canonical id chosen deterministically.
 - ngram_jaccard_pairs   exact Jaccard over word shingles via an inverted-
                         index self-join (explode -> join on shingle) —
                         never an O(n^2) cross join.
@@ -56,27 +56,14 @@ def _portable_hash60(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup: keep the lowest-id document per identical text.
+def exact_dup_groups(df: DataFrame, text_col: str = "text",
+                     id_col: str = "doc_id") -> DataFrame:
+    """Exact-duplicate groups (>=2 members): content hash, canonical id
+    (the lowest id), member count.
 
     groupBy on md5 (fixed 32-char key) rather than raw text so the shuffle
     carries hashes, not document bodies — at 100 TB this is the difference
-    between shuffling 32 bytes/doc and shuffling the corpus.
-    """
-    h = content_hash(F.col(text_col))
-    return (
-        df.withColumn("_h", h)
-        .groupBy("_h")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
-        .drop("_h")
-    )
-
-
-def exact_dup_groups(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Exact-duplicate groups (>=2 members): content hash, canonical id,
-    member count. The inspection/reporting companion of exact_dedup."""
+    between shuffling 32 bytes/doc and shuffling the corpus."""
     return (
         df.withColumn("content_md5", content_hash(F.col(text_col)))
         .groupBy("content_md5")

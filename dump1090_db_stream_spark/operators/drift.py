@@ -42,7 +42,6 @@ def ks_drift_by(
     score_col: str,
     group_col: str,
     n_range_buckets: int = 64,
-    bounds_join: str = "broadcast",
 ) -> DataFrame:
     """Per-group EXACT two-sample Kolmogorov-Smirnov statistic of
     ``score_col`` in the group vs the REST of the corpus — one row per
@@ -76,10 +75,8 @@ def ks_drift_by(
 
     Rows with NULL/NaN score or NULL group are excluded (NaN breaks
     the prefix-sum's monotone bucketing; a NULL group has no slice).
-    ``group_col`` must be a bounded vocabulary under the default
-    ``bounds_join="broadcast"`` (the grouped prefix-sum's runtime
-    vocabulary guard applies); pass ``bounds_join="shuffle"`` for an
-    unbounded key — plain equi-joins, any cardinality, bit-identical.
+    ``group_col`` may have any cardinality: the grouped prefix-sum
+    counts the groups and picks a broadcast or an equi-join plan.
     """
     base = df.select(
         F.col(group_col).alias("g"),
@@ -98,8 +95,7 @@ def ks_drift_by(
     per_gs = track(per_gs)
     grouped = distributed_prev_counts_multi(
         per_gs, "s", ("_cnt",), n_range_buckets,
-        partition_cols=("g",), with_totals=True,
-        bounds_join=bounds_join)
+        partition_cols=("g",), with_totals=True)
     # pooled CDF over the distinct-score marginal (never input-grain:
     # it aggregates the already-aggregated (g, s) relation)
     per_s = per_gs.groupBy("s").agg(F.sum("_cnt").alias("_call"))
@@ -160,7 +156,6 @@ def ks_drift(
     score_col: str,
     keys: list[str] | None = None,
     n_range_buckets: int = 64,
-    bounds_join: str = "broadcast",
 ) -> DataFrame:
     """EXACT two-sample KS between a REFERENCE snapshot and the
     CURRENT one, per key slice — the retrain/alarm gate
@@ -192,8 +187,7 @@ def ks_drift(
     evaluable) — a slice APPEARING or VANISHING is a schema-level
     event the caller must notice, not a distance this statistic can
     fake. NULL/NaN scores and NULL keys are excluded as in
-    :func:`ks_drift_by`; the grouped vocabulary guard /
-    ``bounds_join="shuffle"`` escape apply when keys are given.
+    :func:`ks_drift_by`.
     """
     kcols = list(keys or [])
 
@@ -221,8 +215,7 @@ def ks_drift(
     per = track(per)  # feeds the pass's bounds/totals/ranked branches
     pts = (distributed_prev_counts_multi(
         per, "s", ("_call", "_cref"), n_range_buckets=n_range_buckets,
-        partition_cols=tuple(ks_), with_totals=True,
-        bounds_join=bounds_join)
+        partition_cols=tuple(ks_), with_totals=True)
         .select(*ks_, "s", "_call",
                 F.col("_prev_call").alias("_pall"),
                 F.col("_total_call").alias("_nall"),
@@ -265,7 +258,6 @@ def w1_drift(
     score_col: str,
     keys: list[str] | None = None,
     n_range_buckets: int = 64,
-    bounds_join: str = "broadcast",
 ) -> DataFrame:
     """EXACT Wasserstein-1 (earth mover's) distance between a
     reference snapshot and the current one, per key slice — the
@@ -326,8 +318,7 @@ def w1_drift(
     per = track(per)  # feeds the pass's bounds/totals/ranked branches
     pts = (distributed_prev_counts_multi(
         per, "s", ("_call", "_cref"), n_range_buckets=n_range_buckets,
-        partition_cols=tuple(ks_), with_totals=True, with_next=True,
-        bounds_join=bounds_join)
+        partition_cols=tuple(ks_), with_totals=True, with_next=True)
         .select(*ks_, "s", "_call",
                 F.col("_prev_call").alias("_pall"),
                 F.col("_total_call").alias("_nall"),
@@ -370,7 +361,6 @@ def ranksum_drift(
     score_col: str,
     keys: list[str] | None = None,
     n_range_buckets: int = 64,
-    bounds_join: str = "broadcast",
 ) -> DataFrame:
     """EXACT Mann-Whitney U (Wilcoxon rank-sum) test between a
     reference snapshot and the current one, per key slice — the
@@ -403,9 +393,7 @@ def ranksum_drift(
 
     Degenerate slices: present in only one snapshot -> NULL u/z (the
     ks_drift contract); every value tied -> variance 0 -> NULL z.
-    NULL/NaN scores and NULL keys are excluded; the grouped
-    vocabulary guard / ``bounds_join="shuffle"`` escape apply as in
-    :func:`ks_drift`.
+    NULL/NaN scores and NULL keys are excluded.
     """
     kcols = list(keys or [])
 
@@ -432,7 +420,7 @@ def ranksum_drift(
     pts = distributed_prev_counts_multi(
         per, "s", ("_call",), n_range_buckets,
         extra_cols=("_cref",), partition_cols=tuple(ks_),
-        with_totals=True, bounds_join=bounds_join)
+        with_totals=True)
 
     dec = "decimal(38,0)"
     c_cur = (F.col("_call") - F.col("_cref")).cast(dec)

@@ -123,7 +123,6 @@ def auc_score_by(
     label_col: str,
     group_col: str,
     n_range_buckets: int = 64,
-    bounds_join: str = "broadcast",
 ) -> DataFrame:
     """Per-group exact tie-aware ROC AUC — one row per ``group_col``
     value with (group, n_pos, n_neg, auc rounded 6): does the score
@@ -148,11 +147,9 @@ def auc_score_by(
     through one; groups still spread across the cluster, and no
     unpartitioned ordered window exists anywhere in the plan.
 
-    ``group_col`` must be a bounded vocabulary under the default
-    ``bounds_join="broadcast"`` (the per-group quantile bounds are
-    broadcast; a runtime guard raises above 65,536 groups) — pass
-    ``bounds_join="shuffle"`` for an unbounded key (domain, user id):
-    plain equi-joins, any cardinality, bit-identical results.
+    ``group_col`` may have any cardinality (domain, user id): the
+    grouped prefix-sum counts the groups and broadcasts the per-group
+    quantile bounds only while they fit, else equi-joins them.
     """
     base = df.select(
         F.col(group_col).alias("g"),
@@ -175,8 +172,7 @@ def auc_score_by(
     ranked = distributed_prev_counts_multi(per_score, "s", ("_cnt",),
                                            n_range_buckets,
                                            extra_cols=("_pos",),
-                                           partition_cols=("g",),
-                                           bounds_join=bounds_join)
+                                           partition_cols=("g",))
     ravg = (F.col("_prev_cnt").cast("double")
             + (F.col("_cnt") + 1).cast("double") / 2)
     return (ranked

@@ -213,9 +213,9 @@ def st_astext_line(points: Column, decimals: int = 6) -> Column:
 # --- WKB emission: binary geometry for real GIS interop -----------------
 # The reference's PostGIS surface (README.md:261-273) hands geometries to
 # tools that consume ST_AsBinary bytes (GEOS, GDAL, shapely, QGIS). The
-# WKT text forms above cover human/SQL interop; these emit the OGC WKB /
-# PostGIS EWKB byte forms as pure Column arithmetic — no Sedona, no UDF,
-# fully inside WholeStageCodegen.
+# WKT text forms above cover human/SQL interop; these emit the OGC WKB
+# byte forms as pure Column arithmetic — no Sedona, no UDF, fully inside
+# WholeStageCodegen.
 
 _P52 = 4503599627370496  # 2^52
 _MIN_NORMAL = 2.0 ** -1022
@@ -257,35 +257,25 @@ def _u32_le_hex(n: Column) -> Column:
     return F.concat(*[F.substring(h, 7 - 2 * i, 2) for i in range(4)])
 
 
-def st_asbinary_point(point: Column, srid: int | None = None) -> Column:
+def st_asbinary_point(point: Column) -> Column:
     """ST_AsBinary for a point struct with ``x``/``y`` fields:
     OGC WKB little-endian bytes — 01, uint32 type 1, two binary64
-    coordinates. With ``srid``, the PostGIS EWKB form instead (type bit
-    0x20000000 set, uint32 srid next) — what ST_AsEWKB emits and
-    ST_GeomFromEWKB consumes."""
-    t = 1 | (0x20000000 if srid is not None else 0)
-    parts = [F.lit("01"), _u32_le_hex(F.lit(t))]
-    if srid is not None:
-        parts.append(_u32_le_hex(F.lit(srid)))
-    parts += [ieee754_le_hex(point["x"]), ieee754_le_hex(point["y"])]
-    return F.unhex(F.concat(*parts))
+    coordinates."""
+    return F.unhex(F.concat(
+        F.lit("01"), _u32_le_hex(F.lit(1)),
+        ieee754_le_hex(point["x"]), ieee754_le_hex(point["y"])))
 
 
-def st_asbinary_line(points: Column, srid: int | None = None) -> Column:
+def st_asbinary_line(points: Column) -> Column:
     """ST_AsBinary(ST_MakeLine(...)): OGC WKB LINESTRING bytes from an
     array of x/y structs in drawing order — 01, uint32 type 2, uint32
-    point count, binary64 coordinate pairs. ``srid`` selects the EWKB
-    variant. transform + array_join keep it one narrow projection."""
-    t = 2 | (0x20000000 if srid is not None else 0)
-    parts = [F.lit("01"), _u32_le_hex(F.lit(t))]
-    if srid is not None:
-        parts.append(_u32_le_hex(F.lit(srid)))
-    parts.append(_u32_le_hex(F.size(points)))
-    parts.append(F.array_join(
-        F.transform(points, lambda p: F.concat(ieee754_le_hex(p["x"]),
-                                               ieee754_le_hex(p["y"]))),
-        ""))
-    return F.unhex(F.concat(*parts))
+    point count, binary64 coordinate pairs. transform + array_join keep
+    it one narrow projection."""
+    return F.unhex(F.concat(
+        F.lit("01"), _u32_le_hex(F.lit(2)), _u32_le_hex(F.size(points)),
+        F.array_join(F.transform(
+            points, lambda p: F.concat(ieee754_le_hex(p["x"]),
+                                       ieee754_le_hex(p["y"]))), "")))
 
 
 def close_encounters(

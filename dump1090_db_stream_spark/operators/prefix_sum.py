@@ -33,10 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Row budget for the grouped OFFSETS broadcast (groups x buckets rows
-# of (key, bucket, offset)): 2**20 rows ~= 60-80 MB as a hash
-# relation — the per-executor ceiling the vocabulary guard enforces.
+# Broadcast budget for the per-group relations: the bounds (one
+# ~n_range_buckets-double row per group) and the offsets (groups x
+# buckets rows of (key, bucket, offset)). 2**20 offset rows ~= 60-80 MB
+# as a hash relation — the per-executor ceiling.
 _OFFSET_ROW_BUDGET = 1 << 20
+_MAX_BROADCAST_GROUPS = 65_536
 
 
 def distributed_prev_counts_multi(
@@ -48,15 +50,13 @@ def distributed_prev_counts_multi(
     partition_cols: tuple[str, ...] = (),
     with_totals: bool = False,
     with_next: bool = False,
-    max_partition_groups: int | None = 65_536,
-    bounds_join: str = "broadcast",
 ) -> DataFrame:
     """Add, for each count column ``c`` in ``cnt_cols``, ``_prev<c>`` —
     the exclusive running sum of ``c`` in ``order_col`` order — to
     ``rel`` (one row per distinct ``(*partition_cols, order_col)``
     value) without an input-grain single-task sort. All count columns
-    share ONE bucketed pass: one quantile-bounds aggregate (one guard
-    count), one cumulative window (same spec — one sort), one
+    share ONE bucketed pass: one quantile-bounds aggregate (counted
+    once when grouped), one cumulative window (same spec — one sort), one
     bucket-totals aggregate and one offsets join; every output column
     rides the same row, so there is no re-join. The two-sample drift
     family needs the union and ref-side counts at every distinct
@@ -95,24 +95,16 @@ def distributed_prev_counts_multi(
     — exactly the funnel this module exists to avoid. Scale-path
     callers keep the default 64.
 
-    GUARD: the grouped bounds relation broadcasts one
+    JOIN CHOICE: the grouped bounds relation holds one
     ~``n_range_buckets``-double row per partition-key combination and
-    the offsets relation ``groups x n_range_buckets`` rows, so
-    ``partition_cols`` must be a bounded vocabulary (languages, crawl
-    sources, shards). When grouped, the bounds relation is persisted
-    and counted before the plan is built; above
-    ``min(max_partition_groups, 2**20 // n_range_buckets)`` groups the
-    call raises with routing advice. The count only ever RAISES — it
-    never changes the plan. Pass ``max_partition_groups=None`` to skip
-    the probe job, or ``bounds_join="shuffle"`` for unbounded keys:
-    the bounds and offsets then attach through plain equi-joins on the
-    partition key (no broadcast, no guard). The two modes are
+    the offsets relation ``groups x n_range_buckets`` rows. When
+    grouped, the bounds relation is persisted and counted before the
+    plan is built (the join reuses the persisted relation). Up to
+    ``min(65,536, 2**20 // n_range_buckets)`` groups both relations are
+    BROADCAST; above that they attach through plain equi-joins on the
+    partition key, which scale to any cardinality. The two plans are
     bit-identical.
     """
-    if bounds_join not in ("broadcast", "shuffle"):
-        raise ValueError(
-            f"bounds_join must be 'broadcast' or 'shuffle', "
-            f"got {bounds_join!r}")
     if n_range_buckets < 1:
         raise ValueError(
             f"n_range_buckets must be >= 1, got {n_range_buckets}")
@@ -124,61 +116,38 @@ def distributed_prev_counts_multi(
     tot = ([F.sum(c).alias(f"_total{c}") for c in cnts]
            if with_totals else [])
 
-    def _guard(small: DataFrame) -> DataFrame:
-        # the ceiling covers the LARGER grouped broadcast (offsets /
-        # nxt-first are groups x buckets rows); the count only ever
-        # RAISES — it never changes the plan
-        if not pcols or max_partition_groups is None:
-            return small
+    per_group = tot
+    if probs:
+        per_group = [F.percentile_approx(order_col, probs, 1_000)
+                     .alias("_bnds"), *tot]
+    small = rel.groupBy(*pcols).agg(*per_group) if per_group else None
+    broadcast = True
+    if pcols:
         from dump1090_db_stream_spark.cache import track
 
-        allowed = min(max_partition_groups,
-                      max(1, _OFFSET_ROW_BUDGET // n_range_buckets))
-        small = track(small)       # the count and the join reuse it
-        n_groups = small.count()
-        if n_groups > allowed:
-            raise ValueError(
-                f"distributed_prev_counts_multi vocabulary guard: "
-                f"partition_cols {pcols} has {n_groups} distinct "
-                f"combinations (allowed {allowed} = "
-                f"min(max_partition_groups={max_partition_groups}, "
-                f"{_OFFSET_ROW_BUDGET}//n_range_buckets="
-                f"{n_range_buckets})); the per-group quantile bounds "
-                f"and bucket offsets are BROADCAST, so the group key "
-                f"must be a bounded vocabulary. Group by an enum-like "
-                f"column, bucket the key upstream, pass "
-                f"bounds_join='shuffle' (plain equi-joins — scales to "
-                f"any cardinality), or raise max_partition_groups / "
-                f"pass None if the broadcast genuinely fits.")
-        return small
-
-    def _keyed(small: DataFrame):
-        return (F.broadcast(_guard(small)) if bounds_join == "broadcast"
-                else small)
-
-    def _attach(small: DataFrame) -> DataFrame:
-        return (rel.join(_keyed(small), pcols) if pcols
-                else rel.crossJoin(F.broadcast(small)))
-
-    if not probs:                       # n_range_buckets == 1: degenerate
-        if tot:
-            bucketed = _attach(rel.groupBy(*pcols).agg(*tot))
+        if small is None:
+            n_groups = rel.select(*pcols).distinct().count()
         else:
-            # nothing to attach, but grouped broadcast mode still
-            # broadcasts the offsets relation below — run the guard
-            if pcols and bounds_join == "broadcast":
-                _guard(rel.groupBy(*pcols).agg(F.lit(1).alias("_one")))
-            bucketed = rel
-        bucketed = bucketed.withColumn("_b", F.lit(0))
+            small = track(small)    # the count and the join reuse it
+            n_groups = small.count()
+        broadcast = n_groups <= min(
+            _MAX_BROADCAST_GROUPS,
+            max(1, _OFFSET_ROW_BUDGET // n_range_buckets))
+    if small is None:
+        bucketed = rel
+    elif pcols:
+        bucketed = rel.join(F.broadcast(small) if broadcast else small,
+                            pcols)
     else:
-        bnds = F.percentile_approx(order_col, probs, 1_000).alias("_bnds")
+        bucketed = rel.crossJoin(F.broadcast(small))
+    if probs:
         bucket = F.aggregate(
             "_bnds", F.lit(0),
             lambda acc, b: acc + F.when(F.col(order_col) >= b,
                                         F.lit(1)).otherwise(F.lit(0)))
-        bucketed = (_attach(rel.groupBy(*pcols).agg(bnds, *tot))
-                    .withColumn("_b", bucket)
-                    .drop("_bnds"))
+        bucketed = bucketed.withColumn("_b", bucket).drop("_bnds")
+    else:                               # n_range_buckets == 1: degenerate
+        bucketed = bucketed.withColumn("_b", F.lit(0))
     w_local = (Window.partitionBy(*pcols, "_b").orderBy(order_col)
                .rowsBetween(Window.unboundedPreceding, -1))
     btot = bucketed.groupBy(*pcols, "_b").agg(
@@ -197,8 +166,8 @@ def distributed_prev_counts_multi(
                 .rowsBetween(1, Window.unboundedFollowing))
             .alias("_nextb_first"))
     offsets = btot.select(*pcols, "_b", *off_cols)
-    offsets = (F.broadcast(offsets)
-               if not pcols or bounds_join == "broadcast" else offsets)
+    if broadcast:
+        offsets = F.broadcast(offsets)
     out = bucketed
     for c in cnts:
         out = out.withColumn(

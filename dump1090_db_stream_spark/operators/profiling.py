@@ -386,7 +386,6 @@ def exact_quantiles_by(
     keys: list[str] | None = None,
     probs: list[float] = (0.25, 0.5, 0.75),
     n_range_buckets: int = 64,
-    bounds_join: str = "broadcast",
 ) -> DataFrame:
     """EXACT per-group quantiles of a continuous column at cluster
     scale — the exact tier next to ``percentile_approx`` (bounded
@@ -415,8 +414,7 @@ def exact_quantiles_by(
 
     NULL/NaN values and NULL keys are excluded (as everywhere in the
     stats family); an empty group simply emits no rows. ``probs`` must
-    be in [0, 1]; the vocabulary guard / ``bounds_join="shuffle"``
-    escape apply when ``keys`` are given.
+    be in [0, 1].
     """
     ps = sorted(set(float(p) for p in probs))
     if not ps or ps[0] < 0.0 or ps[-1] > 1.0:
@@ -438,8 +436,7 @@ def exact_quantiles_by(
 
     ranked = distributed_prev_counts_multi(
         track(per), "_v", ("_cnt",), n_range_buckets,
-        partition_cols=tuple(kcols), with_totals=True,
-        bounds_join=bounds_join)
+        partition_cols=tuple(kcols), with_totals=True)
     # target rank per prob: ceil(p * n), floored at 1 (p = 0 -> min).
     # ceil on the exact double p*n: n < 2^53 keeps the product exact
     # enough that both engines agree except for p*n landing EXACTLY on

@@ -564,7 +564,6 @@ def vocab_concentration(
     unit: str = "token",
     tokenizer=None,
     n_range_buckets: int = 64,
-    bounds_join: str = "broadcast",
 ) -> DataFrame:
     """Per-group Gini coefficient of the unit-frequency distribution —
     how HEAD-HEAVY a source's vocabulary is. A templated/boilerplate
@@ -586,8 +585,7 @@ def vocab_concentration(
     distinct counts per group — far smaller than the vocabulary), and
     ``prev`` comes from the GROUPED
     :func:`operators.prefix_sum.distributed_prev_counts_multi` ordered by
-    the count value — no unpartitioned ordered window, vocabulary
-    guard / ``bounds_join="shuffle"`` escape as usual. Every
+    the count value — no unpartitioned ordered window. Every
     accumulation is an exact DECIMAL(38,0) integer (rank-weighted
     products overflow int64 at corpus scale); the only doubles are
     the final closed form, one IEEE sequence in both engines.
@@ -605,8 +603,7 @@ def vocab_concentration(
     gc = track(gt.groupBy("g", "c").agg(F.count(F.lit(1)).alias("_m")))
     ranked = distributed_prev_counts_multi(
         gc, "c", ("_m",), n_range_buckets,
-        partition_cols=("g",), with_totals=True,
-        bounds_join=bounds_join)
+        partition_cols=("g",), with_totals=True)
     dec = "decimal(38,0)"
     c_d = F.col("c").cast(dec)
     m_d = F.col("_m").cast(dec)

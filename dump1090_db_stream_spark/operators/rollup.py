@@ -39,7 +39,6 @@ def time_rollup(
     resolutions: list[str] | None = None,
     bucket_col: str = "bucket_start",
     resolution_col: str = "resolution",
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact rollup of count/sum/min/max of ``value`` per ``keys`` at each
     resolution, each coarser level derived from the previous one.
@@ -52,14 +51,12 @@ def time_rollup(
     already-aggregated rows. A naive per-level GROUP BY over raw data
     would scan and shuffle the fact table once PER LEVEL.
 
-    ``materialize`` (default True) caches each intermediate level before
-    the next derives from it. Without it, Spark's union would replay the
-    whole lineage per branch — the day branch re-scanning the raw table
+    Each intermediate level is cached (``cache.track``) before the next
+    derives from it. Without that, Spark's union would replay the whole
+    lineage per branch — the day branch re-scanning the raw table
     through minute AND hour — because Catalyst does no cross-branch
     common-subexpression reuse. The cached levels are aggregate-sized
-    (O(buckets x keys), not O(rows)); in a persistent pipeline you would
-    write them to storage instead (the continuous-aggregate pattern) —
-    pass ``materialize=False`` and checkpoint externally if so.
+    (O(buckets x keys), not O(rows)).
     """
     resolutions = resolutions or RESOLUTIONS
     finest = resolutions[0]
@@ -75,7 +72,7 @@ def time_rollup(
             F.max(value).alias("value_max"),
         )
     )
-    if materialize and len(resolutions) > 1:
+    if len(resolutions) > 1:
         level = track(level)
     levels = [level.withColumn(resolution_col, F.lit(finest))]
     for i, res in enumerate(resolutions[1:], start=1):
@@ -91,7 +88,7 @@ def time_rollup(
                 F.max("value_max").alias("value_max"),
             )
         )
-        if materialize and i < len(resolutions) - 1:
+        if i < len(resolutions) - 1:
             level = track(level)
         levels.append(level.withColumn(resolution_col, F.lit(res)))
     out = reduce(lambda a, b: a.unionByName(b), levels)

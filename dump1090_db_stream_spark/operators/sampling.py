@@ -826,7 +826,6 @@ def quantile_normalize(
     n_quantiles: int = 100,
     n_range_buckets: int = 64,
     tie_salt: int = 8,
-    bounds_join: str = "broadcast",
 ) -> DataFrame:
     """Cross-group quantile normalization — the batch-effect fix for
     score columns whose DISTRIBUTION differs by source (one quality
@@ -878,10 +877,8 @@ def quantile_normalize(
     value, and ``norm_value``. Rows with NULL or NaN value are
     excluded (NaN has no quantile; it would also break the
     prefix-sum's monotone bucketing — see ``auc_score``).
-    ``group_col`` must be a bounded vocabulary under the default
-    ``bounds_join="broadcast"`` (guarded at 65,536 groups); pass
-    ``bounds_join="shuffle"`` for an unbounded key — plain
-    equi-joins, any cardinality, bit-identical results.
+    ``group_col`` may have any cardinality (see
+    :func:`operators.prefix_sum.distributed_prev_counts_multi`).
     """
     from pyspark.sql import Window
 
@@ -913,15 +910,14 @@ def quantile_normalize(
     # r9: a dominant group's distinct continuous values previously
     # funneled one task through Window.partitionBy(grp).orderBy(v) —
     # the same shape auc_score_by fixed, flagged by the
-    # plans.audit.grouped_continuous_window_funnels gate). Per-group
+    # tests/plan_audit.py grouped_continuous_window_funnels gate). Per-group
     # totals ride the prefix-sum's bounds broadcast (with_totals),
     # not a window or a separate aggregate job + join.
     vg = gsl.groupBy("grp", "v").agg(F.sum("_c").alias("_cg"))
     pg = (distributed_prev_counts_multi(vg, "v", ("_cg",),
                                         n_range_buckets,
                                         partition_cols=("grp",),
-                                        with_totals=True,
-                                        bounds_join=bounds_join)
+                                        with_totals=True)
           .select("grp", "v", F.col("_prev_cg").alias("_prev_g"),
                   F.col("_total_cg").alias("_n_g")))
     va = gsl.groupBy("v").agg(F.sum("_c").alias("_ca"))

@@ -9,17 +9,16 @@ Two paths, as a training-data pipeline needs both:
   only vectors sharing a bucket are compared, trading recall for a
   shuffle bounded by O(rows x tables) instead of O(rows x queries).
 
-Dot products come in two physical forms:
-- native higher-order functions (zip_with + aggregate) in doubles —
-  JVM-side, zero Python, bit-reproducible in ANSI engines (the oracle
-  parity path). HOFs are CodegenFallback expressions (interpreted per
-  element), so this form pays ~100-300 ns/element;
-- Arrow-batched numpy matmul
-  (`embedding_neardup_pairs(arrow_score=True)`) — one BLAS call per
-  batch, 4-10x faster once |queries| x dim or candidate volume is
-  large; last-bit float ULPs may differ from the HOF path (equality of
-  RESULTS is tested; the contract queries keep the HOF path so the
-  DuckDB value-hash stays bit-exact).
+Scoring runs as native higher-order functions (zip_with + aggregate)
+in doubles — JVM-side, zero Python, bit-reproducible in ANSI engines,
+so every DuckDB oracle replays the 6-dp cosines exactly. HOFs are
+CodegenFallback expressions (interpreted per element, ~100-300 ns each),
+which is why the one stage whose volume is rows x tables x planes x dim
+— the random-hyperplane signatures — runs instead as one numpy matmul
+per Arrow batch (:func:`rh_signatures_arrow`). Sign bits survive the
+different summation order unless a dot product sits within float ULPs
+of 0; ``tests/test_similarity.py`` pins the kernel bit for bit against
+a left-to-right reference sum.
 """
 
 from __future__ import annotations
@@ -97,22 +96,6 @@ def _hyperplane(dim: int, seed: int) -> list[float]:
     return out
 
 
-def rh_signature(vec: Column, dim: int, n_planes: int = 16, seed: int = 7) -> Column:
-    """Random-hyperplane signature: n_planes sign bits packed in a bigint."""
-    # One 2-D array literal (a single Catalyst Literal node) instead of
-    # n_planes x dim individual lit nodes — keeps plan build/analyze cost
-    # O(1) in dim. Bit p set iff dot(vec, plane_p) >= 0.
-    planes = F.lit([_hyperplane(dim, seed * 1000 + p) for p in range(n_planes)])
-    weights = F.lit([1 << p for p in range(n_planes)])
-    return F.aggregate(
-        F.zip_with(
-            planes, weights,
-            lambda plane, w: F.when(dot(vec, plane) >= 0, w).otherwise(F.lit(0))),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc.bitwiseOR(v.cast("bigint")),
-    )
-
-
 def rh_signatures_arrow(
     df: DataFrame,
     dim: int,
@@ -122,24 +105,18 @@ def rh_signatures_arrow(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, tbl, sig) signature relation via ONE numpy matmul per Arrow
-    batch — the VOLUME variant of :func:`rh_signature`.
+    """(id, tbl, sig) random-hyperplane signature relation: per row and
+    table ``t``, ``n_planes`` sign bits packed into a bigint (bit p set
+    iff dot(vec, plane) >= 0, plane = ``_hyperplane`` with seed
+    ``(seed_base + t) * 1000 + p``).
 
-    The HOF signature is n_tables x n_planes interpreted zip_with/
-    aggregate dot products per row (CodegenFallback, ~100-300 ns per
-    element) — the dominant cost of embedding_neardup_pairs and
-    lsh_topk. Here all planes of all tables stack into one
-    (n_tables*n_planes, dim) matrix so each Arrow batch costs a single
-    BLAS `X @ P.T` plus a bit-pack; same planes (``_hyperplane`` with
-    seed ``(seed_base + t) * 1000 + p``), same packing (bit p set iff
-    dot >= 0), same output domain (bigint per table).
-
-    Sign bits are summation-order-robust unless a dot product sits
-    within float ULPs of 0 — signature EQUALITY vs the HOF path is
-    asserted in tests/test_similarity.py on the full testdata corpus.
-    Contract queries whose DuckDB oracle replays signatures keep the
-    HOF path; pipelines whose oracle checks the final pair/top-k set
-    (embedding_neardup_pairs) use this by default.
+    All planes of all tables stack into one (n_tables*n_planes, dim)
+    matrix, so each Arrow batch costs a single BLAS ``X @ P.T`` plus a
+    bit-pack — against n_tables x n_planes interpreted dot products per
+    row as higher-order functions. The planes are deterministic, so an
+    oracle can replay the signatures closed-form
+    (``_lsh_topk_oracle``); equality with a left-to-right sum is
+    asserted in tests/test_similarity.py.
     """
     import numpy as np
 
@@ -157,8 +134,8 @@ def rh_signatures_arrow(
         for pdf in batches:
             if not len(pdf):
                 continue
-            # ids pass through UNTOUCHED (no int64 coercion) so any id
-            # type the HOF path accepts — strings included — works here
+            # ids pass through UNTOUCHED (no int64 coercion): any id
+            # type, strings included, works here
             n = len(pdf)
             x = np.asarray(list(pdf[vec_col]), dtype=np.float64)
             bits = (x @ pmat.T) >= 0.0
@@ -185,7 +162,6 @@ def lsh_topk(
     query_id_col: str = "query_id",
     n_planes: int = 12,
     n_tables: int = 4,
-    arrow_sig: bool = False,
 ) -> DataFrame:
     """Approximate top-k: compare only vectors whose random-hyperplane
     signature matches the query's in at least one of n_tables tables.
@@ -196,58 +172,33 @@ def lsh_topk(
     n_tables, cost with n_planes^-1; the (12, 4) default targets ~0.9
     recall at ~1% of brute-force comparisons for random 64-dim data.
 
-    ``arrow_sig=True`` computes the signature stage with the numpy
-    matmul kernel (:func:`rh_signatures_arrow`) instead of interpreted
-    HOF dots — same buckets (equality-tested), ~an order of magnitude
-    cheaper per row; candidates then equi-join vectors back by id.
-    Contract queries whose oracle replays the signature literals keep
-    the HOF path.
+    Signatures come from :func:`rh_signatures_arrow`; the candidate
+    (query, neighbor) id pairs are deduplicated before the vectors
+    equi-join back by id for exact scoring.
     """
-    if arrow_sig:
-        csig = rh_signatures_arrow(
-            corpus, dim, n_planes, n_tables, seed_base=7,
-            id_col=id_col, vec_col=vec_col,
-        ).withColumnRenamed("id", "neighbor_id")
-        qsig = rh_signatures_arrow(
-            queries, dim, n_planes, n_tables, seed_base=7,
-            id_col=query_id_col, vec_col=vec_col,
-        ).withColumnRenamed("id", "query_id")
-        cand_ids = (
-            csig.join(F.broadcast(qsig), ["tbl", "sig"])
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id")
-            .distinct()
-        )
-        cand = (
-            cand_ids
-            .join(corpus.select(F.col(id_col).alias("neighbor_id"),
-                                F.col(vec_col).alias("neighbor_id_vec")),
-                  "neighbor_id")
-            .join(F.broadcast(queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(vec_col).alias("query_id_vec"))), "query_id")
-        )
-    else:
-        def with_sigs(df: DataFrame, id_alias: str) -> DataFrame:
-            return df.select(
-                F.col(id_alias).alias(id_alias),
-                F.col(vec_col).alias(f"{id_alias}_vec"),
-                F.explode(F.array(*[
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        rh_signature(F.col(vec_col), dim, n_planes, seed=7 + t).alias("sig"),
-                    ) for t in range(n_tables)
-                ])).alias("s"),
-            ).select(id_alias, f"{id_alias}_vec", "s.tbl", "s.sig")
-
-        c = with_sigs(corpus.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id")
-        q = with_sigs(queries.withColumnRenamed(query_id_col, "query_id"), "query_id")
-        cand = (
-            c.join(F.broadcast(q), (c.tbl == q.tbl) & (c.sig == q.sig)
-                   & (F.col("neighbor_id") != F.col("query_id")))
-            .select("query_id", "neighbor_id", "query_id_vec", "neighbor_id_vec")
-            .distinct()
-        )
+    csig = rh_signatures_arrow(
+        corpus, dim, n_planes, n_tables, seed_base=7,
+        id_col=id_col, vec_col=vec_col,
+    ).withColumnRenamed("id", "neighbor_id")
+    qsig = rh_signatures_arrow(
+        queries, dim, n_planes, n_tables, seed_base=7,
+        id_col=query_id_col, vec_col=vec_col,
+    ).withColumnRenamed("id", "query_id")
+    cand_ids = (
+        csig.join(F.broadcast(qsig), ["tbl", "sig"])
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id")
+        .distinct()
+    )
+    cand = (
+        cand_ids
+        .join(corpus.select(F.col(id_col).alias("neighbor_id"),
+                            F.col(vec_col).alias("neighbor_id_vec")),
+              "neighbor_id")
+        .join(F.broadcast(queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(vec_col).alias("query_id_vec"))), "query_id")
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
     return (
@@ -509,8 +460,6 @@ def embedding_neardup_pairs(
     threshold: float = 0.95,
     n_planes: int = 10,
     n_tables: int = 6,
-    arrow_score: bool = False,
-    arrow_sig: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine >= threshold) via the
     same hyperplane bucketing: high-cosine pairs agree on most sign bits,
@@ -525,27 +474,14 @@ def embedding_neardup_pairs(
     n_planes as the corpus grows so candidate volume stays near the
     true-pair count, and raise n_tables to restore recall.
 
-    ``arrow_sig=True`` swaps the signature stage for the numpy matmul
-    kernel (:func:`rh_signatures_arrow`) — identical buckets
-    (equality-tested), ~10x cheaper; safe even for the contract query
-    because its oracle is the brute-force PAIR SET, not a signature
-    replay, and exact scoring below is unchanged."""
-    if arrow_sig:
-        sigs = rh_signatures_arrow(
-            df, dim, n_planes, n_tables, seed_base=101,
-            id_col=id_col, vec_col=vec_col)
-    else:
-        sigs = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.array(*[
-                F.struct(F.lit(t).alias("tbl"),
-                         rh_signature(F.col(vec_col), dim, n_planes, seed=101 + t).alias("sig"))
-                for t in range(n_tables)
-            ])).alias("s"),
-        ).select("id", "s.tbl", "s.sig")
+    Exact scoring stays on the HOF cosine, so the 6-dp values match
+    the brute-force oracle bit for bit."""
+    sigs = rh_signatures_arrow(
+        df, dim, n_planes, n_tables, seed_base=101,
+        id_col=id_col, vec_col=vec_col)
     # sigs feeds BOTH sides of the self-join; without materialization the
-    # n_tables x n_planes dot-product pipeline runs twice (no CSE across
-    # self-join branches — same discipline as dedup.minhash_lsh_pairs).
+    # signature kernel runs twice (no CSE across self-join branches —
+    # same discipline as dedup.minhash_lsh_pairs).
     from dump1090_db_stream_spark.cache import track
 
     sigs = track(sigs)
@@ -562,36 +498,6 @@ def embedding_neardup_pairs(
     vb = df.select(F.col(id_col).alias("id_b"),
                    F.col(vec_col).alias("vec_b"))
     paired = cand.join(va, "id_a").join(vb, "id_b")
-    if arrow_score:
-        # Candidate-volume scale path: one numpy einsum per Arrow batch
-        # instead of an interpreted HOF dot per pair (~5-10x at sf0.1).
-        # Float summation order differs from the JVM path by last-bit
-        # ULPs — same pair set at any realistic threshold, but the
-        # contract query keeps the JVM path for bit-exact oracle parity.
-        import numpy as np
-
-        def kernel(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                a = np.asarray(list(pdf["vec_a"]), dtype=np.float64)
-                b = np.asarray(list(pdf["vec_b"]), dtype=np.float64)
-                an = np.linalg.norm(a, axis=1)
-                bn = np.linalg.norm(b, axis=1)
-                an[an == 0] = 1.0
-                bn[bn == 0] = 1.0
-                cos = np.einsum("ij,ij->i", a, b) / (an * bn)
-                keep = cos >= threshold
-                yield pd.DataFrame({
-                    "id_a": pdf["id_a"].to_numpy()[keep],
-                    "id_b": pdf["id_b"].to_numpy()[keep],
-                    "cosine": np.round(cos[keep], 6),
-                })
-
-        return paired.mapInPandas(
-            kernel, "id_a long, id_b long, cosine double")
     return (
         paired
         .withColumn("cosine", F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6))
@@ -610,7 +516,6 @@ def embedding_cross_neardup(
     threshold: float = 0.95,
     n_planes: int = 10,
     n_tables: int = 6,
-    arrow_sig: bool = False,
 ) -> DataFrame:
     """Cross-relation embedding near-dups: (corpus_id, other_id,
     cosine >= threshold) — the EMBEDDING-space benchmark-decontamination
@@ -625,19 +530,9 @@ def embedding_cross_neardup(
     for exact scoring (corpus side by equi-join, other side broadcast).
     """
     def sigs(df: DataFrame, idc: str, out: str) -> DataFrame:
-        if arrow_sig:
-            return rh_signatures_arrow(
-                df, dim, n_planes, n_tables, seed_base=211,
-                id_col=idc, vec_col=vec_col).withColumnRenamed("id", out)
-        return df.select(
-            F.col(idc).alias(out),
-            F.explode(F.array(*[
-                F.struct(F.lit(t).cast("int").alias("tbl"),
-                         rh_signature(F.col(vec_col), dim, n_planes,
-                                      seed=211 + t).alias("sig"))
-                for t in range(n_tables)
-            ])).alias("s"),
-        ).select(out, "s.tbl", "s.sig")
+        return rh_signatures_arrow(
+            df, dim, n_planes, n_tables, seed_base=211,
+            id_col=idc, vec_col=vec_col).withColumnRenamed("id", out)
 
     cand = (
         sigs(corpus, id_col, "corpus_id")
@@ -1045,8 +940,6 @@ def ivfpq_topk_from_index(
     spark,
     index_path: str,
     queries: DataFrame,
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
     k: int = 10,
     n_probes: int = 4,
     vec_col: str = "embedding",
@@ -1059,16 +952,12 @@ def ivfpq_topk_from_index(
     their stored codes + the query LUT — scan volume is
     n_probes/n_centroids of an already ~32x-compressed index.
 
-    ``centroids``/``codebooks`` default to the index's own
-    ``_ivfpq_meta`` sidecar (r11) — probes and daily appends never
-    re-derive the quantizers, so they CANNOT drift from the stored
-    codes."""
+    The centroids and codebooks come from the index's own
+    ``_ivfpq_meta`` sidecar — probes and daily appends never re-derive
+    the quantizers, so they CANNOT drift from the stored codes."""
     from pyspark.sql import Window
 
-    if centroids is None or codebooks is None:
-        stored = read_ivfpq_quantizers(spark, index_path)
-        centroids = centroids if centroids is not None else stored[0]
-        codebooks = codebooks if codebooks is not None else stored[1]
+    centroids, codebooks = read_ivfpq_quantizers(spark, index_path)
     codes = spark.read.parquet(index_path)
     q = queries.select(
         F.col(query_id_col).alias("query_id"),

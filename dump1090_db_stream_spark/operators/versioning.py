@@ -5,7 +5,7 @@ need to know what actually changed. ``corpus_diff`` classifies every id
 across two snapshots as added / removed / changed / unchanged by
 comparing content digests — a full-outer join on id with md5 compare,
 so the shuffle carries (id, 32-byte digest), never document bodies
-(same discipline as exact_dedup).
+(same discipline as dedup.exact_dup_groups).
 
 At 100 TB both sides prune to two columns at the scan, and the join is
 a plain shuffled hash join on the id — or shuffle-FREE when both

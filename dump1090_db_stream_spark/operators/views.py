@@ -86,12 +86,11 @@ def flights(messages: DataFrame, band_minutes: int = 10) -> DataFrame:
     ).distinct()
 
 
-def register_views(spark: SparkSession, messages: DataFrame,
-                   prefix: str = "") -> None:
+def register_views(spark: SparkSession, messages: DataFrame) -> None:
     """Register adsb_messages + the three views as temp views, enabling the
     reference's ad-hoc SQL surface verbatim (README.md:180-273) via
     ``spark.sql`` (D-3, create_schema.sql:85,101,116)."""
-    messages.createOrReplaceTempView(f"{prefix}adsb_messages")
-    callsigns(messages).createOrReplaceTempView(f"{prefix}callsigns")
-    locations(messages).createOrReplaceTempView(f"{prefix}locations")
-    flights(messages).createOrReplaceTempView(f"{prefix}flights")
+    messages.createOrReplaceTempView("adsb_messages")
+    callsigns(messages).createOrReplaceTempView("callsigns")
+    locations(messages).createOrReplaceTempView("locations")
+    flights(messages).createOrReplaceTempView("flights")

@@ -5,21 +5,14 @@ real scan workloads filter on several (time AND position, user AND
 value).  Sorting by any single column makes the other columns' per-file
 min/max ranges span the whole domain — their parquet statistics prune
 nothing.  Interleaving the bits of several quantized columns into one
-Morton key and range-clustering the write on that key keeps EVERY
+Morton key and range-clustering a write on that key
+(``repartitionByRange`` + ``sortWithinPartitions``) keeps EVERY
 participating column locally narrow per file, so engine-native
 min/max/row-group skipping works on all of them at once.  This is the
-same layout trick Delta/Iceberg expose as ``OPTIMIZE ... ZORDER BY``;
-here it is plain columns + a plain parquet write, nothing proprietary.
+same layout trick Delta/Iceberg expose as ``OPTIMIZE ... ZORDER BY``.
 
 Scale design: the z-value is a pure projection (a fixed sum of
-shift/mask terms — whole-stage codegen, no Python, no UDF).  The write
-is one ``repartitionByRange`` on the key (a range shuffle with
-sampled bounds — the standard total-ordering primitive) plus an
-in-partition sort; at 100 TB that is exactly one pass, and the
-cluster quality degrades gracefully with partition count.  Querying
-needs NOTHING special: any engine that reads parquet statistics
-(Spark, DuckDB, Trino) skips files/row-groups on the ordinary
-per-column predicates.
+shift/mask terms — whole-stage codegen, no Python, no UDF).
 
 Engine portability: quantization and bit interleaving use only
 integer arithmetic (``floor``, ``shiftright``, ``&``, ``*``) — the
@@ -28,7 +21,7 @@ DuckDB oracle replays the exact key (contract query ``zorder_keys``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -95,34 +88,3 @@ def zvalue_sql(exprs: list[str], bits: int = 16) -> str:
         for b in range(bits):
             terms.append(f"((({ce} >> {b}) & 1) << {b * n_cols + i})")
     return "(" + " + ".join(terms) + ")"
-
-
-def zorder_write(df: DataFrame, path: str, key: Column,
-                 n_files: int, mode: str = "overwrite") -> None:
-    """Write ``df`` as parquet clustered by the Morton ``key``.
-
-    ``repartitionByRange`` samples key bounds and splits into
-    ``n_files`` contiguous key ranges; the in-partition sort tightens
-    per-ROW-GROUP statistics too, so skipping works below file grain.
-    The key itself is NOT stored — the layout is the index.
-    """
-    (df.withColumn("_zv", key)
-     .repartitionByRange(n_files, "_zv")
-     .sortWithinPartitions("_zv")
-     .drop("_zv")
-     .write.mode(mode).parquet(path))
-
-
-def file_minmax(spark, path: str, cols: list[str]) -> DataFrame:
-    """Per-FILE min/max of ``cols`` — the same statistics a parquet
-    footer carries, materialized as a relation via the
-    ``_metadata.file_path`` hidden column (one scan, no driver loop).
-    Used to AUDIT a layout: the fraction of files whose bounding box
-    intersects a query rectangle is exactly the fraction an engine's
-    stats-based skipping must read."""
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-    return (spark.read.parquet(path)
-            .select(F.col("_metadata.file_path").alias("file"), *cols)
-            .groupBy("file").agg(*aggs))

@@ -14,29 +14,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _env_bool(name: str, default: str) -> str:
-    """Normalize a boolean-ish env var to the literal "true"/"false" a
-    Spark boolean conf requires. Spark 4.1 does NOT reject an invalid
-    boolean at session build — the session comes up and then the first
-    ``conf.get``/query HANGS (reproduced on this box with
-    ``spark.sql.join.preferSortMergeJoin=bogus``), so the natural
-    ``SPARK_GRAFT_PREFER_SMJ=1`` would silently wedge the engine if the
-    raw string were passed through."""
-    raw = os.environ.get(name, default).strip().lower()
-    if raw in ("1", "true", "yes", "on"):
-        return "true"
-    if raw not in ("0", "false", "no", "off", ""):
-        # r14 ADVICE: a typo ('ture') silently meant "false" — an
-        # operator trying to restore the spill-graceful SMJ default
-        # would get shuffled-hash joins with no signal
-        import warnings
-
-        warnings.warn(
-            f"{name}={os.environ.get(name, default)!r} is not a "
-            f"recognized boolean (1/true/yes/on or 0/false/no/off); "
-            f"falling back to 'false'", stacklevel=2)
-    return "false"
-
 # Pin UTC so timestamp semantics are stable and oracle (DuckDB) comparisons
 # are deterministic — the reference uses timestamptz throughout
 # (create_schema.sql:75); UTC is the lossless common denominator.
@@ -63,17 +40,14 @@ _DEFAULTS = {
     # join-heavy queries (minhash 3.60->2.95, entity_resolution
     # 4.27->3.46, fuzzy_name_matches 2.59->2.12, ks_drift_by_type
     # 3.97->3.42; worst mover pipeline_capstone 0.93x = session
-    # noise), total 34.5->32.1 s. SPARK_GRAFT_PREFER_SMJ=false
-    # restores the r14 static preference.
-    "spark.sql.join.preferSortMergeJoin":
-        _env_bool("SPARK_GRAFT_PREFER_SMJ", "true"),
+    # noise), total 34.5->32.1 s. ``extra_conf`` overrides it.
+    "spark.sql.join.preferSortMergeJoin": "true",
     # AQE SMJ->SHJ conversion gate: max bytes per measured build-side
     # partition (must be >= adaptive.advisoryPartitionSizeInBytes —
     # default 64m — or the rule never fires; 0 disables). 128m builds
     # a <=128 MB hash map per task — bounded by construction, the
     # spill-safety story the r14 global preference lacked.
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold":
-        os.environ.get("SPARK_GRAFT_SHJ_LOCAL_THRESHOLD", "134217728"),
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "134217728",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

@@ -51,34 +51,25 @@ def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-@pytest.fixture(scope="session")
-def registry_sweep(spark, sf_dir) -> dict:
-    """EVERY registry query, built and executed ONCE, with everything
-    the registry-wide gates assert on captured at build time:
+def sweep_registry(spark, sf_dir: str, queries: dict) -> dict:
+    """Build and execute every ``queries`` entry (name -> function) ONCE,
+    capturing everything the registry-wide gates assert on at build
+    time:
 
     - ``plan``: the executed physical plan string (the three textual
       sweeps: python-eval, cartesian/BNLJ, single-partition sort)
     - ``continuous_global`` / ``grouped_funnels``: the two logical-plan
-      audit detectors (plans.audit)
+      audit detectors (tests/plan_audit.py)
     - ``count``: the executed row count (the every-query-runs gate)
 
-    r15 suite-cost fix (r14 verdict ask #1): the five plan gates and
-    the every-query-runs gate each re-CONSTRUCTED all ~216 queries —
-    and construction is the expensive half (trainer loops, CC
-    closures, index writes, guard counts), so the suite paid the same
-    ~4-6 min sweep six times (~25 of its 42 minutes). One shared
-    sweep preserves every assertion per query name.
-
-    Per-query caches are released inside the loop (the bench
-    discipline) so the sweep leaves no storage residue; captured
-    artifacts are plain strings/ints, safe across the autouse
+    Captured artifacts are plain strings/ints, safe across the autouse
     release fixture (a shared DataFrame would not be: released
-    localCheckpoint blocks cannot recompute)."""
+    localCheckpoint blocks cannot recompute). Tracked caches are
+    released once the sweep ends, also when a query raises."""
     from concurrent.futures import ThreadPoolExecutor
 
-    import __spark_entry__ as entrymod
     from dump1090_db_stream_spark.cache import release_tracked
-    from dump1090_db_stream_spark.plans.audit import (
+    from plan_audit import (
         continuous_key_global_windows,
         grouped_continuous_window_funnels,
     )
@@ -88,11 +79,11 @@ def registry_sweep(spark, sf_dir) -> dict:
     # threads overlap almost perfectly (measured 1084 s serial ->
     # ~350 s on this box; py4j calls release the GIL). Spark sessions
     # are thread-safe for concurrent actions; construction side
-    # effects (trainer memos, cache.track registration) are plain
-    # CPython list/dict appends. Caches are released ONCE after the
-    # sweep instead of per query — a per-query release from one thread
-    # would unpersist a relation another thread is mid-consuming
-    # (safe but thrashing); total tracked storage at sf0.001 is KBs.
+    # effects (cache.track registration) are plain CPython list
+    # appends. Caches are released ONCE after the sweep instead of per
+    # query — a per-query release from one thread would unpersist a
+    # relation another thread is mid-consuming (safe but thrashing);
+    # total tracked storage at sf0.001 is KBs.
     def one(item):
         name, fn = item
         df = fn(spark, sf_dir)
@@ -103,10 +94,25 @@ def registry_sweep(spark, sf_dir) -> dict:
             "count": df.count(),
         }
 
-    with ThreadPoolExecutor(8) as ex:
-        out = dict(ex.map(one, entrymod.queries().items()))
-    release_tracked()
-    return out
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            return dict(ex.map(one, queries.items()))
+    finally:
+        release_tracked()
+
+
+@pytest.fixture(scope="session")
+def registry_sweep(spark, sf_dir) -> dict:
+    """EVERY registry query through :func:`sweep_registry`, once per
+    suite. r15 suite-cost fix (r14 verdict ask #1): the five plan gates
+    and the every-query-runs gate each re-CONSTRUCTED all ~216 queries
+    — and construction is the expensive half (trainer loops, CC
+    closures, index writes, guard counts), so the suite paid the same
+    ~4-6 min sweep six times (~25 of its 42 minutes). One shared
+    sweep preserves every assertion per query name."""
+    import __spark_entry__ as entrymod
+
+    return sweep_registry(spark, sf_dir, entrymod.queries())
 
 
 #: collector for hypothesis-generated WKT coordinate cases — evaluated

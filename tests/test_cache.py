@@ -3,6 +3,8 @@ by the caller (ADVICE: long-lived sessions must not accumulate storage)."""
 
 from __future__ import annotations
 
+import pytest
+
 from dump1090_db_stream_spark.cache import release_tracked
 
 
@@ -179,3 +181,24 @@ def test_iteration_error_path_releases_successor_pin(spark, monkeypatch):
     monkeypatch.setattr(DataFrame, "count", real_count)
     release_tracked()
     assert jsc.getPersistentRDDs().size() == base
+
+
+def test_registry_sweep_releases_caches_when_a_query_raises(spark, sf_dir):
+    """A query that raises mid-sweep must not leak the caches every
+    other query tracked into the shared session (r15 ADVICE #3): the
+    sweep releases them in ``finally``."""
+    from conftest import sweep_registry
+
+    from dump1090_db_stream_spark import cache
+
+    def tracks(spark, sf_dir):
+        return cache.track(spark.range(3))
+
+    def raises(spark, sf_dir):
+        cache.track(spark.range(5))
+        raise RuntimeError("query failed")
+
+    release_tracked()
+    with pytest.raises(RuntimeError, match="query failed"):
+        sweep_registry(spark, sf_dir, {"ok": tracks, "bad": raises})
+    assert cache._TRACKED == []

@@ -10,7 +10,6 @@ from dump1090_db_stream_spark.operators.cleaning import (
     count_emails,
     count_urls,
     normalize_text,
-    repetition_filter,
     repetition_stats,
     scrub_pii,
 )
@@ -62,13 +61,6 @@ def test_repetition_stats_known_doc(docs):
     # doc 2: 8 distinct 2-grams, no repeats
     assert stats[2]["n_distinct"] == stats[2]["n_grams"] == 8
     assert stats[2]["dup_frac"] == 0.0
-
-
-def test_repetition_filter_drops_spam(docs):
-    kept = {r["doc_id"] for r in
-            repetition_filter(docs, max_top_frac=0.5).collect()}
-    assert 1 not in kept          # all-one-gram spam gone
-    assert {2, 4} <= kept         # clean docs stay
 
 
 def test_mixture_sample_rates_and_determinism(spark):

@@ -148,7 +148,9 @@ def test_vocab_gini_matches_reference(spark):
     assert got["b"]["gini"] == 0.0            # all counts equal
 
 
-def test_vocab_gini_single_type_is_zero_and_modes_agree(spark):
+def test_vocab_gini_single_type_is_zero_and_modes_agree(spark,
+                                                        monkeypatch):
+    from dump1090_db_stream_spark.operators import prefix_sum
     from dump1090_db_stream_spark.operators.relevance import (
         vocab_concentration,
     )
@@ -166,5 +168,7 @@ def test_vocab_gini_single_type_is_zero_and_modes_agree(spark):
     base = vocab_concentration(big, "source").orderBy("source").collect()
     assert vocab_concentration(big, "source", n_range_buckets=1) \
         .orderBy("source").collect() == base
-    assert vocab_concentration(big, "source", bounds_join="shuffle") \
+    # a one-group budget: bounds and offsets attach by equi-join
+    monkeypatch.setattr(prefix_sum, "_OFFSET_ROW_BUDGET", 1)
+    assert vocab_concentration(big, "source") \
         .orderBy("source").collect() == base

@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dump1090_db_stream_spark.operators.dedup import (
-    exact_dedup,
     exact_dup_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -25,13 +24,6 @@ def docs(spark):
     return spark.createDataFrame(
         [(1, BASE), (2, BASE), (3, NEAR), (4, FAR), (5, FAR)],
         ["doc_id", "text"])
-
-
-def test_exact_dedup(docs):
-    out = exact_dedup(docs).collect()
-    assert len(out) == 3  # {BASE, NEAR, FAR}
-    kept = {r.doc_id for r in out}
-    assert kept == {1, 3, 4}  # lowest id survives
 
 
 def test_exact_dup_groups(docs):

@@ -93,11 +93,19 @@ def test_bucket_decomposition_is_exact(spark):
             .orderBy("g").collect() == base
 
 
-def test_shuffle_bounds_join_is_bit_identical(spark):
+def _equi_join_side(monkeypatch):
+    """Shrink the grouped prefix-sum's broadcast budget to one group,
+    so grouped calls attach bounds and offsets through equi-joins."""
+    from dump1090_db_stream_spark.operators import prefix_sum
+
+    monkeypatch.setattr(prefix_sum, "_OFFSET_ROW_BUDGET", 1)
+
+
+def test_shuffle_bounds_join_is_bit_identical(spark, monkeypatch):
     df, _ = _fixture(spark)
-    assert (ks_drift_by(df, "s", "g", bounds_join="shuffle")
-            .orderBy("g").collect()
-            == ks_drift_by(df, "s", "g").orderBy("g").collect())
+    base = ks_drift_by(df, "s", "g").orderBy("g").collect()
+    _equi_join_side(monkeypatch)
+    assert ks_drift_by(df, "s", "g").orderBy("g").collect() == base
 
 
 def test_integer_scores_cast_and_tie_credit(spark):
@@ -169,15 +177,17 @@ def test_ks_drift_one_sided_slice_is_null(spark):
     assert got["both"]["ks"] == 1.0        # disjoint single points
 
 
-def test_ks_drift_decomposition_and_shuffle_mode_bit_identical(spark):
+def test_ks_drift_decomposition_and_shuffle_mode_bit_identical(
+        spark, monkeypatch):
     from dump1090_db_stream_spark.operators.drift import ks_drift
 
     ref, _, cur, _ = _snapshots(spark)
     base = ks_drift(ref, cur, "s", keys=["k"]).orderBy("k").collect()
     assert ks_drift(ref, cur, "s", keys=["k"], n_range_buckets=1) \
         .orderBy("k").collect() == base
-    assert ks_drift(ref, cur, "s", keys=["k"],
-                    bounds_join="shuffle").orderBy("k").collect() == base
+    _equi_join_side(monkeypatch)
+    assert ks_drift(ref, cur, "s", keys=["k"]) \
+        .orderBy("k").collect() == base
 
 
 # --- w1_drift (Wasserstein-1 / earth mover's) -----------------------------
@@ -221,7 +231,7 @@ def test_w1_matches_bruteforce_and_shift_units(spark):
     assert r["w1"] == 12.0
 
 
-def test_w1_global_one_sided_and_modes(spark):
+def test_w1_global_one_sided_and_modes(spark, monkeypatch):
     from dump1090_db_stream_spark.operators.drift import w1_drift
 
     ref, ref_rows, cur, cur_rows = _snapshots(spark)
@@ -234,12 +244,13 @@ def test_w1_global_one_sided_and_modes(spark):
         spark.createDataFrame([("both", 2.0)], "k string, s double"),
         "s", keys=["k"]).collect()
     assert all(r["w1"] is None for r in only)
-    # decomposition + shuffle mode bit-identical
+    # decomposition + the equi-join side bit-identical
     base = w1_drift(ref, cur, "s", keys=["k"]).orderBy("k").collect()
     assert w1_drift(ref, cur, "s", keys=["k"], n_range_buckets=1) \
         .orderBy("k").collect() == base
-    assert w1_drift(ref, cur, "s", keys=["k"],
-                    bounds_join="shuffle").orderBy("k").collect() == base
+    _equi_join_side(monkeypatch)
+    assert w1_drift(ref, cur, "s", keys=["k"]) \
+        .orderBy("k").collect() == base
 
 
 def _py_ranksum(ref_vals, cur_vals):

@@ -151,6 +151,7 @@ _DEF_TYPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 # Package defs that nothing outside tests/ calls but that stay, each
 # with its reason. A key is a def ("module.name") or a whole module.
+_ITEM4 = "store layout is decided next (ROADMAP item 4)"
 _TEST_ONLY_KEEP = {
     f"{_PKG}.operators.adhoc.last_24h":
         "the paper's own ad-hoc query (README.md:258-263)",
@@ -158,40 +159,70 @@ _TEST_ONLY_KEEP = {
         "the paper's DDL surface (create_schema.sql)",
     f"{_PKG}.plans.catalog.create_messages_table":
         "the paper's DDL surface (create_schema.sql)",
-    f"{_PKG}.plans.audit": "the plan checkers the tests use",
-    f"{_PKG}.sinks.writers.write_time_sorted":
-        "store layout is decided next (ROADMAP item 4)",
-    f"{_PKG}.sinks.writers.compact_parquet":
-        "store layout is decided next (ROADMAP item 4)",
-    f"{_PKG}.operators.zorder.zorder_write": "the one z-order writer",
-    f"{_PKG}.operators.zorder.file_minmax":
-        "reads back what zorder_write laid out",
-    f"{_PKG}.operators.dedup.exact_dedup":
-        "test_pipeline_e2e's single-job plan gate composes it",
-    f"{_PKG}.operators.cleaning.repetition_filter":
-        "test_pipeline_e2e's single-job plan gate composes it",
+    f"{_PKG}.sinks.writers.write_time_sorted": _ITEM4,
+    f"{_PKG}.sinks.writers.compact_parquet": _ITEM4,
+}
+
+# Keyword parameters (bool/str/None default) that only tests/ set to a
+# non-default value but that stay, each with its reason.
+_DATA = ("names the caller's data (columns, group keys, units, widths); "
+         "the default is one value of it, not a second code path")
+_VALIDATION = "validation of outside input: tests pass bad values"
+_POLICY = "an error policy for outside input"
+_TEST_ONLY_SWITCH_KEEP = {
+    f"{_PKG}.functions.parser.parse_sbs1(strict_integer_rows)":
+        _VALIDATION + " (feed lines with non-integer fields)",
+    f"{_PKG}.operators.dedup.ngram_jaccard_pairs(id_col)": _VALIDATION,
+    f"{_PKG}.operators.dedup.ngram_jaccard_pairs(text_col)": _VALIDATION,
+    f"{_PKG}.operators.dedup.ngram_jaccard_pairs(tokenizer)": _VALIDATION,
+    f"{_PKG}.operators.fuzzy.edit_distance_join(on_exceed)": _POLICY,
+    f"{_PKG}.operators.timeseries.interval_overlap_pairs(on_reversed)":
+        _POLICY,
+    f"{_PKG}.operators.cleaning.dedup_lines(delimiter)": _DATA,
+    f"{_PKG}.operators.drift.chisq_drift(keys)": _DATA,
+    f"{_PKG}.operators.drift.js_divergence_drift(keys)": _DATA,
+    f"{_PKG}.operators.profiling.table_profile(cols)": _DATA,
+    f"{_PKG}.operators.relevance.corpus_divergence(unit)": _DATA,
+    f"{_PKG}.operators.relevance.vocabulary_coverage(unit)": _DATA,
+    f"{_PKG}.operators.relevance.tfidf_terms(tokenizer)": _DATA,
+    f"{_PKG}.operators.sampling.token_budget_sample(token_col)": _DATA,
+    f"{_PKG}.streaming.pipeline.stream_interval_join(watermark)": _DATA,
+    f"{_PKG}.streaming.pipeline.tumbling_counts(window)": _DATA,
+    f"{_PKG}.streaming.pipeline.tumbling_counts(watermark)": _DATA,
+    f"{_PKG}.streaming.stateful.session_flights(label_col)": _DATA,
+    f"{_PKG}.streaming.pipeline.tumbling_counts(exact_sums)":
+        "output type of a stored finest level that coarser rollups "
+        "re-aggregate exactly (operators/rollup.py)",
+    f"{_PKG}.operators.graph.connected_components_star(rounds_out)":
+        "reports the round count, the evidence of the O(log n) bound",
+    f"{_PKG}.sinks.writers.write_jsonl_shards(max_records_per_file)":
+        "a sink option; the sinks stay as they are until item 4",
+    f"{_PKG}.sinks.writers.compact_parquet(sort_cols)": _ITEM4,
+    f"{_PKG}.sinks.writers.write_time_sorted(bloom_cols)": _ITEM4,
+    f"{_PKG}.sinks.writers.write_time_sorted(mode)": _ITEM4,
+    f"{_PKG}.sinks.writers.write_time_sorted(parquet_options)": _ITEM4,
 }
 
 
 def _module_index(tree: ast.Module, modname: str, is_pkg: bool):
     """One walk per top-level statement: the file's import aliases
     (local name -> dotted target) and, per statement, the dotted name
-    chains it mentions (``a.b.c`` -> ("a", "b", "c"))."""
+    chains it mentions (``a.b.c`` -> ("a", "b", "c")) and the calls it
+    makes (callee chain, call node)."""
     aliases: dict[str, str] = {}
-    stmts: list[tuple[str | None, set]] = []
+    stmts: list[tuple[str | None, set, list]] = []
     here = modname.split(".") if is_pkg else modname.split(".")[:-1]
     for stmt in tree.body:
-        chains = set()
+        chains, calls = set(), []
         for n in ast.walk(stmt):
-            if isinstance(n, ast.Name):
-                chains.add((n.id,))
-            elif isinstance(n, ast.Attribute):
-                parts = []
-                while isinstance(n, ast.Attribute):
-                    parts.append(n.attr)
-                    n = n.value
-                if isinstance(n, ast.Name):
-                    chains.add((n.id, *reversed(parts)))
+            if isinstance(n, (ast.Name, ast.Attribute)):
+                chain = _chain(n)
+                if chain:
+                    chains.add(chain)
+            elif isinstance(n, ast.Call):
+                chain = _chain(n.func)
+                if chain:
+                    calls.append((chain, n))
             elif isinstance(n, ast.ImportFrom):
                 base = n.module or ""
                 if n.level:
@@ -204,8 +235,99 @@ def _module_index(tree: ast.Module, modname: str, is_pkg: bool):
                     aliases[a.asname or a.name.split(".")[0]] = (
                         a.name if a.asname else a.name.split(".")[0])
         owner = stmt.name if isinstance(stmt, _DEF_TYPES) else None
-        stmts.append((owner, chains))
+        stmts.append((owner, chains, calls))
     return aliases, stmts
+
+
+def _chain(n: ast.AST) -> tuple[str, ...] | None:
+    """``a.b.c`` -> ("a", "b", "c"); None unless rooted at a name."""
+    parts = []
+    while isinstance(n, ast.Attribute):
+        parts.append(n.attr)
+        n = n.value
+    return (n.id, *reversed(parts)) if isinstance(n, ast.Name) else None
+
+
+class _Package:
+    """Every top-level def of the package, each module's alias index,
+    and the same index for the non-test files (the entry module,
+    ``bench.py``, ``perfbench/*.py`` and ``scripts/*.py``) and for
+    ``tests/*.py``."""
+
+    def __init__(self, root: Path):
+        self.defs: dict[str, ast.AST] = {}
+        self.index: dict[str, tuple] = {}
+        for p in sorted((root / _PKG).rglob("*.py")):
+            parts = list(p.relative_to(root).with_suffix("").parts)
+            is_pkg = parts[-1] == "__init__"
+            mod = ".".join(parts[:-1] if is_pkg else parts)
+            tree = ast.parse(p.read_text(), str(p))
+            self.index[mod] = _module_index(tree, mod, is_pkg)
+            for n in tree.body:
+                if isinstance(n, _DEF_TYPES):
+                    self.defs[f"{mod}.{n.name}"] = n
+        self.outside = self._files(root, (
+            "__spark_entry__.py", "bench.py", "perfbench/*.py",
+            "scripts/*.py"))
+        self.tests = self._files(root, ("tests/*.py",))
+
+    @staticmethod
+    def _files(root: Path, patterns) -> list[tuple]:
+        out = []
+        for pat in patterns:
+            for p in sorted(root.glob(pat)):
+                name = str(p.relative_to(root).with_suffix("")).replace(
+                    "/", ".")
+                out.append(
+                    _module_index(ast.parse(p.read_text()), name, False))
+        return out
+
+    def _resolve(self, q: str) -> str:
+        for _ in range(5):      # follow re-exports through aliases
+            mod, _, name = q.rpartition(".")
+            if q in self.defs or name not in self.index.get(mod, ({},))[0]:
+                break
+            q = self.index[mod][0][name]
+        return q
+
+    def prefixes(self, mod: str | None, aliases: dict,
+                 chain: tuple[str, ...]) -> list[str]:
+        """The qualified name each prefix of ``chain`` resolves to
+        (``[]`` when its root is neither an import nor a def of
+        ``mod``)."""
+        if chain[0] in aliases:
+            q = aliases[chain[0]]
+        elif mod is not None and f"{mod}.{chain[0]}" in self.defs:
+            q = f"{mod}.{chain[0]}"
+        else:
+            return []
+        out = [self._resolve(q)]
+        for part in chain[1:]:
+            out.append(self._resolve(f"{out[-1]}.{part}"))
+        return out
+
+    def reached(self, mod: str | None, aliases: dict, chains) -> list[str]:
+        return [q for chain in chains
+                for q in self.prefixes(mod, aliases, chain)
+                if q in self.defs]
+
+    def calls(self, tests: bool = False):
+        """(callee def, call node) for every call in ``tests/`` or, by
+        default, everywhere else."""
+        if tests:
+            sources = [(None, aliases, stmts)
+                       for aliases, stmts in self.tests]
+        else:
+            sources = [(None, aliases, stmts)
+                       for aliases, stmts in self.outside]
+            sources += [(mod, aliases, stmts)
+                        for mod, (aliases, stmts) in self.index.items()]
+        for mod, aliases, stmts in sources:
+            for _, _, calls in stmts:
+                for chain, node in calls:
+                    qs = self.prefixes(mod, aliases, chain)
+                    if len(qs) == len(chain) and qs[-1] in self.defs:
+                        yield qs[-1], node
 
 
 def _test_only_defs(root: Path) -> dict[str, int]:
@@ -215,64 +337,80 @@ def _test_only_defs(root: Path) -> dict[str, int]:
     ``scripts/*.py`` mention, every def in ``__main__`` and every
     module-level statement of the package; each reached def's body is
     followed transitively through the import aliases of its module."""
-    defs, index, roots = {}, {}, []
-    for p in sorted((root / _PKG).rglob("*.py")):
-        parts = list(p.relative_to(root).with_suffix("").parts)
-        is_pkg = parts[-1] == "__init__"
-        mod = ".".join(parts[:-1] if is_pkg else parts)
-        tree = ast.parse(p.read_text(), str(p))
-        index[mod] = _module_index(tree, mod, is_pkg)
-        for n in tree.body:
-            if isinstance(n, _DEF_TYPES):
-                defs[f"{mod}.{n.name}"] = n.end_lineno - n.lineno + 1
-
-    def resolve(q: str) -> str:
-        for _ in range(5):      # follow re-exports through aliases
-            mod, _, name = q.rpartition(".")
-            if q in defs or name not in index.get(mod, ({},))[0]:
-                break
-            q = index[mod][0][name]
-        return q
-
-    def reached(mod: str | None, aliases: dict, chains) -> list[str]:
-        out = []
-        for chain in chains:
-            if chain[0] in aliases:
-                q = aliases[chain[0]]
-            elif mod is not None and f"{mod}.{chain[0]}" in defs:
-                q = f"{mod}.{chain[0]}"
-            else:
-                continue
-            for part in (None, *chain[1:]):
-                q = resolve(q if part is None else f"{q}.{part}")
-                if q in defs:
-                    out.append(q)
-        return out
-
-    for pat in ("__spark_entry__.py", "bench.py", "perfbench/*.py",
-                "scripts/*.py"):
-        for p in sorted(root.glob(pat)):
-            name = str(p.relative_to(root).with_suffix("")).replace("/", ".")
-            aliases, stmts = _module_index(ast.parse(p.read_text()), name,
-                                           False)
-            for _, chains in stmts:
-                roots += reached(None, aliases, chains)
+    pkg = _Package(root)
+    roots = []
+    for aliases, stmts in pkg.outside:
+        for _, chains, _ in stmts:
+            roots += pkg.reached(None, aliases, chains)
     by_def = {}
-    for mod, (aliases, stmts) in index.items():
-        for owner, chains in stmts:
+    for mod, (aliases, stmts) in pkg.index.items():
+        for owner, chains, _ in stmts:
             if owner is None:
-                roots += reached(mod, aliases, chains)
+                roots += pkg.reached(mod, aliases, chains)
             else:
                 by_def[f"{mod}.{owner}"] = (mod, aliases, chains)
         if mod == f"{_PKG}.__main__":
-            roots += [q for q in defs if q.startswith(f"{mod}.")]
+            roots += [q for q in pkg.defs if q.startswith(f"{mod}.")]
     seen: set[str] = set()
     while roots:
         q = roots.pop()
         if q not in seen:
             seen.add(q)
-            roots += reached(*by_def[q])
-    return {q: n for q, n in defs.items() if q not in seen}
+            roots += pkg.reached(*by_def[q])
+    return {q: n.end_lineno - n.lineno + 1 for q, n in pkg.defs.items()
+            if q not in seen}
+
+
+def _switch_params(fn: ast.AST) -> dict[str, tuple[int | None, object]]:
+    """A function's keyword parameters whose default is a bool, a str
+    or None: name -> (positional index or None, default)."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    pairs = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+    pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+    out = {}
+    for p, d in pairs:
+        if isinstance(d, ast.Constant) and (
+                d.value is None or isinstance(d.value, (bool, str))):
+            out[p.arg] = (pos.index(p) if p in pos else None, d.value)
+    return out
+
+
+def _test_only_switches(root: Path) -> list[str]:
+    """``module.def(param)`` for every bool/str/None-defaulted keyword
+    parameter of a top-level package function to which ``tests/``
+    passes a non-default value and nothing else does. A call passes
+    ``p`` when it names ``p`` (or fills its position) with anything but
+    the default literal; ``*args`` passes every positional parameter
+    and ``**kwargs`` every parameter."""
+    pkg = _Package(root)
+    params = {q: _switch_params(n) for q, n in pkg.defs.items()
+              if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))}
+
+    def differs(arg: ast.AST, default: object) -> bool:
+        return not (isinstance(arg, ast.Constant)
+                    and type(arg.value) is type(default)
+                    and arg.value == default)
+
+    def passed(tests: bool) -> set[tuple[str, str]]:
+        out = set()
+        for q, node in pkg.calls(tests):
+            ps = params.get(q, {})
+            star = any(isinstance(x, ast.Starred) for x in node.args)
+            for name, (i, default) in ps.items():
+                if i is not None and (star or (
+                        i < len(node.args)
+                        and differs(node.args[i], default))):
+                    out.add((q, name))
+            for kw in node.keywords:
+                for name, (_, default) in ps.items():
+                    if kw.arg is None or (kw.arg == name and
+                                          differs(kw.value, default)):
+                        out.add((q, name))
+        return out
+
+    return sorted(f"{q}({name})"
+                  for q, name in passed(True) - passed(False))
 
 
 def test_package_defs_have_a_non_test_caller():
@@ -287,4 +425,15 @@ def test_package_defs_have_a_non_test_caller():
     assert unkept == [], unkept
     stale = sorted(k for k in _TEST_ONLY_KEEP if k not in dead
                    and not any(q.startswith(f"{k}.") for q in dead))
+    assert stale == [], stale
+
+
+def test_keyword_switches_have_a_non_test_caller():
+    """A bool/str/None-defaulted keyword parameter that only tests set
+    keeps a second code path no user reaches: delete it with its
+    branch, or state in ``_TEST_ONLY_SWITCH_KEEP`` why it stays."""
+    found = _test_only_switches(_REPO)
+    unkept = sorted(set(found) - set(_TEST_ONLY_SWITCH_KEEP))
+    assert unkept == [], unkept
+    stale = sorted(set(_TEST_ONLY_SWITCH_KEEP) - set(found))
     assert stale == [], stale

@@ -174,7 +174,7 @@ def test_auc_score_by_dominant_group_grouped_prefix_sum(spark):
     from test_plans import plan_of, single_partition_window_sites
 
     from dump1090_db_stream_spark.operators.evaluation import auc_score_by
-    from dump1090_db_stream_spark.plans.audit import (
+    from plan_audit import (
         grouped_continuous_window_funnels,
     )
 

@@ -124,7 +124,7 @@ def test_ieee754_le_hex_matches_struct_pack(spark):
 
 def test_wkb_point_and_line_decode(spark):
     """Emitted WKB parses back byte-for-byte: header, type, count, and
-    coordinates — both plain WKB and the EWKB srid variant."""
+    coordinates."""
     import struct
 
     from dump1090_db_stream_spark.operators.geo import (
@@ -138,17 +138,11 @@ def test_wkb_point_and_line_decode(spark):
     pts = df.select(
         "lon", "lat",
         st_asbinary_point(xy).alias("wkb"),
-        st_asbinary_point(xy, srid=4326).alias("ewkb"),
     ).collect()
     for r in pts:
         b = bytes(r["wkb"])
         assert b[0] == 1 and struct.unpack("<I", b[1:5])[0] == 1
         assert struct.unpack("<dd", b[5:21]) == (r["lon"], r["lat"])
-        eb = bytes(r["ewkb"])
-        t = struct.unpack("<I", eb[1:5])[0]
-        assert t == (1 | 0x20000000)
-        assert struct.unpack("<I", eb[5:9])[0] == 4326
-        assert struct.unpack("<dd", eb[9:25]) == (r["lon"], r["lat"])
 
     line = (df.agg(F.array_sort(F.collect_list(
                 F.struct(F.col("lon").alias("x"), F.col("lat").alias("y"))))

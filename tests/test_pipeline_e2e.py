@@ -10,15 +10,31 @@ from pyspark.sql import functions as F
 
 from dump1090_db_stream_spark.operators.cleaning import (
     normalize_text,
-    repetition_filter,
+    repetition_stats,
     scrub_pii,
 )
-from dump1090_db_stream_spark.operators.dedup import exact_dedup
 from dump1090_db_stream_spark.operators.packing import pack_sequences
 from dump1090_db_stream_spark.operators.sampling import (
     hash_split,
     mixture_sample,
 )
+from dump1090_db_stream_spark.operators.text import content_hash
+
+
+def _drop_repetitive(df, max_top_frac, max_dup_frac=0.9):
+    """Keep documents under the repetition thresholds: a semi-join on
+    the (small) per-doc repetition_stats relation keeps df's schema."""
+    keep = repetition_stats(df).filter(
+        (F.col("top_frac") <= max_top_frac)
+        & (F.col("dup_frac") <= max_dup_frac)).select("doc_id")
+    return df.join(F.broadcast(keep), "doc_id", "left_semi")
+
+
+def _keep_first_copy(df):
+    """Exact dedup: the lowest doc_id per content hash survives."""
+    first = (df.groupBy(content_hash(F.col("text")).alias("_h"))
+             .agg(F.min("doc_id").alias("doc_id")))
+    return df.join(first.select("doc_id"), "doc_id", "left_semi")
 
 
 @pytest.fixture(scope="module")
@@ -42,10 +58,8 @@ def test_full_pipeline_composes_and_is_deterministic(raw_corpus):
         clean = df.select(
             "doc_id", "source",
             scrub_pii(normalize_text(F.col("text"))).alias("text"))
-        kept = repetition_filter(clean, max_top_frac=0.3)
-        deduped = kept.join(
-            exact_dedup(kept).select("doc_id"), "doc_id", "left_semi")
-        split = hash_split(deduped, "doc_id")
+        kept = _drop_repetitive(clean, max_top_frac=0.3)
+        split = hash_split(_keep_first_copy(kept), "doc_id")
         train = split.filter(F.col("split") == "train")
         mixed = mixture_sample(
             train, {"src0": 1.0, "src1": 0.5}, default_weight=0.25,
@@ -79,13 +93,9 @@ def test_full_pipeline_single_job_plan(raw_corpus):
     # the chained pipeline stays one lazy plan: no collect/driver hop
     # between stages, and the only wide stages are the documented ones
     # (repetition agg, dedup groupBy, packing window)
-    from dump1090_db_stream_spark.operators.cleaning import (
-        repetition_filter,
-    )
-
     clean = raw_corpus.select(
         "doc_id", "source",
         scrub_pii(normalize_text(F.col("text"))).alias("text"))
-    kept = repetition_filter(clean, max_top_frac=0.3)
+    kept = _drop_repetitive(clean, max_top_frac=0.3)
     plan = kept._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan    # zero Python in the chain

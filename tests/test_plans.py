@@ -710,7 +710,7 @@ def test_continuous_key_gate_catches_non_reducing_aggregate(spark, sf):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from dump1090_db_stream_spark.plans.audit import (
+    from plan_audit import (
         continuous_key_global_windows,
     )
 
@@ -760,7 +760,7 @@ def test_grouped_funnel_gate_catches_pre_r9_auc_score_by_shape(spark, sf):
     from pyspark.sql import functions as F
 
     from dump1090_db_stream_spark.operators.evaluation import auc_score_by
-    from dump1090_db_stream_spark.plans.audit import (
+    from plan_audit import (
         continuous_key_global_windows,
         grouped_continuous_window_funnels,
     )

@@ -1,6 +1,7 @@
 """Direct contracts of operators.prefix_sum.distributed_prev_counts_multi:
-exactness against plain global windows, the r10 grouped-vocabulary
-runtime guard and the NaN exclusion the
+exactness against plain global windows, the join it picks from the
+group count (broadcast within the budget, plain equi-joins above it)
+and the NaN exclusion the
 prefix-sum's monotone bucketing requires of its callers (r9 ADVICE:
 ``NaN >= bound`` is false so NaN rows land in bucket 0, but the
 within-bucket window sorts NaN LAST — their _prev would count only
@@ -9,6 +10,7 @@ bucket-0 rows)."""
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 import pytest
 
@@ -23,102 +25,114 @@ def _prev_counts(spark, rows, **kw):
                                          partition_cols=("g",), **kw)
 
 
-def test_vocabulary_guard_raises_on_unbounded_group_key(spark):
-    """A high-cardinality partition key must fail fast with routing
-    advice, not build a plan that broadcasts an unbounded bounds
-    relation (one ~64-double row per group) at scale."""
-    rows = [(f"domain_{i}", float(i % 97), 1) for i in range(300)]
-    with pytest.raises(ValueError) as ei:
-        _prev_counts(spark, rows, max_partition_groups=256).collect()
-    msg = str(ei.value)
-    assert "vocabulary guard" in msg
-    assert "300" in msg and "256" in msg
-    assert "BROADCAST" in msg
+@contextmanager
+def _equi_join_side():
+    """Shrink the broadcast budget to one group, so every grouped call
+    with two or more groups takes the equi-join side."""
+    from dump1090_db_stream_spark.operators import prefix_sum
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(prefix_sum, "_OFFSET_ROW_BUDGET", 1)
+        yield
+
+
+def _hints_broadcast(df) -> bool:
+    return "strategy=broadcast" in \
+        df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_vocabulary_guard_picks_equi_join_for_unbounded_group_key(spark):
+    """Above the budget — here 300 groups at n_range_buckets=4096,
+    where 2**20 // 4096 = 256 — the per-group bounds and offsets
+    attach through plain equi-joins instead of a broadcast, with the
+    same values as the broadcast side (64 buckets, same data) and the
+    plain global window."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    rows = [(f"domain_{i}", float(i % 97 + v), 1 + v)
+            for i in range(300) for v in range(3)]
+    wide = _prev_counts(spark, rows, n_range_buckets=4096,
+                        with_totals=True)
+    assert not _hints_broadcast(wide)
+    narrow = _prev_counts(spark, rows, with_totals=True)
+    assert _hints_broadcast(narrow)
+    got = {(r["g"], r["v"]): (r["_prevc"], r["_totalc"])
+           for r in wide.collect()}
+    assert got == {(r["g"], r["v"]): (r["_prevc"], r["_totalc"])
+                   for r in narrow.collect()}
+    rel = spark.createDataFrame(rows, ["g", "v", "c"])
+    w = Window.partitionBy("g").orderBy("v")
+    plain = rel.select(
+        "g", "v",
+        F.coalesce(F.sum("c").over(
+            w.rowsBetween(Window.unboundedPreceding, -1)),
+            F.lit(0)).alias("p"),
+        F.sum("c").over(Window.partitionBy("g")).alias("t"))
+    assert got == {(r["g"], r["v"]): (r["p"], r["t"])
+                   for r in plain.collect()}
 
 
 def test_vocabulary_guard_accounts_for_offsets_broadcast(spark):
     """r10 ADVICE: the grouped OFFSETS broadcast is groups x
     n_range_buckets rows — several times the bounds relation — so the
-    effective ceiling is min(max_partition_groups,
-    2**20 // n_range_buckets): a generous max_partition_groups does
-    NOT let a huge bucket count push the offsets broadcast past the
-    row budget."""
+    budget is min(65,536, 2**20 // n_range_buckets) groups: a huge
+    bucket count moves even a modest vocabulary to the equi-join
+    side."""
     rows = [(f"domain_{i}", float(i % 97), 1) for i in range(300)]
-    # 2**20 // 4096 = 256 < 300 groups -> raises even though
-    # max_partition_groups (default 65,536) allows 300
-    with pytest.raises(ValueError) as ei:
-        _prev_counts(spark, rows, n_range_buckets=4096).collect()
-    msg = str(ei.value)
-    assert "vocabulary guard" in msg
-    assert "300" in msg and "256" in msg and "4096" in msg
-    # same data under the default 64 buckets (ceiling 16,384) is fine
+    # 2**20 // 4096 = 256 < 300 groups
+    assert not _hints_broadcast(_prev_counts(spark, rows,
+                                             n_range_buckets=4096))
+    # 2**20 // 2048 = 512 >= 300 groups; default 64 buckets: 16,384
+    assert _hints_broadcast(_prev_counts(spark, rows,
+                                         n_range_buckets=2048))
     assert _prev_counts(spark, rows).count() == 300
 
 
-def test_vocabulary_guard_none_skips_probe(spark):
-    """max_partition_groups=None is the caller's I-know-my-vocabulary
-    opt-out: same 300-group input builds and computes fine."""
-    rows = [(f"domain_{i}", float(i % 97), 1) for i in range(300)]
-    out = _prev_counts(spark, rows, max_partition_groups=None)
-    assert out.count() == 300
-
-
 def test_shuffle_bounds_join_matches_broadcast_exactly(spark):
-    """bounds_join='shuffle' — the unbounded-vocabulary scale path the
-    guard routes to — is bit-identical to the broadcast default (the
-    decomposition does not depend on the join strategy), skips the
-    guard probe entirely, and its plan carries no broadcast HINT on
-    the grouped bounds or offsets (AQE may still choose a broadcast
-    join at runtime when a side turns out tiny — that is the point of
-    leaving the strategy to Catalyst)."""
+    """The equi-join side is bit-identical to the broadcast side (the
+    decomposition does not depend on the join strategy), and its plan
+    carries no broadcast HINT on the grouped bounds or offsets (AQE may
+    still choose a broadcast join at runtime when a side turns out
+    tiny — that is the point of leaving the strategy to Catalyst)."""
     import random
 
     rng = random.Random(10)
     rows = [(f"g{i % 7}", rng.random(), 1 + i % 3) for i in range(500)]
+    pinned = _prev_counts(spark, rows, with_totals=True)
     want = {(r["g"], r["v"]): (r["_prevc"], r["_totalc"])
-            for r in _prev_counts(spark, rows,
-                                  with_totals=True).collect()}
-    shuffled = _prev_counts(spark, rows, with_totals=True,
-                            bounds_join="shuffle",
-                            max_partition_groups=1)  # probe skipped
+            for r in pinned.collect()}
+    with _equi_join_side():
+        shuffled = _prev_counts(spark, rows, with_totals=True)
     got = {(r["g"], r["v"]): (r["_prevc"], r["_totalc"])
            for r in shuffled.collect()}
     assert got == want
-    optimized = shuffled._jdf.queryExecution().optimizedPlan().toString()
-    assert "strategy=broadcast" not in optimized
-    # the broadcast default DOES hint both grouped attaches
-    pinned = _prev_counts(spark, rows, with_totals=True,
-                          max_partition_groups=None)
-    assert "strategy=broadcast" in \
-        pinned._jdf.queryExecution().optimizedPlan().toString()
+    assert not _hints_broadcast(shuffled)
+    # within the budget both grouped attaches ARE hinted
+    assert _hints_broadcast(pinned)
 
 
 def test_shuffle_bounds_join_handles_unbounded_group_key(spark):
-    """A group cardinality far above any broadcast guard computes the
+    """A group cardinality far above the broadcast budget computes the
     exact per-group exclusive prefix sums through plain equi-joins."""
     rows = [(f"domain_{i}", float(v), 1)
             for i in range(2_000) for v in (1, 2)]
-    got = _prev_counts(spark, rows, bounds_join="shuffle")
+    with _equi_join_side():
+        got = _prev_counts(spark, rows)
+    assert not _hints_broadcast(got)
     assert got.count() == 4_000
     sample = {(r["g"], r["v"]): r["_prevc"] for r in
               got.filter(got.g == "domain_7").collect()}
     assert sample == {("domain_7", 1.0): 0, ("domain_7", 2.0): 1}
 
 
-def test_bounds_join_invalid_value_raises(spark):
-    rows = [("en", 1.0, 1)]
-    with pytest.raises(ValueError, match="bounds_join"):
-        _prev_counts(spark, rows, bounds_join="hash")
-
-
 def test_vocabulary_guard_passes_bounded_vocabulary(spark):
-    """Under the limit the guard is invisible — values match the
+    """Under the budget the choice is invisible — values match the
     closed-form exclusive prefix sum per group."""
     rows = [("en", 1.0, 2), ("en", 2.0, 3), ("en", 3.0, 5),
             ("de", 1.5, 7), ("de", 2.5, 11)]
     got = {(r["g"], r["v"]): r["_prevc"]
-           for r in _prev_counts(spark, rows,
-                                 max_partition_groups=16).collect()}
+           for r in _prev_counts(spark, rows).collect()}
     assert got == {("en", 1.0): 0, ("en", 2.0): 2, ("en", 3.0): 5,
                    ("de", 1.5): 0, ("de", 2.5): 7}
 
@@ -183,7 +197,8 @@ def test_multi_matches_plain_windows(spark):
     global-Window reference: exclusive running sums
     (``rowsBetween(unboundedPreceding, -1)``), group totals and
     ``lead`` per group. Covers grouped + ungrouped, ties (zero-filled
-    second count), degenerate n_range_buckets=1, and shuffle mode."""
+    second count), degenerate n_range_buckets=1, and the equi-join
+    side."""
     import random
 
     from pyspark.sql import Window
@@ -216,31 +231,29 @@ def test_multi_matches_plain_windows(spark):
                         F.sum(col).over(tot))],
                     F.lead("s").over(w)).collect()}
 
-    def _multi(pcols, nb, bj):
+    def _multi(pcols, nb):
         src = rel if pcols else rel.groupBy("s").agg(
             F.sum("ca").alias("ca"), F.sum("cb").alias("cb"))
         out = distributed_prev_counts_multi(
             src, "s", ("ca", "cb"), n_range_buckets=nb,
-            partition_cols=pcols, with_totals=True, with_next=True,
-            bounds_join=bj)
+            partition_cols=pcols, with_totals=True, with_next=True)
         return {tuple(r[p] for p in pcols) + (r["s"],):
                 [r["_prevca"], r["_totalca"],
                  r["_prevcb"], r["_totalcb"], r["_next"]]
                 for r in out.collect()}
 
-    for pcols, nb, bj in ((("g",), 64, "broadcast"),
-                          (("g",), 7, "broadcast"),
-                          (("g",), 1, "broadcast"),
-                          (("g",), 7, "shuffle"),
-                          ((), 64, "broadcast"),
-                          ((), 1, "broadcast")):
-        assert _multi(pcols, nb, bj) == _plain(pcols), (pcols, nb, bj)
+    for pcols, nb in ((("g",), 64), (("g",), 7), (("g",), 1),
+                      ((), 64), ((), 1)):
+        assert _multi(pcols, nb) == _plain(pcols), (pcols, nb)
+    with _equi_join_side():
+        for nb in (7, 1):
+            assert _multi(("g",), nb) == _plain(("g",)), nb
 
 
 def test_distributed_next_matches_plain_lead(spark):
     """``with_next`` adds ``_next``, the next distinct ``order_col``
     value in the group, equal to a plain global-Window ``lead`` at any
-    bucket count, ungrouped, and in shuffle mode."""
+    bucket count, ungrouped, and on the equi-join side."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -267,7 +280,7 @@ def test_distributed_next_matches_plain_lead(spark):
                _next(rel, partition_cols=("g",),
                      n_range_buckets=nb).collect()}
         assert got == expected, nb
-    # ungrouped + shuffle mode
+    # ungrouped + the equi-join side
     rel1 = rel.filter(F.col("g") == "g1").select("s", "c")
     exp1 = {r["s"]: r["_lead"] for r in
             rel1.withColumn("_lead",
@@ -275,9 +288,9 @@ def test_distributed_next_matches_plain_lead(spark):
             .collect()}
     got1 = {r["s"]: r["_next"] for r in _next(rel1).collect()}
     assert got1 == exp1
-    gots = {(r["g"], r["s"]): r["_next"] for r in
-            _next(rel, partition_cols=("g",),
-                  bounds_join="shuffle").collect()}
+    with _equi_join_side():
+        gots = {(r["g"], r["s"]): r["_next"] for r in
+                _next(rel, partition_cols=("g",)).collect()}
     assert gots == expected
 
 
@@ -287,8 +300,8 @@ def test_multi_matches_single_passes(spark):
     separate neighbor pass) re-joined on (group, order): same
     bucketing, same integer window sums, only the number of columns
     riding each stage differs. Covers grouped + ungrouped, ties
-    (zero-filled second count), degenerate n_range_buckets=1, and
-    shuffle mode."""
+    (zero-filled second count), degenerate n_range_buckets=1, and the
+    equi-join side."""
     import random
 
     from pyspark.sql import functions as F
@@ -305,60 +318,59 @@ def test_multi_matches_single_passes(spark):
            .groupBy("g", "s")
            .agg(F.sum("ca").alias("ca"), F.sum("cb").alias("cb")))
 
-    def _pass(pcols, nb, bj, cols, with_next=False):
+    def _pass(pcols, nb, cols, with_next=False):
         return distributed_prev_counts_multi(
             rel, "s", cols, n_range_buckets=nb, partition_cols=pcols,
-            with_totals=True, with_next=with_next,
-            bounds_join=bj).collect()
+            with_totals=True, with_next=with_next).collect()
 
-    def _single(pcols, nb, bj):
+    def _single(pcols, nb):
         keyed = {}
-        for r in _pass(pcols, nb, bj, ("ca",)):
+        for r in _pass(pcols, nb, ("ca",)):
             k = tuple(r[p] for p in pcols) + (r["s"],)
             keyed[k] = [r["_prevca"], r["_totalca"], None, None, None]
-        for r in _pass(pcols, nb, bj, ("cb",)):
+        for r in _pass(pcols, nb, ("cb",)):
             k = tuple(r[p] for p in pcols) + (r["s"],)
             keyed[k][2:4] = [r["_prevcb"], r["_totalcb"]]
-        for r in _pass(pcols, nb, bj, ("ca",), with_next=True):
+        for r in _pass(pcols, nb, ("ca",), with_next=True):
             k = tuple(r[p] for p in pcols) + (r["s"],)
             keyed[k][4] = r["_next"]
         return keyed
 
-    def _multi(pcols, nb, bj):
+    def _multi(pcols, nb):
         return {tuple(r[p] for p in pcols) + (r["s"],):
                 [r["_prevca"], r["_totalca"],
                  r["_prevcb"], r["_totalcb"], r["_next"]]
-                for r in _pass(pcols, nb, bj, ("ca", "cb"),
-                               with_next=True)}
+                for r in _pass(pcols, nb, ("ca", "cb"), with_next=True)}
 
-    for pcols, nb, bj in ((("g",), 64, "broadcast"),
-                          (("g",), 1, "broadcast"),
-                          (("g",), 7, "shuffle"),
-                          ((), 64, "broadcast"),
-                          ((), 1, "broadcast")):
-        assert _multi(pcols, nb, bj) == _single(pcols, nb, bj), \
-            (pcols, nb, bj)
+    for pcols, nb in ((("g",), 64), (("g",), 1), ((), 64), ((), 1)):
+        assert _multi(pcols, nb) == _single(pcols, nb), (pcols, nb)
+    with _equi_join_side():
+        assert _multi(("g",), 7) == _single(("g",), 7)
 
 
 def test_multi_vocabulary_guard_and_validation(spark):
-    """The pass guards its grouped broadcasts (including the
-    degenerate one-bucket branch with no totals), and validates its
-    arguments."""
+    """Above the budget the pass takes the equi-join side everywhere
+    it would broadcast — including the degenerate one-bucket branch
+    with no totals, where only the offsets relation is grouped — with
+    unchanged values; and it validates its arguments."""
     from dump1090_db_stream_spark.operators.prefix_sum import (
         distributed_prev_counts_multi,
     )
 
     rows = [(f"domain_{i}", float(i % 97), 1, 1) for i in range(300)]
     rel = spark.createDataFrame(rows, ["g", "s", "ca", "cb"])
+
+    def _pass(nb, tot):
+        return distributed_prev_counts_multi(
+            rel, "s", ("ca", "cb"), n_range_buckets=nb,
+            partition_cols=("g",), with_totals=tot)
+
     for nb, tot in ((64, True), (1, False)):
-        with pytest.raises(ValueError, match="vocabulary guard"):
-            distributed_prev_counts_multi(
-                rel, "s", ("ca", "cb"), n_range_buckets=nb,
-                partition_cols=("g",), with_totals=tot,
-                max_partition_groups=256).collect()
-    with pytest.raises(ValueError, match="bounds_join"):
-        distributed_prev_counts_multi(rel, "s", ("ca",),
-                                      bounds_join="hash")
+        want = sorted(map(tuple, _pass(nb, tot).collect()))
+        with _equi_join_side():
+            out = _pass(nb, tot)
+        assert not _hints_broadcast(out)
+        assert sorted(map(tuple, out.collect())) == want
     with pytest.raises(ValueError, match="cnt_cols"):
         distributed_prev_counts_multi(rel, "s", ())
     with pytest.raises(ValueError, match="n_range_buckets"):
@@ -367,38 +379,33 @@ def test_multi_vocabulary_guard_and_validation(spark):
 
 
 def test_distributed_next_vocabulary_guard(spark):
-    """With ``with_next`` the grouped broadcast mode broadcasts the
-    per-group bounds row AND the groups x buckets nxt_bucket stitch
-    relation, so the neighbor pass is guarded too — including in the
-    degenerate n_range_buckets=1 branch where no bounds join exists
-    but nxt_bucket still broadcasts. shuffle mode and
-    max_partition_groups=None skip the probe."""
+    """With ``with_next`` the offsets relation also carries the
+    groups x buckets stitch values, so the neighbor pass follows the
+    same budget: 300 groups at n_range_buckets=4096 (2**20 // 4096 =
+    256) and the degenerate n_range_buckets=1 branch above a shrunk
+    budget take the equi-join side with the plain ``lead`` values."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     from dump1090_db_stream_spark.operators.prefix_sum import (
         distributed_prev_counts_multi,
     )
 
     def _next(rel, **kw):
-        return distributed_prev_counts_multi(rel, "s", ("c",),
-                                             with_next=True, **kw)
+        return distributed_prev_counts_multi(
+            rel, "s", ("c",), partition_cols=("g",), with_next=True, **kw)
 
-    rows = [(f"domain_{i}", float(i % 97), 1) for i in range(300)]
+    rows = [(f"domain_{i}", float(i % 97 + v), 1)
+            for i in range(300) for v in range(2)]
     rel = spark.createDataFrame(rows, "g string, s double, c long")
-    for nb in (1, 64):
-        with pytest.raises(ValueError) as ei:
-            _next(rel, partition_cols=("g",), n_range_buckets=nb,
-                  max_partition_groups=256).collect()
-        msg = str(ei.value)
-        assert "vocabulary guard" in msg
-        assert "300" in msg and "256" in msg
-    # the offsets-row-budget ceiling applies too: 2**20 // 4096 = 256
-    with pytest.raises(ValueError) as ei:
-        _next(rel, partition_cols=("g",), n_range_buckets=4096).collect()
-    assert "4096" in str(ei.value)
-    # escape hatches: shuffle mode, explicit None, default ceiling
-    assert _next(rel, partition_cols=("g",), bounds_join="shuffle",
-                 max_partition_groups=256).count() == 300
-    assert _next(rel, partition_cols=("g",),
-                 max_partition_groups=None).count() == 300
-    assert _next(rel, partition_cols=("g",)).count() == 300
-    with pytest.raises(ValueError):
-        _next(rel, bounds_join="zip")
+    want = {(r["g"], r["s"]): r["_lead"] for r in rel.withColumn(
+        "_lead", F.lead("s").over(Window.partitionBy("g").orderBy("s")))
+        .collect()}
+    wide = _next(rel, n_range_buckets=4096)
+    with _equi_join_side():
+        one = _next(rel, n_range_buckets=1)
+    for out in (wide, one):
+        assert not _hints_broadcast(out)
+        assert {(r["g"], r["s"]): r["_next"]
+                for r in out.collect()} == want
+    assert _hints_broadcast(_next(rel))

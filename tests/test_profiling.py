@@ -303,7 +303,8 @@ def test_exact_quantiles_global_nulls_and_guards(spark):
         exact_quantiles_by(df, "v", probs=[1.5])
 
 
-def test_exact_quantiles_modes_bit_identical(spark):
+def test_exact_quantiles_modes_bit_identical(spark, monkeypatch):
+    from dump1090_db_stream_spark.operators import prefix_sum
     from dump1090_db_stream_spark.operators.profiling import (
         exact_quantiles_by,
     )
@@ -314,6 +315,7 @@ def test_exact_quantiles_modes_bit_identical(spark):
         .orderBy("g", "prob").collect()
     assert exact_quantiles_by(df, "v", keys=["g"], n_range_buckets=1) \
         .orderBy("g", "prob").collect() == base
-    assert exact_quantiles_by(df, "v", keys=["g"],
-                              bounds_join="shuffle") \
+    # a one-group budget: bounds and offsets attach by equi-join
+    monkeypatch.setattr(prefix_sum, "_OFFSET_ROW_BUDGET", 1)
+    assert exact_quantiles_by(df, "v", keys=["g"]) \
         .orderBy("g", "prob").collect() == base

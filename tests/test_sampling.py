@@ -116,12 +116,11 @@ def test_time_rollup_levels_consistent(spark):
 
 
 def test_time_rollup_scans_raw_once(spark):
-    """materialize=True: every branch of the union except the finest
-    reads a cached level (InMemoryTableScan), so the raw table is
-    scanned once at execution. (The plan STRING still prints each cached
-    relation's recipe incl. its FileScan — the probe is the cache nodes,
-    not scan-string counts.) Without materialization there is no cache
-    node anywhere: three full-lineage replays.
+    """Every branch of the union except the finest reads a cached level
+    (InMemoryTableScan), so the raw table is scanned once at execution.
+    (The plan STRING still prints each cached relation's recipe incl.
+    its FileScan — the probe is the cache nodes, not scan-string
+    counts.)
 
     Runs with AQE on, as production does: the plan strings below are
     AQE's initial plan, which prints every branch's scan (the static
@@ -132,11 +131,6 @@ def test_time_rollup_scans_raw_once(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try:
         ev = _events(spark)
-        naive = time_rollup(ev, ts="ts", keys=["event_type"],
-                            value="value", materialize=False)
-        nplan = naive._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" not in nplan
-        assert nplan.count("FileScan parquet") == 3
         out = time_rollup(ev, ts="ts", keys=["event_type"], value="value")
         plan = out._jdf.queryExecution().executedPlan().toString()
     finally:

@@ -150,112 +150,133 @@ def test_ivf_topk_full_probe_equals_brute_force(spark, corpus):
     assert exact == full  # probing every cluster == exact search
 
 
-def test_embedding_neardup_arrow_score_same_pairs(spark):
-    from pyspark.sql import functions as F
+def _hof_signature(vec, dim, n_planes, seed):
+    """Reference signature as native higher-order functions: bit p set
+    iff the left-to-right double dot of ``vec`` with plane p (the
+    ``_hyperplane`` LCG, seed ``seed * 1000 + p``) is >= 0 — the same
+    summation order as the DuckDB oracle's ``list_sum``."""
+    from dump1090_db_stream_spark.operators.similarity import _hyperplane, dot
 
-    from dump1090_db_stream_spark.operators.similarity import (
-        embedding_neardup_pairs,
-    )
-    from dump1090_db_stream_spark.sources.tables import load_table
-
-    emb = load_table(
-        spark, "/root/testdata/sf0.001", "embeddings"
-    ).select("vec_id", "embedding")
-    pert = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding",
-                    lambda x, i: F.when(i == 0, (x.cast("double") + 0.05)
-                                        .cast("float")).otherwise(x))
-        .alias("embedding"))
-    corpus = emb.union(pert)
-    jvm = {(r["id_a"], r["id_b"]) for r in embedding_neardup_pairs(
-        corpus, dim=64, threshold=0.99, n_planes=10, n_tables=8).collect()}
-    fast = {(r["id_a"], r["id_b"]) for r in embedding_neardup_pairs(
-        corpus, dim=64, threshold=0.99, n_planes=10, n_tables=8,
-        arrow_score=True).collect()}
-    assert jvm == fast and len(jvm) > 0
+    planes = F.lit([_hyperplane(dim, seed * 1000 + p)
+                    for p in range(n_planes)])
+    weights = F.lit([1 << p for p in range(n_planes)])
+    return F.aggregate(
+        F.zip_with(planes, weights,
+                   lambda plane, w: F.when(dot(vec, plane) >= 0, w)
+                   .otherwise(F.lit(0))),
+        F.lit(0).cast("bigint"),
+        lambda acc, v: acc.bitwiseOR(v.cast("bigint")))
 
 
-def test_rh_signatures_arrow_equals_hof(spark):
-    """The numpy matmul signature kernel must produce EXACTLY the HOF
-    signatures (same planes, same bit packing) — table by table, bit by
-    bit — on the real testdata embeddings. Sign flips would need a dot
-    product within float ULPs of 0; this asserts none occur here."""
-    from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.operators.similarity import (
-        rh_signature,
-        rh_signatures_arrow,
-    )
-    from dump1090_db_stream_spark.sources.tables import load_table
-
-    emb = load_table(
-        spark, "/root/testdata/sf0.001", "embeddings"
-    ).select("vec_id", "embedding")
-    n_planes, n_tables, seed_base = 10, 8, 101
-    hof = emb.select(
+def _hof_signatures(df, dim, n_planes, n_tables, seed_base):
+    return df.select(
         F.col("vec_id").alias("id"),
         F.explode(F.array(*[
-            F.struct(
-                F.lit(t).cast("int").alias("tbl"),
-                rh_signature(F.col("embedding"), 64, n_planes,
-                             seed=seed_base + t).alias("sig"))
+            F.struct(F.lit(t).alias("tbl"),
+                     _hof_signature(F.col("embedding"), dim, n_planes,
+                                    seed_base + t).alias("sig"))
             for t in range(n_tables)])).alias("s"),
     ).select("id", "s.tbl", "s.sig")
-    arrow = rh_signatures_arrow(
-        emb, 64, n_planes, n_tables, seed_base=seed_base)
-    assert hof.exceptAll(arrow).count() == 0
-    assert arrow.exceptAll(hof).count() == 0
-    assert arrow.count() == emb.count() * n_tables
 
 
-def test_embedding_neardup_arrow_sig_same_pairs(spark):
-    from pyspark.sql import functions as F
-
-    from dump1090_db_stream_spark.operators.similarity import (
-        embedding_neardup_pairs,
-    )
+def _perturbed_embeddings(spark, sf_dir, max_id=None):
+    """The fixture embeddings plus a copy nudged by +0.05 on element 0
+    (ids + 100000): cosine ~0.9987 to its original."""
     from dump1090_db_stream_spark.sources.tables import load_table
 
-    emb = load_table(
-        spark, "/root/testdata/sf0.001", "embeddings"
-    ).select("vec_id", "embedding")
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding")
+    if max_id is not None:
+        emb = emb.filter(F.col("vec_id") < max_id)
     pert = emb.select(
         (F.col("vec_id") + 100000).alias("vec_id"),
         F.transform("embedding",
                     lambda x, i: F.when(i == 0, (x.cast("double") + 0.05)
                                         .cast("float")).otherwise(x))
         .alias("embedding"))
-    corpus = emb.union(pert)
-    hof = sorted(map(tuple, embedding_neardup_pairs(
+    return emb, emb.union(pert)
+
+
+def test_rh_signatures_arrow_equals_hof(spark, sf_dir):
+    """The numpy matmul signature kernel must produce EXACTLY the
+    reference signatures (same planes, same bit packing) — table by
+    table, bit by bit — on the real testdata embeddings. Sign flips
+    would need a dot product within float ULPs of 0; this asserts none
+    occur here."""
+    from dump1090_db_stream_spark.operators.similarity import (
+        rh_signatures_arrow,
+    )
+
+    emb, _ = _perturbed_embeddings(spark, sf_dir)
+    for n_planes, n_tables, seed_base in ((8, 6, 7), (10, 8, 101),
+                                          (10, 8, 211)):
+        hof = _hof_signatures(emb, 64, n_planes, n_tables, seed_base)
+        arrow = rh_signatures_arrow(
+            emb, 64, n_planes, n_tables, seed_base=seed_base)
+        assert hof.exceptAll(arrow).count() == 0
+        assert arrow.exceptAll(hof).count() == 0
+        assert arrow.count() == emb.count() * n_tables
+
+
+def test_embedding_neardup_arrow_sig_same_pairs(spark, sf_dir):
+    """The bucketed pairs equal the brute-force pair set (the registry
+    oracle's contract), cosines included."""
+    from dump1090_db_stream_spark.operators.similarity import (
+        embedding_neardup_pairs,
+        exact_cosine_pairs,
+    )
+
+    _, corpus = _perturbed_embeddings(spark, sf_dir, max_id=200)
+    got = sorted(map(tuple, embedding_neardup_pairs(
         corpus, dim=64, threshold=0.99, n_planes=10, n_tables=8).collect()))
-    fast = sorted(map(tuple, embedding_neardup_pairs(
-        corpus, dim=64, threshold=0.99, n_planes=10, n_tables=8,
-        arrow_sig=True).collect()))
-    assert hof == fast and len(hof) > 0
+    want = sorted(map(tuple, exact_cosine_pairs(
+        corpus, threshold=0.99).collect()))
+    assert got == want and len(got) >= 200
 
 
 def test_lsh_topk_arrow_sig_same_results(spark, corpus):
-    from pyspark.sql import functions as F
-
+    """lsh_topk equals a Python replay of its definition: candidates
+    share a reference signature in at least one table, and the exact
+    left-to-right cosine ranks them (ties by neighbor id)."""
     queries = corpus.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    hof = sorted(map(tuple, lsh_topk(
+    got = sorted(map(tuple, lsh_topk(
         corpus, queries, DIM, k=5, n_planes=8, n_tables=6).collect()))
-    fast = sorted(map(tuple, lsh_topk(
-        corpus, queries, DIM, k=5, n_planes=8, n_tables=6,
-        arrow_sig=True).collect()))
-    assert hof == fast and len(hof) > 0
+
+    sigs = {}
+    for r in _hof_signatures(corpus, DIM, 8, 6, 7).collect():
+        sigs.setdefault(r["id"], set()).add((r["tbl"], r["sig"]))
+    vecs = {r["vec_id"]: [float(x) for x in r["embedding"]]
+            for r in corpus.collect()}
+
+    def seq_dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    want = []
+    for q in range(8):
+        cands = [(seq_dot(vecs[q], v) / (math.sqrt(seq_dot(vecs[q], vecs[q]))
+                                         * math.sqrt(seq_dot(v, v))), n)
+                 for n, v in vecs.items() if n != q and sigs[n] & sigs[q]]
+        ranked = sorted(cands, key=lambda c: (-c[0], c[1]))[:5]
+        want += [(q, n, rank) for rank, (_, n) in enumerate(ranked, 1)]
+    assert [g[:3] for g in got] == sorted(want) and len(got) > 8
+    exact = {(q, n): c for q, n, _, c in got}
+    for q, n, _ in want:
+        c = seq_dot(vecs[q], vecs[n]) / (
+            math.sqrt(seq_dot(vecs[q], vecs[q]))
+            * math.sqrt(seq_dot(vecs[n], vecs[n])))
+        assert abs(exact[(q, n)] - c) <= 5e-7
 
 
 def test_arrow_sig_supports_string_ids(spark):
-    """The arrow signature kernel must not narrow the id contract: a
-    string-keyed corpus produces the same pairs as the HOF path."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
+    """The signature kernel must not narrow the id contract: a
+    string-keyed corpus produces the brute-force pair set."""
     from dump1090_db_stream_spark.operators.similarity import (
         embedding_neardup_pairs,
+        exact_cosine_pairs,
     )
 
     vecs = _vecs(20)
@@ -267,22 +288,21 @@ def test_arrow_sig_supports_string_ids(spark):
     df = spark.createDataFrame(
         [(f"doc-{i:03d}", [float(x) for x in v])
          for i, v in enumerate(vecs)], schema)
-    kw = dict(dim=DIM, threshold=0.99, n_planes=6, n_tables=4,
-              id_col="vec_id")
-    hof = sorted(map(tuple, embedding_neardup_pairs(df, **kw).collect()))
-    fast = sorted(map(tuple, embedding_neardup_pairs(
-        df, arrow_sig=True, **kw).collect()))
-    assert hof == fast and len(hof) > 0
+    got = sorted(map(tuple, embedding_neardup_pairs(
+        df, dim=DIM, threshold=0.99, n_planes=6, n_tables=4).collect()))
+    want = sorted(map(tuple, exact_cosine_pairs(
+        df, threshold=0.99).collect()))
+    assert got == want and ("doc-002", "doc-019") in {g[:2] for g in got}
 
 
 def test_embedding_cross_neardup_finds_planted_contamination(spark, corpus):
     """Cross-relation decontamination: benchmark items that are light
     perturbations of corpus vectors are all found; unrelated benchmark
-    items produce no pairs; HOF and arrow signature paths agree."""
-    from pyspark.sql import functions as F
-
+    items produce no pairs; the result is the brute-force cross pair
+    set."""
     from dump1090_db_stream_spark.operators.similarity import (
         embedding_cross_neardup,
+        exact_cosine_pairs,
     )
 
     bench = corpus.filter(F.col("vec_id") < 5).select(
@@ -291,13 +311,15 @@ def test_embedding_cross_neardup_finds_planted_contamination(spark, corpus):
                     lambda x, i: F.when(i == 0, (x.cast("double") + 0.001)
                                         .cast("float")).otherwise(x))
         .alias("embedding"))
-    kw = dict(dim=DIM, threshold=0.99, n_planes=8, n_tables=8)
-    hof = sorted(map(tuple, embedding_cross_neardup(
-        corpus, bench, **kw).collect()))
-    fast = sorted(map(tuple, embedding_cross_neardup(
-        corpus, bench, arrow_sig=True, **kw).collect()))
-    assert hof == fast
-    found = {(c, o) for c, o, _ in hof}
+    got = sorted(map(tuple, embedding_cross_neardup(
+        corpus, bench, dim=DIM, threshold=0.99, n_planes=8,
+        n_tables=8).collect()))
+    want = sorted(map(tuple, exact_cosine_pairs(
+        corpus.union(bench), threshold=0.99)
+        .filter((F.col("id_a") < 1000) & (F.col("id_b") >= 1000))
+        .collect()))
+    assert got == want
+    found = {(c, o) for c, o, _ in got}
     assert {(i, i + 1000) for i in range(5)} <= found
 
 
@@ -429,8 +451,7 @@ def test_ivfpq_index_search_equals_inline_and_prunes(spark, tmp_path):
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding")
     inline = ivf_pq_topk(emb, q, fixed, books, k=10, n_probes=2)
-    from_idx = ivfpq_topk_from_index(spark, path, q, fixed, books,
-                                     k=10, n_probes=2)
+    from_idx = ivfpq_topk_from_index(spark, path, q, k=10, n_probes=2)
     assert sorted(map(tuple, inline.collect())) == \
         sorted(map(tuple, from_idx.collect()))
 

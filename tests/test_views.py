@@ -123,9 +123,8 @@ def test_catalog_table_answers_the_views(spark, messages, tmp_path):
     write_parquet_store(messages.unionByName(next_day), store)
 
     def views(df):
-        register_views(spark, df, prefix="cat_")
-        return {v: sorted(map(tuple, spark.table(f"cat_{v}").collect()),
-                          key=repr)
+        register_views(spark, df)
+        return {v: sorted(map(tuple, spark.table(v).collect()), key=repr)
                 for v in ("callsigns", "locations", "flights")}
 
     spark.sql("DROP VIEW IF EXISTS adsb.adsb_messages")

@@ -1,34 +1,12 @@
-"""operators.zorder — Morton keys and the data-skipping property.
-
-The z-value arithmetic is checked against an independent pure-Python
-bit-interleave; the LAYOUT is checked by the property it exists for:
-per-file bounding boxes from a z-ordered write intersect a query
-rectangle far less than a single-column-sorted write does on the
-non-sorted dimension.
-"""
+"""operators.zorder — Morton keys, checked against an independent
+pure-Python bit-interleave."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
-from pyspark.sql import functions as F
-
 from dump1090_db_stream_spark.operators.zorder import (
-    file_minmax,
     quantize_uniform,
-    zorder_write,
     zvalue,
 )
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _events(spark):
-    df = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    if dict(df.dtypes)["ts"] == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
 
 
 def ref_morton(vals: list[int], bits: int) -> int:
@@ -69,67 +47,3 @@ def test_quantize_clamps_and_buckets(spark):
     assert out[3] == 15 and out[4] == 15 and out[5] == 15  # clamp high
     # monotone: higher value never gets a lower bucket
     assert out == sorted(out)
-
-
-def _intersect_frac(stats_rows, col_a, lo_a, hi_a, col_b, lo_b, hi_b):
-    n_hit = sum(
-        1 for r in stats_rows
-        if r[f"min_{col_a}"] <= hi_a and r[f"max_{col_a}"] >= lo_a
-        and r[f"min_{col_b}"] <= hi_b and r[f"max_{col_b}"] >= lo_b)
-    return n_hit / len(stats_rows)
-
-
-def test_zorder_layout_skips_on_the_second_dimension(spark):
-    """A value-only rectangle: files sorted by user_id ALL span the
-    full value range (no skipping possible on value), while the
-    z-ordered layout keeps per-file value ranges narrow — the
-    bounding-box audit must show a materially lower hit fraction."""
-    ev = _events(spark).select("event_id", "user_id", "value").filter(
-        F.col("value").isNotNull())
-    # bounds matched to the sf0.001 domain (users 0-14, values < ~350)
-    key = zvalue([quantize_uniform("user_id", 0, 15, 8),
-                  quantize_uniform("value", 0, 350, 8)], bits=8)
-    d = tempfile.mkdtemp(prefix="zorder_")
-    try:
-        zorder_write(ev, d + "/z", key, n_files=16)
-        # baseline: same target file count, single-column clustering
-        # (the range partitioner may leave a couple of ranges empty on
-        # 15 distinct users — the audit is per-file fractions)
-        (ev.repartitionByRange(16, "user_id")
-         .sortWithinPartitions("user_id")
-         .write.mode("overwrite").parquet(d + "/s"))
-        zs = file_minmax(spark, d + "/z", ["user_id", "value"]).collect()
-        ss = file_minmax(spark, d + "/s", ["user_id", "value"]).collect()
-        assert len(zs) == 16 and len(ss) >= 12
-        # narrow value band, all users: the user-sorted layout cannot
-        # skip anything (every user has rows across the band's
-        # neighborhood), the z layout reads a minority of files
-        z_frac = _intersect_frac(zs, "user_id", 0, 15,
-                                 "value", 100.0, 160.0)
-        s_frac = _intersect_frac(ss, "user_id", 0, 15,
-                                 "value", 100.0, 160.0)
-        assert s_frac == 1.0          # single-sort cannot skip on value
-        assert z_frac <= 0.5          # z-order skips at least half
-        # (measured on this fixture: z 5/16 vs sorted 14/14.  A
-        # user-selective rectangle is the single-sort layout's best
-        # case and z-order legitimately cedes some of it — the trade
-        # is pruning on ALL dimensions, not beating a dedicated sort
-        # on its own column.)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_zorder_write_preserves_rows(spark):
-    ev = _events(spark).select("event_id", "user_id", "value")
-    key = zvalue([quantize_uniform("user_id", 0, 150, 8),
-                  quantize_uniform("value", 0, 500, 8)], bits=8)
-    d = tempfile.mkdtemp(prefix="zorder_rows_")
-    try:
-        zorder_write(ev, d + "/z", key, n_files=8)
-        back = spark.read.parquet(d + "/z")
-        assert back.count() == ev.count()
-        assert sorted(back.columns) == sorted(ev.columns)  # key not stored
-        assert back.select("event_id").exceptAll(
-            ev.select("event_id")).count() == 0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
