@@ -10,9 +10,10 @@ Scale notes:
   output cardinality = distinct (key, label, day), typically orders of
   magnitude below the input.
 - ``band_join`` is an equi-join on the session key with the time band as
-  a residual predicate. The session side is aggregated and therefore small
-  → AQE broadcasts it; no shuffle of the big side beyond what the equi key
-  needs. Never a nested-loop: the equi key always anchors the join.
+  a residual predicate; the planner broadcasts whichever side its size
+  estimate finds small (``views.flights`` measured both ways), else it
+  shuffles both on the equi key. Never a nested-loop: the equi key
+  always anchors the join.
 """
 
 from __future__ import annotations

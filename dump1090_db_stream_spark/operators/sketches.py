@@ -316,7 +316,6 @@ def trailing_distinct_estimate(
     window_days: int = 7,
     rate: int = 64,
     est_col: str = "est_active",
-    materialize: bool = True,
 ) -> DataFrame:
     """Sketch-tier trailing distinct actives — the 100 TB companion to
     ``journeys.trailing_active_users`` (which is exact and shuffles
@@ -344,8 +343,7 @@ def trailing_distinct_estimate(
     """
     samples = daily_hash_samples(df, ts, [], distinct_col, rate=rate)
     return trailing_estimate_from_samples(
-        samples, window_days=window_days, rate=rate, est_col=est_col,
-        materialize=materialize)
+        samples, window_days=window_days, rate=rate, est_col=est_col)
 
 
 def trailing_estimate_from_samples(
@@ -355,7 +353,6 @@ def trailing_estimate_from_samples(
     day_col: str = "day",
     sample_col: str = "hash_sample",
     est_col: str = "est_active",
-    materialize: bool = True,
 ) -> DataFrame:
     """Trailing estimate straight from a STORED (possibly append-only
     duplicated) sample relation: the
@@ -364,14 +361,14 @@ def trailing_estimate_from_samples(
     Duplicate day-partial rows are harmless: the per-window
     count_distinct reads through them unchanged.
 
-    ``materialize`` (default True) caches the day-sample relation
-    because it feeds BOTH the span max-aggregate and the vote explode;
-    Catalyst has no cross-branch reuse, so without the barrier the
-    sample pipeline (through trailing_distinct_estimate: the full raw
-    scan + day shuffle) would run once per branch. Pass False for
-    streaming inputs (persist is illegal there) or when the caller
-    materializes upstream; caller releases via cache.release_tracked.
+    The day-sample relation is cached (``cache.track``) because it
+    feeds BOTH the span max-aggregate and the vote explode; Catalyst
+    has no cross-branch reuse, so without the barrier the sample
+    pipeline (through trailing_distinct_estimate: the full raw scan +
+    day shuffle) would run once per branch. Batch inputs only (persist
+    is illegal on a stream); caller releases via cache.release_tracked.
     """
+    from dump1090_db_stream_spark.cache import track
     from dump1090_db_stream_spark.operators.timeseries import epoch_bucket
 
     if window_days < 1:
@@ -379,11 +376,7 @@ def trailing_estimate_from_samples(
         # zero/negative window would silently vote BACKWARD in time
         raise ValueError(f"window_days must be >= 1, got {window_days}")
     d = epoch_bucket(F.col(day_col), 86400)
-    days = samples.select(d.alias("_d"), F.col(sample_col).alias("_s"))
-    if materialize:
-        from dump1090_db_stream_spark.cache import track
-
-        days = track(days)
+    days = track(samples.select(d.alias("_d"), F.col(sample_col).alias("_s")))
     hi = days.agg(F.max("_d").alias("_hi"))
     # one generator per select: days fan out to windows first, then the
     # (never-empty — sampled-only days have rows) array unnests

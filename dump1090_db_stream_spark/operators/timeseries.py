@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dump1090_db_stream_spark.cache import track
+
 MICROS_PER_SEC = 1_000_000
 
 
@@ -111,7 +113,6 @@ def gap_fill(
     keys: list[str] | None = None,
     value_col: str = "value",
     bucket_seconds: int = 3600,
-    materialize: bool = True,
 ) -> DataFrame:
     """Dense time grid per key with gap statistics, LOCF, and linear
     interpolation (the continuous-aggregate companion to ``time_rollup``;
@@ -136,8 +137,8 @@ def gap_fill(
     on aggregate-sized data — a per-key min/max agg, a ``sequence``
     explode generating span/bucket rows per key (no Python, no driver
     loop), one equi join grid<-buckets, and one window pass per key for
-    the ignore-nulls LOCF/interp frames. ``materialize`` (default True)
-    caches the bucket aggregate because it feeds BOTH the span agg and
+    the ignore-nulls LOCF/interp frames. The bucket aggregate is cached
+    (``cache.track``) because it feeds BOTH the span agg and
     the grid join — without the barrier Catalyst replays the raw scan +
     shuffle per branch (no cross-branch reuse); the cache is
     aggregate-sized and the caller releases it (cache.release_tracked),
@@ -153,20 +154,11 @@ def gap_fill(
     """
     keys = keys or []
     idx = epoch_bucket(F.col(ts_col), bucket_seconds)
-    buckets = (
+    buckets = track(
         df.groupBy(*keys, idx.alias("_b"))
         .agg(F.count(F.lit(1)).alias("n_obs"),
              F.avg(value_col).alias("_avg"))
     )
-    if materialize:
-        # buckets feeds BOTH the span aggregate (grid bounds) and the
-        # grid join; Catalyst has no cross-branch reuse, so without a
-        # barrier the full-size raw scan + shuffle would run twice
-        # (same contract as rollup.time_rollup: aggregate-sized cache,
-        # caller releases via cache.release_tracked)
-        from dump1090_db_stream_spark.cache import track
-
-        buckets = track(buckets)
     grid = (
         buckets.groupBy(*keys)
         .agg(F.min("_b").alias("_lo"), F.max("_b").alias("_hi"))

@@ -4,19 +4,38 @@ Reference: ``create_schema.sql:85-93`` (callsigns), ``:101-108`` (locations),
 ``:116-124`` (flights). Each builder takes the messages DataFrame and
 returns the view; ``register_views`` exposes them to ``spark.sql`` so both
 the DataFrame and SQL surfaces work (reference entry point 2,
-README.md:180-273).
+README.md:180-273). callsigns and flights are the ADS-B instances of the
+generic ``sessions.daily_sessions`` and ``sessions.band_join``.
 
-Scale notes (100 TB design):
-- callsigns is a partial-aggregatable groupBy min/max — Catalyst does
-  map-side combine automatically; the shuffle carries only
-  (callsign, hex_ident, date) keys, tiny relative to the fact table.
-- locations is a narrow project+filter — pushed to the Parquet scan
-  (PushedFilters: IsNotNull(lat); ReadSchema: 5 of 23 cols).
-- flights joins positions against per-day callsign sessions on the equi key
-  hex_ident with the ±10 min band as join residual. The session side is an
-  aggregate (#sessions ≪ #messages) so AQE picks a broadcast hash join at
-  any realistic cardinality; hex_ident (~10^4-10^6 distinct airframes) has
-  no pathological skew. The DISTINCT dedups band-overlap multiplication.
+Session table. ``register_views`` caches the ``callsigns`` temp view
+(``spark.catalog.cacheTable``, lazy): the first query that reads it
+fills an in-memory table of the per-day sessions, which are far fewer
+rows than the store. From then on a callsign lookup and the view itself
+run one job over that table, and ``flights``, whose session side is the
+same ``callsigns(messages)`` plan, reads it instead of re-scanning and
+re-aggregating the store. ``locations`` and ``adsb_messages`` are not
+cached: their memory grows with the store. The temp view owns the
+cache: re-registering the views over other messages replaces and
+uncaches it, and ``spark.catalog.dropTempView("callsigns")`` frees it.
+
+Snapshot semantics. Over a parquet store, the views answer from the file
+listing taken when they were registered, cached or not: files copied
+into the store afterwards stay invisible until ``register_views`` runs
+again, and so do the streaming file sink's files. One exception comes
+with the cache: a Spark batch write to the store's path in the same
+session (``write_parquet_store``) runs Spark's ``recacheByPath``, which
+refreshes the shared file index, so all four views then see the new
+rows alike.
+
+Plans measured on a 100k-line store (the ``analyst_queries`` benchmark
+store, ``get_spark`` defaults, AQE on). Uncached, callsign_lookup runs
+2 jobs (3 stages: the store scan with partial aggregate, then the final
+aggregate after its Exchange) and flights 4 jobs, broadcasting the
+~33k position rows (``BuildLeft``) into a join with the freshly
+aggregated sessions. With the filled session table, callsign_lookup
+and the callsigns view run 1 job each, and flights runs 3 jobs: it
+broadcasts the in-memory session table (``BuildRight``) and scans the
+store once, for the positions.
 """
 
 from __future__ import annotations
@@ -24,28 +43,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dump1090_db_stream_spark.operators.sessions import band_join, daily_sessions
+
 
 def callsigns(messages: DataFrame) -> DataFrame:
-    """Per-day callsign sessions (create_schema.sql:85-93).
-
-    F-9 filter (callsign <> '', :92) + A-1/A-2 group by
-    (callsign, hex_ident, date of parsed_time) + A-3/A-4 max/min.
-    Post-normalization '' never occurs (parser F-7 maps '' -> NULL), so the
-    <> '' predicate is equivalently NOT NULL — both kept for fidelity.
-    """
-    return (
-        messages
-        .filter(F.col("callsign").isNotNull() & (F.col("callsign") != ""))
-        .groupBy(
-            "callsign",
-            "hex_ident",
-            F.col("parsed_time").cast("date").alias("date_seen"),
-        )
-        .agg(
-            F.max("parsed_time").alias("last_seen"),
-            F.min("parsed_time").alias("first_seen"),
-        )
-    )
+    """Per-day callsign sessions (create_schema.sql:85-93): F-9
+    non-empty callsign, A-1/A-2 group by (callsign, hex_ident, date of
+    parsed_time), A-3/A-4 max/min."""
+    return daily_sessions(
+        messages, key="hex_ident", label="callsign", ts="parsed_time",
+    ).select("callsign", "hex_ident", "date_seen", "last_seen", "first_seen")
 
 
 def locations(messages: DataFrame) -> DataFrame:
@@ -58,39 +65,23 @@ def locations(messages: DataFrame) -> DataFrame:
     )
 
 
-def flights(messages: DataFrame, band_minutes: int = 10) -> DataFrame:
+def flights(messages: DataFrame) -> DataFrame:
     """Flight reconstruction (create_schema.sql:116-124): J-1 inner
-    equi-join (hex_ident) + time-band residual (parsed_time within
-    [first_seen - band, last_seen + band]) + A-5 DISTINCT.
-
-    The equi key keeps this a hash/sort-merge join (never nested-loop);
-    the band predicates evaluate as residual filters on matched pairs.
-    """
-    loc = locations(messages)
-    cs = callsigns(messages)
-    band = F.expr(f"INTERVAL {band_minutes} MINUTES")
-    joined = loc.alias("l").join(
-        cs.alias("cs"),
-        (F.col("l.hex_ident") == F.col("cs.hex_ident"))
-        & (F.col("l.parsed_time") <= F.col("cs.last_seen") + band)
-        & (F.col("l.parsed_time") >= F.col("cs.first_seen") - band),
-        "inner",
-    )
-    return joined.select(
-        F.col("l.hex_ident").alias("hex_ident"),
-        F.col("l.parsed_time").alias("parsed_time"),
-        F.col("l.lon").alias("lon"),
-        F.col("l.lat").alias("lat"),
-        F.col("l.altitude").alias("altitude"),
-        F.col("cs.callsign").alias("callsign"),
-    ).distinct()
+    equi-join (hex_ident) + ±10 min time band as join residual + A-5
+    DISTINCT. The session side is exactly ``callsigns(messages)``, so a
+    cached callsigns view substitutes for it."""
+    return band_join(
+        locations(messages), callsigns(messages), key="hex_ident",
+        ts="parsed_time", session_cols=["callsign"])
 
 
 def register_views(spark: SparkSession, messages: DataFrame) -> None:
     """Register adsb_messages + the three views as temp views, enabling the
     reference's ad-hoc SQL surface verbatim (README.md:180-273) via
-    ``spark.sql`` (D-3, create_schema.sql:85,101,116)."""
+    ``spark.sql`` (D-3, create_schema.sql:85,101,116), and cache the
+    callsigns session table (filled by the first query that reads it)."""
     messages.createOrReplaceTempView("adsb_messages")
     callsigns(messages).createOrReplaceTempView("callsigns")
+    spark.catalog.cacheTable("callsigns")
     locations(messages).createOrReplaceTempView("locations")
     flights(messages).createOrReplaceTempView("flights")

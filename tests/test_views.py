@@ -30,6 +30,14 @@ def msg(**kw) -> Row:
     return Row(**{c: base[c] for c in ALL_COLUMNS})
 
 
+@pytest.fixture(autouse=True)
+def free_session_table(spark):
+    """register_views caches the callsigns view; drop it after each test
+    so no cache entry outlives the test in the shared session."""
+    yield
+    spark.catalog.dropTempView("callsigns")
+
+
 @pytest.fixture(scope="module")
 def messages(spark):
     rows = [
@@ -169,3 +177,109 @@ def test_catalog_table_sees_days_written_later(spark, messages, tmp_path):
         ).first()[0] == 2
     finally:
         spark.sql("DROP VIEW IF EXISTS adsb.adsb_messages")
+
+
+VIEWS = ("adsb_messages", "callsigns", "locations", "flights")
+
+
+@pytest.fixture
+def store_views(spark, messages, tmp_path):
+    """The views registered over a one-day parquet store."""
+    from dump1090_db_stream_spark.sinks.writers import (
+        read_parquet_store,
+        write_parquet_store,
+    )
+
+    store = str(tmp_path / "store")
+    write_parquet_store(messages, store)
+    register_views(spark, read_parquet_store(spark, store))
+    return store
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Class names of a physical plan's nodes, walking ``children()``
+    only: an in-memory scan's cached plan is an inner child, so the
+    scan and Exchange that filled the table are not counted."""
+    kids = plan.children()
+    return [plan.getClass().getSimpleName()] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))]
+
+
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def test_register_views_caches_the_session_table(spark, store_views):
+    assert spark.catalog.isCached("callsigns")
+    for v in ("adsb_messages", "locations", "flights"):
+        assert not spark.catalog.isCached(v)
+
+
+def test_filled_session_table_answers_lookup_and_flights(spark, store_views):
+    """callsign_lookup reads only the in-memory session table, and
+    flights scans the store once, for its position side."""
+    from dump1090_db_stream_spark.operators.adhoc import callsign_lookup
+
+    assert spark.table("callsigns").count() == 2  # fills the table
+    lookup = callsign_lookup(spark.table("callsigns"), "FDX", limit=None)
+    nodes = _plan_nodes(lookup._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScanExec" in nodes
+    assert "FileSourceScanExec" not in nodes
+    assert "ShuffleExchangeExec" not in nodes
+    assert [r.hex_ident for r in lookup.collect()] == ["ABC123"]
+
+    flights_df = spark.table("flights")
+    nodes = _plan_nodes(flights_df._jdf.queryExecution().executedPlan())
+    assert nodes.count("InMemoryTableScanExec") == 1
+    assert nodes.count("FileSourceScanExec") == 1
+    assert flights_df.count() == 2
+
+
+def test_session_table_is_owned_by_the_view(spark, messages, store_views):
+    """Re-registering keeps one cache entry, over the same messages or
+    other ones; dropping the view frees it."""
+    from dump1090_db_stream_spark.sinks.writers import read_parquet_store
+
+    spark.catalog.dropTempView("callsigns")
+    base = _cache_entries(spark)
+    register_views(spark, read_parquet_store(spark, store_views))
+    spark.table("callsigns").count()
+    assert _cache_entries(spark) == base + 1
+    register_views(spark, read_parquet_store(spark, store_views))
+    assert _cache_entries(spark) == base + 1
+    register_views(spark, messages)
+    assert _cache_entries(spark) == base + 1
+    assert spark.table("callsigns").count() == 2
+    spark.catalog.dropTempView("callsigns")
+    assert _cache_entries(spark) == base
+
+
+def test_views_snapshot_and_same_session_append(spark, messages,
+                                                store_views, tmp_path):
+    """Files copied into the store stay invisible to all four views; a
+    same-session write_parquet_store append refreshes the store's file
+    index (Spark's recacheByPath), so all four views see it alike,
+    copied files included."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from dump1090_db_stream_spark.sinks.writers import write_parquet_store
+
+    def counts():
+        return {v: spark.table(v).count() for v in VIEWS}
+
+    def shifted(days):
+        return messages.withColumn(
+            "parsed_time",
+            F.col("parsed_time") + F.expr(f"INTERVAL {days} DAYS"))
+
+    one_day = {"adsb_messages": 7, "callsigns": 2, "locations": 4,
+               "flights": 2}
+    assert counts() == one_day
+    other = str(tmp_path / "other")
+    write_parquet_store(shifted(1), other)
+    shutil.copytree(other, store_views, dirs_exist_ok=True)
+    assert counts() == one_day
+    write_parquet_store(shifted(2), store_views)
+    assert counts() == {v: 3 * n for v, n in one_day.items()}
