@@ -12,11 +12,11 @@ Session table. ``register_views`` caches the ``callsigns`` temp view
 fills an in-memory table of the per-day sessions, which are far fewer
 rows than the store. From then on a callsign lookup and the view itself
 run one job over that table, and ``flights``, whose session side is the
-same ``callsigns(messages)`` plan, reads it instead of re-scanning and
-re-aggregating the store. ``locations`` and ``adsb_messages`` are not
+same ``callsigns(messages)`` plan, reads it and scans the store only
+for its positions. ``locations`` and ``adsb_messages`` are not
 cached: their memory grows with the store. The temp view owns the
-cache: re-registering the views over other messages replaces and
-uncaches it, and ``spark.catalog.dropTempView("callsigns")`` frees it.
+cache: re-registering drops the old view, so the next query fills the
+table afresh, and ``spark.catalog.dropTempView("callsigns")`` frees it.
 
 Snapshot semantics. Over a parquet store, the views answer from the file
 listing taken when they were registered, cached or not: files copied
@@ -26,16 +26,6 @@ with the cache: a Spark batch write to the store's path in the same
 session (``write_parquet_store``) runs Spark's ``recacheByPath``, which
 refreshes the shared file index, so all four views then see the new
 rows alike.
-
-Plans measured on a 100k-line store (the ``analyst_queries`` benchmark
-store, ``get_spark`` defaults, AQE on). Uncached, callsign_lookup runs
-2 jobs (3 stages: the store scan with partial aggregate, then the final
-aggregate after its Exchange) and flights 4 jobs, broadcasting the
-~33k position rows (``BuildLeft``) into a join with the freshly
-aggregated sessions. With the filled session table, callsign_lookup
-and the callsigns view run 1 job each, and flights runs 3 jobs: it
-broadcasts the in-memory session table (``BuildRight``) and scans the
-store once, for the positions.
 """
 
 from __future__ import annotations
@@ -81,6 +71,9 @@ def register_views(spark: SparkSession, messages: DataFrame) -> None:
     ``spark.sql`` (D-3, create_schema.sql:85,101,116), and cache the
     callsigns session table (filled by the first query that reads it)."""
     messages.createOrReplaceTempView("adsb_messages")
+    # Replacing the view with a plan Spark counts as equal (a fresh read
+    # of the same store path) would keep the old sessions cached.
+    spark.catalog.dropTempView("callsigns")
     callsigns(messages).createOrReplaceTempView("callsigns")
     spark.catalog.cacheTable("callsigns")
     locations(messages).createOrReplaceTempView("locations")

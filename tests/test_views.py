@@ -283,3 +283,31 @@ def test_views_snapshot_and_same_session_append(spark, messages,
     assert counts() == one_day
     write_parquet_store(shifted(2), store_views)
     assert counts() == {v: 3 * n for v, n in one_day.items()}
+
+
+def test_reregistering_refills_the_session_table(spark, messages,
+                                                 store_views, tmp_path):
+    """register_views over a fresh read of the same store path sees
+    files copied in since, in all four views alike: the session table
+    is filled afresh, not answered from the old sessions."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from dump1090_db_stream_spark.sinks.writers import (
+        read_parquet_store,
+        write_parquet_store,
+    )
+
+    def counts():
+        return {v: spark.table(v).count() for v in VIEWS}
+
+    before = counts()
+    other = str(tmp_path / "other")
+    write_parquet_store(
+        messages.withColumn(
+            "parsed_time", F.col("parsed_time") + F.expr("INTERVAL 1 DAYS")),
+        other)
+    shutil.copytree(other, store_views, dirs_exist_ok=True)
+    register_views(spark, read_parquet_store(spark, store_views))
+    assert counts() == {v: 2 * n for v, n in before.items()}
