@@ -56,20 +56,20 @@ from .text import with_tokens
 
 
 def word_freqs(df: DataFrame, text_col: str = "text",
-               tokenizer="word", min_freq: int = 1) -> DataFrame:
+               min_freq: int = 1) -> DataFrame:
     """The corpus-collapsing step: distinct words with frequencies.
 
     One corpus scan + one vocabulary-sized aggregation; every BPE
-    iteration afterwards touches only this relation.  ``tokenizer``
-    goes through the :func:`text.make_tokenizer` seam (default: the
-    unicode-category word splitter — the oracle-portable choice).
+    iteration afterwards touches only this relation.  Words come from
+    the unicode-category word splitter (``tokenizer="word"`` of
+    :func:`text.with_tokens`), the oracle-portable choice.
     ``min_freq`` prunes the long hapax tail, the standard way to cut
     the type table an order of magnitude at web scale (documented
     knob; the contract queries keep it at 1 so the oracle replays the
     full table).
     """
     toked = with_tokens(df.filter(F.col(text_col).isNotNull()),
-                        text_col, "_toks", tokenizer)
+                        text_col, "_toks", "word")
     out = (toked.select(F.explode("_toks").alias("word"))
            .groupBy("word").agg(F.count(F.lit(1)).alias("freq")))
     if min_freq > 1:
@@ -160,7 +160,7 @@ def encode_words_chunked(words: DataFrame, merges: Sequence[dict],
 
 
 def train_bpe_local(df: DataFrame, n_merges: int, text_col: str = "text",
-                    tokenizer="word", min_freq: int = 1) -> list[dict]:
+                    min_freq: int = 1) -> list[dict]:
     """The BPE trainer: ONE distributed word-type count, then classic
     fast BPE driver-locally over the collected table; encoding stays
     distributed (:func:`encode_words` / :func:`encode_words_chunked`).
@@ -179,7 +179,7 @@ def train_bpe_local(df: DataFrame, n_merges: int, text_col: str = "text",
     pure-Python reference and by the K=64 registry oracle.
     ``min_freq`` bounds the collected table exactly like
     :func:`word_freqs` documents."""
-    base = with_symbols(word_freqs(df, text_col, tokenizer, min_freq))
+    base = with_symbols(word_freqs(df, text_col, min_freq))
     rows = base.select("freq", "syms").collect()  # vocabulary-bounded
     return train_bpe_local_from_words(
         ((r["freq"], r["syms"]) for r in rows), n_merges)
@@ -283,8 +283,8 @@ def merges_df(spark, merges: Sequence[dict]) -> DataFrame:
 
 
 def bpe_vocab(df: DataFrame, merges: Sequence[dict],
-              text_col: str = "text", tokenizer="word",
-              min_freq: int = 1, chunk: int | None = 4) -> DataFrame:
+              text_col: str = "text", min_freq: int = 1,
+              chunk: int | None = 4) -> DataFrame:
     """Final symbol vocabulary after applying ``merges``: per symbol,
     the corpus-weighted occurrence count and the number of word types
     containing it.  Declarative end to end (fold chain + explode +
@@ -298,7 +298,7 @@ def bpe_vocab(df: DataFrame, merges: Sequence[dict],
     the same chain under a plain projection costs 0.5 s). Pass
     ``chunk=None`` only for merge lists short enough to feed the
     explode directly."""
-    base = with_symbols(word_freqs(df, text_col, tokenizer, min_freq))
+    base = with_symbols(word_freqs(df, text_col, min_freq))
     words = (encode_words_chunked(base, merges, chunk=chunk)
              if chunk else encode_words(base, merges))
     return (words.select("word", "freq", F.explode("syms").alias("sym"))
@@ -308,8 +308,8 @@ def bpe_vocab(df: DataFrame, merges: Sequence[dict],
 
 
 def encoded_stats(df: DataFrame, merges: Sequence[dict],
-                  text_col: str = "text", group_col: str = "source",
-                  tokenizer="word") -> DataFrame:
+                  text_col: str = "text",
+                  group_col: str = "source") -> DataFrame:
     """Per-group subword compression report for a trained merge list:
     words, subword tokens, and character mass.
 
@@ -319,11 +319,11 @@ def encoded_stats(df: DataFrame, merges: Sequence[dict],
     broadcastable and neither needs to be.
     """
     toked = with_tokens(df.filter(F.col(text_col).isNotNull()),
-                        text_col, "_toks", tokenizer)
+                        text_col, "_toks", "word")
     grp_words = (toked.select(group_col, F.explode("_toks").alias("word"))
                  .groupBy(group_col, "word")
                  .agg(F.count(F.lit(1)).alias("gfreq")))
-    enc = encode_words(with_symbols(word_freqs(df, text_col, tokenizer)),
+    enc = encode_words(with_symbols(word_freqs(df, text_col)),
                        merges).select(
         "word", F.size("syms").alias("n_subwords"),
         F.length("word").alias("n_chars"))

@@ -8,8 +8,8 @@ logistic-regression-shaped scoring over hashed bag-of-n-gram features
 with closed-form Naive-Bayes log-count-ratio weights (Wang & Manning,
 ACL 2012 — the NBSVM trick: NB log-odds ARE the linear weights).
 
-Everything is native Column expressions — tokenize (through the
-``operators.text`` tokenizer seam), n-gram, hash-bucket, aggregate,
+Everything is native Column expressions — tokenize (the whitespace
+split of ``operators.text.with_tokens``), n-gram, hash-bucket, aggregate,
 join, sigmoid — zero Python in the data path, and every arithmetic
 step is engine-replayable (portable md5 hash, exact-integer count
 ratios into ``ln``, 1e-9-quantized decimal score sums), so the whole
@@ -81,7 +81,6 @@ def hashed_unit_buckets(
     text_col: str = "text",
     n_buckets: int = 4096,
     ngrams: tuple[int, ...] = (1, 2),
-    tokenizer=None,
 ) -> DataFrame:
     """The per-occurrence ``(*carry_cols, bucket)`` relation both the
     trainer and the scorer consume — exposed (r15, guide §2.4) so ONE
@@ -90,11 +89,11 @@ def hashed_unit_buckets(
     expensive half of the pipeline on the same corpus. Callers that
     feed two consumers should persist it (``cache.track``). The
     featurization parameters are part of the relation's identity: pass
-    the SAME ``n_buckets``/``ngrams``/``tokenizer`` to every consumer
+    the SAME ``n_buckets``/``ngrams`` to every consumer
     (the existing weights<->scores contract)."""
     _validate(n_buckets, ngrams)
     toked = with_tokens(df.select(*carry_cols, text_col), text_col,
-                        "_cf_toks", tokenizer=tokenizer)
+                        "_cf_toks")
     return (toked
             .select(*carry_cols,
                     F.explode(_units("_cf_toks", ngrams)).alias("u"))
@@ -109,7 +108,6 @@ def nb_logodds_weights(
     n_buckets: int = 4096,
     ngrams: tuple[int, ...] = (1, 2),
     alpha: float = 1.0,
-    tokenizer=None,
     unit_buckets: DataFrame | None = None,
 ) -> DataFrame:
     """Closed-form Naive-Bayes log-count-ratio weights per feature
@@ -152,7 +150,7 @@ def nb_logodds_weights(
     else:
         toked = with_tokens(
             df.filter(y.isNotNull()).select(y.alias("_y"), text_col),
-            text_col, "_cf_toks", tokenizer=tokenizer)
+            text_col, "_cf_toks")
         buckets = (toked
                    .select("_y",
                            F.explode(_units("_cf_toks", ngrams))
@@ -183,7 +181,6 @@ def classifier_scores(
     ngrams: tuple[int, ...] = (1, 2),
     bias: float = 0.0,
     default_weight: float = 0.0,
-    tokenizer=None,
     unit_buckets: DataFrame | None = None,
 ) -> DataFrame:
     """Score every document with a linear model over hashed n-gram
@@ -196,7 +193,7 @@ def classifier_scores(
 
     ``weights`` is any (bucket, weight) relation — the
     :func:`nb_logodds_weights` output or an externally-trained model.
-    ``n_buckets``/``ngrams``/``tokenizer`` MUST match the ones the
+    ``n_buckets``/``ngrams`` MUST match the ones the
     weights were built with (same featurization or the buckets mean
     nothing); buckets absent from ``weights`` contribute
     ``default_weight`` (0 = ignore unseen features).
@@ -225,7 +222,7 @@ def classifier_scores(
             F.col(id_col).alias("_id"), "bucket")
     else:
         toked = with_tokens(df.select(id_col, text_col), text_col,
-                            "_cf_toks", tokenizer=tokenizer)
+                            "_cf_toks")
         occurrences = (toked
                        .select(F.col(id_col).alias("_id"),
                                F.explode(_units("_cf_toks", ngrams))

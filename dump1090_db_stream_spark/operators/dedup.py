@@ -247,7 +247,6 @@ def minhash_signatures(
     n: int = 3,
     num_hashes: int = 32,
     portable_base_hash: bool = False,
-    tokenizer=None,
 ) -> DataFrame:
     """MinHash signatures as one row per doc with columns mh0..mh{k-1}.
 
@@ -265,7 +264,7 @@ def minhash_signatures(
     tokenize+shingle+hash k times — Catalyst does not CSE through
     higher-order-function lambdas.
     """
-    base = with_tokens(df, text_col, tokenizer=tokenizer).select(
+    base = with_tokens(df, text_col).select(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(shingles(F.col("_toks"), n))).alias("s"),
     ).select("id", F.pmod(
@@ -307,7 +306,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     portable_base_hash: bool = False,
-    tokenizer=None,
 ) -> DataFrame:
     """MinHash + banded LSH near-dup candidate pairs, verified by exact
     Jaccard on the candidates only.
@@ -327,7 +325,7 @@ def minhash_lsh_pairs(
     """
     rows = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, n, num_hashes,
-                             portable_base_hash, tokenizer)
+                             portable_base_hash)
     # The banded relation feeds BOTH sides of the candidate self-join;
     # without materialization each side would recompute the whole
     # tokenize->shingle->md5->32-way-min pipeline (Spark does not CSE
@@ -357,7 +355,7 @@ def minhash_lsh_pairs(
                 .distinct())
     slim = df.join(F.broadcast(involved),
                    df[id_col] == involved["id"], "left_semi")
-    sh = with_tokens(slim, text_col, tokenizer=tokenizer).select(
+    sh = with_tokens(slim, text_col).select(
         F.col(id_col).alias("id"),
         F.array_distinct(shingles(F.col("_toks"), n)).alias("shs"))
     va = sh.select(F.col("id").alias("id_a"), F.col("shs").alias("shs_a"))
@@ -384,7 +382,6 @@ def simhash_table(
     n: int = 2,
     n_bits: int = 60,
     portable_base_hash: bool = False,
-    tokenizer=None,
 ) -> DataFrame:
     """Per-doc 60-bit SimHash over word n-gram shingles: for each bit
     position, sum +1/-1 votes from each shingle-hash bit; the sign of the
@@ -393,7 +390,7 @@ def simhash_table(
     Same scale shape as minhash_signatures: explode shingles, ONE hash
     per shingle, the 60 bit-votes as plain conditional-sum aggregates with
     map-side partial aggregation. Returns (id, sim)."""
-    base = with_tokens(df, text_col, tokenizer=tokenizer).select(
+    base = with_tokens(df, text_col).select(
         F.col(id_col).alias("id"),
         F.explode(shingles(F.col("_toks"), n)).alias("s"),
     ).select("id", (_portable_hash60(F.col("s")) if portable_base_hash
@@ -420,7 +417,6 @@ def simhash_neardup_pairs(
     n: int = 2,
     n_chunks: int = 4,
     portable_base_hash: bool = False,
-    tokenizer=None,
 ) -> DataFrame:
     """SimHash near-dup pairs within a hamming radius.
 
@@ -431,8 +427,7 @@ def simhash_neardup_pairs(
     """
     chunk_bits = 60 // n_chunks
     sim = simhash_table(df, id_col, text_col, n,
-                        portable_base_hash=portable_base_hash,
-                        tokenizer=tokenizer)
+                        portable_base_hash=portable_base_hash)
     chunks = sim.select(
         "id", "sim",
         F.explode(F.array(*[
@@ -522,7 +517,6 @@ def shingle_doc_freq(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    tokenizer=None,
 ) -> DataFrame:
     """(shingle, doc_freq): distinct-document frequency of every word
     n-gram — the corpus-wide statistic behind boilerplate mining and
@@ -534,7 +528,7 @@ def shingle_doc_freq(
     reach the output anyway — hashing first would just force a second
     join to recover it."""
     return (
-        with_tokens(df, text_col, tokenizer=tokenizer)
+        with_tokens(df, text_col)
         .select(F.col(id_col).alias("id"),
                 F.explode(F.array_distinct(
                     shingles(F.col("_toks"), n))).alias("shingle"))

@@ -133,15 +133,15 @@ def radius_join(
     point_lon: str = "lon",
     center_lat: str = "lat",
     center_lon: str = "lon",
-    cell_deg: float | None = None,
     distance_col: str = "distance_km",
 ) -> DataFrame:
     """All (point, center) pairs within ``radius_km``, via grid-cell
     equi-join + exact haversine residual. Output: all point columns, all
     center columns, plus ``distance_col``.
 
-    ``cell_deg`` defaults to the radius' latitude span — each center
-    then touches ~9 cells at mid latitudes. Column names shared between
+    The grid cell is the radius' latitude span (``radius_km /
+    KM_PER_DEG``, at least 1e-6 deg) — each center then touches ~9
+    cells at mid latitudes. Column names shared between
     the two inputs must be disambiguated by the caller (alias first).
 
     Limitation: the grid does not wrap the antimeridian — a disk
@@ -149,8 +149,7 @@ def radius_join(
     (union the results). Deliberate: the wrap costs every query a
     doubled cell list to serve a sliver of the Pacific.
     """
-    if cell_deg is None:
-        cell_deg = max(radius_km / KM_PER_DEG, 1e-6)
+    cell_deg = max(radius_km / KM_PER_DEG, 1e-6)
     p = points.withColumn(
         "_cell", grid_cell(F.col(point_lat), F.col(point_lon), cell_deg))
     c = centers.withColumn(
@@ -287,7 +286,6 @@ def close_encounters(
     ts_col: str = "ts",
     lat_col: str = "lat",
     lon_col: str = "lon",
-    cell_deg: float | None = None,
 ) -> DataFrame:
     """Spatio-temporal proximity self-join: pairs of events from
     DIFFERENT objects within ``dist_km`` AND ``window_seconds`` of each
@@ -317,15 +315,15 @@ def close_encounters(
     and haversine) then discard the quantization margin.
 
     Scale: shuffle keyed on (bucket, cell) — volume O(rows x cover
-    size); encounter hot spots (one airport's cell) are classic skew,
-    handled by AQE skew-join splitting; at extreme density shrink
-    cell_deg (more, smaller buckets).
+    size); the grid cell is the distance's latitude span (``dist_km /
+    KM_PER_DEG``, at least 1e-6 deg). Encounter hot spots (one
+    airport's cell) are classic skew, handled by AQE skew-join
+    splitting.
 
     Output: id_a, id_b, obj_a, obj_b, dt_sec (signed, b minus a),
     distance_km (rounded 2).
     """
-    if cell_deg is None:
-        cell_deg = max(dist_km / KM_PER_DEG, 1e-6)
+    cell_deg = max(dist_km / KM_PER_DEG, 1e-6)
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     bucket = F.floor(us / F.lit(window_seconds * 1_000_000)).cast("long")
     base = df.select(

@@ -379,7 +379,6 @@ def dedup_survivors(
     id_col: str = "doc_id",
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    algorithm: str = "star",
 ) -> DataFrame:
     """The end-to-end dedup decision: keep exactly ONE document per
     near-dup cluster (the minimum id — deterministic) and every
@@ -388,14 +387,15 @@ def dedup_survivors(
     This is the composition a pipeline actually runs: near-dup pairs
     (any family: n-gram Jaccard, MinHash-LSH, SimHash, embedding LSH)
     -> connected components -> ``keep iff id == canonical_id``.
-    Defaults to the star algorithm (O(log n) rounds, chain-safe).
+    Components come from the star algorithm (O(log n) rounds,
+    chain-safe).
 
     Scale shape: components run over the pair graph only (tiny next to
     the corpus); the final filter is a LEFT SEMI join of the corpus
     against surviving ids — no corpus columns shuffle, and Catalyst
     broadcasts the id set when small."""
     survivors = (
-        canonical_map(df, pairs, id_col, src_col, dst_col, algorithm)
+        canonical_map(df, pairs, id_col, src_col, dst_col, "star")
         .filter(F.col(id_col) == F.col("canonical_id"))
         .select(id_col)
     )
@@ -409,7 +409,6 @@ def best_survivors(
     id_col: str = "doc_id",
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    algorithm: str = "star",
 ) -> DataFrame:
     """Quality-aware dedup: keep the HIGHEST-``score_col`` document of
     each near-dup cluster (min id on ties) plus every singleton —
@@ -417,8 +416,8 @@ def best_survivors(
     arbitrary copy; this keeps the best one) and the composition
     point for quality_features / unigram_logprob scores.
 
-    Same scale shape as :func:`dedup_survivors`: components run over
-    the pair graph only; the argmax runs on a NARROW (id, canonical,
+    Same scale shape as :func:`dedup_survivors`: star components run
+    over the pair graph only; the argmax runs on a NARROW (id, canonical,
     score) relation — one row_number window per cluster that Catalyst
     executes as a map-side WindowGroupLimit (the exchange carries one
     candidate per cluster per task, never a cluster's full membership)
@@ -428,7 +427,7 @@ def best_survivors(
     Output: df's full schema for survivors, plus ``canonical_id`` (the
     cluster key the row won).
     """
-    cmap = canonical_map(df, pairs, id_col, src_col, dst_col, algorithm)
+    cmap = canonical_map(df, pairs, id_col, src_col, dst_col, "star")
     scored = (
         df.select(F.col(id_col), F.col(score_col))
         .join(cmap, id_col)

@@ -105,7 +105,6 @@ def bigram_pmi(
     df: DataFrame,
     text_col: str = "text",
     min_count: int = 2,
-    tokenizer=None,
 ) -> DataFrame:
     """Collocation mining: pointwise mutual information of adjacent
     token pairs — the classic phrase-discovery statistic (Church &
@@ -131,7 +130,7 @@ def bigram_pmi(
     # the tokenize->explode pipeline feeds both the unigram and bigram
     # branches; persist so the corpus is tokenized once (no cross-branch
     # CSE — see tfidf_terms)
-    toks = track(with_tokens(df, text_col, tokenizer=tokenizer))
+    toks = track(with_tokens(df, text_col))
     uni = (toks.select(F.explode("_toks").alias("w"))
            .groupBy("w").agg(F.count(F.lit(1)).alias("c")))
     # B totals over ALL bigrams; min_count prunes only the output rows
@@ -163,7 +162,6 @@ def unigram_logprob(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tokenizer=None,
 ) -> DataFrame:
     """Per-document mean unigram log-probability under the corpus's own
     unigram distribution — the simplest form of the LM-perplexity
@@ -180,7 +178,7 @@ def unigram_logprob(
 
     Output: (id_col, n_toks, logprob rounded 6).
     """
-    terms = track(_doc_terms(df, id_col, text_col, tokenizer))
+    terms = track(_doc_terms(df, id_col, text_col))
     tot = terms.agg(F.sum("tf").alias("u"))
     freq = terms.groupBy("term").agg(F.sum("tf").alias("c"))
     return (
@@ -203,7 +201,6 @@ def bm25_scores(
     b: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tokenizer=None,
 ) -> DataFrame:
     """BM25 score of every matching document for a bag of query terms.
 
@@ -217,7 +214,7 @@ def bm25_scores(
     # terms feeds doclen, matched, and (via matched) dfreq — persist so
     # the tokenize pipeline runs once, not three times (no cross-branch
     # CSE; see tfidf_terms).
-    terms = track(_doc_terms(df, id_col, text_col, tokenizer))
+    terms = track(_doc_terms(df, id_col, text_col))
     doclen = terms.groupBy("id").agg(F.sum("tf").alias("dl"))
     stats = doclen.select(
         F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
@@ -253,7 +250,6 @@ def bigram_logprob(
     lam: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tokenizer=None,
 ) -> DataFrame:
     """Per-document mean INTERPOLATED bigram log-probability under the
     corpus's own counts — one rung above :func:`unigram_logprob` on
@@ -279,8 +275,7 @@ def bigram_logprob(
 
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lam must be in [0, 1], got {lam}")
-    toks = with_tokens(df, text_col, "_bl_toks",
-                       tokenizer=tokenizer).select(
+    toks = with_tokens(df, text_col, "_bl_toks").select(
         F.col(id_col).alias("id"), F.col("_bl_toks").alias("t"))
     toks = track(toks)
     uni = (toks.select("id", F.explode("t").alias("term"))
@@ -316,7 +311,6 @@ def _group_terms(
     group_col: str,
     text_col: str,
     unit: str,
-    tokenizer=None,
 ) -> DataFrame:
     """(g, term, c) — per-group unit counts, unit = 'token' (whitespace
     terms) or 'bigram' (adjacent pairs joined with one space, the
@@ -326,7 +320,7 @@ def _group_terms(
     if unit not in ("token", "bigram"):
         raise ValueError(f"unit must be 'token' or 'bigram', got {unit!r}")
     toks = (with_tokens(df.filter(F.col(group_col).isNotNull()),
-                        text_col, "_vc_toks", tokenizer=tokenizer)
+                        text_col, "_vc_toks")
             .select(F.col(group_col).alias("g"),
                     F.col("_vc_toks").alias("t")))
     if unit == "token":
@@ -343,7 +337,6 @@ def vocabulary_coverage(
     group_col: str = "source",
     text_col: str = "text",
     unit: str = "bigram",
-    tokenizer=None,
 ) -> DataFrame:
     """Per-group vocabulary coverage / richness report — how much of a
     source's unit distribution the corpus has actually SEEN, the
@@ -364,7 +357,7 @@ def vocabulary_coverage(
     relations only. Output: (group, n_tokens, n_types, n_singletons,
     n_doubletons, unseen_mass rounded 6, chao1_richness rounded 6).
     """
-    gt = _group_terms(df, group_col, text_col, unit, tokenizer)
+    gt = _group_terms(df, group_col, text_col, unit)
     return (gt.groupBy("g").agg(
         F.sum("c").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).alias("n_types"),
@@ -401,7 +394,6 @@ def corpus_divergence(
     text_col: str = "text",
     unit: str = "bigram",
     alpha: float = 0.5,
-    tokenizer=None,
 ) -> DataFrame:
     """Per-group smoothed KL divergence from the group's unit
     distribution to the POOLED corpus distribution — the domain-shift
@@ -433,7 +425,7 @@ def corpus_divergence(
         raise ValueError(f"alpha must be > 0, got {alpha}")
     from dump1090_db_stream_spark.cache import track
 
-    gt = track(_group_terms(df, group_col, text_col, unit, tokenizer))
+    gt = track(_group_terms(df, group_col, text_col, unit))
     glob = track(gt.groupBy("term").agg(F.sum("c").alias("c_all")))
     a = F.lit(float(alpha))
     # one-row corpus totals: N, V, S_all = sum_t ln(q(t)) (quantized)
@@ -477,9 +469,7 @@ def keyness_terms(
     df: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    unit: str = "token",
     min_count: int = 2,
-    tokenizer=None,
 ) -> DataFrame:
     """Per-(group, term) Dunning log-likelihood keyness — WHICH terms
     make a source sound like itself. The G^2 statistic over the 2x2
@@ -521,7 +511,7 @@ def keyness_terms(
     """
     from dump1090_db_stream_spark.cache import track
 
-    gt = track(_group_terms(df, group_col, text_col, unit, tokenizer))
+    gt = track(_group_terms(df, group_col, text_col, "token"))
     glob = gt.groupBy("term").agg(F.sum("c").cast("long").alias("c_t"))
     gstat = gt.groupBy("g").agg(F.sum("c").cast("long").alias("n_g"))
     tot = gstat.agg(F.sum("n_g").cast("long").alias("n_all"))
@@ -561,11 +551,9 @@ def vocab_concentration(
     df: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    unit: str = "token",
-    tokenizer=None,
     n_range_buckets: int = 64,
 ) -> DataFrame:
-    """Per-group Gini coefficient of the unit-frequency distribution —
+    """Per-group Gini coefficient of the token-frequency distribution —
     how HEAD-HEAVY a source's vocabulary is. A templated/boilerplate
     source concentrates its token mass in few types (gini -> 1); rich
     prose spreads it (low gini). The third corpus-health axis next to
@@ -598,7 +586,7 @@ def vocab_concentration(
         distributed_prev_counts_multi,
     )
 
-    gt = _group_terms(df, group_col, text_col, unit, tokenizer)
+    gt = _group_terms(df, group_col, text_col, "token")
     # (g, c) -> m: multiplicity of each distinct count value
     gc = track(gt.groupBy("g", "c").agg(F.count(F.lit(1)).alias("_m")))
     ranked = distributed_prev_counts_multi(

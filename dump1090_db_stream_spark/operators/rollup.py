@@ -11,11 +11,6 @@ aggregates are decomposable: count re-aggregates by sum, sum by sum
 (in DECIMAL, so addition is associative bit-for-bit — double sums would
 drift between direct and re-aggregated paths), min/max by min/max; avg
 is derived at the end as sum/count and therefore also exact.
-
-Streaming analog: feed each micro-batch through the minute level
-(``streaming/pipeline.py tumbling_counts``) and periodically re-roll the
-coarser levels from the stored minute table — the classic
-continuous-aggregate refresh, no raw-data replay.
 """
 
 from __future__ import annotations
@@ -36,12 +31,12 @@ def time_rollup(
     ts: str,
     keys: list[str],
     value: str,
-    resolutions: list[str] | None = None,
     bucket_col: str = "bucket_start",
     resolution_col: str = "resolution",
 ) -> DataFrame:
     """Exact rollup of count/sum/min/max of ``value`` per ``keys`` at each
-    resolution, each coarser level derived from the previous one.
+    of :data:`RESOLUTIONS`, each coarser level derived from the previous
+    one.
 
     Output columns: ``resolution, bucket_start, *keys, n_rows, value_sum,
     value_min, value_max`` — one row per (resolution, bucket, keys).
@@ -58,8 +53,7 @@ def time_rollup(
     common-subexpression reuse. The cached levels are aggregate-sized
     (O(buckets x keys), not O(rows)).
     """
-    resolutions = resolutions or RESOLUTIONS
-    finest = resolutions[0]
+    finest = RESOLUTIONS[0]
     level = (
         df.groupBy(
             F.date_trunc(finest, F.col(ts)).alias(bucket_col),
@@ -72,10 +66,9 @@ def time_rollup(
             F.max(value).alias("value_max"),
         )
     )
-    if len(resolutions) > 1:
-        level = track(level)
+    level = track(level)
     levels = [level.withColumn(resolution_col, F.lit(finest))]
-    for i, res in enumerate(resolutions[1:], start=1):
+    for i, res in enumerate(RESOLUTIONS[1:], start=1):
         level = (
             level.groupBy(
                 F.date_trunc(res, F.col(bucket_col)).alias(bucket_col),
@@ -88,7 +81,7 @@ def time_rollup(
                 F.max("value_max").alias("value_max"),
             )
         )
-        if i < len(resolutions) - 1:
+        if i < len(RESOLUTIONS) - 1:
             level = track(level)
         levels.append(level.withColumn(resolution_col, F.lit(res)))
     out = reduce(lambda a, b: a.unionByName(b), levels)

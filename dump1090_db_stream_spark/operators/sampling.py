@@ -40,6 +40,10 @@ _P = 1_000_000_007       # large prime modulus
 #: Total weight denominator for ``hash_split`` fractions.
 SPLIT_BUCKETS = 10_000
 
+#: ``hash_split`` labels and fractions; the remainder of the rounded
+#: bucket bounds falls into the LAST label.
+SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
+
 #: Public alias of the hash modulus — the exclusive upper bound of
 #: :func:`portable_hash` output. Consumers (e.g. threshold sketches in
 #: ``operators.sketches``) derive sampling thresholds from it.
@@ -103,20 +107,16 @@ def hash_bucket_sql(expr: str, n_buckets: int) -> str:
 def hash_split(
     df: DataFrame,
     id_col: str,
-    splits: dict[str, float] | None = None,
     split_col: str = "split",
 ) -> DataFrame:
-    """Deterministic train/val/test split by hashed id.
-
-    ``splits`` maps label -> fraction (must sum to <= 1; any remainder
-    falls into the LAST label). Assignment is per-row from the id hash
+    """Deterministic train/val/test split by hashed id, in the
+    :data:`SPLITS` fractions. Assignment is per-row from the id hash
     alone: disjoint, exhaustive, stable under repartition/rerun, and a
     row's split never changes when the dataset grows (the property that
     keeps eval sets uncontaminated across dataset versions).
     """
-    splits = splits or {"train": 0.8, "val": 0.1, "test": 0.1}
     bucket = hash_bucket(id_col, SPLIT_BUCKETS)
-    labels = list(splits.items())
+    labels = list(SPLITS.items())
     expr: Column | None = None
     cum = 0
     for name, frac in labels[:-1]:
@@ -129,14 +129,10 @@ def hash_split(
     return df.withColumn(split_col, out)
 
 
-def hash_split_case_sql(
-    id_expr: str,
-    splits: dict[str, float] | None = None,
-) -> str:
+def hash_split_case_sql(id_expr: str) -> str:
     """Oracle-side CASE expression matching :func:`hash_split`."""
-    splits = splits or {"train": 0.8, "val": 0.1, "test": 0.1}
     b = hash_bucket_sql(id_expr, SPLIT_BUCKETS)
-    labels = list(splits.items())
+    labels = list(SPLITS.items())
     parts, cum = [], 0
     for name, frac in labels[:-1]:
         cum += int(round(frac * SPLIT_BUCKETS))
@@ -171,7 +167,6 @@ def leakage_safe_split(
     canonical: DataFrame,
     id_col: str = "doc_id",
     canonical_col: str = "canonical_id",
-    splits: dict[str, float] | None = None,
     split_col: str = "split",
 ) -> DataFrame:
     """Contamination-safe train/val/test split: hash the NEAR-DUP
@@ -197,7 +192,7 @@ def leakage_safe_split(
         id_col, "left")
         .withColumn(canonical_col,
                     F.coalesce(F.col(canonical_col), F.col(id_col))))
-    return hash_split(keyed, canonical_col, splits, split_col)
+    return hash_split(keyed, canonical_col, split_col)
 
 
 def stratified_cap(
@@ -464,16 +459,15 @@ def token_budget_sample_sql(
     budget_tokens: int,
     id_expr: str = "doc_id",
     keys: list[str] | None = None,
-    token_expr: str | None = None,
     text_expr: str = "text",
     seed: int = 0,
     select_cols: str = "*",
 ) -> str:
-    """Oracle-side twin of :func:`token_budget_sample` (same hash order,
-    same tie-break, same prefix rule)."""
+    """Oracle-side twin of :func:`token_budget_sample` without
+    ``token_col`` (same hash order, same tie-break, same prefix rule;
+    tokens are the whitespace split of ``text_expr``)."""
     keys = keys or []
-    tok = (token_expr if token_expr else
-           f"length(regexp_split_to_array(trim({text_expr}), '\\s+'))")
+    tok = f"length(regexp_split_to_array(trim({text_expr}), '\\s+'))"
     part = f"PARTITION BY {', '.join(keys)} " if keys else ""
     h = portable_hash_seeded_sql(id_expr, seed)
     # DuckDB's sum(BIGINT) widens to HUGEINT; cast back so the schema

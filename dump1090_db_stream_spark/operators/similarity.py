@@ -998,10 +998,9 @@ def project_embeddings(
     seed: int = 101,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    normalize: bool = True,
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection: embeddings compressed
-    to ``out_dim`` via a deterministic plane matrix, optionally
+    to ``out_dim`` via a deterministic plane matrix, then
     re-normalized to unit length (so downstream cosine search needs
     only dot products). The dimensionality-reduction step a pipeline
     runs before ANN indexing when vectors are wide — JL preserves
@@ -1012,20 +1011,19 @@ def project_embeddings(
     Narrow zero-shuffle projection, pure Column arithmetic: each
     output component is an index-ascending dot-product fold, so any
     ANSI engine replays every value exactly (the oracle hash-checks
-    the projected vectors themselves). Zero vectors stay zero under
-    normalize (guarded divide)."""
+    the projected vectors themselves). Zero vectors stay zero (guarded
+    divide)."""
     planes = projection_planes(in_dim, out_dim, seed)
     vec = F.col(vec_col)
     comps = F.array(*[
         dot(vec, F.lit([float(x) for x in p])) for p in planes])
-    if normalize:
-        nrm = F.sqrt(F.aggregate(
-            F.transform(comps, lambda x: x * x),
-            F.lit(0.0), lambda acc, v: acc + v))
-        comps = F.when(
-            nrm > 0,
-            F.transform(comps, lambda x: x / nrm)
-        ).otherwise(comps)
+    nrm = F.sqrt(F.aggregate(
+        F.transform(comps, lambda x: x * x),
+        F.lit(0.0), lambda acc, v: acc + v))
+    comps = F.when(
+        nrm > 0,
+        F.transform(comps, lambda x: x / nrm)
+    ).otherwise(comps)
     return df.select(F.col(id_col), comps.alias("projected"))
 
 

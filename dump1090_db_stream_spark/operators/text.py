@@ -57,9 +57,10 @@ def word_tokens(text: Column | str) -> Column:
     return F.regexp_extract_all(c, F.lit(WORD_TOKEN_RE), 0)
 
 
-# Named tokenizers for the `tokenizer=` seam (r10 verdict ask #5).
-# "whitespace" IS the historical default — same expression, so every
-# pre-seam oracle is bit-identical with tokenizer=None.
+# Named tokenizers for `with_tokens(tokenizer=)`. "whitespace" is the
+# default (tokenizer=None) expression. The registry names "word" and
+# "bpe_ish"; tfidf_terms and ngram_jaccard_pairs forward a caller's
+# choice; every other text operator tokenizes with the default.
 TOKENIZERS = {
     "whitespace": tokens,
     "word": word_tokens,

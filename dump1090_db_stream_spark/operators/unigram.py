@@ -189,14 +189,13 @@ def train_unigram_local_from_words(
 
 
 def train_unigram_local(
-    df: DataFrame, text_col: str = "text", tokenizer="word",
-    min_freq: int = 1, **kw,
+    df: DataFrame, text_col: str = "text", min_freq: int = 1, **kw,
 ) -> list[dict]:
     """The unigram-LM trainer: ONE distributed word-type count, then
     the whole EM loop driver-local (the ``bpe.train_bpe_local``
     pattern — the type table is vocabulary-bounded, and a distributed
     E-step would pay a job round trip per iteration)."""
-    rows = (word_freqs(df, text_col, tokenizer, min_freq)
+    rows = (word_freqs(df, text_col, min_freq)
             .collect())  # vocabulary-bounded
     return train_unigram_local_from_words(
         ((r["word"], r["freq"]) for r in rows), **kw)

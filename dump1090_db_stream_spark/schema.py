@@ -48,7 +48,7 @@ ALL_COLUMNS: list[str] = WIRE_COLUMNS + [PARSED_TIME]
 
 # Dedup identity: PK (transmission_type, parsed_time, hex_ident)
 # (create_schema.sql:132-133). Spark has no enforced PKs; the sinks that
-# honour it (write_parquet_store(dedup=True), the JDBC and PG upsert
+# honour it (write_parquet_store, the JDBC and PG upsert
 # foreachBatch sinks) key on this trio.
 PRIMARY_KEY: list[str] = ["transmission_type", PARSED_TIME, "hex_ident"]
 

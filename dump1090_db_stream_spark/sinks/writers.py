@@ -32,11 +32,10 @@ def write_parquet_store(
     messages: DataFrame,
     path: str,
     mode: str = "append",
-    dedup: bool = True,
 ) -> None:
     """Append to the date-partitioned parquet fact store.
 
-    ``dedup`` applies the reference's PK semantics
+    Rows are deduplicated on the reference's PK
     (create_schema.sql:132-133) within the written batch — the batch
     analog of the PK constraint rejecting duplicate inserts (A-6).
 
@@ -45,9 +44,7 @@ def write_parquet_store(
     partitioning — repartition by date first so each task writes one
     partition directory (avoids small-file explosion on wide clusters).
     """
-    df = with_date_partition(messages)
-    if dedup:
-        df = df.dropDuplicates(PRIMARY_KEY)
+    df = with_date_partition(messages).dropDuplicates(PRIMARY_KEY)
     (df.repartition(F.col(DATE_PARTITION_COL))
        .write.mode(mode)
        .partitionBy(DATE_PARTITION_COL)
@@ -210,7 +207,6 @@ def write_jsonl_shards(
     path: str,
     shard_by: str,
     n_shards: int = 8,
-    max_records_per_file: int | None = None,
     mode: str = "overwrite",
     partition_dirs: bool = False,
 ) -> None:
@@ -228,8 +224,7 @@ def write_jsonl_shards(
     reservoir sample of the input layout — and (b) sorting shards by
     (hash, line text): a TOTAL order, so duplicate keys cannot
     reorder between runs (identical rows produce identical lines —
-    interchangeable bytes). ``max_records_per_file`` additionally caps
-    rows per file, bounding downstream memory.
+    interchangeable bytes).
 
     ``partition_dirs=True`` writes one ``_s=<shard>/`` DIRECTORY per
     shard (Hive-style partitionBy on the shard id) instead of loose
@@ -250,8 +245,6 @@ def write_jsonl_shards(
         writer = shaped.write.mode(mode).partitionBy("_s")
     else:
         writer = shaped.select("value").write.mode(mode)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.text(path)
 
 
@@ -313,15 +306,12 @@ def pg_upsert_sql(
     table: str,
     columns: list[str],
     conflict_cols: tuple[str, ...] | list[str] = PRIMARY_KEY,
-    update_cols: list[str] | None = None,
 ) -> str:
     """PostgreSQL upsert statement for one row (DB-API ``%s``
-    placeholders): ``INSERT ... ON CONFLICT (pk) DO NOTHING`` by
-    default — database-side idempotency for T-5 (the reference instead
-    drops the whole per-row transaction on PK violation,
-    dump1090-postgres.py:118-123;
-    ON CONFLICT keeps the batch alive). ``update_cols`` switches to
-    ``DO UPDATE SET col = EXCLUDED.col`` (last-write-wins refresh).
+    placeholders): ``INSERT ... ON CONFLICT (pk) DO NOTHING`` —
+    database-side idempotency for T-5 (the reference instead drops the
+    whole per-row transaction on PK violation,
+    dump1090-postgres.py:118-123; ON CONFLICT keeps the batch alive).
 
     Identifiers are double-quoted; ``table`` may be schema-qualified
     (each dotted part quoted separately)."""
@@ -336,23 +326,14 @@ def pg_upsert_sql(
     collist = ", ".join(q(c) for c in columns)
     placeholders = ", ".join(["%s"] * len(columns))
     conflict = ", ".join(q(c) for c in conflict_cols)
-    if update_cols is None:
-        action = "DO NOTHING"
-    else:
-        bad = [c for c in update_cols if c not in columns]
-        if bad:
-            raise ValueError(f"update columns {bad} not in {columns}")
-        sets = ", ".join(f"{q(c)} = EXCLUDED.{q(c)}" for c in update_cols)
-        action = f"DO UPDATE SET {sets}"
     return (f"INSERT INTO {qtable} ({collist}) VALUES ({placeholders}) "
-            f"ON CONFLICT ({conflict}) {action}")
+            f"ON CONFLICT ({conflict}) DO NOTHING")
 
 
 def pg_upsert_foreach_batch(
     connection_factory,
     table: str,
     conflict_cols: tuple[str, ...] | list[str] = PRIMARY_KEY,
-    update_cols: list[str] | None = None,
     batchsize: int = 1000,
 ):
     """foreachBatch sink writing idempotent PostgreSQL upserts:
@@ -377,7 +358,7 @@ def pg_upsert_foreach_batch(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         cols = list(batch_df.columns)
-        sql = pg_upsert_sql(table, cols, conflict_cols, update_cols)
+        sql = pg_upsert_sql(table, cols, conflict_cols)
 
         def write_partition(rows) -> None:
             conn = connection_factory()

@@ -99,7 +99,6 @@ def tumbling_counts(
     window: str = "1 hour",
     watermark: str = "30 minutes",
     value_col: str | None = None,
-    exact_sums: bool = False,
 ) -> DataFrame:
     """Watermarked tumbling-window aggregation (T-8/T-9) — the streaming
     re-expression of the callsigns view's daily bucketing (A-2,
@@ -114,18 +113,11 @@ def tumbling_counts(
 
     Sums run in decimal so results are bit-identical regardless of
     per-partition accumulation order (floats would make the answer depend
-    on the physical plan). ``exact_sums=True`` keeps the decimal type in
-    the output instead of rounding to double — use it when the emitted
-    windows feed a STORED finest level that coarser rollups re-aggregate
-    (the continuous-aggregate refresh): decimal addition is associative,
-    so hour/day derived from the stored minute rows are bit-identical to
-    direct aggregation (see operators/rollup.py)."""
+    on the physical plan), then round to a double."""
     aggs = [F.count(F.lit(1)).alias("n_events")]
     if value_col is not None:
         dec = F.sum(F.col(value_col).cast("decimal(28,8)"))
-        aggs.append(
-            dec.alias("value_sum") if exact_sums
-            else F.round(dec.cast("double"), 6).alias("value_sum"))
+        aggs.append(F.round(dec.cast("double"), 6).alias("value_sum"))
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col(key_col))
@@ -141,7 +133,7 @@ def tumbling_counts(
 
 
 def run_with_bounded_retries(
-    start_query: Callable[[], StreamingQuery | None],
+    start_query: Callable[[], None],
     attempt_limit: int = 10,
     attempt_delay: float = 5.0,
     on_attempt: Callable[[int, Exception], None] | None = None,
@@ -151,16 +143,13 @@ def run_with_bounded_retries(
     (dump1090-postgres.py:181-198, :220-237, defaults Dockerfile:17-18).
     Each restart resumes from the checkpoint.
 
-    ``start_query`` may return a StreamingQuery (awaited here) or block
-    until its own completion and return None (the CLI's multi-sink
-    ensemble supervisor does the latter) — one retry policy, not two.
+    ``start_query`` blocks until its streams end and raises on failure
+    (the CLI's multi-sink ensemble supervisor).
     """
     attempts = 0
     while True:
         try:
-            q = start_query()
-            if q is not None:
-                q.awaitTermination()
+            start_query()
             return
         except Exception as e:  # noqa: BLE001 — any stream failure retries
             attempts += 1

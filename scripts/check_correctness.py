@@ -103,13 +103,18 @@ def main() -> int:
         )
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     n_fail = 0
+    # one build per distinct builder: names registered to the same
+    # function (bpe_merges_k64 and bpe_merges_k64_local) share its rows
+    built: dict = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
+            if fn not in built:
+                sdf = fn(spark, sf_dir)
+                built[fn] = (sdf, [tuple(r) for r in sdf.collect()])
+            sdf, srows = built[fn]
             scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1

@@ -52,9 +52,11 @@ def sf_dir() -> str:
 
 
 def sweep_registry(spark, sf_dir: str, queries: dict) -> dict:
-    """Build and execute every ``queries`` entry (name -> function) ONCE,
-    capturing everything the registry-wide gates assert on at build
-    time:
+    """Build and execute every distinct ``queries`` builder (name ->
+    function) ONCE, recording the capture under each name it is
+    registered as (``bpe_merges_k64`` and ``bpe_merges_k64_local``
+    share one), with everything the registry-wide gates assert on at
+    build time:
 
     - ``plan``: the executed physical plan string (the three textual
       sweeps: python-eval, cartesian/BNLJ, single-partition sort)
@@ -85,18 +87,22 @@ def sweep_registry(spark, sf_dir: str, queries: dict) -> dict:
     # relation another thread is mid-consuming (safe but thrashing);
     # total tracked storage at sf0.001 is KBs.
     def one(item):
-        name, fn = item
+        fn, names = item
         df = fn(spark, sf_dir)
-        return name, {
+        return names, {
             "plan": df._jdf.queryExecution().executedPlan().toString(),
             "continuous_global": continuous_key_global_windows(df),
             "grouped_funnels": grouped_continuous_window_funnels(df),
             "count": df.count(),
         }
 
+    by_builder: dict = {}
+    for name, fn in queries.items():
+        by_builder.setdefault(fn, []).append(name)
     try:
         with ThreadPoolExecutor(8) as ex:
-            return dict(ex.map(one, queries.items()))
+            done = ex.map(one, by_builder.items())
+            return {name: got for names, got in done for name in names}
     finally:
         release_tracked()
 

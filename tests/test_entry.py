@@ -187,16 +187,9 @@ _TEST_ONLY_SWITCH_KEEP = {
     f"{_PKG}.operators.relevance.tfidf_terms(tokenizer)": _DATA,
     f"{_PKG}.operators.sampling.token_budget_sample(token_col)": _DATA,
     f"{_PKG}.streaming.pipeline.stream_interval_join(watermark)": _DATA,
-    f"{_PKG}.streaming.pipeline.tumbling_counts(window)": _DATA,
-    f"{_PKG}.streaming.pipeline.tumbling_counts(watermark)": _DATA,
     f"{_PKG}.streaming.stateful.session_flights(label_col)": _DATA,
-    f"{_PKG}.streaming.pipeline.tumbling_counts(exact_sums)":
-        "output type of a stored finest level that coarser rollups "
-        "re-aggregate exactly (operators/rollup.py)",
     f"{_PKG}.operators.graph.connected_components_star(rounds_out)":
         "reports the round count, the evidence of the O(log n) bound",
-    f"{_PKG}.sinks.writers.write_jsonl_shards(max_records_per_file)":
-        "a sink option; the sinks stay as they are until item 4",
     f"{_PKG}.sinks.writers.compact_parquet(sort_cols)": _ITEM4,
     f"{_PKG}.sinks.writers.write_time_sorted(bloom_cols)": _ITEM4,
     f"{_PKG}.sinks.writers.write_time_sorted(mode)": _ITEM4,
@@ -312,8 +305,8 @@ class _Package:
                 if q in self.defs]
 
     def calls(self, tests: bool = False):
-        """(callee def, call node) for every call in ``tests/`` or, by
-        default, everywhere else."""
+        """(calling package def or None, callee def, call node) for every
+        call in ``tests/`` or, by default, everywhere else."""
         if tests:
             sources = [(None, aliases, stmts)
                        for aliases, stmts in self.tests]
@@ -323,11 +316,12 @@ class _Package:
             sources += [(mod, aliases, stmts)
                         for mod, (aliases, stmts) in self.index.items()]
         for mod, aliases, stmts in sources:
-            for _, _, calls in stmts:
+            for owner, _, calls in stmts:
+                caller = f"{mod}.{owner}" if mod and owner else None
                 for chain, node in calls:
                     qs = self.prefixes(mod, aliases, chain)
                     if len(qs) == len(chain) and qs[-1] in self.defs:
-                        yield qs[-1], node
+                        yield caller, qs[-1], node
 
 
 def _test_only_defs(root: Path) -> dict[str, int]:
@@ -361,56 +355,167 @@ def _test_only_defs(root: Path) -> dict[str, int]:
             if q not in seen}
 
 
-def _switch_params(fn: ast.AST) -> dict[str, tuple[int | None, object]]:
-    """A function's keyword parameters whose default is a bool, a str
-    or None: name -> (positional index or None, default)."""
+_REQUIRED = object()
+
+
+def _params(fn: ast.AST) -> dict[str, tuple[int | None, object]]:
+    """A function's named parameters: name -> (positional index or
+    None, default value). A default that is not a literal reads as its
+    AST node; a parameter without one reads ``_REQUIRED``."""
     a = fn.args
     pos = a.posonlyargs + a.args
-    pairs = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
-    pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+    defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
     out = {}
-    for p, d in pairs:
-        if isinstance(d, ast.Constant) and (
-                d.value is None or isinstance(d.value, (bool, str))):
-            out[p.arg] = (pos.index(p) if p in pos else None, d.value)
+    for p, d in [*zip(pos, defaults), *zip(a.kwonlyargs, a.kw_defaults)]:
+        v = _REQUIRED if d is None else (
+            d.value if isinstance(d, ast.Constant) else d)
+        out[p.arg] = (pos.index(p) if p in pos else None, v)
     return out
 
 
-def _test_only_switches(root: Path) -> list[str]:
-    """``module.def(param)`` for every bool/str/None-defaulted keyword
-    parameter of a top-level package function to which ``tests/``
-    passes a non-default value and nothing else does. A call passes
-    ``p`` when it names ``p`` (or fills its position) with anything but
-    the default literal; ``*args`` passes every positional parameter
-    and ``**kwargs`` every parameter."""
+def _settable(default: object) -> bool:
+    """A keyword parameter the guard audits: bool, str or None default."""
+    return default is None or isinstance(default, (bool, str))
+
+
+def _branch_kind(fn: ast.AST, name: str) -> str | None:
+    """How ``fn``'s body selects behaviour by its parameter ``name``:
+    ``"value"`` when an ``if``/``while``/ternary/comprehension condition
+    compares it with a literal other than None or with an upper-case
+    module constant (``== "star"``, ``in ("a", "b")``,
+    ``in TOKENIZERS``); ``"presence"`` when a condition only tests its
+    truth or None-ness, or it is an operand of ``and``/``or``; None
+    when it is only used as a value (a column name passed to
+    ``F.col``, a check against ``df.columns``)."""
+    def is_p(n):
+        return isinstance(n, ast.Name) and n.id == name
+
+    def literal(n):
+        return isinstance(n, ast.Constant) or (
+            isinstance(n, ast.Name) and n.id.isupper()) or (
+            isinstance(n, (ast.Tuple, ast.List, ast.Set))
+            and all(isinstance(e, ast.Constant) for e in n.elts))
+
+    def test(t) -> set[str]:
+        if isinstance(t, ast.UnaryOp) and isinstance(t.op, ast.Not):
+            return test(t.operand)
+        if isinstance(t, ast.BoolOp):
+            return set().union(*map(test, t.values))
+        if isinstance(t, ast.Compare):
+            sides = [t.left, *t.comparators]
+            if not (any(map(is_p, sides))
+                    and all(is_p(x) or literal(x) for x in sides)):
+                return set()
+            nones = all(is_p(x) or (isinstance(x, ast.Constant)
+                                    and x.value is None) for x in sides)
+            return {"presence" if nones else "value"}
+        return {"presence"} if is_p(t) else set()
+
+    kinds = set()
+    for n in (n for stmt in fn.body for n in ast.walk(stmt)):
+        if isinstance(n, (ast.If, ast.IfExp, ast.While)):
+            kinds |= test(n.test)
+        elif isinstance(n, ast.comprehension):
+            kinds |= set().union(*map(test, n.ifs))
+        elif isinstance(n, ast.BoolOp) and any(map(is_p, n.values)):
+            kinds.add("presence")
+    return "value" if "value" in kinds else kinds.pop() if kinds else None
+
+
+def _switch_findings(root: Path) -> dict[str, str]:
+    """``module.def(param)`` -> why it is found, over the bool/str/None-
+    defaulted keyword parameters of top-level package functions.
+
+    *Set.* A call sets ``p`` when it names ``p`` (or fills its
+    position) with anything but the default literal; ``*args`` sets
+    every positional parameter and ``**kwargs`` every parameter. A
+    package function that passes its own parameter ``r`` on unchanged
+    (``r`` is never reassigned in its body) forwards it: the callee's
+    parameter is then set where ``r`` is set, and always when ``r``'s
+    default differs from the callee's.
+
+    *Switch.* A parameter is a switch when its function branches on it
+    (:func:`_branch_kind`), or forwards it into a parameter that
+    compares its value, or forwards it with the same default into a
+    parameter that tests its presence. Column and table names are
+    data, not switches: a function hands them to Spark, and where it
+    forwards one into an optional parameter (``tie_col=None``), its
+    own non-None default always gives the value, so the callee's
+    presence test never sees the default arm.
+
+    Found: a parameter that ``tests/`` set and nothing else sets
+    ("tests only"), and a switch that no caller sets, tests included
+    ("no caller")."""
     pkg = _Package(root)
-    params = {q: _switch_params(n) for q, n in pkg.defs.items()
-              if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))}
+    fns = {q: n for q, n in pkg.defs.items()
+           if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))}
+    params = {q: _params(n) for q, n in fns.items()}
+    stored = {q: {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)
+                  and isinstance(n.ctx, ast.Store)}
+              for q, fn in fns.items()}
 
     def differs(arg: ast.AST, default: object) -> bool:
         return not (isinstance(arg, ast.Constant)
                     and type(arg.value) is type(default)
                     and arg.value == default)
 
-    def passed(tests: bool) -> set[tuple[str, str]]:
-        out = set()
-        for q, node in pkg.calls(tests):
+    direct: dict[bool, set] = {True: set(), False: set()}
+    # (caller, r) -> {(callee, p, same default)}
+    forwards: dict[tuple, set] = {}
+    for in_tests in (True, False):
+        out = direct[in_tests]
+        for caller, q, node in pkg.calls(in_tests):
             ps = params.get(q, {})
+            own = {r: d for r, (_, d) in params.get(caller, {}).items()
+                   if _settable(d) and r not in stored[caller]}
             star = any(isinstance(x, ast.Starred) for x in node.args)
-            for name, (i, default) in ps.items():
-                if i is not None and (star or (
-                        i < len(node.args)
-                        and differs(node.args[i], default))):
+            given = [(name, d, node.args[i]) for name, (i, d) in ps.items()
+                     if i is not None and not star and i < len(node.args)]
+            given += [(kw.arg, ps[kw.arg][1], kw.value)
+                      for kw in node.keywords if kw.arg in ps]
+            out |= {(q, name) for name, (i, _) in ps.items()
+                    if (star and i is not None)
+                    or any(kw.arg is None for kw in node.keywords)}
+            for name, d, v in given:
+                if isinstance(v, ast.Name) and v.id in own:
+                    r, v = v.id, ast.Constant(own[v.id])
+                    forwards.setdefault((caller, r), set()).add(
+                        (q, name, not differs(v, d)))
+                if differs(v, d):
                     out.add((q, name))
-            for kw in node.keywords:
-                for name, (_, default) in ps.items():
-                    if kw.arg is None or (kw.arg == name and
-                                          differs(kw.value, default)):
-                        out.add((q, name))
+
+    def closure(seed: set) -> set:
+        done, todo = set(), list(seed)
+        while todo:
+            k = todo.pop()
+            if k not in done:
+                done.add(k)
+                todo += [(q, p) for q, p, _ in forwards.get(k, ())]
+        return done
+
+    def forwarding_into(targets: set, same_default_only: bool) -> set:
+        """``targets`` and every parameter forwarded into one of them,
+        transitively."""
+        out = set(targets)
+        while more := {k for k, to in forwards.items() if k not in out
+                       and any((q, p) in out for q, p, same in to
+                               if same or not same_default_only)}:
+            out |= more
         return out
 
-    return sorted(f"{q}({name})"
-                  for q, name in passed(True) - passed(False))
+    in_tests, elsewhere = closure(direct[True]), closure(direct[False])
+    kinds = {(q, p): _branch_kind(fns[q], p)
+             for q, ps in params.items() for p in ps}
+    values = forwarding_into(
+        {k for k, kind in kinds.items() if kind == "value"}, False)
+    switches = forwarding_into(
+        {k for k, kind in kinds.items() if kind} | values, True)
+    settable = {(q, p) for q, ps in params.items()
+                for p, (_, d) in ps.items() if _settable(d)}
+    found = {k: "tests only" for k in direct[True] & settable - elsewhere}
+    found.update((k, "no caller") for k in
+                 switches & settable - in_tests - elsewhere)
+    return {f"{q}({p})": why for (q, p), why in sorted(found.items())}
 
 
 def test_package_defs_have_a_non_test_caller():
@@ -429,11 +534,13 @@ def test_package_defs_have_a_non_test_caller():
 
 
 def test_keyword_switches_have_a_non_test_caller():
-    """A bool/str/None-defaulted keyword parameter that only tests set
-    keeps a second code path no user reaches: delete it with its
-    branch, or state in ``_TEST_ONLY_SWITCH_KEEP`` why it stays."""
-    found = _test_only_switches(_REPO)
-    unkept = sorted(set(found) - set(_TEST_ONLY_SWITCH_KEEP))
-    assert unkept == [], unkept
+    """A keyword parameter that only tests set, or a switch that no
+    caller sets (see :func:`_switch_findings`), keeps a second code
+    path no user reaches: delete it with its branch, or state in
+    ``_TEST_ONLY_SWITCH_KEEP`` why it stays."""
+    found = _switch_findings(_REPO)
+    unkept = {k: v for k, v in found.items()
+              if k not in _TEST_ONLY_SWITCH_KEEP}
+    assert unkept == {}, unkept
     stale = sorted(set(_TEST_ONLY_SWITCH_KEEP) - set(found))
     assert stale == [], stale

@@ -144,81 +144,6 @@ def test_tumbling_window_counts_append_semantics(spark, tmp_path):
     assert sums[("a", 1)] == 4.0
 
 
-def test_streaming_minute_store_rolls_up_exactly(spark, tmp_path):
-    """The continuous-aggregate loop end to end: stream -> watermarked
-    MINUTE windows (exact decimal sums) -> parquet minute store ->
-    hour level derived from the STORE alone — bit-identical to the
-    direct hour aggregation over the raw rows the watermark finalized.
-    No raw replay anywhere in the refresh path."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from dump1090_db_stream_spark.streaming.pipeline import tumbling_counts
-
-    base = 1_700_000_000_000_000
-    rows = []
-    for m in range(150):  # 2.5 hours of minutes
-        rows.append((base + m * 60_000_000, "a", float(m) + 0.25))
-        if m % 3 == 0:
-            rows.append((base + m * 60_000_000 + 1, "b", 0.125 * m))
-    d = tmp_path / "replay"
-    d.mkdir()
-    sch = pa.schema([("ts", pa.timestamp("us")), ("event_type", pa.string()),
-                     ("value", pa.float64())])
-    t0 = _time.time()
-    for i, chunk in enumerate([rows[: len(rows) // 2],
-                               rows[len(rows) // 2:]]):
-        p = str(d / f"b{i}.parquet")
-        pq.write_table(pa.table(
-            {"ts": [r[0] for r in chunk], "event_type": [r[1] for r in chunk],
-             "value": [r[2] for r in chunk]}, schema=sch), p)
-        os.utime(p, (t0 + i, t0 + i))
-    schema = T.StructType([T.StructField("ts", T.TimestampType()),
-                           T.StructField("event_type", T.StringType()),
-                           T.StructField("value", T.DoubleType())])
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(d)))
-    minute = tumbling_counts(stream, "ts", "event_type", window="1 minute",
-                             watermark="10 minutes", value_col="value",
-                             exact_sums=True)
-    store = str(tmp_path / "minute_store")
-    q = (minute.writeStream.format("parquet")
-         .option("path", store)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    # refresh: hour level from the store only (decimal re-aggregation)
-    hour = (spark.read.parquet(store)
-            .groupBy(F.date_trunc("hour", "window_start").alias("h"),
-                     "event_type")
-            .agg(F.sum("n_events").alias("n"),
-                 F.sum("value_sum").alias("s")))
-    got = {(r["h"], r["event_type"]): (r["n"], float(r["s"]))
-           for r in hour.collect()}
-
-    # direct hour aggregation over the raw rows the watermark finalized
-    raw = spark.createDataFrame(
-        [(r[0], r[1], r[2]) for r in rows],
-        "ts_us long, event_type string, value double",
-    ).withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-    final_wm = max(r[0] for r in rows) - 10 * 60_000_000
-    direct = (raw.filter(
-        (F.unix_micros(F.date_trunc("minute", "ts")) + 60_000_000)
-        <= final_wm)
-        .groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
-        .agg(F.count("*").alias("n"),
-             F.sum(F.col("value").cast("decimal(28,8)")).alias("s")))
-    want = {(r["h"], r["event_type"]): (r["n"], float(r["s"]))
-            for r in direct.collect()}
-    assert got == want and len(got) >= 4
-
-
 def test_hygiene_ops_run_in_structured_streaming(spark, tmp_path):
     """The corpus-hygiene projections (normalize, scrub, counts,
     weighted keep) are stateless Column expressions, so the SAME
